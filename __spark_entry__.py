@@ -372,7 +372,7 @@ def q24_embedding_neardup_pairs(spark, sf_dir):
     with scale factor (VERDICT r2 #6). The scale paths are q26 (SRP
     buckets) and q31 (IVF)."""
     emb = _t(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") % 3 == 0) & (F.col("vec_id") < 1500))
+        F.col("vec_id").between(0, 1499) & (F.col("vec_id") % 3 == 0))
     return similarity.neardup_pairs(emb, threshold=0.3)
 
 
@@ -779,7 +779,7 @@ def q62_orc_ingest_roundtrip(spark, sf_dir):
     re-serialized driver-side as three ORC files (pyarrow's writer;
     a deterministic null-injection on n_chars and the WORDS array
     exercising the nested mapping), staged to parquet distributedly
-    (`jsonl_io.stage_orc`, vectorized read, one task per file),
+    (`jsonl_io.stage_orc`, vectorized read, each file on its own),
     encoded, decoded, aggregated — the q60 contract for the ORC
     format. Any lost row, mangled null, or misread array
     hash-mismatches against the plain-SQL oracle."""
@@ -2345,7 +2345,8 @@ def oracle_sql() -> dict[str, str]:
             WITH e AS (
               SELECT vec_id,
                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS d
-              FROM embeddings WHERE vec_id % 3 = 0 AND vec_id < 1500
+              FROM embeddings
+              WHERE vec_id BETWEEN 0 AND 1499 AND vec_id % 3 = 0
             ),
             v AS (
               SELECT vec_id,

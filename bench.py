@@ -301,7 +301,7 @@ def main() -> None:
 
     # decode-verify (correctness gate inside the bench).
     # Timed leg: the channel-free positional verify (decode + compare in
-    # the workers, one task per source file — the path that scales), on
+    # the workers, each source file on its own — the path that scales), on
     # the SAME 716M-token table the encode metric uses; the sf-sized
     # table is too small to measure anything but Spark's per-job floor.
     # Untimed: full-outer-join bit-identity + positional verify on the

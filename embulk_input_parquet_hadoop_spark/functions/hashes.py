@@ -22,11 +22,6 @@ def md5_long(col: Column, hex_chars: int = 15) -> Column:
     return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
 
 
-def md5_long_sql(expr: str, hex_chars: int = 15) -> str:
-    """The DuckDB-side rendering of :func:`md5_long`."""
-    return f"CAST('0x' || substr(md5({expr}), 1, {hex_chars}) AS BIGINT)"
-
-
 def words(col: Column) -> Column:
     """Whitespace tokenization with empty tokens dropped.
 

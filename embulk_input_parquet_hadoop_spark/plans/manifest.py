@@ -40,50 +40,45 @@ def _manifest_dir(out_dir: str) -> str:
     return f"{out_dir}/manifest"
 
 
-def _latest_checkpoint(out_dir: str) -> tuple[int, str] | None:
-    """(max_wave, path) of the newest checkpoint record, or None."""
-    mdir = _manifest_dir(out_dir)
-    if not fsutil.isdir(mdir):
-        return None
-    best = None
-    for f in fsutil.listdir(mdir):
-        if (m := _CKPT_RE.match(f)):
-            k = int(m.group(1))
-            if best is None or k > best[0]:
-                best = (k, f"{mdir}/{f}")
-    return best
-
-
 def _wave_records(out_dir: str) -> list[dict]:
     """Every committed wave's manifest record, checkpoint-accelerated:
-    the newest ``checkpoint-K.json`` serves waves <= K in ONE read, and
-    only wave files committed after it are read individually — the same
-    reader shape as a Delta last-checkpoint replay. Per-wave files stay
-    the single VISIBILITY point (``completed_waves`` never consults the
-    checkpoint), and that extends to lineage: a checkpoint entry is
-    served ONLY while its wave's record file still exists, so deleting
-    ``wave-K.json`` (the rollback gesture) removes wave K from every
-    reader — visibility, metrics, AND the append-lineage set — and an
-    append re-encodes its files instead of silently skipping them. The
-    checkpoint caches record *contents*, never record *existence*; a
-    stale or absent one only costs extra reads."""
+    the newest ``checkpoint-K.json`` serves the waves it lists in ONE
+    read, and every other present wave file is read individually — the
+    post-checkpoint tail, plus any wave re-committed at an id <= K after
+    the checkpoint was written (rollback: delete ``wave-K.json``, compact,
+    resume). The same reader shape as a Delta last-checkpoint replay.
+    Per-wave files stay the single VISIBILITY point (``completed_waves``
+    never consults the checkpoint), and that extends to lineage: a
+    checkpoint entry is served ONLY while its wave's record file still
+    exists, so deleting ``wave-K.json`` (the rollback gesture) removes
+    wave K from every reader — visibility, metrics, AND the append-lineage
+    set — and an append re-encodes its files instead of silently skipping
+    them. A checkpoint that would describe a re-committed wave with its
+    pre-rollback entry does not survive the re-commit (``commit_wave``
+    drops it first). The checkpoint caches record *contents*, never
+    record *existence*; a stale, absent or concurrently removed one only
+    costs extra reads."""
     mdir = _manifest_dir(out_dir)
     if not fsutil.isdir(mdir):
         return []
-    ckpt = _latest_checkpoint(out_dir)
     names = fsutil.listdir(mdir)
-    present = {int(m.group(1)) for f in names if (m := _WAVE_RE.match(f))}
+    present = {int(m.group(1)): f for f in names
+               if (m := _WAVE_RE.match(f))}
+    ckpts = [(int(m.group(1)), f) for f in names if (m := _CKPT_RE.match(f))]
     recs: dict[int, dict] = {}
-    base = -1
-    if ckpt is not None:
-        base, path = ckpt
-        for r in fsutil.read_json(path)["waves"]:
+    if ckpts:
+        try:
+            entries = fsutil.read_json(f"{mdir}/{max(ckpts)[1]}")["waves"]
+        except FileNotFoundError:
+            # a concurrent compact_manifest removed the checkpoint this
+            # listing picked: the per-wave records below are the truth
+            entries = []
+        for r in entries:
             if int(r["wave_id"]) in present:
                 recs[int(r["wave_id"])] = r
-    for f in names:
-        if (m := _WAVE_RE.match(f)) and int(m.group(1)) > base:
-            r = fsutil.read_json(f"{mdir}/{f}")
-            recs[int(r["wave_id"])] = r
+    for k, f in present.items():
+        if k not in recs:
+            recs[k] = fsutil.read_json(f"{mdir}/{f}")
     return [recs[k] for k in sorted(recs)]
 
 
@@ -233,9 +228,16 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
         "n_bad_rows": agg["n_bad_rows"],
         "wall_s": float(wall_s),
     }
+    mdir = _manifest_dir(out_dir)
+    # a checkpoint covering this id may hold the entry of a rolled-back
+    # earlier commit of the same wave, which readers would serve in place
+    # of this record: drop it BEFORE the commit point, so no listing ever
+    # shows both (a crash in between only costs readers extra reads)
+    for f in fsutil.listdir(mdir):
+        if (m := _CKPT_RE.match(f)) and int(m.group(1)) >= wave_id:
+            fsutil.delete_quiet(f"{mdir}/{f}")
     # atomic commit point (temp file + rename)
-    fsutil.write_json_atomic(_manifest_dir(out_dir),
-                             f"wave-{wave_id}.json", out)
+    fsutil.write_json_atomic(mdir, f"wave-{wave_id}.json", out)
     return out
 
 

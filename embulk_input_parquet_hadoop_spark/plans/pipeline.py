@@ -2,30 +2,37 @@
 
 Lifecycle mirrors the reference's transaction/run split
 (``ParquetHadoopInputPlugin.java:78-128``: driver plans the file list, the
-host executor fans out one task per file) re-expressed Spark-first:
+host executor fans out one task per file) re-expressed Spark-first, with
+files LPT-packed into at most one Spark task per core:
 
 - the driver lists input files and groups them into *waves* (the resumable
   checkpoint unit; the reference has no resume — ``README.md:9`` — ours adds
   it per the north rule);
 - within a wave, **file paths** (not rows) are distributed to tasks; each
-  task opens its Parquet files with pyarrow and iterates record batches —
-  the direct analogue of the reference's per-file ``ParquetRowReader`` with
-  its one-row-group-at-a-time loop (``ParquetRowReader.java:105-118``),
-  except each batch is decoded and encoded as whole Arrow columns, never
-  per value. Shipping paths instead of rows keeps the bulk data out of the
-  JVM->Python serialization channel entirely: measured on the 180M-token
-  bench table this is ~9x faster than funnelling rows through
-  ``mapInArrow`` on a Spark scan, and it is exactly the reference's own
-  distribution unit (one task per file,
-  ``ParquetHadoopInputPlugin.java:116``);
+  task opens its Parquet files one after another with pyarrow and
+  iterates record batches — the direct analogue of the reference's
+  per-file ``ParquetRowReader`` with its one-row-group-at-a-time loop
+  (``ParquetRowReader.java:105-118``), except each batch is decoded and
+  encoded as whole Arrow columns, never per value. Shipping paths instead
+  of rows keeps the bulk data out of the JVM->Python serialization
+  channel entirely: measured on the 180M-token bench table this is ~9x
+  faster than funnelling rows through ``mapInArrow`` on a Spark scan.
+  The reference runs one task per file
+  (``ParquetHadoopInputPlugin.java:116``); here a wave is ONE Python stage
+  of ``min(files, cores)`` tasks, files packed by greedy LPT on their
+  source bytes (``filetasks.run_file_tasks``), because each Python task
+  pays 0.2–0.3 s of launch latency (4-core host) that a task per file
+  would pay once per task round. The commit and error unit is still the
+  file: each file's chunks commit, or fail, on their own;
 - each chunk (one Arrow batch, the row-group analogue) is encoded per
-  column with the codec cascade and appended to a per-task uncompressed
-  Parquet chunk file written with pyarrow (uncompressed: the container must
-  not distort the codec's measured size). The file lands under a temp name
-  and is atomically renamed when the task finishes — task retries overwrite
-  deterministically, and a wave is only *visible* once its manifest record
-  commits (see ``manifest.py``), which is our output-commit protocol;
-- tasks yield lightweight per-chunk stat rows (no payloads) back to Spark;
+  column with the codec cascade and appended to an uncompressed Parquet
+  chunk file per source file, written with pyarrow (uncompressed: the
+  container must not distort the codec's measured size). The file lands
+  under a temp name and is atomically renamed when its source file
+  finishes — task retries overwrite deterministically, and a wave is only
+  *visible* once its manifest record commits (see ``manifest.py``), which
+  is our output-commit protocol;
+- tasks return lightweight per-chunk stat rows (no payloads) to the driver;
   the driver aggregates them for the wave's manifest record and persists
   them as the queryable ``chunks_meta`` table.
 
@@ -53,6 +60,7 @@ from pyspark.sql import functions as F
 from ..operators.encode import (decode_column, encode_column,
                                 set_entropy_mode, temporal_int_view)
 from . import manifest as mf
+from .filetasks import run_file_tasks
 
 # Chunk rows: stats in top-level columns and a blob-free `cols` struct
 # array; payloads in the parallel `blobs` array (cols[i] describes
@@ -92,19 +100,10 @@ CHUNK_ARROW_SCHEMA = pa.schema([
     pa.field("blobs", pa.list_(pa.binary())),
 ])
 
-# what the encode tasks yield back to Spark: chunk stats, no payloads.
+# what the encode tasks yield back to the driver: chunk stats, no payloads.
 # n_bad_rows: rows lost to corrupt row groups of an otherwise-kept file
 # (error stays NULL — the file succeeded within bad_record_threshold);
 # error non-NULL marks a *failed* file, none of whose chunks committed.
-CHUNK_META_SPARK_SCHEMA = (
-    "chunk_id string, wave_id int, part_id int, batch_idx int, "
-    "n_rows bigint, n_tokens bigint, raw_bytes bigint, enc_bytes bigint, "
-    "wall_ms double, source_file string, chunk_file string, "
-    "cols array<struct<name:string, kind:string, n_values:bigint, "
-    "raw_bytes:bigint, enc_bytes:bigint, vmin:bigint, vmax:bigint>>, "
-    "n_bad_rows bigint, error string"
-)
-
 CHUNK_META_ARROW_SCHEMA = pa.schema([
     pa.field("chunk_id", pa.string()),
     pa.field("wave_id", pa.int32()),
@@ -127,11 +126,6 @@ DEFAULT_BATCH_ROWS = 16384
 # distributed-meta mode: tasks yield one summary row per source file
 # (O(files) to the driver, never O(chunks)); the full per-chunk meta rows
 # land as task-written parquet sidecars next to the chunk data
-FILE_SUMMARY_SPARK_SCHEMA = (
-    "source_file string, n_chunks bigint, n_rows bigint, n_tokens bigint, "
-    "raw_bytes bigint, enc_bytes bigint, n_bad_rows bigint, error string"
-)
-
 FILE_SUMMARY_ARROW_SCHEMA = pa.schema([
     pa.field("source_file", pa.string()),
     pa.field("n_chunks", pa.int64()),
@@ -141,6 +135,16 @@ FILE_SUMMARY_ARROW_SCHEMA = pa.schema([
     pa.field("enc_bytes", pa.int64()),
     pa.field("n_bad_rows", pa.int64()),
     pa.field("error", pa.string()),
+])
+
+# one encode task input row per source file: the path, its Iceberg
+# position-delete files, its equality-delete descriptors (JSON) and its
+# constant columns (JSON); the side inputs are null when absent
+FILE_ROWS_ARROW_SCHEMA = pa.schema([
+    pa.field("path", pa.string()),
+    pa.field("deletes", pa.list_(pa.string())),
+    pa.field("eq", pa.string()),
+    pa.field("consts", pa.string()),
 ])
 
 
@@ -553,10 +557,11 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                          entropy: bool = False,
                          const_schema: dict[str, str] | None = None,
                          column_renames: list[dict] | None = None):
-    """mapInArrow fn for the file-source path: paths in, chunk *stats* out.
+    """Task fn for the file-source path (run by
+    ``filetasks.run_file_tasks``): paths in, chunk *stats* out.
 
     ``const_schema`` ({column: _CONST_TYPES key}) declares the types of
-    per-file CONSTANT columns; the values ride the path DataFrame's
+    per-file CONSTANT columns; the values ride the input rows'
     ``consts`` JSON column and are appended to every batch after delete
     masking (partition values for Delta / Hive sources — see
     ``encode_path(const_columns=)``). A constant whose name collides
@@ -594,9 +599,9 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
     parquet sidecar under it — atomically renamed at the *same commit
     point* as the chunk file, so lineage and data commit together — and
     the task yields only one O(1) summary row per source file
-    (``FILE_SUMMARY_SPARK_SCHEMA``). The driver-side materialization is
+    (``FILE_SUMMARY_ARROW_SCHEMA``). The driver-side materialization is
     then O(files), never O(chunks): at a 10^6-chunk wave the r2 driver
-    collected every chunk's column stats through ``toArrow``.
+    collected every chunk's column stats.
     """
 
     def meta_row(stats, path, final, cols, error=None, n_bad_rows=0):
@@ -659,8 +664,8 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
         bidx = 0
         fseq = 0
         for b in batches:
-            # optional per-file Iceberg delete inputs ride the path
-            # DataFrame itself (position deletes: array<string>;
+            # optional per-file Iceberg delete inputs ride the input
+            # rows themselves (position deletes: list<string>;
             # equality deletes: JSON descriptor list) — no closure
             # state, Spark distributes them with the file
             dcol = (b.column("deletes").to_pylist()
@@ -1143,6 +1148,28 @@ def _lineage_key(path: str) -> str:
     return path
 
 
+def _side_inputs(files: list[str],
+                 row_deletes: dict[str, list[str]] | None,
+                 eq_deletes: dict[str, list[dict]] | None,
+                 const_columns: dict[str, dict] | None) -> list[tuple]:
+    """Per-file task side inputs ``(position-delete files, equality-delete
+    descriptors JSON, constant columns JSON)``, None where absent. Keys
+    match on the scheme-normalized identity (``_lineage_key``): the
+    single-schema path lists via Spark (file:/ URIs) while scan plans
+    carry plain paths. Descriptors and constants go as JSON (a struct
+    column would pin one fixed shape)."""
+    rd = {_lineage_key(k): v for k, v in (row_deletes or {}).items()}
+    eq = {_lineage_key(k): v for k, v in (eq_deletes or {}).items()}
+    cc = {_lineage_key(k): v for k, v in (const_columns or {}).items()}
+    out = []
+    for f in files:
+        k = _lineage_key(f)
+        e, c = eq.get(k), cc.get(k)
+        out.append((rd.get(k), json.dumps(e) if e else None,
+                    json.dumps(c) if c else None))
+    return out
+
+
 def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                 waves: int = 1, resume: bool = False,
                 cluster_partitions: int | None = None,
@@ -1453,49 +1480,25 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
             encode_df(spark, df, out_dir, wave_id, cluster_partitions)
             meta = None
         else:
-            # exactly one file per partition -> the reference's task unit
-            # (repartition(n)'s round-robin from random starts lands 2-3
-            # files on ~1/3 of partitions and leaves the rest empty, which
-            # doubles the straggler tail; parallelize's even slicing is
-            # exact)
-            if row_deletes or eq_deletes or const_columns:
-                # per-file delete/constant inputs ride the path
-                # DataFrame; a file's lineage identity is unchanged
-                # (deletes alter row content, constants add columns —
-                # neither changes which source files were consumed).
-                # Keys match on the scheme-normalized identity: the
-                # single-schema path lists via Spark (file:/ URIs) while
-                # scan plans carry plain paths. Equality descriptors and
-                # constants go as JSON (a struct column would pin one
-                # fixed shape)
-                rd = {_lineage_key(k): v
-                      for k, v in (row_deletes or {}).items()}
-                eq = {_lineage_key(k): v
-                      for k, v in (eq_deletes or {}).items()}
-                cc = {_lineage_key(k): v
-                      for k, v in (const_columns or {}).items()}
-                rows = []
-                for f in wfiles:
-                    e = eq.get(_lineage_key(f))
-                    c = cc.get(_lineage_key(f))
-                    rows.append((f, rd.get(_lineage_key(f)),
-                                 json.dumps(e) if e else None,
-                                 json.dumps(c) if c else None))
-                rdd = spark.sparkContext.parallelize(rows, len(wfiles))
-                paths = spark.createDataFrame(
-                    rdd, "path string, deletes array<string>, "
-                         "eq string, consts string")
-            else:
-                rdd = spark.sparkContext.parallelize(
-                    [(f,) for f in wfiles], len(wfiles))
-                paths = spark.createDataFrame(rdd, "path string")
+            # per-file delete/constant inputs ride each file's input row;
+            # a file's lineage identity is unchanged (deletes alter row
+            # content, constants add columns — neither changes which
+            # source files were consumed)
+            rows = [(f, *side) for f, side in zip(wfiles, _side_inputs(
+                wfiles, row_deletes, eq_deletes, const_columns))]
             distributed = meta_mode == "distributed"
             wave_meta_dir = (f"{out_dir}/chunks_meta/wave-{wave_id}"
                              if distributed else None)
             if distributed:
                 # stale sidecars from a failed attempt would double-count
                 fsutil.rmtree_any(wave_meta_dir)
-            enc = paths.mapInArrow(
+            # files LPT-packed on source bytes into at most one task per
+            # core; the commit and error unit is still the file. What
+            # comes back to the driver is O(n_chunks) stat rows (driver
+            # mode) or O(n_files) summaries (distributed mode) — never
+            # payloads
+            meta = run_file_tasks(
+                spark, rows, FILE_ROWS_ARROW_SCHEMA,
                 make_encode_files_fn(wave_id, wave_dir, batch_rows,
                                      columns=columns,
                                      bad_record_threshold=(
@@ -1504,12 +1507,9 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                                      entropy=entropy,
                                      const_schema=const_schema,
                                      column_renames=column_renames),
-                FILE_SUMMARY_SPARK_SCHEMA if distributed
-                else CHUNK_META_SPARK_SCHEMA)
-            # one action runs the wave; what comes back to the driver is
-            # O(n_chunks) stat rows (driver mode) or O(n_files) summaries
-            # (distributed mode) — never payloads
-            meta = enc.toArrow()
+                FILE_SUMMARY_ARROW_SCHEMA if distributed
+                else CHUNK_META_ARROW_SCHEMA,
+                weights=fsutil.file_sizes(wfiles))
             bad = meta.filter(pa.compute.is_valid(meta.column("error")))
             if bad.num_rows > len(wfiles) * bad_file_threshold:
                 errs = bad.select(["source_file", "error"]).to_pylist()

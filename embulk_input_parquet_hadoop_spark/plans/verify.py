@@ -11,6 +11,7 @@ equality of every other column. The comparison itself is pure DataFrame API
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow as pa
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from ..operators.encode import decode_column
 from . import manifest as mf
 from . import pipeline
+from .filetasks import run_file_tasks
 
 TOKENS_SPARK_SCHEMA = ("doc_id string, tokens array<int>, n_tok int, "
                        "source string")
@@ -89,9 +91,24 @@ def verify_path(spark: SparkSession, input_path: str, out_dir: str) -> dict:
 # per-file stat rows cross the channel. This is also a *stronger* check
 # than the join (positional, catches duplicate-row aliasing).
 
-VERIFY_FILES_SCHEMA = ("source_file string, chunk_file string, "
-                       "rows bigint, tokens bigint, mismatch_chunks bigint, "
-                       "err string")
+# one verify task input row per source file: the source and its chunk
+# file, plus the same per-file side inputs as an encode input row
+VERIFY_ROWS_ARROW_SCHEMA = pa.schema([
+    pa.field("source_file", pa.string()),
+    pa.field("chunk_file", pa.string()),
+    pa.field("deletes", pa.list_(pa.string())),
+    pa.field("eq", pa.string()),
+    pa.field("consts", pa.string()),
+])
+
+VERIFY_FILES_ARROW_SCHEMA = pa.schema([
+    pa.field("source_file", pa.string()),
+    pa.field("chunk_file", pa.string()),
+    pa.field("rows", pa.int64()),
+    pa.field("tokens", pa.int64()),
+    pa.field("mismatch_chunks", pa.int64()),
+    pa.field("err", pa.string()),
+])
 
 
 def _source_batches(path: str, batch_rows: int, columns: list[str],
@@ -177,8 +194,6 @@ def _verify_one(src: str, chk: str, batch_rows: int,
     resolved here, inside the error capture, so a missing or corrupt
     source, delete file, or descriptor yields a per-file ``err`` row
     instead of aborting the whole Spark job."""
-    import json
-
     from . import fsutil
     rows = toks = mism = 0
     err = None
@@ -270,13 +285,13 @@ def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS,
                     const_schema=const_schema,
                     column_renames=column_renames)
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array([s]), pa.array([c]),
+                    [pa.array([s], type=pa.string()),
+                     pa.array([c], type=pa.string()),
                      pa.array([r], type=pa.int64()),
                      pa.array([t], type=pa.int64()),
                      pa.array([m], type=pa.int64()),
                      pa.array([e], type=pa.string())],
-                    names=["source_file", "chunk_file", "rows", "tokens",
-                           "mismatch_chunks", "err"])
+                    schema=VERIFY_FILES_ARROW_SCHEMA)
 
     return fn
 
@@ -288,11 +303,14 @@ def verify_files(spark: SparkSession, out_dir: str,
                  const_columns: dict[str, dict] | None = None,
                  const_schema: dict[str, str] | None = None,
                  column_renames: list[dict] | None = None) -> dict:
-    """Distributed positional bit-identity check, one task per source file.
+    """Distributed positional bit-identity check per source file.
 
-    Requires the file-source encode path (chunks_meta carries the
-    source-file -> chunk-file lineage); ``batch_rows`` must match the
-    encode run's. Only O(n_files) stat rows cross the JVM<->Python channel.
+    Source files are LPT-packed on their bytes into at most one task per
+    core (``filetasks.run_file_tasks``); each file is still checked, and
+    reports its error, on its own. Requires the file-source encode path
+    (chunks_meta carries the source-file -> chunk-file lineage);
+    ``batch_rows`` must match the encode run's. Only O(n_files) stat rows
+    come back to the driver.
 
     ``row_deletes``/``eq_deletes``: the same position-/equality-delete
     mappings the encode ran with (``iceberg_meta.snapshot_scan``) — each
@@ -322,33 +340,17 @@ def verify_files(spark: SparkSession, out_dir: str,
         raise FileNotFoundError(
             f"no chunks_meta lineage under {out_dir} (verify_files needs "
             f"the file-source encode path; use verify_path otherwise)")
-    if row_deletes or eq_deletes or const_columns:
-        import json
-        rd = {pipeline._lineage_key(k): v
-              for k, v in (row_deletes or {}).items()}
-        eqm = {pipeline._lineage_key(k): v
-               for k, v in (eq_deletes or {}).items()}
-        ccm = {pipeline._lineage_key(k): v
-               for k, v in (const_columns or {}).items()}
-        rows = []
-        for s, c in sorted(pairs):
-            e = eqm.get(pipeline._lineage_key(s))
-            cv = ccm.get(pipeline._lineage_key(s))
-            rows.append((s, c, rd.get(pipeline._lineage_key(s)),
-                         json.dumps(e) if e else None,
-                         json.dumps(cv) if cv else None))
-        rdd = spark.sparkContext.parallelize(rows, len(rows))
-        df = spark.createDataFrame(
-            rdd, "source_file string, chunk_file string, "
-                 "deletes array<string>, eq string, consts string")
-    else:
-        rdd = spark.sparkContext.parallelize(sorted(pairs), len(pairs))
-        df = spark.createDataFrame(
-            rdd, "source_file string, chunk_file string")
-    res = df.mapInArrow(
+    pairs = sorted(pairs)
+    sources = [s for s, _ in pairs]
+    sides = pipeline._side_inputs(sources, row_deletes, eq_deletes,
+                                  const_columns)
+    rows = [(s, c, *side) for (s, c), side in zip(pairs, sides)]
+    res = run_file_tasks(
+        spark, rows, VERIFY_ROWS_ARROW_SCHEMA,
         make_verify_files_fn(batch_rows, const_schema=const_schema,
                              column_renames=column_renames),
-        VERIFY_FILES_SCHEMA).toArrow()
+        VERIFY_FILES_ARROW_SCHEMA,
+        weights=fsutil.file_sizes(sources))
     import pyarrow.compute as pc
     errs = [e for e in res.column("err").to_pylist() if e]
     mism = int(pc.sum(res.column("mismatch_chunks")).as_py() or 0)

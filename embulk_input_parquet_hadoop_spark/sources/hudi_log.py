@@ -61,11 +61,13 @@ module runs — modeling ``preCombine`` ordering-value comparisons
 without the Hudi runtime would risk silently resurrecting overwritten
 rows.
 
-Scale shape: one Spark task per file slice (the merge unit Hudi itself
-uses for compaction); each task reads its base file + log chain,
-merges in memory, and publishes one staged parquet
+Scale shape: the file slice (the merge unit Hudi itself uses for
+compaction) is the staging unit, packed into at most one Spark task per
+core; for each slice a task reads its base file + log chain, merges in
+memory, and publishes one staged parquet
 atomically-at-visibility. Log chains are bounded by compaction in any
-healthy MOR table, so per-task memory is the slice size — the same
+healthy MOR table, and a task merges one slice at a time, so its
+memory is the slice size — the same
 unit a Hudi compactor would materialize. O(slices) summary rows to
 the driver, zero shuffles.
 """
@@ -82,6 +84,7 @@ import tempfile
 import uuid
 
 from ..plans import fsutil
+from ..plans.filetasks import run_file_tasks
 from . import avro_io
 
 MAGIC = b"#HUDI#"
@@ -432,7 +435,8 @@ def merge_slice(base_path: str | None, log_paths: list[str],
 
 
 # ---------------------------------------------------------------------------
-# distributed staging (one task per slice, jsonl_io protocol)
+# distributed staging (slices packed into at most one task per core,
+# jsonl_io protocol)
 
 
 def staged_slice_name(slice_: dict) -> str:
@@ -452,8 +456,10 @@ def staged_slice_name(slice_: dict) -> str:
 def stage_mor_slices(spark, scan: dict, staging_dir: str,
                      compression: str = "zstd") -> dict:
     """Materialize every log-bearing slice of a ``hudi_meta``
-    MOR ``snapshot_scan`` into ``staging_dir`` (one Spark task per
-    slice; atomically-visible idempotent writes) and return
+    MOR ``snapshot_scan`` into ``staging_dir`` (one Python stage; slices,
+    which have no single source file, pack round-robin into at most one
+    task per core, ``filetasks.run_file_tasks``; each slice stages on its
+    own with atomically-visible idempotent writes) and return
     ``{"files": [encode inputs: passthrough bases + staged parquet],
     "n_staged", "n_skipped", "n_passthrough", "partitions"}`` for
     ``encode_path(input_files=...)``."""
@@ -472,6 +478,9 @@ def stage_mor_slices(spark, scan: dict, staging_dir: str,
         fsutil.makedirs_any(base)
         valid = sorted(scan["valid_instants"])
         local = fsutil.is_local(base)
+        summary = pa.schema([("staged", pa.string()),
+                             ("n_rows", pa.int64()),
+                             ("skipped", pa.bool_())])
         jobs = []
         for key, s in sorted(todo.items()):
             staged = f"{base}/{staged_slice_name(s)}"
@@ -483,9 +492,6 @@ def stage_mor_slices(spark, scan: dict, staging_dir: str,
 
         def _stage(batches):
             import pyarrow.parquet as pq
-            summary = pa.schema([("staged", pa.string()),
-                                 ("n_rows", pa.int64()),
-                                 ("skipped", pa.bool_())])
             vset = set(valid)
             for b in batches:
                 for spec_json in b.column("spec").to_pylist():
@@ -519,12 +525,9 @@ def stage_mor_slices(spark, scan: dict, staging_dir: str,
                         [{"staged": staged, "n_rows": tbl.num_rows,
                           "skipped": False}], schema=summary)
 
-        rdd = spark.sparkContext.parallelize([(j,) for j in jobs],
-                                             len(jobs))
-        df = spark.createDataFrame(rdd, "spec string")
-        rows = df.mapInArrow(
-            _stage, "staged string, n_rows long, skipped boolean") \
-            .toArrow().to_pylist()
+        rows = run_file_tasks(
+            spark, [(j,) for j in jobs], pa.schema([("spec", pa.string())]),
+            _stage, summary).to_pylist()
         n_staged = sum(1 for r in rows if not r["skipped"])
         n_skipped = sum(1 for r in rows if r["skipped"])
     return {"files": sorted(passthrough + out_files),

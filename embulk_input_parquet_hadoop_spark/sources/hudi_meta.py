@@ -37,7 +37,7 @@ snapshot becomes FILE SLICES — latest base file per group plus the log
 chain written against it (log names carry their base instant; logs
 against an older base were folded in by the compaction that wrote the
 newer base). Slices with logs are materialized by
-``hudi_log.stage_mor_slices`` (one Spark task per slice) before
+``hudi_log.stage_mor_slices`` (each slice staged on its own) before
 encoding; see ``hudi_log.py`` for the log block format and merge
 semantics.
 

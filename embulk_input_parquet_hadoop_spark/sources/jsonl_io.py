@@ -24,8 +24,10 @@ Writes publish atomically-at-visibility via ``fsutil.put_file`` (local
 spool -> temp+rename, or direct final-key PUT on object stores), so a
 half-written staged file is never visible as non-empty.
 
-Scale shape: one task per source file, zero shuffles, O(files) summary
-rows to the driver. Per-file schema inference can differ across files
+Scale shape: one Python stage, source files LPT-packed on their bytes
+into at most one task per core (``filetasks.run_file_tasks``), zero
+shuffles, O(files) summary rows to the driver. Each file still stages,
+and fails, on its own. Per-file schema inference can differ across files
 (a field absent from one file infers as missing) — pass ``schema_ddl``
 to pin types and column order, or encode with ``schema_mode="mixed"``.
 
@@ -43,12 +45,17 @@ import os
 import tempfile
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from ..plans import fsutil
+from ..plans.filetasks import run_file_tasks
 
-STAGE_SUMMARY_SCHEMA = ("source string, staged string, n_rows long, "
-                        "skipped boolean, error string")
+STAGE_SUMMARY_SCHEMA = pa.schema([
+    ("source", pa.string()), ("staged", pa.string()),
+    ("n_rows", pa.int64()), ("skipped", pa.bool_()),
+    ("error", pa.string())])
+_STAGE_ROWS_SCHEMA = pa.schema([("path", pa.string())])
 
 _EXTS = {"jsonl": (".jsonl", ".json", ".ndjson", ".jsonl.gz",
                    ".json.gz", ".ndjson.gz"),
@@ -398,8 +405,6 @@ def _stage_files(spark: SparkSession, inputs: str | list[str],
                  staging_dir: str, fmt: str, schema_ddl: str | None,
                  bad_file_threshold: float, compression: str,
                  delimiter: str | None) -> dict:
-    import pyarrow as pa
-
     files = (inputs if isinstance(inputs, list)
              else _list_files(inputs, _EXTS[fmt]))
     if not files:
@@ -417,10 +422,6 @@ def _stage_files(spark: SparkSession, inputs: str | list[str],
 
     def _stage(batches):
         import pyarrow.parquet as pq
-        summary_arrow = pa.schema([
-            ("source", pa.string()), ("staged", pa.string()),
-            ("n_rows", pa.int64()), ("skipped", pa.bool_()),
-            ("error", pa.string())])
         schema = (pa.ipc.read_schema(pa.py_buffer(schema_ser))
                   if schema_ser is not None else None)
         for b in batches:
@@ -449,7 +450,7 @@ def _stage_files(spark: SparkSession, inputs: str | list[str],
                         yield pa.RecordBatch.from_pylist(
                             [{"source": src, "staged": staged,
                               "n_rows": 0, "skipped": True,
-                              "error": None}], schema=summary_arrow)
+                              "error": None}], schema=STAGE_SUMMARY_SCHEMA)
                         continue
                     tbl = (_read_jsonl_table(src, schema)
                            if fmt == "jsonl"
@@ -484,18 +485,18 @@ def _stage_files(spark: SparkSession, inputs: str | list[str],
                     yield pa.RecordBatch.from_pylist(
                         [{"source": src, "staged": staged,
                           "n_rows": tbl.num_rows, "skipped": False,
-                          "error": None}], schema=summary_arrow)
+                          "error": None}], schema=STAGE_SUMMARY_SCHEMA)
                 except Exception as exc:  # noqa: BLE001
                     yield pa.RecordBatch.from_pylist(
                         [{"source": src, "staged": None, "n_rows": 0,
                           "skipped": False,
                           "error": f"{type(exc).__name__}: {exc}"}],
-                        schema=summary_arrow)
+                        schema=STAGE_SUMMARY_SCHEMA)
 
-    rdd = spark.sparkContext.parallelize([(f,) for f in files],
-                                         len(files))
-    paths = spark.createDataFrame(rdd, "path string")
-    summary = paths.mapInArrow(_stage, STAGE_SUMMARY_SCHEMA).toArrow()
+    summary = run_file_tasks(spark, [(f,) for f in files],
+                             _STAGE_ROWS_SCHEMA, _stage,
+                             STAGE_SUMMARY_SCHEMA,
+                             weights=fsutil.file_sizes(files))
     rows = summary.to_pylist()
     by_src = {r["source"]: r for r in rows}
     errors = [(r["source"], r["error"]) for r in rows if r["error"]]

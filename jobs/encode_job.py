@@ -114,7 +114,8 @@ def main() -> int:
                         "replay the .hoodie timeline (pure-Python, no "
                         "Hudi runtime) and encode the snapshot's latest "
                         "file slices; MOR log chains are merged into "
-                        "the --staging tree first (one task per slice)")
+                        "the --staging tree first (each slice on its "
+                        "own)")
     p.add_argument("--as-of", default=None, metavar="INSTANT",
                    help="with --hudi: time-travel to the given timeline "
                         "instant (inclusive)")
@@ -126,7 +127,7 @@ def main() -> int:
     p.add_argument("--jsonl", action="store_true",
                    help="treat --input as a JSONL corpus (dir of "
                         ".jsonl/.ndjson[.gz] files): stage each file "
-                        "to parquet (one task per file, idempotent "
+                        "to parquet (each file on its own, idempotent "
                         "md5-named outputs) then encode the staged "
                         "tree; combine with --append for incremental "
                         "ingest over a growing drop directory")
@@ -321,7 +322,7 @@ def main() -> int:
             scan = hudi_meta.filter_partitions(scan, pf)
         if scan.get("needs_merge"):
             # MERGE_ON_READ: materialize log-bearing file slices into
-            # the staging tree (one task per slice, idempotent md5
+            # the staging tree (each slice on its own, idempotent md5
             # names — same protocol as --jsonl), then encode staged +
             # passthrough base files
             from embulk_input_parquet_hadoop_spark.sources import \

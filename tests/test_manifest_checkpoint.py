@@ -140,3 +140,69 @@ def test_compact_on_object_store_scheme(spark, tmp_path):
     assert mf.committed_input_files(out)
     assert sorted(map(tuple,
                       mf.read_manifest(spark, out).collect())) == before
+
+
+def test_recommit_after_rollback_and_compact_keeps_lineage(spark,
+                                                           tmp_path):
+    """rollback -> compact -> re-commit: the re-committed wave sits at an
+    id below the checkpoint's max and outside its entries; readers must
+    still see it, or its files drop out of the append lineage and a later
+    append encodes them twice."""
+    src, out = _encode(spark, tmp_path)
+    before = _manifest_view(spark, out)
+    Path(f"{out}/manifest/wave-1.json").unlink()
+    mf.compact_manifest(out)
+    t = pipeline.encode_path(spark, src, out, waves=3, resume=True)
+    assert t["waves_run"] == 1 and t["waves_skipped"] == 2
+    assert mf.committed_input_files(out) == before[1]
+    assert sorted(r.wave_id
+                  for r in mf.read_manifest(spark, out).collect()) \
+        == [0, 1, 2]
+    again = pipeline.encode_path(spark, src, out, waves=1, append=True)
+    assert again["waves_run"] == 0
+
+
+def test_wave_absent_from_checkpoint_is_read(spark, tmp_path):
+    """A compactor that listed the manifest while wave 1 was rolled back
+    publishes a checkpoint without it after the re-commit landed: the
+    reader reads wave 1's own record."""
+    _, out = _encode(spark, tmp_path)
+    before = _manifest_view(spark, out)
+    rec = Path(f"{out}/manifest/wave-1.json")
+    held = rec.read_bytes()
+    rec.unlink()
+    mf.compact_manifest(out)
+    rec.write_bytes(held)
+    assert _manifest_view(spark, out) == before
+
+
+def test_recommit_replaces_checkpoint_entry(spark, tmp_path):
+    """compact -> rollback -> re-commit: the checkpoint's entry for the
+    wave predates the re-commit and must not be served in its place."""
+    _, out = _encode(spark, tmp_path)
+    mf.compact_manifest(out)
+    Path(f"{out}/manifest/wave-1.json").unlink()
+    mf.commit_wave(spark, out, 1, ["/re/encoded.parquet"], 0.5)
+    recs = {r.wave_id: r for r in mf.read_manifest(spark, out).collect()}
+    assert recs[1].input_files == ["/re/encoded.parquet"]
+    assert "/re/encoded.parquet" in mf.committed_input_files(out)
+
+
+def test_reader_survives_checkpoint_removed_mid_read(spark, tmp_path,
+                                                    monkeypatch):
+    """A concurrent compact_manifest deletes the checkpoint the reader
+    just listed before the reader opens it."""
+    _, out = _encode(spark, tmp_path)
+    mf.compact_manifest(out)
+    before = _manifest_view(spark, out)
+    real = fsutil.read_json
+    removed = []
+
+    def racing_read(path):
+        if Path(path).name.startswith("checkpoint-"):
+            Path(path).unlink()
+            removed.append(path)
+        return real(path)
+    monkeypatch.setattr(fsutil, "read_json", racing_read)
+    assert mf.committed_input_files(out) == before[1]
+    assert removed

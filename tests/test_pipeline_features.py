@@ -709,3 +709,124 @@ def test_vacuum_sweeps_committed_wave_meta_tmp(spark, tokens_dir,
     res = mf.vacuum(out)
     assert res["tmp_removed"] == 1 and not os.path.exists(stray)
     assert res["waves_removed"] == 0  # the committed wave is untouched
+
+
+# -- file-task job shape: one Python stage, files packed per core ---------
+
+@pytest.fixture(scope="module")
+def many_files_dir(spark, tmp_path_factory):
+    """More source files than the session has cores."""
+    n = spark.sparkContext.defaultParallelism + 3
+    path = str(tmp_path_factory.mktemp("packed") / "tokens")
+    datagen.generate(path, n_docs=40 * n, seed=17, n_files=n)
+    return path
+
+
+def _file_task_stage_tasks(sc, group: str) -> list[int]:
+    """Task counts of the stages the jobs of ``group`` ran, leaving out
+    ``encode_path``'s Spark-side schema probe (a JVM job named
+    ``parquet at ...``)."""
+    st = sc.statusTracker()
+    out = []
+    for j in sorted(st.getJobIdsForGroup(group)):
+        for s in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(s)
+            if not info.name.startswith("parquet at"):
+                out.append(info.numTasks)
+    return out
+
+
+def _parquet_names(d: str) -> list[str]:
+    return sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
+
+
+def test_wave_runs_as_one_stage_packed_per_core(spark, many_files_dir,
+                                                tmp_path):
+    from embulk_input_parquet_hadoop_spark.plans import verify
+    sc = spark.sparkContext
+    n_files = len(_parquet_names(many_files_dir))
+    par = sc.defaultParallelism
+    assert n_files > par
+    out = str(tmp_path / "packed")
+    sc.setJobGroup("packed-wave", "one encode wave")
+    try:
+        totals = pipeline.encode_path(spark, many_files_dir, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _file_task_stage_tasks(sc, "packed-wave") == [min(n_files, par)]
+    assert totals["n_rows"] == 40 * n_files
+    # every file still commits its own chunk file
+    assert len(_parquet_names(f"{out}/chunks/wave=0")) == n_files
+    v = verify.verify_files(spark, out)
+    assert v["ok"] and v["files_compared"] == n_files
+    assert v["rows_compared"] == 40 * n_files
+
+
+def test_corrupt_file_fails_alone_in_packed_task(spark, many_files_dir,
+                                                 tmp_path):
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    bad_dir = str(tmp_path / "bad")
+    shutil.copytree(many_files_dir, bad_dir)
+    names = _parquet_names(bad_dir)
+    victim = os.path.join(bad_dir, names[1])
+    with open(victim, "r+b") as f:  # truncated: unreadable footer
+        f.truncate(os.path.getsize(victim) // 2)
+    # the smallest file packs into a task that already holds a good one
+    assert len(names) > spark.sparkContext.defaultParallelism
+
+    with pytest.raises(RuntimeError, match="bad_file_threshold"):
+        pipeline.encode_path(spark, bad_dir, str(tmp_path / "strict"))
+    assert mf.completed_waves(spark, str(tmp_path / "strict")) == set()
+
+    out = str(tmp_path / "tolerant")
+    totals = pipeline.encode_path(spark, bad_dir, out,
+                                  bad_file_threshold=0.1)
+    assert totals["n_rows"] == 40 * (len(names) - 1)
+    assert mf.read_manifest(spark, out).collect()[0].n_bad_files == 1
+    meta = pq.read_table(f"{out}/chunks_meta/wave-0.parquet")
+    errs = meta.filter(pc.is_valid(meta.column("error"))).to_pylist()
+    assert len(errs) == 1 and errs[0]["source_file"].endswith(names[1])
+    mates = [r for r in meta.to_pylist()
+             if r["part_id"] == errs[0]["part_id"] and r["error"] is None]
+    assert mates, "the corrupt file had a task to itself"
+    assert all(os.path.exists(r["chunk_file"]) for r in mates)
+
+
+def test_packed_encode_names_repeat(spark, many_files_dir, tmp_path):
+    import pyarrow.parquet as pq
+
+    def names(out):
+        t = pq.read_table(f"{out}/chunks_meta/wave-0.parquet",
+                          columns=["chunk_id", "source_file",
+                                   "chunk_file"]).to_pylist()
+        return sorted((r["chunk_id"], os.path.basename(r["source_file"]),
+                       os.path.basename(r["chunk_file"])) for r in t)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    pipeline.encode_path(spark, many_files_dir, a)
+    pipeline.encode_path(spark, many_files_dir, b)
+    assert names(a) == names(b)
+    assert _parquet_names(f"{a}/chunks/wave=0") \
+        == _parquet_names(f"{b}/chunks/wave=0")
+
+
+def test_pack_lpt_deterministic_and_balanced():
+    from embulk_input_parquet_hadoop_spark.plans.filetasks import pack_lpt
+    w = [5, 1, 9, 3, 3, 1, 0, 7]
+    assert pack_lpt(w, 4) == [[2], [7], [0, 1, 5], [3, 4, 6]]
+    # equal weights (and all-zero sizes) pack round-robin: no empty bin
+    assert pack_lpt([0] * 5, 3) == [[0, 3], [1, 4], [2]]
+    assert pack_lpt([1] * 3, 3) == [[0], [1], [2]]
+
+
+def test_file_sizes_local_and_object_store(tmp_path):
+    from embulk_input_parquet_hadoop_spark.plans import fsutil
+    p = tmp_path / "f.bin"
+    p.write_bytes(b"x" * 10)
+    assert fsutil.file_sizes([str(p), f"file://{p}",
+                              f"mock-s3://bkt{p}",
+                              f"mock-s3://bkt{tmp_path}/missing",
+                              str(tmp_path / "missing")]) \
+        == [10, 10, 10, 0, 0]

@@ -116,3 +116,20 @@ def test_centroid_outliers_two_phase_topk(spark):
     b = sorted(map(tuple, similarity.centroid_outliers(
         df.repartition(13, "vec_id"), k=4).collect()))
     assert a == b and len(a) == 12  # 3 labels x k=4
+
+
+@pytest.mark.parametrize("lo, hi", [(0, 2_000_000), (-2_000_000, 2_000_000),
+                                    (1_000_000, 3_000_000),
+                                    (-3_000_000, -1_000_000)])
+def test_q24_exact_pairs_subset_capped(spark, monkeypatch, lo, hi):
+    """q24's exact all-pairs baseline is O(n^2), so its subset filter must
+    admit at most 500 vectors whatever range the table's ids span."""
+    import __spark_entry__ as entrymod
+    emb = spark.range(lo, hi).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.lit(1.0).cast("float")).alias("embedding"))
+    monkeypatch.setattr(entrymod, "_t", lambda spark, sf_dir, name: emb)
+    monkeypatch.setattr(entrymod.similarity, "neardup_pairs",
+                        lambda sub, threshold: sub)
+    sub = entrymod.q24_embedding_neardup_pairs(spark, SF_DIR)
+    assert sub.count() <= 500

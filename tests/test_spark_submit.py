@@ -82,7 +82,7 @@ def test_encode_job_via_spark_submit(tmp_path, spark):
 def test_encode_job_hudi_mor_via_spark_submit(tmp_path):
     """encode_job --hudi on a MERGE_ON_READ table in a fresh JVM: the
     job plans the snapshot from .hoodie metadata, stages the
-    log-bearing slice into --staging (one task per slice), encodes the
+    log-bearing slice into --staging (each slice on its own), encodes the
     merged rows and verifies — the full MOR CLI chain with zero Hudi
     runtime. No Spark fixture needed: the base file and log blocks are
     driver-side pyarrow/bytes."""
