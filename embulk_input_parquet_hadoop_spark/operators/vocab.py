@@ -185,6 +185,14 @@ def bpe_learn(df: DataFrame, n_merges: int, first_id: int,
     inherently sequential — BPE merge k depends on k-1 — so the
     parallelism lives inside each round, which is how production
     tokenizer trainers distribute too.
+
+    Intended regime: a sample of the corpus, not the full corpus. Each
+    merge costs one :func:`pair_counts` Spark job plus one
+    ``localCheckpoint`` materialization of the rewritten tokens, so
+    ``n_merges`` merges run as ``n_merges`` sequential rounds, each a
+    full pass over ``df``. Learn the merges on a sample (for example
+    ``df.sample(fraction, seed=...)``), then apply them to the full
+    corpus in order with :func:`apply_bpe_merge`, which is map-only.
     """
     merges: list[tuple[int, int, int]] = []
     cur = df

@@ -18,12 +18,16 @@ PythonRDD, then the Arrow UDF): on a 4-core host 8 no-op file tasks cost
 1.31 s that way against 0.65 s with one Python worker per task, and the
 session keeps twice the idle Python workers alive.
 
-Packing: a Python task waits 0.2–0.3 s from submit until its function
-starts (measured on a 4-core host; the worker blocks on the JVM's task
-header, and no daemon or worker-reuse setting moves it), so more tasks
-than cores pay that latency once per task round. Files are therefore
-packed into ``min(files, defaultParallelism)`` tasks by greedy LPT on a
-per-file weight (source bytes). The packing is deterministic — ties break
+Packing: each task round of a Python stage has a fixed cost. Most of it
+used to be worker CPU, not waiting: every task's ``setup_spark_files``
+re-read the central directories of ``pyspark.zip``, the py4j zip and the
+spark-core jar (0.24–0.51 s per task on a 4-core host), which the package
+daemon now skips for unchanged archives (``daemon.guard_zip_rereads``).
+What is left still grows with task rounds: on that host, warm, a no-op
+Python job costs 0.08–0.09 s as 1 task, 0.10–0.12 s as 4 and 0.18–0.20 s
+as 8 (before the guard: 0.22–0.24, 0.28–0.34 and 0.54–0.67 s). Files are
+therefore packed into ``min(files, defaultParallelism)`` tasks by greedy
+LPT on a per-file weight (source bytes). The packing is deterministic — ties break
 by listing order — because task ids name outputs (chunk ids
 ``w{wave}-p{pid}-b{batch}`` and chunk files ``part-{pid}-f{seq}``): a
 re-run or retry of the same file list lands the same names.

@@ -20,9 +20,11 @@ files LPT-packed into at most one Spark task per core:
   The reference runs one task per file
   (``ParquetHadoopInputPlugin.java:116``); here a wave is ONE Python stage
   of ``min(files, cores)`` tasks, files packed by greedy LPT on their
-  source bytes (``filetasks.run_file_tasks``), because each Python task
-  pays 0.2–0.3 s of launch latency (4-core host) that a task per file
-  would pay once per task round. The commit and error unit is still the
+  source bytes (``filetasks.run_file_tasks``), because every extra task
+  round costs about 0.07 s (4-core host: a no-op Python job takes
+  0.10–0.12 s as 4 tasks and 0.18–0.20 s as 8, with the daemon's zip
+  re-read guard; see ``daemon.py``), which a task per file would pay
+  once per round. The commit and error unit is still the
   file: each file's chunks commit, or fail, on their own;
 - each chunk (one Arrow batch, the row-group analogue) is encoded per
   column with the codec cascade and appended to an uncompressed Parquet
