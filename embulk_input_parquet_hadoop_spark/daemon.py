@@ -35,7 +35,10 @@ went 0.22-0.24 -> 0.08-0.09 s as 1 task, 0.28-0.34 -> 0.10-0.12 s
 as 4 and 0.54-0.67 -> 0.18-0.20 s as 8 (a JVM-only job: 0.10-0.13 s), and
 ``PythonRunner``'s per-task ``init`` from 250-420 ms to 10-50 ms. The
 guard is installed only when this module runs as the daemon, so it lives
-in Spark's Python workers alone.
+in Spark's Python workers alone. With the worker channel on a Unix
+domain socket as well (``session.get_spark``), the same jobs take
+0.04-0.05 s as 1 task, 0.06-0.09 s as 4 and 0.12-0.13 s as 8, and
+``PythonRunner``'s ``finish`` drops from 40-42 ms to 0-1 ms per task.
 """
 
 import os

@@ -23,9 +23,13 @@ used to be worker CPU, not waiting: every task's ``setup_spark_files``
 re-read the central directories of ``pyspark.zip``, the py4j zip and the
 spark-core jar (0.24–0.51 s per task on a 4-core host), which the package
 daemon now skips for unchanged archives (``daemon.guard_zip_rereads``).
-What is left still grows with task rounds: on that host, warm, a no-op
-Python job costs 0.08–0.09 s as 1 task, 0.10–0.12 s as 4 and 0.18–0.20 s
-as 8 (before the guard: 0.22–0.24, 0.28–0.34 and 0.54–0.67 s). Files are
+Then each task stalled about 40 ms on the loopback-TCP worker channel
+(``PythonRunner`` ``finish``), which ``session.get_spark`` removes by
+moving the channel onto a Unix domain socket (``finish`` 0–1 ms). What
+is left still grows with task rounds: on that host, warm, a no-op Python
+job costs 0.04–0.05 s as 1 task, 0.06–0.09 s as 4 and 0.12–0.13 s as 8
+(quartiles of 15; on TCP 0.08–0.09, 0.10–0.11 and 0.19–0.23 s; before
+the guard 0.22–0.24, 0.28–0.34 and 0.54–0.67 s). Files are
 therefore packed into ``min(files, defaultParallelism)`` tasks by greedy
 LPT on a per-file weight (source bytes). The packing is deterministic — ties break
 by listing order — because task ids name outputs (chunk ids

@@ -21,9 +21,10 @@ files LPT-packed into at most one Spark task per core:
   (``ParquetHadoopInputPlugin.java:116``); here a wave is ONE Python stage
   of ``min(files, cores)`` tasks, files packed by greedy LPT on their
   source bytes (``filetasks.run_file_tasks``), because every extra task
-  round costs about 0.07 s (4-core host: a no-op Python job takes
-  0.10–0.12 s as 4 tasks and 0.18–0.20 s as 8, with the daemon's zip
-  re-read guard; see ``daemon.py``), which a task per file would pay
+  round costs about 0.05 s (4-core host: a no-op Python job takes
+  0.06–0.09 s as 4 tasks and 0.12–0.13 s as 8, with the daemon's zip
+  re-read guard and the Unix domain socket worker channel; see
+  ``daemon.py`` and ``session.py``), which a task per file would pay
   once per round. The commit and error unit is still the
   file: each file's chunks commit, or fail, on their own;
 - each chunk (one Arrow batch, the row-group analogue) is encoded per
@@ -58,6 +59,7 @@ import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.encode import (decode_column, encode_column,
                                 set_entropy_mode, temporal_int_view)
@@ -1258,6 +1260,17 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     then runs against one frozen snapshot, immune to concurrent
     commits). ``input_path`` is still used in messages/manifest lineage.
 
+    Listing (``schema_mode="single"``) is Spark's file index of
+    ``input_path`` or ``input_files``, asked for with a fixed schema
+    (``spark.read.schema(...).parquet(...).inputFiles()``): globs, the
+    hidden-name filter, partition-directory discovery, names without a
+    ``.parquet`` suffix and qualified URIs follow Spark's rules, and no
+    Spark job runs. Only ``expected_schema`` and ``cluster_partitions``
+    make Spark infer the source schema (one Spark job that reads a
+    footer). An empty listing still fails with Spark's
+    ``UNABLE_TO_INFER_SCHEMA`` and a missing path with
+    ``PATH_NOT_FOUND``, before anything is written under ``out_dir``.
+
     ``entropy=True`` turns on the opt-in order-1 rANS competitor for
     large int frames (``codecs/rans.py``): smaller output (measured
     -2.5% bytes/token on the i.i.d. bench corpus, far more on real
@@ -1371,44 +1384,51 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     # stores, temp+move on rename-capable remotes), and the wave manifest
     # record stays the single visibility point (SCALE.md commit protocol)
     if schema_mode == "single":
+        paths = input_files or [input_path]
+        # only these two need Spark's schema of the source: expected_schema
+        # compares Spark types, and the clustering path reads every wave
+        # through spark.read.parquet. Everything else asks Spark for its
+        # file index alone — a fixed schema skips inference, which is one
+        # Spark job per call and reads a footer a bad file can fail
+        infer = expected_schema is not None or bool(cluster_partitions)
         try:
-            df0 = (spark.read.parquet(*input_files) if input_files
-                   else spark.read.parquet(input_path))
+            df0 = (spark.read if infer
+                   else spark.read.schema(StructType())).parquet(*paths)
+            # inputFiles() returns percent-ENCODED URIs (a literal "%"
+            # or space in a file name comes back as %25 / %20, which
+            # pyarrow then fails to open); decode back to raw paths
+            groups = [sorted(_uri_to_path(f) for f in df0.inputFiles())]
+            if not groups[0]:
+                # an empty listing still gets Spark's own refusal
+                # (UNABLE_TO_INFER_SCHEMA)
+                spark.read.parquet(*paths)
         except Exception as exc:
-            # Two classes of sources OUR pyarrow-reading encode tasks
-            # handle fine but this Spark-side schema probe cannot:
+            # Sources OUR pyarrow-reading encode tasks handle fine but
+            # Spark cannot: filesystem schemes the JVM has no FileSystem
+            # for (mock-s3, or s3/gs without the hadoop cloud jars —
+            # fsutil reads them via pyarrow.fs), and, under inference,
             # footer types Spark's reader lacks (TIMESTAMP(NANOS) ->
-            # PARQUET_TYPE_ILLEGAL), and filesystem schemes the JVM has
-            # no FileSystem for (mock-s3, or s3/gs without the hadoop
-            # cloud jars — fsutil reads them via pyarrow.fs). Fall back
-            # to pyarrow footer listing — still requiring one schema.
+            # PARQUET_TYPE_ILLEGAL). Listing falls back to pyarrow —
+            # still requiring one schema; inference cannot.
             msg = str(exc)
-            if not ("PARQUET_TYPE_ILLEGAL" in msg
-                    or "No FileSystem for scheme" in msg
-                    or "UnsupportedFileSystem" in msg):
+            no_fs = ("No FileSystem for scheme" in msg
+                     or "UnsupportedFileSystem" in msg)
+            if infer and (no_fs or "PARQUET_TYPE_ILLEGAL" in msg):
+                what = ("expected_schema" if expected_schema is not None
+                        else "cluster_partitions")
+                raise TypeError(
+                    f"{what} needs a Spark-readable source schema, but "
+                    f"Spark rejects this tree: {exc}; without it the "
+                    "file-source path reads with pyarrow") from exc
+            if not no_fs:
                 raise
-            if expected_schema is not None:
-                raise TypeError(
-                    "expected_schema check needs a Spark-readable source "
-                    f"schema, but Spark rejects this tree: {exc}") from exc
-            if cluster_partitions:
-                # the clustering path re-reads every wave through
-                # spark.read.parquet, which would re-raise this same
-                # error inside the wave loop — refuse up front
-                raise TypeError(
-                    "cluster_partitions needs a Spark-readable source "
-                    f"tree, but Spark rejects this one: {exc}; use the "
-                    "file-source path (cluster_partitions=None), which "
-                    "reads with pyarrow") from exc
-            sgroups = _schema_groups(input_files
-                                     or _list_parquet_files(input_path))
-            if len(sgroups) > 1:
+            groups = _schema_groups(input_files
+                                    or _list_parquet_files(input_path))
+            if len(groups) > 1:
                 raise ValueError(
                     "input tree mixes incompatible schemas; use "
                     "schema_mode='mixed'") from exc
-            df0 = None
-            groups = sgroups
-        if df0 is not None and expected_schema is not None:
+        if expected_schema is not None:
             expected = spark.createDataFrame([], expected_schema).schema
             got = [(f.name, f.dataType) for f in df0.schema.fields]
             want = [(f.name, f.dataType) for f in expected.fields]
@@ -1417,11 +1437,6 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                     f"input schema mismatch: got "
                     f"{df0.schema.simpleString()}, "
                     f"expected {expected.simpleString()}")
-        if df0 is not None:
-            # inputFiles() returns percent-ENCODED URIs (a literal "%"
-            # or space in a file name comes back as %25 / %20, which
-            # pyarrow then fails to open); decode back to raw paths
-            groups = [sorted(_uri_to_path(f) for f in df0.inputFiles())]
     else:
         if expected_schema is not None:
             raise ValueError("expected_schema requires schema_mode='single'")

@@ -514,6 +514,12 @@ def test_ns_timestamp_zone_maps_use_micro_bounds(spark, tmp_path):
             f"{src}/f{fi}.parquet")
     out = str(tmp_path / "ns_out")
     pipeline.encode_path(spark, src, out)
+    # Spark cannot infer a schema from a ns footer (PARQUET_TYPE_ILLEGAL);
+    # its file index lists the tree all the same, with the lineage the
+    # pyarrow listing gave, so an append never re-encodes it
+    assert mf.committed_input_files(out) \
+        == set(pipeline._list_parquet_files(src)) \
+        == {f"{src}/f0.parquet", f"{src}/f1.parquet"}
     chunks = pipeline.read_chunks(spark, out)
     lo_us, hi_us = 1_500_000, 3_500_000  # µs: selects seconds {2, 3}
     pruned = pipeline.prune_chunks(chunks, "ts", lo=lo_us, hi=hi_us)
@@ -723,17 +729,11 @@ def many_files_dir(spark, tmp_path_factory):
 
 
 def _file_task_stage_tasks(sc, group: str) -> list[int]:
-    """Task counts of the stages the jobs of ``group`` ran, leaving out
-    ``encode_path``'s Spark-side schema probe (a JVM job named
-    ``parquet at ...``)."""
+    """Task counts of the stages the jobs of ``group`` ran."""
     st = sc.statusTracker()
-    out = []
-    for j in sorted(st.getJobIdsForGroup(group)):
-        for s in st.getJobInfo(j).stageIds:
-            info = st.getStageInfo(s)
-            if not info.name.startswith("parquet at"):
-                out.append(info.numTasks)
-    return out
+    return [st.getStageInfo(s).numTasks
+            for j in sorted(st.getJobIdsForGroup(group))
+            for s in st.getJobInfo(j).stageIds]
 
 
 def _parquet_names(d: str) -> list[str]:
