@@ -49,7 +49,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -529,10 +528,9 @@ class _EqualityDeleteFilter:
             if missing:
                 raise ValueError(
                     f"equality-delete key column(s) {missing} not in the "
-                    f"data batch (have {tab.column_names}) — either "
-                    "projected out with columns=, or the data file "
-                    "predates a column add/rename and carries no Parquet "
-                    "field ids to resolve it")
+                    f"data batch (have {tab.column_names}) — the data "
+                    "file predates a column add/rename and carries no "
+                    "Parquet field ids to resolve it")
             if hashes is not None:
                 cand = np.nonzero(np.isin(_eq_hashes(tab, cols),
                                           hashes))[0]
@@ -553,6 +551,109 @@ class _EqualityDeleteFilter:
         return batch
 
 
+def _source_batches(path: str, batch_rows: int, columns: list[str] | None,
+                    dfiles: list[str] | None, eqjson: str | None,
+                    cjson: str | None, const_schema: dict[str, str] | None,
+                    column_renames: list[dict] | None,
+                    bad_record_threshold: float, skipped: list[int]):
+    """One source file's batches, exactly as encoded: the single read
+    that the encode task encodes and ``verify_files`` compares against,
+    so both see the same rows at the same batch boundaries.
+
+    ``dfiles``/``eqjson``/``cjson`` are the file's RAW side inputs from
+    its task input row (position-delete files, equality-delete
+    descriptors JSON, constant columns JSON). They are resolved at the
+    first ``next()``, inside the caller's per-file error capture, so a
+    missing or corrupt source, delete file or descriptor fails that file
+    alone.
+
+    Row groups are read one at a time (``ParquetRowReader.java:105-118``),
+    single-threaded: one task <-> one executor core; pyarrow would
+    otherwise fan out to every machine core behind Spark's back,
+    oversubscribing real executors and falsifying per-core accounting.
+    A corrupt row group is skipped from its first undecodable batch on
+    (its already-decoded batches are kept) and the rows lost are appended
+    to ``skipped``; past ``bad_record_threshold`` of the file's rows the
+    read raises (``ParquetRowReader.java:101,142-147``). Per batch, in
+    this order: position deletes (file-absolute row positions), equality
+    deletes (on physical names, so the key columns are read even when
+    ``columns=`` projects them out, then dropped), the column-mapping
+    rename to logical names, then constant-column injection. A batch
+    left empty by the deletes is not yielded.
+
+    ``columns`` is the LOGICAL projection (None: every column); names of
+    injected constants in it are not read from the file. A constant
+    whose name is also a column of the file fails the file."""
+    from . import fsutil
+    pf = fsutil.parquet_file(path)
+    schema = pf.schema_arrow
+    del_pos = _read_delete_positions(path, dfiles) if dfiles else None
+    eqf = (_EqualityDeleteFilter.build(json.loads(eqjson),
+                                       data_schema=schema)
+           if eqjson else None)
+    consts = json.loads(cjson) if cjson else None
+    if consts:
+        names = (_logical_names(schema, column_renames) if column_renames
+                 else schema.names)
+        clash = [c for c in consts if c in names]
+        if clash:
+            raise ValueError(
+                f"constant column(s) {clash} already exist physically in "
+                f"{path} — injecting would shadow real data")
+        if columns is not None:
+            columns = [c for c in columns if c not in consts]
+    read_cols = (_physical_columns(schema, column_renames, columns)
+                 if column_renames and columns is not None else columns)
+    extra = ([c for c in eqf.columns_needed if c not in read_cols]
+             if eqf is not None and read_cols is not None else [])
+    if extra:
+        read_cols = read_cols + extra
+    rg_start = 0  # file-absolute row offset of this group
+    for rg in range(pf.metadata.num_row_groups):
+        rg_rows = pf.metadata.row_group(rg).num_rows
+        rows_read = 0
+        it = pf.iter_batches(batch_size=batch_rows, row_groups=[rg],
+                             columns=read_cols, use_threads=False)
+        while True:
+            try:
+                batch = next(it)
+            except StopIteration:
+                break
+            except Exception:  # noqa: BLE001  (corrupt pages)
+                skipped.append(rg_rows - rows_read)
+                break
+            off = rg_start + rows_read
+            n_read = batch.num_rows
+            rows_read += n_read
+            if del_pos is not None:
+                lo = int(np.searchsorted(del_pos, off))
+                hi = int(np.searchsorted(del_pos, off + n_read))
+                if hi > lo:
+                    keep = np.ones(n_read, dtype=bool)
+                    keep[del_pos[lo:hi] - off] = False
+                    batch = batch.filter(pa.array(keep))
+            if eqf is not None and batch.num_rows:
+                batch = eqf.apply(batch)
+            if batch.num_rows == 0:
+                continue
+            if extra:
+                batch = batch.drop_columns(extra)
+            if column_renames:
+                batch = rename_batch(batch, column_renames)
+            if consts:
+                for nm, arr in _const_arrays(consts, batch.num_rows,
+                                             const_schema or {}):
+                    batch = batch.append_column(nm, arr)
+            yield batch
+        rg_start += rg_rows
+    total_rows = pf.metadata.num_rows
+    if total_rows and sum(skipped) > bad_record_threshold * total_rows:
+        raise RuntimeError(
+            f"{sum(skipped)}/{total_rows} rows in {len(skipped)} corrupt "
+            f"row groups exceeds "
+            f"bad_record_threshold={bad_record_threshold}")
+
+
 def make_encode_files_fn(wave_id: int, wave_dir: str,
                          batch_rows: int = DEFAULT_BATCH_ROWS,
                          columns: list[str] | None = None,
@@ -564,37 +665,32 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
     """Task fn for the file-source path (run by
     ``filetasks.run_file_tasks``): paths in, chunk *stats* out.
 
+    Each input row is one source file in ``FILE_ROWS_ARROW_SCHEMA``:
+    its path and its raw per-file side inputs (position deletes,
+    equality-delete descriptors, constant columns). The task reads each
+    file through ``_source_batches`` — the same read ``verify_files``
+    replays — encodes each batch, and streams chunk rows into one
+    uncompressed Parquet chunk file *per source file*, atomically renamed
+    only when that source file finishes cleanly. A mid-file failure
+    discards the partial chunk file (and its pending stat rows), so no
+    partially-processed input is ever visible — reprocessing a failed
+    file in a later wave cannot duplicate rows, and an aborted wave
+    leaves nothing a manifest-gated reader can see.
+
     ``const_schema`` ({column: _CONST_TYPES key}) declares the types of
-    per-file CONSTANT columns; the values ride the input rows'
-    ``consts`` JSON column and are appended to every batch after delete
-    masking (partition values for Delta / Hive sources — see
-    ``encode_path(const_columns=)``). A constant whose name collides
-    with a physical column fails that file loudly.
+    the per-file CONSTANT columns (partition values for Delta / Hive
+    sources — see ``encode_path(const_columns=)``).
 
     ``column_renames`` ([{"logical", "physical", "id"}], table-uniform)
     maps column-mapped physical parquet names to the table's logical
     schema (Delta columnMapping modes name/id,
-    ``delta_meta.column_renames``): every batch is renamed right after
-    the read, a ``columns=`` projection is LOGICAL and translates to
-    the physical read set per file, and field-id resolution wins over
-    physical-name matching where ids exist (``_logical_names``).
-
-    The task reads its files with pyarrow (row-group iteration like the
-    reference's ``ParquetRowReader``, one group at a time,
-    ``ParquetRowReader.java:105-118``), encodes each batch, and streams
-    chunk rows into one uncompressed Parquet chunk file *per source file*,
-    atomically renamed only when that source file finishes cleanly. A
-    mid-file failure discards the partial chunk file (and its pending stat
-    rows), so no partially-processed input is ever visible — reprocessing
-    a failed file in a later wave cannot duplicate rows, and an aborted
-    wave leaves nothing a manifest-gated reader can see.
+    ``delta_meta.column_renames``); a ``columns=`` projection is
+    LOGICAL.
 
     ``bad_record_threshold``: tolerated fraction of rows per file lost to
     corrupt row groups — the reference's per-record tolerance
     (``ParquetRowReader.java:101,142-147``, knob ``README.md:25-27``)
-    at Arrow's row-group decode granularity. A corrupt row group is
-    skipped; readable row groups — and the already-decoded batches of a
-    partially-corrupt one — are kept. Above the threshold the whole file
+    at Arrow's row-group decode granularity. Above it the whole file
     fails (none of its chunks commit) and the driver's per-wave
     ``bad_file_threshold`` takes over.
 
@@ -668,21 +764,10 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
         bidx = 0
         fseq = 0
         for b in batches:
-            # optional per-file Iceberg delete inputs ride the input
-            # rows themselves (position deletes: list<string>;
-            # equality deletes: JSON descriptor list) — no closure
-            # state, Spark distributes them with the file
-            dcol = (b.column("deletes").to_pylist()
-                    if "deletes" in b.schema.names
-                    else [None] * b.num_rows)
-            ecol = (b.column("eq").to_pylist()
-                    if "eq" in b.schema.names
-                    else [None] * b.num_rows)
-            ccol = (b.column("consts").to_pylist()
-                    if "consts" in b.schema.names
-                    else [None] * b.num_rows)
+            # the per-file side inputs ride the input rows themselves —
+            # no closure state, Spark distributes them with the file
             for path, dfiles, eqjson, cjson in zip(
-                    b.column("path").to_pylist(), dcol, ecol, ccol):
+                    *b.to_pydict().values()):
                 if local:
                     final = os.path.join(
                         wave_dir, f"part-{pid:05d}-f{fseq:04d}.parquet")
@@ -708,102 +793,24 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 fseq += 1
                 writer = None
                 pending = []  # stat rows held until the file commits
-                bad_rows = 0
-                bad_groups = 0
+                skipped = []  # rows lost per skipped corrupt row group
                 committed_final = None  # set once os.replace lands
                 try:
-                    pf = fsutil.parquet_file(path)
-                    total_rows = pf.metadata.num_rows
-                    del_pos = (_read_delete_positions(path, dfiles)
-                               if dfiles else None)
-                    eqf = (_EqualityDeleteFilter.build(
-                        json.loads(eqjson), data_schema=pf.schema_arrow)
-                           if eqjson else None)
-                    consts = json.loads(cjson) if cjson else None
-                    if column_renames:
-                        file_names_now = _logical_names(pf.schema_arrow,
-                                                        column_renames)
-                        read_cols = (_physical_columns(
-                            pf.schema_arrow, column_renames, columns)
-                            if columns else None)
-                    else:
-                        file_names_now = pf.schema_arrow.names
-                        read_cols = columns
-                    if consts:
-                        clash = [c for c in consts
-                                 if c in file_names_now]
-                        if clash:
-                            raise ValueError(
-                                f"constant column(s) {clash} already "
-                                f"exist physically in {path} — injecting"
-                                " would shadow real data")
-                    rg_start = 0  # file-absolute row offset of this group
-                    for rg in range(pf.metadata.num_row_groups):
-                        rg_rows = pf.metadata.row_group(rg).num_rows
-                        rows_read = 0
-                        # single-threaded per task: one task <-> one
-                        # executor core. pyarrow would otherwise fan out
-                        # to every machine core behind Spark's back,
-                        # oversubscribing real executors and falsifying
-                        # per-core accounting
-                        it = pf.iter_batches(batch_size=batch_rows,
-                                             row_groups=[rg],
-                                             columns=read_cols,
-                                             use_threads=False)
-                        while True:
-                            try:
-                                batch = next(it)
-                            except StopIteration:
-                                break
-                            except Exception:  # noqa: BLE001
-                                # corrupt pages: skip the rest of this row
-                                # group, keep its already-decoded batches
-                                bad_rows += rg_rows - rows_read
-                                bad_groups += 1
-                                break
-                            n_read = batch.num_rows
-                            if column_renames:
-                                batch = rename_batch(batch,
-                                                     column_renames)
-                            if del_pos is not None:
-                                # apply position deletes for this batch's
-                                # file-absolute row range [off, off+n)
-                                off = rg_start + rows_read
-                                lo = int(np.searchsorted(del_pos, off))
-                                hi = int(np.searchsorted(del_pos,
-                                                         off + n_read))
-                                if hi > lo:
-                                    keep = np.ones(n_read, dtype=bool)
-                                    keep[del_pos[lo:hi] - off] = False
-                                    batch = batch.filter(pa.array(keep))
-                            if eqf is not None and batch.num_rows:
-                                batch = eqf.apply(batch)
-                            if batch.num_rows == 0:
-                                rows_read += n_read
-                                continue
-                            if consts:
-                                for nm, arr in _const_arrays(
-                                        consts, batch.num_rows,
-                                        const_schema or {}):
-                                    batch = batch.append_column(nm, arr)
-                            chunk_row, stats = _encode_one_batch(
-                                batch, wave_id, pid, bidx)
-                            if writer is None:
-                                writer = pq.ParquetWriter(
-                                    tmp, CHUNK_ARROW_SCHEMA,
-                                    compression="none")
-                            writer.write_batch(chunk_row)
-                            pending.append(meta_row(stats, path, final,
-                                                    _cols_of(chunk_row)))
-                            rows_read += n_read
-                            bidx += 1
-                        rg_start += rg_rows
-                    if total_rows and bad_rows > (bad_record_threshold
-                                                  * total_rows):
-                        raise RuntimeError(
-                            f"{bad_rows}/{total_rows} rows in {bad_groups} "
-                            f"corrupt row groups exceeds "
-                            f"bad_record_threshold={bad_record_threshold}")
+                    for batch in _source_batches(
+                            path, batch_rows, columns, dfiles, eqjson,
+                            cjson, const_schema, column_renames,
+                            bad_record_threshold, skipped):
+                        chunk_row, stats = _encode_one_batch(
+                            batch, wave_id, pid, bidx)
+                        if writer is None:
+                            writer = pq.ParquetWriter(
+                                tmp, CHUNK_ARROW_SCHEMA,
+                                compression="none")
+                        writer.write_batch(chunk_row)
+                        pending.append(meta_row(stats, path, final,
+                                                _cols_of(chunk_row)))
+                        bidx += 1
+                    bad_rows = sum(skipped)
                     if writer is not None:
                         writer.close()
                         writer = None
@@ -880,6 +887,24 @@ def _cols_of(chunk_row: pa.RecordBatch) -> list[dict]:
     return chunk_row.column("cols")[0].as_py()
 
 
+def chunk_columns(batch: pa.RecordBatch):
+    """Per chunk row of ``batch`` (chunk-file rows, ``CHUNK_ARROW_SCHEMA``
+    columns ``cols`` and ``blobs``): its encoded columns as
+    ``[(name, kind, blob buffer)]``. The buffers are zero-copy views into
+    the batch (no ``.as_py()`` copies)."""
+    cols, blobs = batch.column("cols"), batch.column("blobs")
+    names = cols.values.field("name").to_pylist()
+    kinds = cols.values.field("kind").to_pylist()
+    coffs = cols.offsets.to_numpy(zero_copy_only=False)
+    boffs = blobs.offsets.to_numpy(zero_copy_only=False)
+    bvals = blobs.values
+    for i in range(batch.num_rows):
+        lo, hi = int(coffs[i]), int(coffs[i + 1])
+        shift = int(boffs[i]) - lo
+        yield [(names[j], kinds[j], bvals[shift + j].as_buffer())
+               for j in range(lo, hi)]
+
+
 def _temporal_zone_scale(t: pa.DataType) -> tuple[int, int]:
     """(num, den) scaling a temporal column's storage ints into its
     zone-map unit: epoch DAYS for dates, epoch MICROSECONDS for
@@ -941,30 +966,18 @@ def decode_chunks(chunks_df: DataFrame, column_order: list[str],
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            cols_list = batch.column("cols")
-            blobs_list = batch.column("blobs")
             n_rows_arr = batch.column("n_rows").to_numpy(
                 zero_copy_only=False)
-            cvals = cols_list.values
-            names_flat = cvals.field("name").to_pylist()
-            kinds_flat = cvals.field("kind").to_pylist()
-            coffs = cols_list.offsets.to_numpy(zero_copy_only=False)
-            bvals = blobs_list.values
-            boffs = blobs_list.offsets.to_numpy(zero_copy_only=False)
             outs: dict[str, list[pa.Array]] = {n: [] for n in column_order}
-            for i in range(batch.num_rows):
-                lo, hi = int(coffs[i]), int(coffs[i + 1])
-                blo = int(boffs[i])
-                by_name = {names_flat[j]: (kinds_flat[j], blo + (j - lo))
-                           for j in range(lo, hi)}
+            for n_rows, entries in zip(n_rows_arr, chunk_columns(batch)):
+                by_name = {nm: (kd, buf) for nm, kd, buf in entries}
                 for name in column_order:
                     ent = by_name.get(name)
                     if ent is None:
                         outs[name].append(
-                            pa.nulls(int(n_rows_arr[i]), type=types[name]))
+                            pa.nulls(int(n_rows), type=types[name]))
                         continue
-                    kind, j = ent
-                    arr = decode_column(kind, bvals[j].as_buffer())
+                    arr = decode_column(*ent)
                     if arr.type != types[name]:
                         arr = arr.cast(types[name])
                     outs[name].append(arr)
@@ -1211,8 +1224,9 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     ``_EqualityDeleteFilter``), and drops matching rows batch-by-batch.
     Feed it ``snapshot_scan(...)["equality_deletes"]`` — the scan
     already scoped deletes by sequence number, so the mapping IS the
-    application plan. Key columns must not be projected out by
-    ``columns=``. Per-task key materialization is capped at
+    application plan. Key columns a ``columns=`` projection leaves out
+    are still read for the masking, then dropped. Per-task key
+    materialization is capped at
     ``_EQ_MAX_KEYS`` (equality deletes are not file-keyed, so every
     task reads the full set — compact delete files past that). Same
     file-source-only restriction as ``row_deletes``.
@@ -1235,7 +1249,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     column-mapped physical parquet names to the table's LOGICAL schema
     (Delta columnMapping name/id modes —
     ``delta_meta.snapshot_scan(...)["column_renames"]``): batches
-    rename right after the read, ``columns=`` becomes a logical
+    rename after the delete masking, ``columns=`` becomes a logical
     projection, and field-id resolution wins over physical names.
     ``expected_schema`` (a pre-read Spark probe) still sees physical
     names. File-source path only.
@@ -1557,21 +1571,14 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     return totals
 
 
-def _is_hidden(path: str) -> bool:
-    """Delegates to ``fsutil.is_hidden`` — the single home of the
-    reference's hidden-entry rule (``HiddenFileFilter.INSTANCE``,
-    ``ParquetHadoopInputPlugin.java:208,:230``)."""
-    from . import fsutil
-    return fsutil.is_hidden(path)
-
-
 def _list_parquet_files(input_path: str) -> list[str]:
     """Recursive parquet listing via pyarrow.fs (works for local paths and
-    file:/s3:/hdfs: URIs) — used when the tree's schemas are incompatible
-    and ``spark.read.parquet`` would refuse to infer one. Hidden files and
-    files under hidden directories are skipped, matching both the
-    reference's ``HiddenFileFilter`` and ``spark.read.parquet``'s behavior
-    on the single-schema path."""
+    file:/s3:/hdfs: URIs) — used by ``schema_mode="mixed"`` and by the
+    single-schema fallback for filesystem schemes the JVM cannot list.
+    Hidden files and files under hidden directories are skipped (the
+    reference's ``HiddenFileFilter``). Unlike Spark's file index on the
+    single-schema path, only names ending in ``.parquet`` are listed, and
+    ``k=v`` directories are walked like any other directory."""
     from pyarrow import fs as pafs
 
     from . import fsutil
@@ -1584,7 +1591,7 @@ def _list_parquet_files(input_path: str) -> list[str]:
     return sorted(f.path for f in filesystem.get_file_info(sel)
                   if f.type == pafs.FileType.File
                   and f.path.endswith(".parquet")
-                  and not _is_hidden(f.path[rootlen:]))
+                  and not fsutil.is_hidden(f.path[rootlen:]))
 
 
 def _schema_groups(files: list[str]) -> list[list[str]]:

@@ -586,7 +586,7 @@ def test_column_mapping_logical_projection(spark, tmp_path):
     d = str(tmp_path / "t")
     dm.write_delta_fixture(d, [t1], column_mapping="id")
     s = dm.snapshot_scan(d)
-    from embulk_input_parquet_hadoop_spark.plans import pipeline
+    from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
     out = str(tmp_path / "enc")
     pipeline.encode_path(spark, d, out, input_files=s["data_files"],
                          columns=["n"],
@@ -594,6 +594,9 @@ def test_column_mapping_logical_projection(spark, tmp_path):
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["n"], "n int")
     assert sorted(r.n for r in dec.collect()) == [1, 2, 3, 4]
+    vf = verify.verify_files(spark, out,
+                             column_renames=s["column_renames"])
+    assert vf["ok"] and vf["rows_compared"] == 4
 
 
 def test_column_mapping_id_beats_physical_name(spark, tmp_path):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from embulk_input_parquet_hadoop_spark.plans import manifest as mf
-from embulk_input_parquet_hadoop_spark.plans import pipeline
+from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
 from embulk_input_parquet_hadoop_spark.sources import datagen
 
 
@@ -78,6 +78,8 @@ def test_column_projection(spark, tokens_dir, tmp_path):
     src = spark.read.parquet(tokens_dir).select("doc_id", "n_tok")
     assert dec.exceptAll(src).count() == 0
     assert src.exceptAll(dec).count() == 0
+    vf = verify.verify_files(spark, out)
+    assert vf["ok"] and vf["rows_compared"] == 2000
 
 
 def test_zone_map_pruning(spark, tokens_dir, tmp_path):
@@ -230,6 +232,9 @@ def test_bad_row_group_tolerated_within_threshold(spark, tmp_path):
     srcdf = spark.read.parquet(clean).select("doc_id", "tokens")
     assert dec.count() == 1500
     assert dec.exceptAll(srcdf).count() == 0
+    # verify replays the same skip of the corrupt group
+    vf = verify.verify_files(spark, out)
+    assert vf["ok"] and vf["rows_compared"] == 1500
 
 
 def test_bad_row_group_strict_fails_whole_file(spark, tmp_path):
@@ -564,7 +569,8 @@ def test_sidecar_failure_rolls_back_chunk_commit(tmp_path, monkeypatch):
 
     monkeypatch.setattr(fsutil, "put_bytes", boom)
     fn = pipeline.make_encode_files_fn(0, wave_dir, meta_dir=meta_dir)
-    rows = list(fn(iter([pa.record_batch({"path": [str(src)]})])))
+    rows = list(fn(iter([pa.RecordBatch.from_pylist(
+        [{"path": str(src)}], schema=pipeline.FILE_ROWS_ARROW_SCHEMA)])))
     assert glob.glob(f"{wave_dir}/*.parquet") == []   # chunk rolled back
     assert glob.glob(f"{meta_dir}/*") == []           # no sidecar debris
     assert len(rows) == 1

@@ -486,6 +486,54 @@ def test_iceberg_equality_deletes_applied(spark, tokens_dir, tmp_path):
     assert not verify.verify_files(spark, out, batch_rows=64)["ok"]
 
 
+def test_iceberg_equality_delete_key_projected_out(spark, tokens_dir,
+                                                    tmp_path):
+    """``columns=`` without the equality-delete key column: the key is
+    still read for the masking and dropped again, so the deleted rows
+    are gone, the chunks hold only the projection, and verify_files
+    replays the same read."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
+    from embulk_input_parquet_hadoop_spark.sources import iceberg_meta
+    files = sorted(glob.glob(f"{tokens_dir}/*.parquet"))
+    src = pa.concat_tables(pq.read_table(f, columns=["doc_id", "n_tok"])
+                           for f in files)
+    n_tok_type = src.schema.field("n_tok").type
+    dead = set(sorted(set(src.column("n_tok").to_pylist()))[::7])
+    tdir = str(tmp_path / "eq_proj")
+    iceberg_meta.write_table_fixture(
+        tdir, files, record_counts=[150, 150],
+        schema_fields=["doc_id", "tokens", "n_tok", "source"],
+        equality_delete_tables=[dict(
+            table=pa.table({"n_tok": pa.array(sorted(dead),
+                                              type=n_tok_type)}),
+            sequence_number=2)])
+    scan = iceberg_meta.snapshot_scan(tdir)
+    expected = sorted(d for d, n in zip(src.column("doc_id").to_pylist(),
+                                        src.column("n_tok").to_pylist())
+                      if n not in dead)
+    assert 0 < len(expected) < src.num_rows
+    out = str(tmp_path / "eq_proj_enc")
+    totals = pipeline.encode_path(
+        spark, tdir, out, input_files=scan["data_files"],
+        eq_deletes=scan["equality_deletes"], columns=["doc_id"],
+        batch_rows=64)
+    assert totals["n_rows"] == len(expected)
+    chunks = pipeline.read_chunks(spark, out)
+    names = chunks.select(F.explode("cols.name").alias("n")).distinct()
+    assert [r.n for r in names.collect()] == ["doc_id"]
+    dec = pipeline.decode_chunks(chunks, ["doc_id"], "doc_id string")
+    assert sorted(r.doc_id for r in dec.collect()) == expected
+    vf = verify.verify_files(spark, out, batch_rows=64,
+                             eq_deletes=scan["equality_deletes"])
+    assert vf["ok"] and vf["rows_compared"] == len(expected)
+
+
 def test_iceberg_equality_delete_sequence_scoping(tmp_path, tokens_dir):
     """Spec scoping: an equality delete applies only to data files with
     a STRICTLY lower data sequence number — a delete at the data's own
