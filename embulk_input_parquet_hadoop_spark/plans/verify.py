@@ -126,8 +126,14 @@ def _verify_one(src: str, chk: str, batch_rows: int,
     err = None
     try:
         if not fsutil.exists(chk):
-            # every row group of the file was skipped within threshold
-            return (src, chk, 0, 0, 0, None)
+            # right only when every row group of the file was skipped
+            # within threshold: then the source reads to no batch
+            src_iter = pipeline._source_batches(
+                src, batch_rows, None, del_files, eq_json, consts_json,
+                const_schema, column_renames, 1.0, [])
+            if next(src_iter, None) is not None:
+                err = f"chunk file {chk} is missing"
+            return (src, chk, 0, 0, 0, err)
         cpf = fsutil.parquet_file(chk)
         src_iter = None
         for cb in cpf.iter_batches(batch_size=32, use_threads=False):
