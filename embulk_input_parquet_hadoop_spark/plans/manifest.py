@@ -9,7 +9,9 @@ The reference explicitly lacks resume ("Resume supported: no",
   fully written (write-ahead ordering: a wave is complete iff its manifest
   record exists). Driver-side metadata stays a driver-side file write —
   running a Spark job to persist one row costs seconds of fixed overhead
-  per wave and buys nothing.
+  per wave and buys nothing. A wave encoded with deletes, constants or
+  renames also records that scan plan (``"plan"``), O(files) like its
+  ``input_files`` lineage, for ``verify_files`` to replay.
 - ``{out}/manifest/checkpoint-K.json`` optional compaction of every wave
   record <= K (:func:`compact_manifest`) — the Delta last-checkpoint
   reader shape for OUR tree: lineage/metrics reads become one object
@@ -40,7 +42,7 @@ def _manifest_dir(out_dir: str) -> str:
     return f"{out_dir}/manifest"
 
 
-def _wave_records(out_dir: str) -> list[dict]:
+def wave_records(out_dir: str) -> list[dict]:
     """Every committed wave's manifest record, checkpoint-accelerated:
     the newest ``checkpoint-K.json`` serves the waves it lists in ONE
     read, and every other present wave file is read individually — the
@@ -96,7 +98,7 @@ def compact_manifest(out_dir: str, keep_old: bool = False) -> dict:
     newest — never an inconsistent view. Like ``vacuum``, do not run
     concurrently with another compact on the same tree.
     """
-    recs = _wave_records(out_dir)
+    recs = wave_records(out_dir)
     if not recs:
         raise FileNotFoundError(f"no committed waves under {out_dir}")
     k = max(int(r["wave_id"]) for r in recs)
@@ -128,12 +130,12 @@ def committed_input_files(out_dir: str) -> set[str]:
     """Union of every committed wave's input-file lineage — the set an
     incremental (``append``) encode subtracts so already-encoded source
     files are never re-encoded. One checkpoint read plus the
-    post-checkpoint tail (see :func:`_wave_records`); without a
+    post-checkpoint tail (see :func:`wave_records`); without a
     checkpoint, O(waves) driver-side JSON reads — at 100 TB in one
     encode (~64 waves) a few MB of strings, and a long-lived
     append-every-day tree keeps it O(1) via :func:`compact_manifest`."""
     out: set[str] = set()
-    for r in _wave_records(out_dir):
+    for r in wave_records(out_dir):
         out.update(r["input_files"])
     return out
 
@@ -169,13 +171,18 @@ def all_chunk_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
                 files: list[str], wall_s: float,
-                meta_table=None) -> dict:
+                meta_table=None, plan: dict | None = None) -> dict:
     """Aggregate the wave's chunk metrics and commit its manifest record.
 
     ``meta_table``: the wave's chunk-stats pyarrow Table if the caller
     already has it in hand (file-source path) — aggregated driver-side, no
     Spark job; otherwise the stats are aggregated from the wave's chunk
     files with the payload column pruned.
+
+    ``plan``: the wave's scan plan from ``pipeline.encode_path`` (the
+    files' side inputs, ``const_schema``, ``column_renames``), recorded
+    under ``"plan"`` so ``verify.verify_files`` replays exactly what the
+    wave was encoded with; a wave without one keeps the plain record.
     """
     if meta_table is not None:
         import pyarrow.compute as pc
@@ -228,6 +235,8 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
         "n_bad_rows": agg["n_bad_rows"],
         "wall_s": float(wall_s),
     }
+    if plan:
+        out["plan"] = plan
     mdir = _manifest_dir(out_dir)
     # a checkpoint covering this id may hold the entry of a rolled-back
     # earlier commit of the same wave, which readers would serve in place
@@ -251,7 +260,7 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     if not fsutil.isdir(out_dir):
         raise FileNotFoundError(
             f"encode output dir does not exist: {out_dir}")
-    recs = _wave_records(out_dir)
+    recs = wave_records(out_dir)
     schema = ("wave_id int, input_files array<string>, n_chunks long, "
               "n_rows long, n_tokens long, raw_bytes long, enc_bytes long, "
               "n_bad_files long, n_bad_rows long, wall_s double")

@@ -1313,9 +1313,8 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     as JSON and cast to the declared type in-task (dates as ISO
     strings; None = typed null). A constant column RLEs to one run per
     chunk, so the storage cost is nil; a name colliding with a physical
-    column fails that file loudly. Verify with
-    ``verify_files(const_columns=, const_schema=)``. File-source path
-    only, like the delete mappings.
+    column fails that file loudly. File-source path only, like the
+    delete mappings.
 
     ``column_renames`` ([{"logical", "physical", "id"}]) maps
     column-mapped physical parquet names to the table's LOGICAL schema
@@ -1325,6 +1324,12 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     projection, and field-id resolution wins over physical names.
     ``expected_schema`` (a pre-read Spark probe) still sees physical
     names. File-source path only.
+
+    Each wave's manifest record carries the part of these five mappings
+    that its files were encoded with (``"plan"``: the per-file side
+    inputs, ``const_schema``, ``column_renames``; absent when none), so
+    ``verify.verify_files(spark, out_dir)`` replays every wave's own
+    masking, constants and renames without being handed them again.
 
     ``append=True`` is the INCREMENTAL mode: source files already present
     in any committed wave's manifest lineage are subtracted from the
@@ -1578,6 +1583,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
         # leave stale parts behind and duplicate data on decode
         # (prefix delete on object stores, rmtree locally)
         fsutil.rmtree_any(wave_dir)
+        plan = None
         if cluster_partitions:
             df = spark.read.parquet(*wfiles)
             encode_df(spark, df, out_dir, wave_id, cluster_partitions)
@@ -1587,8 +1593,17 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
             # a file's lineage identity is unchanged (deletes alter row
             # content, constants add columns — neither changes which
             # source files were consumed)
-            rows = [(f, *side) for f, side in zip(wfiles, _side_inputs(
-                wfiles, row_deletes, eq_deletes, const_columns))]
+            sides = _side_inputs(wfiles, row_deletes, eq_deletes,
+                                 const_columns)
+            rows = [(f, *side) for f, side in zip(wfiles, sides)]
+            # the wave's scan plan, committed with its manifest record so
+            # verify_files replays what this wave applied: the side inputs
+            # of the files that have any, the constant types and renames
+            plan = {k: v for k, v in (
+                ("files", {f: side for f, side in zip(wfiles, sides)
+                           if any(side)}),
+                ("const_schema", const_schema),
+                ("column_renames", column_renames)) if v}
             distributed = meta_mode == "distributed"
             wave_meta_dir = (f"{out_dir}/chunks_meta/wave-{wave_id}"
                              if distributed else None)
@@ -1633,7 +1648,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                     fsutil.put_bytes(meta_path, buf.getvalue())
         wall_s = time.perf_counter() - t0
         stats = mf.commit_wave(spark, out_dir, wave_id, wfiles, wall_s,
-                               meta_table=meta)
+                               meta_table=meta, plan=plan)
         totals["waves_run"] += 1
         totals["n_rows"] += stats["n_rows"]
         totals["n_tokens"] += stats["n_tokens"]

@@ -11,6 +11,8 @@ equality of every other column. The comparison itself is pure DataFrame API
 
 from __future__ import annotations
 
+import json
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,13 +94,15 @@ def verify_path(spark: SparkSession, input_path: str, out_dir: str) -> dict:
 # tests that compute their expected rows independently.
 
 # one verify task input row per source file: the source and its chunk
-# file, plus the same per-file side inputs as an encode input row
+# file, the file's side inputs as its wave recorded them (those of its
+# encode input row), and the wave's constant types and renames (JSON)
 VERIFY_ROWS_ARROW_SCHEMA = pa.schema([
     pa.field("source_file", pa.string()),
     pa.field("chunk_file", pa.string()),
     pa.field("deletes", pa.list_(pa.string())),
     pa.field("eq", pa.string()),
     pa.field("consts", pa.string()),
+    pa.field("wave_plan", pa.string()),
 ])
 
 VERIFY_FILES_ARROW_SCHEMA = pa.schema([
@@ -111,27 +115,34 @@ VERIFY_FILES_ARROW_SCHEMA = pa.schema([
 ])
 
 
-def _verify_one(src: str, chk: str, batch_rows: int,
-                del_files=None, eq_json=None, consts_json=None,
-                const_schema=None, column_renames=None) -> tuple:
+def _verify_one(src: str, chk: str, batch_rows: int, del_files=None,
+                eq_json=None, consts_json=None, plan_json=None) -> tuple:
     """Decode chunk file ``chk`` and compare it positionally, batch by
     batch, with source file ``src`` read through the encoder's own
     ``pipeline._source_batches``. ``del_files``/``eq_json``/
-    ``consts_json`` are the RAW per-file side inputs; the reader resolves
-    them inside this function's error capture, so a missing or corrupt
-    source, delete file, or descriptor yields a per-file ``err`` row
-    instead of aborting the whole Spark job."""
+    ``consts_json`` are the RAW per-file side inputs and ``plan_json``
+    the wave's ``const_schema``/``column_renames``, all as the wave
+    recorded them; the reader resolves them inside this function's error
+    capture, so a missing or corrupt source, delete file, or descriptor
+    yields a per-file ``err`` row instead of aborting the whole Spark
+    job."""
     from . import fsutil
+    plan = json.loads(plan_json) if plan_json else {}
+
+    def replay(columns):
+        # the encode committed this file, so its corrupt-group skips
+        # were within its threshold
+        return pipeline._source_batches(
+            src, batch_rows, columns, del_files, eq_json, consts_json,
+            plan.get("const_schema"), plan.get("column_renames"), 1.0, [])
+
     rows = toks = mism = 0
     err = None
     try:
         if not fsutil.exists(chk):
             # right only when every row group of the file was skipped
             # within threshold: then the source reads to no batch
-            src_iter = pipeline._source_batches(
-                src, batch_rows, None, del_files, eq_json, consts_json,
-                const_schema, column_renames, 1.0, [])
-            if next(src_iter, None) is not None:
+            if next(replay(None), None) is not None:
                 err = f"chunk file {chk} is missing"
             return (src, chk, 0, 0, 0, err)
         cpf = fsutil.parquet_file(chk)
@@ -140,13 +151,8 @@ def _verify_one(src: str, chk: str, batch_rows: int,
             toks += int(pa.compute.sum(cb.column("n_tokens")).as_py() or 0)
             for entries in pipeline.chunk_columns(cb):
                 if src_iter is None:
-                    # the chunk's names are the encoded projection; the
-                    # encode committed this file, so its corrupt-group
-                    # skips were within its threshold
-                    src_iter = pipeline._source_batches(
-                        src, batch_rows, [nm for nm, _k, _b in entries],
-                        del_files, eq_json, consts_json, const_schema,
-                        column_renames, 1.0, [])
+                    # the chunk's names are the encoded projection
+                    src_iter = replay([nm for nm, _k, _b in entries])
                 sb = next(src_iter, None)
                 if sb is None:
                     err = "chunk file has more batches than source"
@@ -175,18 +181,11 @@ def _verify_one(src: str, chk: str, batch_rows: int,
     return (src, chk, rows, toks, mism, err)
 
 
-def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS,
-                         const_schema: dict[str, str] | None = None,
-                         column_renames: list[dict] | None = None):
+def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS):
     def fn(batches):
         for b in batches:
-            for src, chk, dfiles, eqjson, cjson in zip(
-                    *b.to_pydict().values()):
-                s, c, r, t, m, e = _verify_one(
-                    src, chk, batch_rows, del_files=dfiles,
-                    eq_json=eqjson, consts_json=cjson,
-                    const_schema=const_schema,
-                    column_renames=column_renames)
+            for src, chk, *side in zip(*b.to_pydict().values()):
+                s, c, r, t, m, e = _verify_one(src, chk, batch_rows, *side)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([s], type=pa.string()),
                      pa.array([c], type=pa.string()),
@@ -200,12 +199,7 @@ def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS,
 
 
 def verify_files(spark: SparkSession, out_dir: str,
-                 batch_rows: int = pipeline.DEFAULT_BATCH_ROWS,
-                 row_deletes: dict[str, list[str]] | None = None,
-                 eq_deletes: dict[str, list[dict]] | None = None,
-                 const_columns: dict[str, dict] | None = None,
-                 const_schema: dict[str, str] | None = None,
-                 column_renames: list[dict] | None = None) -> dict:
+                 batch_rows: int = pipeline.DEFAULT_BATCH_ROWS) -> dict:
     """Distributed positional bit-identity check per source file.
 
     Source files are LPT-packed on their bytes into at most one task per
@@ -215,45 +209,45 @@ def verify_files(spark: SparkSession, out_dir: str,
     ``batch_rows`` must match the encode run's. Only O(n_files) stat rows
     come back to the driver.
 
-    ``row_deletes``/``eq_deletes``: the same position-/equality-delete
-    mappings the encode ran with (``iceberg_meta.snapshot_scan``) — each
-    task replays the delete masking on its source file, so a MOR-encoded
-    tree verifies against the live rows only. Without them a
-    delete-masked tree correctly FAILS this check (the tree really
-    doesn't match the raw files).
-
-    ``const_columns``/``const_schema``: the same per-file constant
-    injection the encode ran with (``encode_path(const_columns=)``) —
-    each task re-injects the constants after its filters, so a
-    partition-augmented tree verifies bit-identically. Without them the
-    check correctly fails (the chunk columns don't exist in the source).
+    Each source file is replayed with the scan plan recorded in the
+    manifest record of the wave that committed it: the position and
+    equality deletes, constant columns with their types, and column
+    renames that ``encode_path`` applied to that file. So a
+    delete-masked, partition-augmented or column-mapped tree verifies
+    against its live, augmented, logical rows, and a tree appended
+    across table snapshots verifies each wave against the masking it
+    was encoded with. The caller passes no mappings. A tree committed
+    before waves recorded their plan is replayed with none: if it was
+    encoded with deletes, constants or renames it now FAILS this check
+    and must be re-encoded to verify — a false fail, never a false
+    pass.
     """
     from . import fsutil
-    pairs = set()
-    for w in sorted(mf.completed_waves(spark, out_dir)):
-        for p in pipeline.meta_files(out_dir, w):
+    rows = {}
+    for rec in mf.wave_records(out_dir):
+        plan = rec.get("plan", {})
+        sides = plan.get("files", {})
+        wave_plan = {k: plan[k] for k in ("const_schema", "column_renames")
+                     if k in plan}
+        wave_plan = json.dumps(wave_plan) if wave_plan else None
+        for p in pipeline.meta_files(out_dir, rec["wave_id"]):
             t = fsutil.read_parquet(
                 p, columns=["source_file", "chunk_file", "error"])
             for s, c, e in zip(t.column("source_file").to_pylist(),
                                t.column("chunk_file").to_pylist(),
                                t.column("error").to_pylist()):
                 if e is None and c:
-                    pairs.add((s, c))
-    if not pairs:
+                    rows[s, c] = (s, c, *sides.get(s, (None,) * 3),
+                                  wave_plan)
+    if not rows:
         raise FileNotFoundError(
             f"no chunks_meta lineage under {out_dir} (verify_files needs "
             f"the file-source encode path; use verify_path otherwise)")
-    pairs = sorted(pairs)
-    sources = [s for s, _ in pairs]
-    sides = pipeline._side_inputs(sources, row_deletes, eq_deletes,
-                                  const_columns)
-    rows = [(s, c, *side) for (s, c), side in zip(pairs, sides)]
+    rows = [rows[k] for k in sorted(rows)]
     res = run_file_tasks(
         spark, rows, VERIFY_ROWS_ARROW_SCHEMA,
-        make_verify_files_fn(batch_rows, const_schema=const_schema,
-                             column_renames=column_renames),
-        VERIFY_FILES_ARROW_SCHEMA,
-        weights=fsutil.file_sizes(sources))
+        make_verify_files_fn(batch_rows), VERIFY_FILES_ARROW_SCHEMA,
+        weights=fsutil.file_sizes([r[0] for r in rows]))
     import pyarrow.compute as pc
     errs = [e for e in res.column("err").to_pylist() if e]
     mism = int(pc.sum(res.column("mismatch_chunks")).as_py() or 0)

@@ -89,7 +89,7 @@ DELTA_DV_MAGIC = struct.pack("<I", 1681511377)  # D1 D3 39 64
 _ACCEPTED_MAGICS = (DELTA_DV_MAGIC, puffin.DV_MAGIC)
 
 # How a Delta DV rides the {data_file: [delete inputs]} mapping of
-# encode_path(row_deletes=) / verify_files: prefix + json with either
+# encode_path(row_deletes=): prefix + json with either
 # {"path", "offset", "size", "cardinality"} (file-stored) or
 # {"inline", "size", "cardinality"} (z85 payload carried whole).
 DV_DESC_PREFIX = "deltadv:"
@@ -728,10 +728,7 @@ def snapshot_scan_diff(table_dir: str, from_version: int,
     live at ``from``: a file removed (rewrite/compaction/COW delete),
     or its deletion-vector identity changed (new deletes arriving, or
     rows resurrected) — an append-only encode tree cannot retract rows
-    it already committed. Returns ``row_deletes_full`` /
-    ``partition_values_full`` over ALL live files for
-    ``verify_files``-style full-tree checks (the restricted mappings
-    would false-fail earlier waves' files).
+    it already committed.
     """
     a = snapshot_scan(table_dir, from_version, partition_filter)
     b = snapshot_scan(table_dir, to_version, partition_filter)
@@ -762,8 +759,6 @@ def snapshot_scan_diff(table_dir: str, from_version: int,
             "partition_values": {p: v for p, v in
                                  b["partition_values"].items()
                                  if p in set(added)},
-            "row_deletes_full": b["row_deletes"],
-            "partition_values_full": b["partition_values"],
             "partition_columns": b["partition_columns"],
             "schema_string": b["schema_string"],
             "column_renames": b["column_renames"]}
@@ -783,10 +778,10 @@ _PART_TYPE_MAP = {
 
 
 def partition_const_columns(scan: dict) -> tuple[dict, dict]:
-    """(const_columns, const_schema) for ``encode_path`` /
-    ``verify_files`` from a :func:`snapshot_scan` result — injects the
-    table's partition columns (which Delta stores ONLY in the log, not
-    in the data files) as typed per-file constants so the encoded tree
+    """(const_columns, const_schema) for ``encode_path`` from a
+    :func:`snapshot_scan` result — injects the table's partition
+    columns (which Delta stores ONLY in the log, not in the data
+    files) as typed per-file constants so the encoded tree
     serves them like any other column. Values parse from the log's
     string serialization through the table schema's logical types;
     decimal/binary/nested partition types refuse (no unambiguous

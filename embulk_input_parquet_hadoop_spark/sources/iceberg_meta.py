@@ -593,13 +593,6 @@ def snapshot_scan_diff(table_dir: str, from_snapshot_id: int,
     ``added_data_files`` with empty mappings, so callers can use it
     unconditionally. Cost: two metadata reads plus the delete-file
     ``file_path``-column reads of both scans.
-
-    Besides the diff-restricted mappings, the result carries the ``to``
-    snapshot's FULL delete mappings (``position_deletes_full`` /
-    ``equality_deletes_full``) — what a whole-tree verify needs:
-    earlier waves were encoded masked by their own snapshots' deletes,
-    which the refusal above guarantees are still exactly the ``to``
-    snapshot's for every still-live file.
     """
     old = snapshot_scan(table_dir, from_snapshot_id, partition_filter)
     new = snapshot_scan(table_dir, to_snapshot_id, partition_filter)
@@ -641,8 +634,6 @@ def snapshot_scan_diff(table_dir: str, from_snapshot_id: int,
         "equality_deletes": {f: v for f, v in
                              new["equality_deletes"].items()
                              if f in added_set},
-        "position_deletes_full": dict(new["position_deletes"]),
-        "equality_deletes_full": dict(new["equality_deletes"]),
     }
 
 

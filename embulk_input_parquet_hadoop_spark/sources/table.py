@@ -92,7 +92,7 @@ def hive_partitioned_files(root: str,
     """Scan a Hive-partitioned Parquet tree (``key=value`` directory
     segments) into the encode inputs: ``(files, const_columns,
     const_schema)`` for ``encode_path(input_files=, const_columns=,
-    const_schema=)`` / ``verify_files``.
+    const_schema=)``.
 
     Partition values live only in the directory names — a direct
     per-file read drops them — so they are re-injected as typed

@@ -210,11 +210,8 @@ def main() -> int:
     input_files = None
     row_deletes = None
     eq_deletes = None
-    verify_row_deletes = None
-    verify_eq_deletes = None
     const_columns = None
     const_schema = None
-    verify_const_columns = None
     column_renames = None
     if args.iceberg:
         from embulk_input_parquet_hadoop_spark.sources import iceberg_meta
@@ -235,16 +232,6 @@ def main() -> int:
             args.append = True
             scan = iceberg_meta.snapshot_scan_diff(
                 args.input, args.since_snapshot, partition_filter=pf)
-            input_files = scan["data_files"]
-            row_deletes = scan["position_deletes"] or None
-            eq_deletes = scan.get("equality_deletes") or None
-            # verify walks the WHOLE tree, including waves encoded from
-            # earlier snapshots whose files carried deletes of their
-            # own — replay the full current mappings there, not the
-            # diff-restricted ones (the diff's refusal check guarantees
-            # they are identical on every still-live file)
-            verify_row_deletes = scan["position_deletes_full"] or None
-            verify_eq_deletes = scan["equality_deletes_full"] or None
         else:
             # MOR-aware full-snapshot scan: position deletes apply
             # row-positionally, equality deletes value-wise, both
@@ -257,11 +244,9 @@ def main() -> int:
             scan = iceberg_meta.snapshot_scan(args.input,
                                               snapshot_id=sid,
                                               partition_filter=pf)
-            input_files = scan["data_files"]
-            row_deletes = scan["position_deletes"] or None
-            eq_deletes = scan.get("equality_deletes") or None
-            verify_row_deletes = row_deletes
-            verify_eq_deletes = eq_deletes
+        input_files = scan["data_files"]
+        row_deletes = scan["position_deletes"] or None
+        eq_deletes = scan.get("equality_deletes") or None
     elif args.delta:
         from embulk_input_parquet_hadoop_spark.sources import delta_meta
         pf = None
@@ -276,36 +261,21 @@ def main() -> int:
         if args.since_version is not None:
             # same incremental contract as --iceberg --since-snapshot:
             # diff refuses removals / changed deletion vectors on
-            # already-encoded files; verify replays the FULL mapping
+            # already-encoded files
             args.append = True
             scan = delta_meta.snapshot_scan_diff(
                 args.input, args.since_version,
                 to_version=args.at_version, partition_filter=pf)
-            input_files = scan["data_files"]
-            row_deletes = scan["row_deletes"] or None
-            verify_row_deletes = scan["row_deletes_full"] or None
-            column_renames = scan["column_renames"]
-            if args.inject_partitions:
-                const_columns, const_schema = \
-                    delta_meta.partition_const_columns(scan)
-                # the verify replay needs EVERY wave's constants, not
-                # just this diff's files
-                verify_const_columns, _ = delta_meta.\
-                    partition_const_columns(dict(
-                        scan,
-                        partition_values=scan["partition_values_full"]))
         else:
             scan = delta_meta.snapshot_scan(
                 args.input, version=args.at_version,
                 partition_filter=pf)
-            input_files = scan["data_files"]
-            row_deletes = scan["row_deletes"] or None
-            verify_row_deletes = row_deletes
-            column_renames = scan["column_renames"]
-            if args.inject_partitions:
-                const_columns, const_schema = \
-                    delta_meta.partition_const_columns(scan)
-                verify_const_columns = const_columns
+        input_files = scan["data_files"]
+        row_deletes = scan["row_deletes"] or None
+        column_renames = scan["column_renames"]
+        if args.inject_partitions:
+            const_columns, const_schema = \
+                delta_meta.partition_const_columns(scan)
     elif args.hudi:
         from embulk_input_parquet_hadoop_spark.sources import hudi_meta
         if args.since_instant is not None:
@@ -348,7 +318,6 @@ def main() -> int:
         input_files, cc, cs = table.hive_partitioned_files(args.input)
         if args.inject_partitions:
             const_columns, const_schema = cc, cs
-            verify_const_columns = cc
     elif args.partition:
         raise SystemExit("--partition requires --iceberg, --delta or "
                          "--hudi")
@@ -423,34 +392,22 @@ def main() -> int:
         totals["columnar"] = columnar.relayout_columnar(
             spark, args.output, args.relayout_columnar)
     if args.verify_files:
-        # MOR: replay the same delete masking on the source side so the
-        # live-rows-only tree verifies positionally — with the FULL
-        # current mappings, since verify covers every wave's lineage,
-        # not just this run's diff
+        # each wave is replayed with the deletes, constants and renames
+        # its manifest record says it was encoded with
         totals["verify"] = verify.verify_files(
-            spark, args.output, batch_rows=args.batch_rows,
-            row_deletes=verify_row_deletes,
-            eq_deletes=verify_eq_deletes,
-            const_columns=verify_const_columns,
-            const_schema=const_schema,
-            column_renames=column_renames)
+            spark, args.output, batch_rows=args.batch_rows)
     elif args.verify:
-        if verify_row_deletes or verify_eq_deletes:
-            raise SystemExit(
-                "--verify (full-outer join vs raw source) cannot check a "
-                "MOR delete-masked encode — every deleted row would count "
-                "as unmatched; use --verify-files, which replays the "
-                "delete masking")
         if args.iceberg or args.delta or args.hudi:
             # reading the whole table DIR as parquet would also pick up
             # historical snapshots / stale slices / replaced file groups
-            # and false-fail a correct encode
+            # (and every MOR-deleted row) and false-fail a correct encode
             raise SystemExit(
                 "--verify reads --input as one parquet tree, but a table-"
                 "format directory also holds non-current data files "
-                "(old snapshots, rewritten/replaced slices); use "
-                "--verify-files, which verifies against the exact "
-                "snapshot file list recorded in the manifest")
+                "(old snapshots, rewritten/replaced slices) and rows its "
+                "deletes mask; use --verify-files, which verifies against "
+                "the exact snapshot file list and masking recorded in the "
+                "manifest")
         src = args.input
         if args.jsonl or args.csv:
             # the raw corpus is not parquet; the staged tree IS what was

@@ -358,9 +358,8 @@ def test_snapshot_scan_diff_mor_incremental(spark, tmp_path):
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["doc_id"], "doc_id string")
     assert {r.doc_id for r in dec.collect()} == expected
-    # the MOR-aware verify replays the same mapping
-    vf = verify.verify_files(spark, out,
-                             row_deletes=diff["position_deletes"])
+    # the MOR-aware verify replays the masking each wave recorded
+    vf = verify.verify_files(spark, out)
     assert vf["ok"] and vf["rows_compared"] == 900 - len(dead)
 
 
@@ -431,12 +430,12 @@ def test_snapshot_scan_diff_refuses_removed_files(tmp_path):
         iceberg_meta.snapshot_scan_diff(table, 1)
 
 
-def test_diff_full_mappings_verify_whole_tree(spark, tmp_path):
-    """A tree built across snapshots verifies only with the diff's
-    ``*_full`` mappings: waves encoded from EARLIER snapshots carry
-    their own delete masking, which the diff-restricted mappings miss
-    (the ``encode_job --since-snapshot --verify-files`` false-fail
-    regression)."""
+def test_tree_across_snapshots_verifies_with_no_mappings(spark, tmp_path):
+    """A tree built across snapshots verifies with no mappings: the wave
+    encoded from snapshot 1 carries its own position deletes, the wave
+    appended from the snapshot diff carries none, and each replays what
+    its manifest record says it applied (handing verify the
+    diff-restricted mapping used to false-fail the wave-0 file)."""
     files = _mor_grow_files(tmp_path)
     dead = [0, 3, 7]
     table = str(tmp_path / "mor_hist")
@@ -456,15 +455,95 @@ def test_diff_full_mappings_verify_whole_tree(spark, tmp_path):
     diff = iceberg_meta.snapshot_scan_diff(table, 1)
     assert diff["data_files"] == [files[2]]
     assert diff["position_deletes"] == {}  # nothing on the NEW file
-    assert set(diff["position_deletes_full"]) == {files[0]}
     pipeline.encode_path(
         spark, table, out, input_files=diff["data_files"],
         row_deletes=diff["position_deletes"] or None, append=True)
-    # the full mapping verifies the whole tree...
-    vf = verify.verify_files(
-        spark, out, row_deletes=diff["position_deletes_full"])
+    recs = mf.wave_records(out)
+    assert [sorted(r.get("plan", {}).get("files", {})) for r in recs] \
+        == [[files[0]], []]
+    vf = verify.verify_files(spark, out)
     assert vf["ok"] and vf["rows_compared"] == 900 - len(dead)
-    # ...the diff-restricted one false-fails on the wave-0 file, which
-    # is exactly why encode_job must verify with the full mappings
-    assert not verify.verify_files(
-        spark, out, row_deletes=diff["position_deletes"] or None)["ok"]
+
+
+def _run_encode_job(monkeypatch, capsys, argv: list[str]) -> tuple[int, dict]:
+    """``encode_job.main()`` in-process on the suite's session (its
+    closing ``spark.stop()`` made a no-op); returns the exit code and
+    the printed totals."""
+    import sys as _sys
+
+    from pyspark.sql import SparkSession
+
+    from jobs import encode_job
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(_sys, "argv", ["encode_job.py", *argv,
+                                       "--cores", "8"])
+    capsys.readouterr()
+    rc = encode_job.main()
+    return rc, __import__("json").loads(
+        capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_encode_job_delta_since_version_verify_files(spark, tmp_path,
+                                                     monkeypatch, capsys):
+    """``--delta --since-version 0 --inject-partitions --verify-files``
+    on a partitioned, column-mapped table whose version-0 file carries a
+    deletion vector: the appended tree verifies with each wave's own
+    DV, constants and renames."""
+    import pyarrow as pa
+
+    from embulk_input_parquet_hadoop_spark.sources import delta_meta as dm
+    t1 = pa.table({"doc_id": ["a", "b", "c", "d"],
+                   "n": pa.array([1, 2, 3, 4], pa.int32())})
+    t2 = pa.table({"doc_id": ["e", "f"],
+                   "n": pa.array([5, 6], pa.int32())})
+    d = str(tmp_path / "delta_tbl")
+    dm.write_delta_fixture(d, [t1, t2], column_mapping="name",
+                           commits=[{"dv": {0: [1]}}, {"add": [1]}],
+                           partition_columns=["src"],
+                           partition_values={0: {"src": "web"},
+                                             1: {"src": "app"}})
+    out = str(tmp_path / "enc")
+    rc, t0 = _run_encode_job(monkeypatch, capsys, [
+        "--delta", "--at-version", "0", "--inject-partitions",
+        "--input", d, "--output", out])
+    assert rc == 0 and t0["n_rows"] == 3
+    rc, t = _run_encode_job(monkeypatch, capsys, [
+        "--delta", "--since-version", "0", "--inject-partitions",
+        "--verify-files", "--input", d, "--output", out])
+    assert rc == 0 and t["waves_run"] == 1 and t["n_rows"] == 2
+    assert t["verify"]["ok"], t["verify"]
+    assert t["verify"]["rows_compared"] == 5
+    dec = pipeline.decode_chunks(pipeline.read_chunks(spark, out),
+                                 ["doc_id", "src"], "doc_id string, "
+                                 "src string")
+    assert sorted((r.doc_id, r.src) for r in dec.collect()) == [
+        ("a", "web"), ("c", "web"), ("d", "web"), ("e", "app"),
+        ("f", "app")]
+
+
+def test_encode_job_iceberg_since_snapshot_verify_files(
+        spark, tmp_path, monkeypatch, capsys):
+    """``--iceberg --since-snapshot 1 --verify-files`` on the
+    ``_mor_grow_files`` table: wave 0 (snapshot 1) masks its own
+    position deletes, the appended wave masks the new file's, and the
+    whole tree verifies."""
+    files = _mor_grow_files(tmp_path)
+    dead0, dead2 = [0, 3, 7], [1, 299]
+    table = str(tmp_path / "mor_cli")
+    iceberg_meta.write_table_fixture(
+        table, files, snapshot_id=2, record_counts=[300, 300, 300],
+        position_deletes={files[2]: dead2},
+        older_snapshots={1: {"files": files[:2],
+                             "position_deletes": {files[0]: dead0}}})
+    scan1 = iceberg_meta.snapshot_scan(table, 1)
+    out = str(tmp_path / "enc")
+    pipeline.encode_path(spark, table, out,
+                         input_files=scan1["data_files"],
+                         row_deletes=scan1["position_deletes"])
+    rc, t = _run_encode_job(monkeypatch, capsys, [
+        "--iceberg", "--since-snapshot", "1", "--verify-files",
+        "--input", table, "--output", out])
+    assert rc == 0 and t["waves_run"] == 1
+    assert t["n_rows"] == 300 - len(dead2)
+    assert t["verify"]["ok"], t["verify"]
+    assert t["verify"]["rows_compared"] == 900 - len(dead0) - len(dead2)

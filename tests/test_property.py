@@ -413,7 +413,9 @@ def test_temporal_zone_map_bounds_every_row(data):
             for _ in range(n)]
     width = pa.int64() if typ != pa.date32() else pa.int32()
     if typ == pa.date32():
-        vals = [None if v is None else int(np.int32(v)) for v in vals]
+        # wrap to int32, two's complement
+        vals = [None if v is None else (v + 2**31) % 2**32 - 2**31
+                for v in vals]
     arr = pa.array(vals, type=width).cast(typ)
     vmin, vmax = _zone_of(pa.RecordBatch.from_arrays([arr], ["t"]))
     live = [v for v in vals if v is not None]

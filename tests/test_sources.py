@@ -372,14 +372,10 @@ def test_iceberg_position_deletes_encode(spark, tokens_dir, tmp_path):
         pipeline.read_chunks(spark, out), ["doc_id"], "doc_id string")
     got = sorted(r.doc_id for r in dec.collect())
     assert got == sorted(expected)
-    # the positional verify replays the same delete masking and passes...
+    # the positional verify replays the masking the wave recorded
     from embulk_input_parquet_hadoop_spark.plans import verify
-    vf = verify.verify_files(spark, out,
-                             row_deletes=scan["position_deletes"])
+    vf = verify.verify_files(spark, out)
     assert vf["ok"] and vf["rows_compared"] == 300 - n_del
-    # ...and correctly FAILS without the mapping (the tree really does
-    # not match the raw source files)
-    assert not verify.verify_files(spark, out)["ok"]
 
 
 def test_iceberg_position_deletes_batch_boundaries(spark, tokens_dir,
@@ -479,11 +475,8 @@ def test_iceberg_equality_deletes_applied(spark, tokens_dir, tmp_path):
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["doc_id"], "doc_id string")
     assert sorted(r.doc_id for r in dec.collect()) == exp
-    vf = verify.verify_files(spark, out, batch_rows=64,
-                             eq_deletes=scan["equality_deletes"])
+    vf = verify.verify_files(spark, out, batch_rows=64)
     assert vf["ok"] and vf["rows_compared"] == len(exp)
-    # without the replay the tree correctly does NOT match the raw files
-    assert not verify.verify_files(spark, out, batch_rows=64)["ok"]
 
 
 def test_iceberg_equality_delete_key_projected_out(spark, tokens_dir,
@@ -529,8 +522,7 @@ def test_iceberg_equality_delete_key_projected_out(spark, tokens_dir,
     assert [r.n for r in names.collect()] == ["doc_id"]
     dec = pipeline.decode_chunks(chunks, ["doc_id"], "doc_id string")
     assert sorted(r.doc_id for r in dec.collect()) == expected
-    vf = verify.verify_files(spark, out, batch_rows=64,
-                             eq_deletes=scan["equality_deletes"])
+    vf = verify.verify_files(spark, out, batch_rows=64)
     assert vf["ok"] and vf["rows_compared"] == len(expected)
 
 
@@ -883,8 +875,7 @@ def test_iceberg_eq_delete_rename_end_to_end(spark, tokens_dir,
         pipeline.read_chunks(spark, out), ["doc_id"], "doc_id string")
     got = sorted(r.doc_id for r in dec.collect())
     assert got == sorted(i for i in all_ids if i not in set(dead))
-    vf = verify.verify_files(spark, out, batch_rows=64,
-                             eq_deletes=scan["equality_deletes"])
+    vf = verify.verify_files(spark, out, batch_rows=64)
     assert vf["ok"] and vf["rows_compared"] == len(all_ids) - len(dead)
 
 
@@ -947,8 +938,7 @@ def test_verify_files_missing_source_is_per_file_err(spark, tokens_dir,
                          input_files=scan["data_files"],
                          eq_deletes=scan["equality_deletes"])
     os.remove(files[0])
-    vf = verify.verify_files(spark, out,
-                             eq_deletes=scan["equality_deletes"])
+    vf = verify.verify_files(spark, out)
     assert not vf["ok"]
     # one structured err string for the vanished file; the other file
     # still verified (files_compared counts both)
@@ -1043,10 +1033,8 @@ def test_iceberg_v3_deletion_vectors_encode(spark, tokens_dir, tmp_path):
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["doc_id"], "doc_id string")
     assert sorted(r.doc_id for r in dec.collect()) == sorted(expected)
-    vf = verify.verify_files(spark, out, batch_rows=32,
-                             row_deletes=scan["position_deletes"])
+    vf = verify.verify_files(spark, out, batch_rows=32)
     assert vf["ok"] and vf["rows_compared"] == 300 - n_del
-    assert not verify.verify_files(spark, out, batch_rows=32)["ok"]
 
 
 def test_iceberg_dv_footer_fallback(tmp_path, tokens_dir):
@@ -1202,8 +1190,7 @@ def test_iceberg_table_on_object_store_end_to_end(spark, tokens_dir,
         spark, remote_tbl, out, input_files=scan["data_files"],
         row_deletes=scan["position_deletes"])
     assert totals["n_rows"] == 300 - len(dead)
-    vf = verify.verify_files(spark, out,
-                             row_deletes=scan["position_deletes"])
+    vf = verify.verify_files(spark, out)
     assert vf["ok"] and vf["rows_compared"] == 300 - len(dead)
 
 
