@@ -11,8 +11,10 @@ little-endian representation of sum(v_i << (i*w)). Byte-aligned widths
 (8/16/32/64) take a zero-copy-ish fast path; other widths use a
 residue-grouped byte scatter/gather: values i ≡ r (mod 8) all share the same
 in-byte bit offset ((r*w) % 8) and their start bytes are exactly w bytes
-apart, so each of the ≤8 residue groups is a handful of strided vector ops —
-O(n·w/8) byte traffic, no (n, w) bit-matrix blow-up.
+apart, so byte k of every value in a group is one basic strided slice
+(``out[start + k::w]``) — per group one vector op per byte the values
+touch, no fancy indexing, O(n·w/8) byte traffic and no (n, w) bit-matrix
+blow-up.
 """
 
 from __future__ import annotations
@@ -62,14 +64,15 @@ def pack(values: np.ndarray, width: int) -> bytes:
         start_bit = r * width
         off = start_bit & 7
         base = start_bit >> 3
-        idx0 = base + np.arange(cnt, dtype=np.int64) * width
-        lo = vv << np.uint64(off)  # wraps mod 2^64; high part handled below
+        # wraps mod 2^64; the high part is handled below
+        lo = (vv << np.uint64(off)).astype("<u8", copy=False)
+        lo_bytes = lo.view(np.uint8).reshape(cnt, 8)
         nb = min((width + off + 7) // 8, 8)
         for k in range(nb):
-            out[idx0 + k] |= ((lo >> np.uint64(8 * k))
-                              & np.uint64(0xFF)).astype(np.uint8)
+            out[base + k::width][:cnt] |= lo_bytes[:, k]
         if width + off > 64:
-            out[idx0 + 8] |= (vv >> np.uint64(64 - off)).astype(np.uint8)
+            out[base + 8::width][:cnt] |= (
+                vv >> np.uint64(64 - off)).astype(np.uint8)
     return out[:nbytes].tobytes()
 
 
@@ -91,14 +94,14 @@ def unpack(payload: bytes, width: int, n: int) -> np.ndarray:
         start_bit = r * width
         off = start_bit & 7
         base = start_bit >> 3
-        idx0 = base + np.arange(cnt, dtype=np.int64) * width
-        acc = np.zeros(cnt, dtype=np.uint64)
+        acc = np.zeros((cnt, 8), dtype=np.uint8)
         nb = min((width + off + 7) // 8, 8)
         for k in range(nb):
-            acc |= buf[idx0 + k].astype(np.uint64) << np.uint64(8 * k)
-        val = acc >> np.uint64(off)
+            acc[:, k] = buf[base + k::width][:cnt]
+        val = acc.view("<u8").reshape(cnt) >> np.uint64(off)
         if width + off > 64:
-            val |= buf[idx0 + 8].astype(np.uint64) << np.uint64(64 - off)
+            val |= (buf[base + 8::width][:cnt].astype(np.uint64)
+                    << np.uint64(64 - off))
         out[r::8] = val & mask
     return out
 

@@ -12,12 +12,20 @@ Column kinds:
   list_i32   frames: [offsets] [values]       (tokens: array<int32> not null)
   str_direct frames: [validity?] [offsets] [bytes]
   str_dict   frames: [validity?] [indices] [offsets] [bytes]   (dict strings)
+  f32 / f64  frames: [validity?] [values]     values is either a ``bytes``
+             frame of raw floats (byte planes + zstd) or an ``int32`` /
+             ``int64`` int-cascade frame over the floats' bit patterns,
+             whichever is smaller; trees holding only ``bytes`` float
+             frames decode on builds that predate the cascade frame
 
-Any frame payload may additionally be zlib-wrapped (params["z"] = 1) when
-that wins by >4% — a general-purpose outer stage on top of the lightweight
-codec, analogous to Parquet's SNAPPY/GZIP block compression on top of
-PLAIN/RLE/DICT pages (the reference reads such files:
-``compat/TestParquetCompatibility.java:52-57``).
+Any frame payload may additionally be zstd-compressed when that wins by
+>4%: ``params["z"]`` is ``"zs"`` for zstd over the payload or ``"zp"``
+for zstd over its byte-plane transposition (stride ``params["ps"]``) —
+a general-purpose outer stage on top of the lightweight codec, analogous
+to Parquet's SNAPPY/GZIP/ZSTD block compression on top of PLAIN/RLE/DICT
+pages (the reference reads such files:
+``compat/TestParquetCompatibility.java:52-57``). ``"z": 1`` (zlib) is
+only decoded, for frames older builds wrote.
 """
 
 from __future__ import annotations
@@ -29,7 +37,7 @@ import pyarrow as pa
 
 from ..codecs import framing, fsst
 from ..codecs.intcodecs import INT_CODECS
-from .select import encode_best
+from .select import encode_best, select_int_codec
 
 _COMPRESS_GAIN = 0.96
 # level 1, not 3: measured on the bench corpus (interleaved best-of-4,
@@ -131,8 +139,8 @@ def _codec_stride(codec: str, params: dict) -> int:
     return 1
 
 
-def _int_frame(a: np.ndarray, dtype_name: str) -> bytes:
-    codec, payload, params = encode_best(a)
+def _int_frame(a: np.ndarray, dtype_name: str, selection=None) -> bytes:
+    codec, payload, params = encode_best(a, selection)
     payload, params = _maybe_compress(payload, params,
                                       _codec_stride(codec, params))
     frame = framing.write_frame(codec, dtype_name, len(a), params, payload)
@@ -489,8 +497,15 @@ _FLOAT_DTYPES = {pa.float32(): ("f32", np.float32),
 
 
 def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
-    """float32/float64: byte-plane + zstd (the BYTE_STREAM_SPLIT trade for
-    floating point — exponent/sign bytes compress, mantissa bytes don't)."""
+    """float32/float64: the smaller of two frames, by actual bytes.
+
+    The byte-plane frame (dtype ``bytes``) is the BYTE_STREAM_SPLIT trade
+    for floating point: exponent/sign bytes compress, mantissa bytes
+    don't. The cascade frame (dtype ``int32``/``int64``) runs the
+    values' bit patterns through the int codec cascade, where a
+    low-cardinality column (prices, discounts, tax rates) gets dict or
+    RLE instead of eight planes of mostly-random mantissa bytes. Both
+    are bit-exact: NaN payloads and -0.0 survive as bits."""
     kind, np_dtype = _FLOAT_DTYPES[arr.type]
     blob = b""
     if arr.null_count:
@@ -501,8 +516,15 @@ def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
                              dtype=np_dtype)
     payload, params = _maybe_compress(a.tobytes(), {"dt": a.dtype.str},
                                       a.dtype.itemsize)
-    blob += framing.write_frame("plain", "bytes", len(a), params, payload)
-    return kind, blob
+    frame = framing.write_frame("plain", "bytes", len(a), params, payload)
+    bits = a.view(f"<i{a.itemsize}")
+    selection = select_int_codec(bits)
+    # a plain cascade payload is the byte-plane frame's bytes again
+    if selection[0] != "plain":
+        cascade = _int_frame(bits, bits.dtype.name, selection)
+        if len(cascade) < len(frame):
+            frame = cascade
+    return kind, blob + frame
 
 
 def decode_float_column(kind: str, blob: bytes) -> pa.Array:
@@ -511,8 +533,12 @@ def decode_float_column(kind: str, blob: bytes) -> pa.Array:
     if frames[0].dtype == "uint1":
         valid = _decode_validity(frames[0])
         frames = frames[1:]
-    data = _decompress(frames[0])
-    vals = np.frombuffer(data, dtype=np.dtype(frames[0].params["dt"]))
+    if frames[0].dtype == "bytes":
+        data = _decompress(frames[0])
+        vals = np.frombuffer(data, dtype=np.dtype(frames[0].params["dt"]))
+    else:
+        bits = _decode_int_frame(frames[0])
+        vals = bits.view(f"<f{bits.itemsize}")
     if valid is None:
         return pa.array(vals)
     return pa.array(np.ma.masked_array(vals, mask=~valid))
@@ -654,7 +680,8 @@ def encode_nested_column(arr: pa.Array) -> tuple[str, bytes]:
     field-wise: validity + offsets + each child recursively through
     ``encode_column`` — so the leaves of an arbitrarily nested column get
     the same lightweight codecs as top-level columns (FOR/delta ints,
-    dict/FSST strings, plane-split floats), where the r2 Arrow-IPC
+    dict/FSST strings, floats as byte planes or through the int cascade
+    on their bits), where the r2 Arrow-IPC
     fallback got zero codec wins. Write-side inversion of the reference's
     field-by-field nested decode (``ParquetValueConverter.java:282-337``
     struct, ``:513-596`` lists incl. legacy layouts, ``:598-679`` maps,

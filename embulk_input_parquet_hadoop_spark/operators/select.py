@@ -103,10 +103,12 @@ def select_int_codec(a: np.ndarray) -> tuple[str, ChunkStats, dict[str, float]]:
     return choice, st, est
 
 
-def encode_best(a: np.ndarray) -> tuple[str, bytes, dict]:
+def encode_best(a: np.ndarray, selection=None) -> tuple[str, bytes, dict]:
     """Encode with the estimated-best codec; guard against bad estimates by
-    falling back to plain when the winner is actually larger."""
-    choice, _st, _est = select_int_codec(a)
+    falling back to plain when the winner is actually larger.
+    ``selection`` is ``select_int_codec(a)`` when the caller already ran
+    it."""
+    choice, _st, _est = selection or select_int_codec(a)
     enc, _ = INT_CODECS[choice]
     try:
         if choice == "xp":

@@ -164,7 +164,7 @@ def _verify_one(src: str, chk: str, batch_rows: int, del_files=None,
                     try:
                         if da.type != sa.type:
                             da = da.cast(sa.type)
-                        if not da.equals(sa):
+                        if not _same_values(da, sa):
                             chunk_ok = False
                     except pa.ArrowInvalid:
                         chunk_ok = False
@@ -179,6 +179,21 @@ def _verify_one(src: str, chk: str, batch_rows: int, del_files=None,
     except Exception as exc:  # noqa: BLE001
         err = f"{type(exc).__name__}: {exc}"
     return (src, chk, rows, toks, mism, err)
+
+
+_FLOAT_BITS = {16: pa.uint16(), 32: pa.uint32(), 64: pa.uint64()}
+
+
+def _same_values(decoded: pa.Array, source: pa.Array) -> bool:
+    """Arrow ``equals``, except that a float column compares its validity
+    and the bits of its valid values: ``equals`` calls NaN unequal to
+    itself (a bit-exact NaN would fail) and -0.0 equal to 0.0 (a flipped
+    sign would pass). Float leaves inside nested columns still compare
+    with ``equals``."""
+    if pa.types.is_floating(source.type):
+        bits = _FLOAT_BITS[source.type.bit_width]
+        return decoded.view(bits).equals(source.view(bits))
+    return decoded.equals(source)
 
 
 def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS):

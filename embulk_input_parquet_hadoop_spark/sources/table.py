@@ -77,7 +77,8 @@ def table_files(df: DataFrame, allow_mor: bool = False) -> list[str]:
     those data files directly would resurrect deleted rows; use
     ``encode_df`` on the DataFrame instead.
     """
-    files = sorted(df.inputFiles())
+    from ..plans.pipeline import spark_input_files
+    files = sorted(spark_input_files(df))
     non_parquet = [f for f in files if not f.endswith(".parquet")]
     if non_parquet and not allow_mor:
         raise ValueError(

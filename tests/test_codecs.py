@@ -72,6 +72,25 @@ def test_bitpack_roundtrip(width):
     np.testing.assert_array_equal(out, vals)
 
 
+# sha256 prefixes of pack() output: the bit layout is stored in every
+# committed frame, so a faster packer must write exactly these bytes
+_PACKED_SHA256 = {3: "99cb07b409548656aab9387624aeca52",
+                  13: "1b92dd0101b43b4fbd9a79ba6f712be6",
+                  55: "a61b97ba32dc8424fcdf39eedaf99724",
+                  62: "1936d0f14a5971634a8378faf5d812e4"}
+
+
+@pytest.mark.parametrize("width", sorted(_PACKED_SHA256))
+def test_bitpack_layout_pinned(width):
+    import hashlib
+    vals = ((np.arange(1000, dtype=np.uint64)
+             * np.uint64(0x9E3779B97F4A7C15))
+            & np.uint64((1 << width) - 1))
+    packed = bitpack.pack(vals, width)
+    assert hashlib.sha256(packed).hexdigest()[:32] == _PACKED_SHA256[width]
+    np.testing.assert_array_equal(bitpack.unpack(packed, width, 1000), vals)
+
+
 def test_selector_prefers_sensible_codecs():
     const = np.full(10000, 42, dtype=np.int64)
     # constant chunk: FOR at width 0 (zero payload) or RLE are both optimal

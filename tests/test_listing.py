@@ -89,6 +89,29 @@ def test_lineage_matches_spark_inference_listing(spark, tmp_path,
     assert v["ok"] and v["files_compared"] == len(before) + 1
 
 
+def test_one_call_listing_keeps_every_name(spark, tmp_path):
+    """``spark_input_files`` joins the JVM listing in one py4j call; a
+    newline in a file name (listed as ``%0A``) must not split it."""
+    from pyspark.sql.types import StructType
+
+    from embulk_input_parquet_hadoop_spark.sources import table
+    tree = str(tmp_path / "odd")
+    for k, name in enumerate(("a\nb.parquet", "c d%e.parquet",
+                              "part-0.parquet")):
+        _write(f"{tree}/{name}", 10 * k)
+    df = spark.read.schema(StructType()).parquet(tree)
+    listed = pipeline.spark_input_files(df)
+    assert listed == df.inputFiles() and len(listed) == 3
+    assert table.table_files(df) == sorted(df.inputFiles())
+    assert pipeline.spark_input_files(spark.range(3)) == []
+
+    out = str(tmp_path / "out")
+    pipeline.encode_path(spark, tree, out)
+    assert f"{tree}/a\nb.parquet" in mf.committed_input_files(out)
+    v = verify.verify_files(spark, out)
+    assert v["ok"] and v["files_compared"] == 3 and v["rows_compared"] == 30
+
+
 def test_empty_and_missing_inputs_keep_sparks_refusal(spark, tmp_path):
     empty = tmp_path / "empty"
     empty.mkdir()

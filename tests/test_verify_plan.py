@@ -209,3 +209,39 @@ def test_recorded_plan_survives_checkpoint_and_resume(spark, tmp_path,
     assert planned_files() == [[f] for f in scan["data_files"]]
     vf = verify.verify_files(spark, out)
     assert vf["ok"] and vf["rows_compared"] == live
+
+
+def test_float_columns_verify_by_their_bits(spark, tmp_path, monkeypatch):
+    """A NaN with payload bits and both zeros round-trip bit-exactly and
+    verify ok; Arrow's ``equals`` would fail the NaN, and pass a decoder
+    that canonicalizes NaNs or drops the sign of -0.0."""
+    src = tmp_path / "src"
+    src.mkdir()
+    # a quiet NaN with payload bits, -0.0, 0.0
+    bits = pa.array([0x7FF8000000000123, 1 << 63, 0], pa.uint64())
+    pq.write_table(pa.table({"x": bits.view(pa.float64())}),
+                   str(src / "f.parquet"))
+    out = str(tmp_path / "enc")
+    pipeline.encode_path(spark, str(src), out)
+    v = verify.verify_files(spark, out)
+    assert v["ok"] and v["mismatch_chunks"] == 0, v
+    assert v["files_compared"] == 1 and v["rows_compared"] == 3
+
+    (chk,) = glob.glob(f"{out}/chunks/*/*.parquet")
+    args = (str(src / "f.parquet"), chk, pipeline.DEFAULT_BATCH_ROWS)
+    assert verify._verify_one(*args)[4] == 0
+    real = verify.decode_column
+
+    def canonical_nan(kind, blob):
+        # every NaN as the canonical quiet NaN: payload bits lost
+        arr = real(kind, blob)
+        return pa.compute.if_else(pa.compute.is_nan(arr), float("nan"),
+                                  arr)
+
+    def unsigned_zero(kind, blob):
+        arr = real(kind, blob)
+        return pa.compute.if_else(pa.compute.equal(arr, 0.0), 0.0, arr)
+
+    for mutant in (canonical_nan, unsigned_zero):
+        monkeypatch.setattr(verify, "decode_column", mutant)
+        assert verify._verify_one(*args)[4] == 1, mutant.__name__
