@@ -831,11 +831,12 @@ def encode_column(arr: pa.Array) -> tuple[str, bytes]:
     t = arr.type
     if t in _INT_DTYPES:
         return encode_int_column(arr)
-    if pa.types.is_list(t) and t.value_type == pa.int32() \
-            and arr.null_count == 0:
+    # the flat list codecs keep no validity, of lists or of elements
+    flat_list = (pa.types.is_list(t) and arr.null_count == 0
+                 and arr.flatten().null_count == 0)
+    if flat_list and t.value_type == pa.int32():
         return encode_list_i32_column(arr)
-    if pa.types.is_list(t) and t.value_type == pa.float32() \
-            and arr.null_count == 0:
+    if flat_list and t.value_type == pa.float32():
         return encode_list_f32_column(arr)
     if t in _FLOAT_DTYPES:
         return encode_float_column(arr)

@@ -11,7 +11,8 @@ The reference explicitly lacks resume ("Resume supported: no",
   running a Spark job to persist one row costs seconds of fixed overhead
   per wave and buys nothing. A wave encoded with deletes, constants or
   renames also records that scan plan (``"plan"``), O(files) like its
-  ``input_files`` lineage, for ``verify_files`` to replay.
+  ``input_files`` lineage, for ``verify_files`` to replay, and a
+  file-source wave records its files' schema keys (``"schemas"``).
 - ``{out}/manifest/checkpoint-K.json`` optional compaction of every wave
   record <= K (:func:`compact_manifest`) — the Delta last-checkpoint
   reader shape for OUR tree: lineage/metrics reads become one object
@@ -171,7 +172,8 @@ def all_chunk_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
                 files: list[str], wall_s: float,
-                meta_table=None, plan: dict | None = None) -> dict:
+                meta_table=None, plan: dict | None = None,
+                schemas: list[str] | None = None) -> dict:
     """Aggregate the wave's chunk metrics and commit its manifest record.
 
     ``meta_table``: the wave's chunk-stats pyarrow Table if the caller
@@ -183,6 +185,9 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
     files' side inputs, ``const_schema``, ``column_renames``), recorded
     under ``"plan"`` so ``verify.verify_files`` replays exactly what the
     wave was encoded with; a wave without one keeps the plain record.
+
+    ``schemas``: the wave's files' distinct ``pipeline._schema_key``s,
+    recorded under ``"schemas"``.
     """
     if meta_table is not None:
         import pyarrow.compute as pc
@@ -237,6 +242,8 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
     }
     if plan:
         out["plan"] = plan
+    if schemas is not None:
+        out["schemas"] = schemas
     mdir = _manifest_dir(out_dir)
     # a checkpoint covering this id may hold the entry of a rolled-back
     # earlier commit of the same wave, which readers would serve in place

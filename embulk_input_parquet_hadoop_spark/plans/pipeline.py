@@ -106,7 +106,9 @@ CHUNK_ARROW_SCHEMA = pa.schema([
 # what the encode tasks yield back to the driver: chunk stats, no payloads.
 # n_bad_rows: rows lost to corrupt row groups of an otherwise-kept file
 # (error stays NULL — the file succeeded within bad_record_threshold);
-# error non-NULL marks a *failed* file, none of whose chunks committed.
+# error non-NULL marks a *failed* file, none of whose chunks committed;
+# schema: the source file's ``_schema_key``, NULL on rows that describe
+# no chunk.
 CHUNK_META_ARROW_SCHEMA = pa.schema([
     pa.field("chunk_id", pa.string()),
     pa.field("wave_id", pa.int32()),
@@ -122,6 +124,7 @@ CHUNK_META_ARROW_SCHEMA = pa.schema([
     pa.field("cols", pa.list_(_COL_STRUCT)),
     pa.field("n_bad_rows", pa.int64()),
     pa.field("error", pa.string()),
+    pa.field("schema", pa.string()),
 ])
 
 DEFAULT_BATCH_ROWS = 16384
@@ -138,6 +141,7 @@ FILE_SUMMARY_ARROW_SCHEMA = pa.schema([
     pa.field("enc_bytes", pa.int64()),
     pa.field("n_bad_rows", pa.int64()),
     pa.field("error", pa.string()),
+    pa.field("schema", pa.string()),
 ])
 
 # one encode task input row per source file: the path, its Iceberg
@@ -726,6 +730,31 @@ def _source_batches(path: str, batch_rows: int, columns: list[str] | None,
             f"bad_record_threshold={bad_record_threshold}")
 
 
+def _plain_type(t: pa.DataType, leaf=None) -> pa.DataType:
+    """``t`` with nested fields nullable, metadata-free and list items
+    named ``item``, each leaf type mapped through ``leaf`` if given."""
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _plain_type(f.type, leaf))
+                          for f in t])
+    if pa.types.is_map(t):
+        return pa.map_(_plain_type(t.key_type, leaf),
+                       _plain_type(t.item_type, leaf))
+    if pa.types.is_list(t):
+        return pa.list_(_plain_type(t.value_type, leaf))
+    if pa.types.is_large_list(t):
+        return pa.large_list(_plain_type(t.value_type, leaf))
+    if pa.types.is_fixed_size_list(t):
+        return pa.list_(_plain_type(t.value_type, leaf), t.list_size)
+    return leaf(t) if leaf else t
+
+
+def _schema_key(schema: pa.Schema) -> str:
+    """A file's schema as ``schema_mode`` compares it: column names in
+    order and their types, without metadata (Spark's row metadata,
+    ``PARQUET:field_id``), nullability or list item names."""
+    return ", ".join(f"{f.name}: {_plain_type(f.type)}" for f in schema)
+
+
 def make_encode_files_fn(wave_id: int, wave_dir: str,
                          batch_rows: int = DEFAULT_BATCH_ROWS,
                          columns: list[str] | None = None,
@@ -774,9 +803,13 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
     (``FILE_SUMMARY_ARROW_SCHEMA``). The driver-side materialization is
     then O(files), never O(chunks): at a 10^6-chunk wave the r2 driver
     collected every chunk's column stats.
+
+    Each file's stat or summary rows carry the ``_schema_key`` of its
+    first batch (after projection, renames and constants).
     """
 
-    def meta_row(stats, path, final, cols, error=None, n_bad_rows=0):
+    def meta_row(stats, path, final, cols, error=None, n_bad_rows=0,
+                 schema=None):
         return pa.RecordBatch.from_arrays(
             [
                 pa.array([stats["chunk_id"]]),
@@ -793,6 +826,7 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 pa.array([cols], type=pa.list_(_COL_STRUCT)),
                 pa.array([n_bad_rows], type=pa.int64()),
                 pa.array([error], type=pa.string()),
+                pa.array([schema], type=pa.string()),
             ],
             schema=CHUNK_META_ARROW_SCHEMA)
 
@@ -801,7 +835,7 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 "n_rows": 0, "n_tokens": 0, "raw_bytes": 0, "enc_bytes": 0,
                 "wall_ms": 0.0}
 
-    def summary_row(path, pending, n_bad_rows=0, error=None):
+    def summary_row(path, pending, n_bad_rows=0, error=None, schema=None):
         metas = pa.Table.from_batches(pending, CHUNK_META_ARROW_SCHEMA) \
             if pending else None
         import pyarrow.compute as pc
@@ -817,7 +851,8 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
              pa.array([tot("raw_bytes")], type=pa.int64()),
              pa.array([tot("enc_bytes")], type=pa.int64()),
              pa.array([n_bad_rows], type=pa.int64()),
-             pa.array([error], type=pa.string())],
+             pa.array([error], type=pa.string()),
+             pa.array([schema], type=pa.string())],
             schema=FILE_SUMMARY_ARROW_SCHEMA)
 
     def encode_files(batches):
@@ -867,11 +902,14 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 pending = []  # stat rows held until the file commits
                 skipped = []  # rows lost per skipped corrupt row group
                 committed_final = None  # set once os.replace lands
+                schema = None
                 try:
                     for batch in _source_batches(
                             path, batch_rows, columns, dfiles, eqjson,
                             cjson, const_schema, column_renames,
                             bad_record_threshold, skipped):
+                        if schema is None:
+                            schema = _schema_key(batch.schema)
                         chunk_row, stats = _encode_one_batch(
                             batch, wave_id, pid, bidx)
                         if writer is None:
@@ -887,7 +925,8 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                                 write_statistics=False)
                         writer.write_batch(chunk_row)
                         pending.append(meta_row(stats, path, final,
-                                                _cols_of(chunk_row)))
+                                                _cols_of(chunk_row),
+                                                schema=schema))
                         bidx += 1
                     bad_rows = sum(skipped)
                     if writer is not None:
@@ -922,7 +961,8 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                             fsutil.put_bytes(f"{meta_dir}/{mname}",
                                              buf.getvalue())
                         yield summary_row(path, pending,
-                                          n_bad_rows=bad_rows)
+                                          n_bad_rows=bad_rows,
+                                          schema=schema)
                     else:
                         yield from pending
                         if bad_rows:
@@ -1075,7 +1115,10 @@ def encode_df(spark: SparkSession, df: DataFrame, out_dir: str,
 
     Writes chunk rows (with payloads) via Spark's writer; returns nothing
     to Python until action. Use for non-file sources; ``encode_path`` is
-    the fast path for plain Parquet file trees.
+    the fast path for plain Parquet file trees. Like the file-source
+    chunk files, these carry no column statistics and no dictionary
+    pages: the blobs are already coded, and nothing reads chunk-file
+    statistics.
     """
     if cluster_partitions:
         df = cluster_for_encode(df, cluster_partitions)
@@ -1085,6 +1128,8 @@ def encode_df(spark: SparkSession, df: DataFrame, out_dir: str,
                         CHUNK_SPARK_SCHEMA)
     (enc.write.mode("overwrite")
         .option("compression", "uncompressed")
+        .option("parquet.enable.dictionary", "false")
+        .option("parquet.column.statistics.enabled", "false")
         .parquet(wave_path))
     return spark.read.parquet(wave_path)
 
@@ -1267,8 +1312,8 @@ def _side_inputs(files: list[str],
     """Per-file task side inputs ``(position-delete files, equality-delete
     descriptors JSON, constant columns JSON)``, None where absent. Keys
     match on the scheme-normalized identity (``_lineage_key``): the
-    single-schema path lists via Spark (file:/ URIs) while scan plans
-    carry plain paths. Descriptors and constants go as JSON (a struct
+    listing is Spark's (file:/ URIs) while scan plans carry plain
+    paths. Descriptors and constants go as JSON (a struct
     column would pin one fixed shape)."""
     rd = {_lineage_key(k): v for k, v in (row_deletes or {}).items()}
     eq = {_lineage_key(k): v for k, v in (eq_deletes or {}).items()}
@@ -1374,15 +1419,20 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     then runs against one frozen snapshot, immune to concurrent
     commits). ``input_path`` is still used in messages/manifest lineage.
 
-    Listing (``schema_mode="single"``) is Spark's file index of
+    Listing, in both schema modes, is Spark's file index of
     ``input_path`` or ``input_files``, asked for with a fixed schema
-    (``spark.read.schema(...).parquet(...).inputFiles()``): globs, the
-    hidden-name filter, partition-directory discovery, names without a
+    (``spark.read.schema(...).parquet(...).inputFiles()``) with
+    ``recursiveFileLookup``: every non-hidden directory under a root is
+    walked, ``k=v`` or not, as the reference expands directories
+    (``ParquetHadoopInputPlugin.java:204-239``), and no partition
+    columns are inferred. Globs, the hidden-name filter, names without a
     ``.parquet`` suffix and qualified URIs follow Spark's rules, and no
     Spark job runs. Only ``expected_schema`` and ``cluster_partitions``
     make Spark infer the source schema (one Spark job that reads a
-    footer). An empty listing still fails with Spark's
-    ``UNABLE_TO_INFER_SCHEMA`` and a missing path with
+    footer); otherwise the driver opens no footer. Schemes the JVM
+    cannot list (``mock-s3``) are listed with pyarrow
+    (``_list_parquet_files``). An empty listing still fails with
+    Spark's ``UNABLE_TO_INFER_SCHEMA`` and a missing path with
     ``PATH_NOT_FOUND``, before anything is written under ``out_dir``.
 
     ``entropy=True`` turns on the opt-in order-1 rANS competitor for
@@ -1420,16 +1470,21 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     corrupt unit, keep the rest, fail only past the fraction. Both knobs
     default to 0.0 (strict).
 
-    ``schema_mode="mixed"`` accepts a file tree whose files carry
-    *incompatible* schemas — the reference decodes such trees side by side
-    (fixture ``test-data/incompatible-schema/expected.csv`` mixes
-    ``{c_int}`` and ``{c_str,c_bool}`` rows,
-    ``TestParquetHadoopInputPlugin.java:48-53``). Files are grouped by
-    footer schema (driver-side footer reads, threaded; at 10^6-file scale
-    distribute this listing as a small metadata Spark job) and each group
-    runs its own wave sequence; ``decode_chunks`` reads the union, filling
-    columns a chunk lacks with nulls. ``expected_schema`` applies per
-    group only if given as ``None`` (meaningless across groups).
+    ``schema_mode`` is one policy line over the same listing and waves.
+    The tasks key each file's schema (``_schema_key``); a wave record
+    keeps its keys (``"schemas"``). ``"single"`` refuses the first wave
+    that brings a second schema (in the wave, an earlier wave, or under
+    append/resume a committed record) with a ``ValueError`` naming both;
+    that wave does not commit, so its chunk files stay invisible until
+    ``vacuum``. ``"mixed"`` lets files of *incompatible* schemas share
+    waves, as the reference decodes them side by side
+    (``TestParquetHadoopInputPlugin.java:48-53``); ``decode_chunks``
+    reads the union with nulls. It refuses ``expected_schema`` and
+    ``cluster_partitions`` (one ``spark.read.parquet`` per wave applies
+    one file's schema to all). A table snapshot's data files differ in
+    schema after schema evolution (an added column, int widened to
+    long): encode such a snapshot with ``"mixed"``, as
+    ``jobs/encode_job.py`` does by default for table sources.
 
     ``meta_mode="distributed"`` keeps every per-chunk meta row OUT of the
     driver: tasks write parquet sidecars (committed atomically with their
@@ -1441,6 +1496,13 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     """
     if schema_mode not in ("single", "mixed"):
         raise ValueError(f"unknown schema_mode {schema_mode!r}")
+    if schema_mode == "mixed" and expected_schema is not None:
+        raise ValueError("expected_schema requires schema_mode='single'")
+    if schema_mode == "mixed" and cluster_partitions:
+        raise ValueError(
+            "cluster_partitions requires schema_mode='single': it reads "
+            "each wave through one spark.read.parquet, which applies one "
+            "file's schema to all of them")
     if meta_mode not in ("driver", "distributed"):
         raise ValueError(f"unknown meta_mode {meta_mode!r}")
     if append and resume:
@@ -1497,105 +1559,92 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     # with atomic-at-visibility PUTs (direct final-key write on object
     # stores, temp+move on rename-capable remotes), and the wave manifest
     # record stays the single visibility point (SCALE.md commit protocol)
-    if schema_mode == "single":
-        paths = input_files or [input_path]
-        # only these two need Spark's schema of the source: expected_schema
-        # compares Spark types, and the clustering path reads every wave
-        # through spark.read.parquet. Everything else asks Spark for its
-        # file index alone — a fixed schema skips inference, which is one
-        # Spark job per call and reads a footer a bad file can fail
-        infer = expected_schema is not None or bool(cluster_partitions)
-        try:
-            df0 = (spark.read if infer
-                   else spark.read.schema(StructType())).parquet(*paths)
-            # inputFiles() returns percent-ENCODED URIs (a literal "%"
-            # or space in a file name comes back as %25 / %20, which
-            # pyarrow then fails to open); decode back to raw paths
-            groups = [sorted(_uri_to_path(f)
-                             for f in spark_input_files(df0))]
-            if not groups[0]:
-                # an empty listing still gets Spark's own refusal
-                # (UNABLE_TO_INFER_SCHEMA)
-                spark.read.parquet(*paths)
-        except Exception as exc:
-            # Sources OUR pyarrow-reading encode tasks handle fine but
-            # Spark cannot: filesystem schemes the JVM has no FileSystem
-            # for (mock-s3, or s3/gs without the hadoop cloud jars —
-            # fsutil reads them via pyarrow.fs), and, under inference,
-            # footer types Spark's reader lacks (TIMESTAMP(NANOS) ->
-            # PARQUET_TYPE_ILLEGAL). Listing falls back to pyarrow —
-            # still requiring one schema; inference cannot.
-            msg = str(exc)
-            no_fs = ("No FileSystem for scheme" in msg
-                     or "UnsupportedFileSystem" in msg)
-            if infer and (no_fs or "PARQUET_TYPE_ILLEGAL" in msg):
-                what = ("expected_schema" if expected_schema is not None
-                        else "cluster_partitions")
-                raise TypeError(
-                    f"{what} needs a Spark-readable source schema, but "
-                    f"Spark rejects this tree: {exc}; without it the "
-                    "file-source path reads with pyarrow") from exc
-            if not no_fs:
-                raise
-            groups = _schema_groups(input_files
-                                    or _list_parquet_files(input_path))
-            if len(groups) > 1:
-                raise ValueError(
-                    "input tree mixes incompatible schemas; use "
-                    "schema_mode='mixed'") from exc
-        if expected_schema is not None:
-            expected = spark.createDataFrame([], expected_schema).schema
-            got = [(f.name, f.dataType) for f in df0.schema.fields]
-            want = [(f.name, f.dataType) for f in expected.fields]
-            if got != want:
-                raise TypeError(
-                    f"input schema mismatch: got "
-                    f"{df0.schema.simpleString()}, "
-                    f"expected {expected.simpleString()}")
-    else:
-        if expected_schema is not None:
-            raise ValueError("expected_schema requires schema_mode='single'")
-        groups = _schema_groups(input_files
-                                or _list_parquet_files(input_path))
-    if not any(groups):
+    paths = input_files or [input_path]
+    # only these two need Spark's schema of the source: expected_schema
+    # compares Spark types, and the clustering path reads every wave
+    # through spark.read.parquet. Everything else asks Spark for its
+    # file index alone — a fixed schema skips inference, which is one
+    # Spark job per call and reads a footer a bad file can fail
+    infer = expected_schema is not None or bool(cluster_partitions)
+    try:
+        # every directory under a root is walked, as the reference
+        # expands directories (ParquetHadoopInputPlugin.java:204-239);
+        # without recursiveFileLookup Spark's index keeps only a root's
+        # own files unless it finds k=v partition directories
+        df0 = (spark.read if infer else spark.read.schema(StructType())) \
+            .option("recursiveFileLookup", "true").parquet(*paths)
+        # inputFiles() returns percent-ENCODED URIs (a literal "%"
+        # or space in a file name comes back as %25 / %20, which
+        # pyarrow then fails to open); decode back to raw paths
+        files = sorted(_uri_to_path(f) for f in spark_input_files(df0))
+        if not files:
+            # an empty listing still gets Spark's own refusal
+            # (UNABLE_TO_INFER_SCHEMA)
+            spark.read.parquet(*paths)
+    except Exception as exc:
+        # Sources OUR pyarrow-reading encode tasks handle fine but
+        # Spark cannot: filesystem schemes the JVM has no FileSystem
+        # for (mock-s3, or s3/gs without the hadoop cloud jars —
+        # fsutil reads them via pyarrow.fs), and, under inference,
+        # footer types Spark's reader lacks (TIMESTAMP(NANOS) ->
+        # PARQUET_TYPE_ILLEGAL). Listing falls back to pyarrow;
+        # inference cannot.
+        msg = str(exc)
+        no_fs = ("No FileSystem for scheme" in msg
+                 or "UnsupportedFileSystem" in msg)
+        if infer and (no_fs or "PARQUET_TYPE_ILLEGAL" in msg):
+            what = ("expected_schema" if expected_schema is not None
+                    else "cluster_partitions")
+            raise TypeError(
+                f"{what} needs a Spark-readable source schema, but "
+                f"Spark rejects this tree: {exc}; without it the "
+                "file-source path reads with pyarrow") from exc
+        if not no_fs:
+            raise
+        files = sorted(input_files or _list_parquet_files(input_path))
+    if expected_schema is not None:
+        expected = spark.createDataFrame([], expected_schema).schema
+        got = [(f.name, f.dataType) for f in df0.schema.fields]
+        want = [(f.name, f.dataType) for f in expected.fields]
+        if got != want:
+            raise TypeError(
+                f"input schema mismatch: got "
+                f"{df0.schema.simpleString()}, "
+                f"expected {expected.simpleString()}")
+    if not files:
         # parity with the reference's empty-glob failure
         # (ParquetHadoopInputPlugin.java:92-94 -> PathNotFoundException)
         raise FileNotFoundError(f"no parquet files under {input_path}")
     totals = {"waves_run": 0, "waves_skipped": 0, "n_rows": 0, "n_tokens": 0,
               "raw_bytes": 0, "enc_bytes": 0, "wall_s": 0.0}
+    # one manifest read (none for a fresh encode): append's lineage and
+    # next wave id, resume's done set, the committed waves' schemas
+    recs = mf.wave_records(out_dir) if append or resume else []
     wave_base = 0
     if append:
-        # lineage identity is scheme-normalized: the single-schema path
-        # lists via Spark (file:/ URIs) while mixed mode and input_files
-        # carry plain paths — a cross-mode append must still recognize
-        # already-committed files
-        seen = {_lineage_key(f) for f in mf.committed_input_files(out_dir)}
-        totals["n_files_already_committed"] = 0
+        # lineage identity is scheme-normalized: Spark's listing gives
+        # file:/ URIs while the pyarrow fallback and input_files carry
+        # plain paths — an append must still recognize committed files
+        seen = {_lineage_key(f) for r in recs for f in r["input_files"]}
+        kept = [f for f in files if _lineage_key(f) not in seen]
+        totals["n_files_already_committed"] = len(files) - len(kept)
+        files = kept
         # wave_base must advance past EVERY committed wave, independent of
         # whether any lineage was recorded (a committed wave with empty
         # lineage — e.g. a future meta-only wave — must still not be
         # overwritten by the next append run)
-        existing = mf.completed_waves(spark, out_dir)
-        wave_base = (max(existing) + 1) if existing else 0
-        if seen:
-            pruned = []
-            for gfiles in groups:
-                kept = [f for f in gfiles if _lineage_key(f) not in seen]
-                totals["n_files_already_committed"] += \
-                    len(gfiles) - len(kept)
-                pruned.append(kept)
-            groups = pruned
-        if not any(groups):
+        wave_base = max((r["wave_id"] for r in recs), default=-1) + 1
+        if not files:
             # nothing new — a legitimate no-op, NOT the empty-glob error
             return totals
-    # flatten (group, wave-slice) into a deterministic global wave list so
-    # wave ids are resume-stable across runs over the same file tree
-    wave_files: list[list[str]] = []
-    for gfiles in groups:
-        slices = [gfiles[i::waves] for i in range(waves)]
-        wave_files.extend(w for w in slices if w)
-
-    done = mf.completed_waves(spark, out_dir) if resume else set()
+    # a deterministic wave list, so wave ids are resume-stable across runs
+    # over the same file tree
+    wave_files = [w for i in range(waves) if (w := files[i::waves])]
+    done = {r["wave_id"] for r in recs} if resume else set()
+    # schema key -> the file or committed wave that brought it (records
+    # written before waves kept keys have none)
+    schemas = {k: f"committed wave {r['wave_id']}"
+               for r in recs for k in r.get("schemas", ())}
     for wave_id, wfiles in enumerate(wave_files, start=wave_base):
         if wave_id in done:
             totals["waves_skipped"] += 1
@@ -1607,7 +1656,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
         # leave stale parts behind and duplicate data on decode
         # (prefix delete on object stores, rmtree locally)
         fsutil.rmtree_any(wave_dir)
-        plan = None
+        plan = wave_schemas = None
         if cluster_partitions:
             df = spark.read.parquet(*wfiles)
             encode_df(spark, df, out_dir, wave_id, cluster_partitions)
@@ -1659,6 +1708,11 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                     f"wave {wave_id}: {bad.num_rows}/{len(wfiles)} input "
                     f"files failed exceeds bad_file_threshold="
                     f"{bad_file_threshold}: {errs[:3]}")
+            wave_schemas = sorted(
+                k for k in pa.compute.unique(meta.column("schema")).to_pylist()
+                if k is not None)
+            if schema_mode == "single":
+                _refuse_second_schema(wave_id, meta, wave_schemas, schemas)
             if not distributed:
                 meta_path = (f"{out_dir}/chunks_meta/"
                              f"wave-{wave_id}.parquet")
@@ -1672,7 +1726,8 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                     fsutil.put_bytes(meta_path, buf.getvalue())
         wall_s = time.perf_counter() - t0
         stats = mf.commit_wave(spark, out_dir, wave_id, wfiles, wall_s,
-                               meta_table=meta, plan=plan)
+                               meta_table=meta, plan=plan,
+                               schemas=wave_schemas)
         totals["waves_run"] += 1
         totals["n_rows"] += stats["n_rows"]
         totals["n_tokens"] += stats["n_tokens"]
@@ -1682,14 +1737,32 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     return totals
 
 
+def _refuse_second_schema(wave_id: int, meta: pa.Table,
+                          wave_schemas: list[str],
+                          schemas: dict[str, str]) -> None:
+    """``schema_mode="single"``: add the wave's keys to ``schemas`` (key
+    -> the file or committed wave that brought it); raise past one."""
+    col = meta.column("schema")
+    for k in wave_schemas:
+        if k not in schemas:
+            i = pa.compute.index(col, k).as_py()
+            schemas[k] = meta.column("source_file")[i].as_py()
+    if len(schemas) > 1:
+        (k1, w1), (k2, w2) = list(schemas.items())[:2]
+        raise ValueError(
+            f"wave {wave_id}: schema_mode='single' refuses files of "
+            f"{len(schemas)} different schemas: {w1} has ({k1}), {w2} "
+            f"has ({k2}); encode with schema_mode='mixed' to keep them "
+            "side by side")
+
+
 def _list_parquet_files(input_path: str) -> list[str]:
     """Recursive parquet listing via pyarrow.fs (works for local paths and
-    file:/s3:/hdfs: URIs) — used by ``schema_mode="mixed"`` and by the
-    single-schema fallback for filesystem schemes the JVM cannot list.
-    Hidden files and files under hidden directories are skipped (the
-    reference's ``HiddenFileFilter``). Unlike Spark's file index on the
-    single-schema path, only names ending in ``.parquet`` are listed, and
-    ``k=v`` directories are walked like any other directory."""
+    file:/s3:/hdfs: URIs): ``encode_path``'s listing for filesystem
+    schemes the JVM cannot list (``mock-s3``, or s3/gs without the
+    hadoop cloud jars). Hidden files and files under hidden directories
+    are skipped (the reference's ``HiddenFileFilter``). Unlike Spark's
+    file index, only names ending in ``.parquet`` are listed."""
     from pyarrow import fs as pafs
 
     from . import fsutil
@@ -1703,25 +1776,6 @@ def _list_parquet_files(input_path: str) -> list[str]:
                   if f.type == pafs.FileType.File
                   and f.path.endswith(".parquet")
                   and not fsutil.is_hidden(f.path[rootlen:]))
-
-
-def _schema_groups(files: list[str]) -> list[list[str]]:
-    """Group files by serialized footer schema (threaded metadata reads,
-    URI-aware via fsutil), deterministically ordered so wave-id
-    assignment is resume-stable."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from . import fsutil
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        keys = list(ex.map(
-            lambda f: (fsutil.parquet_file(f).schema_arrow
-                       .serialize().to_pybytes()), files))
-    by_key: dict[bytes, list[str]] = {}
-    for f, k in zip(files, keys):
-        by_key.setdefault(k, []).append(f)
-    groups = [sorted(g) for g in by_key.values()]
-    groups.sort(key=lambda g: g[0])
-    return groups
 
 
 def read_chunks(spark: SparkSession, out_dir: str,

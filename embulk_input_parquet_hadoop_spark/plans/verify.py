@@ -185,15 +185,16 @@ _FLOAT_BITS = {16: pa.uint16(), 32: pa.uint32(), 64: pa.uint64()}
 
 
 def _same_values(decoded: pa.Array, source: pa.Array) -> bool:
-    """Arrow ``equals``, except that a float column compares its validity
-    and the bits of its valid values: ``equals`` calls NaN unequal to
-    itself (a bit-exact NaN would fail) and -0.0 equal to 0.0 (a flipped
-    sign would pass). Float leaves inside nested columns still compare
-    with ``equals``."""
-    if pa.types.is_floating(source.type):
-        bits = _FLOAT_BITS[source.type.bit_width]
-        return decoded.view(bits).equals(source.view(bits))
-    return decoded.equals(source)
+    """Arrow ``equals``, except that every float leaf (top-level or inside
+    a struct, list or map) compares its validity and the bits of its
+    valid values, through a view with each float as the unsigned int of
+    its width: ``equals`` calls NaN unequal to itself (a bit-exact NaN
+    would fail) and -0.0 equal to 0.0 (a flipped sign would pass)."""
+    t = pipeline._plain_type(source.type, lambda t: _FLOAT_BITS[
+        t.bit_width] if pa.types.is_floating(t) else t)
+    if t == source.type:
+        return decoded.equals(source)
+    return decoded.view(t).equals(source.view(t))
 
 
 def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS):

@@ -29,7 +29,8 @@ into at most one task per core (``filetasks.run_file_tasks``), zero
 shuffles, O(files) summary rows to the driver. Each file still stages,
 and fails, on its own. Per-file schema inference can differ across files
 (a field absent from one file infers as missing) — pass ``schema_ddl``
-to pin types and column order, or encode with ``schema_mode="mixed"``.
+to pin types and column order, or encode with ``schema_mode="mixed"``
+(the default ``"single"`` refuses a wave whose staged files differ).
 
 Reference analogue: the reference consumes existing Parquet only
 (`ParquetHadoopInputPlugin.java:85-119`); raw-corpus ingestion extends
@@ -153,7 +154,8 @@ def stage_jsonl(spark: SparkSession, inputs: str | list[str],
     ``schema_ddl`` (Spark DDL, e.g. ``"doc_id bigint, text string"``)
     pins column types AND order; extra JSON fields are ignored, absent
     fields become null columns. Without it every file infers its own
-    schema (encode with ``schema_mode="mixed"`` if they differ).
+    schema (encode with ``schema_mode="mixed"`` if they differ:
+    ``"single"`` refuses them).
 
     Files that fail to parse are reported in ``errors`` and tolerated
     up to ``bad_file_threshold`` (fraction of inputs, same contract as

@@ -52,9 +52,14 @@ def main() -> int:
     p.add_argument("--columns", default=None,
                    help="comma-separated column projection")
     p.add_argument("--schema-mode", choices=("single", "mixed"),
-                   default="single",
+                   default=None,
                    help="'mixed' accepts trees with incompatible per-file "
-                        "schemas (one wave sequence per footer schema)")
+                        "schemas (they share waves); 'single' refuses a "
+                        "wave that brings a second schema. Default: "
+                        "'mixed' for --iceberg/--delta/--hudi/--hive "
+                        "without --cluster-partitions (a table's files "
+                        "differ in schema after schema evolution), "
+                        "else 'single'")
     p.add_argument("--bad-file-threshold", type=float, default=0.0,
                    help="tolerated fraction of failed input files per wave")
     p.add_argument("--bad-record-threshold", type=float, default=0.0,
@@ -348,6 +353,10 @@ def main() -> int:
     if args.inject_partitions and not (args.delta or args.hive):
         raise SystemExit("--inject-partitions requires --delta or "
                          "--hive")
+    if args.schema_mode is None:
+        table_source = args.iceberg or args.delta or args.hudi or args.hive
+        args.schema_mode = ("mixed" if table_source
+                            and not args.cluster_partitions else "single")
     vacuum_result = None
     if args.vacuum:
         from embulk_input_parquet_hadoop_spark.plans import fsutil

@@ -65,3 +65,30 @@ def test_chunk_file_is_mostly_blobs(tmp_path):
     # footer, page headers and the stat columns; about 17.6 KB with
     # statistics and dictionary pages on, against ~10 KB of blobs
     assert os.path.getsize(chunk_file) - blob_bytes <= 6 * 1024
+
+
+def test_encode_df_chunk_file_is_lean(spark, tmp_path):
+    """The DataFrame path's chunk files drop the blob statistics too, and
+    a tree committed from them still reads back."""
+    from embulk_input_parquet_hadoop_spark.plans import manifest as mf
+    src = str(tmp_path / "events.parquet")
+    table = _events(1000).drop_columns(["ts"])
+    pq.write_table(table, src)
+    out = str(tmp_path / "enc")
+    pipeline.encode_df(spark, spark.read.parquet(src), out)
+    files = glob.glob(f"{out}/chunks/wave=0/*.parquet")
+    assert files
+    for f in files:
+        rg = pq.ParquetFile(f).metadata.row_group(0)
+        leaves = {rg.column(i).path_in_schema: rg.column(i)
+                  for i in range(rg.num_columns)}
+        blob_leaf = leaves["blobs.list.element"]
+        assert not blob_leaf.is_stats_set
+        assert not blob_leaf.has_dictionary_page
+    mf.commit_wave(spark, out, 0, [src], 0.0)
+    dec = pipeline.read_decoded(spark, out, ["event_id", "user_id"],
+                                "event_id bigint, user_id bigint",
+                                int_ranges={"event_id": (10, 19)})
+    got = sorted((r.event_id, r.user_id) for r in dec.collect())
+    want = [(i, table.column("user_id")[i].as_py()) for i in range(10, 20)]
+    assert got == want

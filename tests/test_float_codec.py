@@ -174,3 +174,16 @@ def test_struct_float_leaf_roundtrips():
     out = E.decode_column(kind, blob)
     for name in ("x", "y"):
         assert _bits_equal(out.field(name), arr.field(name)), name
+
+
+def test_null_list_elements_survive():
+    """A null inside a list<int32> or list<float32> decodes as null: the
+    flat list codecs, which keep no element validity, are not chosen."""
+    for t in (pa.int32(), pa.float32()):
+        arr = pa.array([[1, 2], [None, 0], [5]], pa.list_(t))
+        for a in (arr, arr.slice(1)):
+            kind, blob = E.encode_column(a)
+            assert kind not in ("list_i32", "list_f32"), kind
+            assert E.decode_column(kind, blob).equals(a), (t, kind)
+        kind, _ = E.encode_column(arr.slice(2))
+        assert kind in ("list_i32", "list_f32")

@@ -547,3 +547,50 @@ def test_encode_job_iceberg_since_snapshot_verify_files(
     assert t["n_rows"] == 300 - len(dead2)
     assert t["verify"]["ok"], t["verify"]
     assert t["verify"]["rows_compared"] == 900 - len(dead0) - len(dead2)
+
+
+def test_encode_job_table_with_an_added_column(spark, tmp_path,
+                                               monkeypatch, capsys):
+    """A Delta table whose version 1 adds a file with a new column: the
+    snapshot's files differ in schema. ``encode_path`` with the default
+    ``schema_mode="single"`` refuses them; ``encode_job`` encodes table
+    sources as ``mixed`` by default, through a ``--since-version``
+    append onto a committed tree too, and the union decodes with nulls
+    where the old file lacks the column."""
+    import pyarrow as pa
+
+    from embulk_input_parquet_hadoop_spark.sources import delta_meta as dm
+    wide = pa.table({"doc_id": ["c"], "n": pa.array([3], pa.int32()),
+                     "tag": ["x"]})
+    old = pa.table({"doc_id": ["a", "b"], "n": pa.array([1, 2], pa.int32())})
+    d = str(tmp_path / "delta_tbl")
+    # the table's schema is the wide one; version 0 adds the old file
+    dm.write_delta_fixture(d, [wide, old],
+                           commits=[{"add": [1]}, {"add": [0]}])
+    scan = dm.snapshot_scan(d)
+    with pytest.raises(ValueError, match="schema_mode='mixed'"):
+        pipeline.encode_path(spark, d, str(tmp_path / "single"),
+                             input_files=scan["data_files"])
+
+    out = str(tmp_path / "enc")
+    rc, t0 = _run_encode_job(monkeypatch, capsys, [
+        "--delta", "--at-version", "0", "--input", d, "--output", out])
+    assert rc == 0 and t0["n_rows"] == 2
+    rc, t = _run_encode_job(monkeypatch, capsys, [
+        "--delta", "--since-version", "0", "--verify-files",
+        "--input", d, "--output", out])
+    assert rc == 0 and t["waves_run"] == 1 and t["n_rows"] == 1
+    assert t["verify"]["ok"] and t["verify"]["rows_compared"] == 3
+    assert [r["schemas"] for r in mf.wave_records(out)] == [
+        ["doc_id: string, n: int32"],
+        ["doc_id: string, n: int32, tag: string"]]
+    dec = pipeline.decode_chunks(pipeline.read_chunks(spark, out),
+                                 ["doc_id", "n", "tag"],
+                                 "doc_id string, n int, tag string")
+    assert sorted(tuple(r) for r in dec.collect()) == [
+        ("a", 1, None), ("b", 2, None), ("c", 3, "x")]
+    # an explicit --schema-mode single keeps the refusal
+    with pytest.raises(ValueError, match="schema_mode='single'"):
+        _run_encode_job(monkeypatch, capsys, [
+            "--delta", "--schema-mode", "single", "--input", d,
+            "--output", str(tmp_path / "enc_single")])

@@ -1,7 +1,8 @@
-"""The single-schema file-source listing: Spark's file index, asked for
-with a fixed schema, gives the same files (and so the same manifest
-lineage) and the same refusals as Spark's schema-inference call, without
-running its Spark job or reading any footer on the driver."""
+"""The file-source listing: Spark's file index with
+``recursiveFileLookup``, asked for with a fixed schema, gives the same
+files (and so the same manifest lineage) and the same refusals as
+Spark's schema-inference call, without running its Spark job or reading
+any footer on the driver."""
 
 from __future__ import annotations
 
@@ -34,8 +35,8 @@ def _write(path: str, lo: int) -> None:
 
 def _edge_tree(root: str) -> str:
     """Files Spark lists (a name without ``.parquet``, one with a space
-    and a ``%``) next to the names its filters drop and a directory that
-    is not a ``k=v`` partition."""
+    and a ``%``, one in a directory that is not a ``k=v`` partition)
+    next to the names its filters drop."""
     _write(f"{root}/part-0.parquet", 0)
     _write(f"{root}/noext", 10)
     _write(f"{root}/b c%d.parquet", 20)
@@ -49,8 +50,8 @@ def _edge_tree(root: str) -> str:
 
 
 def _spark_inference_files(spark, *paths: str) -> list[str]:
-    return sorted(pipeline._uri_to_path(f)
-                  for f in spark.read.parquet(*paths).inputFiles())
+    return sorted(pipeline._uri_to_path(f) for f in spark.read.option(
+        "recursiveFileLookup", "true").parquet(*paths).inputFiles())
 
 
 def test_lineage_matches_spark_inference_listing(spark, tmp_path,
@@ -68,7 +69,11 @@ def test_lineage_matches_spark_inference_listing(spark, tmp_path,
              "input_files": ([tree], [single, f"{tree}/noext"])}
     for name, (paths, input_files) in cases.items():
         out = str(tmp_path / f"out_{name}")
-        pipeline.encode_path(spark, paths[0], out, input_files=input_files)
+        # input_files joins a tokens file to an edge-tree file: two
+        # schemas, which only "mixed" encodes
+        mode = "mixed" if name == "input_files" else "single"
+        pipeline.encode_path(spark, paths[0], out, input_files=input_files,
+                             schema_mode=mode)
         want = _spark_inference_files(spark, *(input_files or paths))
         assert want, name
         assert sorted(mf.committed_input_files(out)) == want, name
@@ -78,6 +83,8 @@ def test_lineage_matches_spark_inference_listing(spark, tmp_path,
     out = str(tmp_path / "out_edge")
     before = mf.committed_input_files(out)
     assert f"{tree}/b c%d.parquet" in before
+    # the walked subdirectory, as the reference expands directories
+    assert f"{tree}/sub/z.parquet" in before and len(before) == 4
     _write(f"{tree}/part-1.parquet", 50)
     t = pipeline.encode_path(spark, tree, out, append=True)
     assert t["waves_run"] == 1 and t["n_rows"] == 10

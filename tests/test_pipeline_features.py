@@ -287,7 +287,7 @@ def test_mixed_schema_tree_encodes_to_union(spark, tmp_path):
     out = str(tmp_path / "mixed_out")
     totals = pipeline.encode_path(spark, src, out, schema_mode="mixed")
     assert totals["n_rows"] == 5
-    assert totals["waves_run"] == 2  # one wave sequence per schema group
+    assert totals["waves_run"] == 1  # files of both schemas share a wave
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["c_int", "c_str", "c_bool"],
         "c_int int, c_str string, c_bool boolean")
@@ -332,10 +332,10 @@ def test_mixed_schema_resume(spark, tmp_path):
     pq.write_table(pa.table({"c_str": ["x"]}), f"{src}/b.parquet")
     out = str(tmp_path / "mixed_r_out")
     t1 = pipeline.encode_path(spark, src, out, schema_mode="mixed")
-    assert t1["waves_run"] == 2
+    assert t1["waves_run"] == 1
     t2 = pipeline.encode_path(spark, src, out, schema_mode="mixed",
                               resume=True)
-    assert t2["waves_run"] == 0 and t2["waves_skipped"] == 2
+    assert t2["waves_run"] == 0 and t2["waves_skipped"] == 1
 
 
 def test_read_decoded_prunes_and_filters_exactly(spark, tokens_dir,
@@ -454,7 +454,8 @@ def test_distributed_meta_stale_sidecars_cleaned(spark, tokens_dir,
          pa.array([1.0], pa.float64()), pa.array(["ghost.parquet"]),
          pa.array(["ghost-chunk.parquet"]),
          pa.array([[]], pa.list_(pipeline._COL_STRUCT)),
-         pa.array([0], pa.int64()), pa.array([None], pa.string())],
+         pa.array([0], pa.int64()), pa.array([None], pa.string()),
+         pa.array([None], pa.string())],
         schema=pipeline.CHUNK_META_ARROW_SCHEMA)
     pq.write_table(stale, f"{stale_dir}/part-99999-f0000.parquet")
     totals = pipeline.encode_path(spark, tokens_dir, out,

@@ -20,10 +20,10 @@ from embulk_input_parquet_hadoop_spark.sources import table as tbl
 from embulk_input_parquet_hadoop_spark.sources.datagen import generate
 
 # the keys of a wave record with no side inputs: a plain encode's
-# manifest reads do not grow
+# manifest reads grow by its files' schema keys only
 PLAIN_RECORD_KEYS = {"wave_id", "input_files", "n_chunks", "n_rows",
                      "n_tokens", "raw_bytes", "enc_bytes", "n_bad_files",
-                     "n_bad_rows", "wall_s"}
+                     "n_bad_rows", "wall_s", "schemas"}
 
 
 @pytest.fixture(scope="module")
@@ -245,3 +245,39 @@ def test_float_columns_verify_by_their_bits(spark, tmp_path, monkeypatch):
     for mutant in (canonical_nan, unsigned_zero):
         monkeypatch.setattr(verify, "decode_column", mutant)
         assert verify._verify_one(*args)[4] == 1, mutant.__name__
+
+
+def test_nested_float_leaves_verify_by_their_bits(spark, tmp_path,
+                                                  monkeypatch):
+    """A NaN inside a struct verifies ok, and a -0.0 inside a list fails
+    verify once a mutant decoder drops its sign: float leaves of nested
+    columns compare by their bits too."""
+    src = tmp_path / "src"
+    src.mkdir()
+    nan_bits = pa.array([0x7FF8000000000123, 0], pa.uint64())
+    pq.write_table(pa.table({
+        "s": pa.StructArray.from_arrays(
+            [nan_bits.view(pa.float64())], names=["x"]),
+        "l": pa.array([[-0.0, 1.5], [0.0]], pa.list_(pa.float32())),
+    }), str(src / "f.parquet"))
+    out = str(tmp_path / "enc")
+    pipeline.encode_path(spark, str(src), out)
+    v = verify.verify_files(spark, out)
+    assert v["ok"] and v["rows_compared"] == 2, v
+
+    (chk,) = glob.glob(f"{out}/chunks/*/*.parquet")
+    args = (str(src / "f.parquet"), chk, pipeline.DEFAULT_BATCH_ROWS)
+    real = verify.decode_column
+
+    def unsigned_zero(kind, blob):
+        arr = real(kind, blob)
+        if not pa.types.is_list(arr.type):
+            return arr
+        flat = pa.compute.if_else(pa.compute.equal(arr.values, 0.0),
+                                  pa.scalar(0.0, arr.type.value_type),
+                                  arr.values)
+        return pa.ListArray.from_arrays(arr.offsets, flat,
+                                        mask=arr.is_null())
+
+    monkeypatch.setattr(verify, "decode_column", unsigned_zero)
+    assert verify._verify_one(*args)[4] == 1
