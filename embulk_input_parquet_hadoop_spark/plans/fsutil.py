@@ -32,7 +32,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import uuid
 
 _LOCAL_SCHEMES = ("", "file")
@@ -287,28 +286,39 @@ def delete_quiet(path: str) -> None:
         filesystem.delete_file(root)
 
 
-def _put_stream(dest: str, write_fn) -> None:
-    """Atomic-at-visibility publish to ``dest`` on a NON-local filesystem.
-
-    Object stores: write the final key directly — visibility happens at
-    successful close (the store's atomic PUT). The mock emulates that
-    atomicity with an internal temp+replace (store-internal, not protocol
-    rename). Rename-capable remote filesystems (hdfs): temp key + move.
-    """
-    if _scheme(dest) == MOCK_SCHEME:
-        local = mock_local_path(dest)
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(prefix=".put.", dir=os.path.dirname(local))
+def _put_local(path: str, write_fn) -> None:
+    """Write ``path`` (a local file) through a temp file in its directory
+    and ``os.replace``. The temp name ends in ``.tmp``, so ``vacuum``
+    reclaims one that a killed writer leaves behind."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".put.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "xb") as fh:
+            write_fn(fh)
+        os.replace(tmp, path)
+    except BaseException:
         try:
-            with os.fdopen(fd, "wb") as fh:
-                write_fn(fh)
-            os.replace(tmp, local)  # the mock store's internal PUT commit
-        except BaseException:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
+            os.remove(tmp)
+        except OSError:
+            pass
+        raise
+
+
+def _put_stream(dest: str, write_fn) -> None:
+    """Atomic-at-visibility publish to ``dest`` on any filesystem.
+
+    Local paths: temp + ``os.replace``. Object stores: write the final key
+    directly — visibility happens at successful close (the store's atomic
+    PUT). The mock emulates that atomicity with an internal temp+replace
+    (store-internal, not protocol rename). Rename-capable remote
+    filesystems (hdfs): temp key + move.
+    """
+    if is_local(dest):
+        _put_local(strip_file_scheme(dest), write_fn)
+        return
+    if _scheme(dest) == MOCK_SCHEME:
+        _put_local(mock_local_path(dest), write_fn)  # the mock's PUT commit
         return
     filesystem, root = get_fs(dest)
     if supports_atomic_rename(dest):
@@ -331,24 +341,7 @@ def _put_stream(dest: str, write_fn) -> None:
 
 
 def put_bytes(dest: str, data: bytes) -> None:
-    """Publish ``data`` at ``dest`` atomically-at-visibility (any scheme).
-    Local paths use temp + ``os.replace``."""
-    if is_local(dest):
-        p = strip_file_scheme(dest)
-        d = os.path.dirname(p)
-        os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(prefix=".put.", dir=d)
-        try:
-            with os.fdopen(fd, "wb") as fh:
-                fh.write(data)
-            os.replace(tmp, p)
-        except BaseException:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
-        return
+    """Publish ``data`` at ``dest`` atomically-at-visibility (any scheme)."""
     _put_stream(dest, lambda fh: fh.write(data))
 
 
@@ -361,21 +354,6 @@ def put_file(dest: str, local_src: str) -> None:
         with open(local_src, "rb") as src:
             shutil.copyfileobj(src, fh, length=8 << 20)
 
-    if is_local(dest):
-        p = strip_file_scheme(dest)
-        d = os.path.dirname(p)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".put.{uuid.uuid4().hex}.tmp")
-        try:
-            shutil.copyfile(local_src, tmp)
-            os.replace(tmp, p)
-        except BaseException:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
-        return
     _put_stream(dest, _copy)
 
 

@@ -153,13 +153,6 @@ def _chunk_stats(chunks: DataFrame) -> DataFrame:
                     F.col("c.enc_bytes").alias("enc_bytes")))
 
 
-def wave_chunk_stats(spark: SparkSession, out_dir: str,
-                     wave_id: int) -> DataFrame:
-    """Per-(chunk, column) metrics for one wave; blobs column pruned."""
-    return _chunk_stats(spark.read.parquet(
-        fsutil.spark_path(f"{out_dir}/chunks/wave={wave_id}")))
-
-
 def all_chunk_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-(chunk, column) metrics across all committed waves (manifest-
     gated: an aborted wave's chunk parts are invisible here too)."""
@@ -176,10 +169,12 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
                 schemas: list[str] | None = None) -> dict:
     """Aggregate the wave's chunk metrics and commit its manifest record.
 
-    ``meta_table``: the wave's chunk-stats pyarrow Table if the caller
-    already has it in hand (file-source path) — aggregated driver-side, no
-    Spark job; otherwise the stats are aggregated from the wave's chunk
-    files with the payload column pruned.
+    ``meta_table``: the wave's chunk stat rows
+    (``pipeline.CHUNK_META_ARROW_SCHEMA``) from a file-source wave,
+    aggregated driver-side with no Spark job; rows with ``batch_idx ==
+    -1`` (a failed file, or a file's skipped corrupt rows) are not
+    chunks. Without it (the ``encode_df`` path) the stats are aggregated
+    from the wave's chunk files with the payload column pruned.
 
     ``plan``: the wave's scan plan from ``pipeline.encode_path`` (the
     files' side inputs, ``const_schema``, ``column_renames``), recorded
@@ -192,27 +187,14 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
     if meta_table is not None:
         import pyarrow.compute as pc
         agg = {c: int(pc.sum(meta_table.column(c)).as_py() or 0)
-               for c in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes")}
-        names = meta_table.schema.names
-        n_bad = int(pc.sum(pc.is_valid(meta_table.column("error"))
-                           .cast("int64")).as_py() or 0) \
-            if "error" in names else 0
-        if "n_chunks" in names:
-            # distributed-meta mode: one summary row per source file
-            agg["n_chunks"] = int(pc.sum(
-                meta_table.column("n_chunks")).as_py() or 0)
-        else:
-            # error rows and per-file skipped-row summaries
-            # (batch_idx == -1) are bookkeeping, not chunks
-            n_meta_rows = int(pc.sum(
-                pc.equal(meta_table.column("batch_idx"), -1)
-                .cast("int64")).as_py() or 0) \
-                if "batch_idx" in names else n_bad
-            agg["n_chunks"] = meta_table.num_rows - n_meta_rows
-        agg["n_bad_files"] = n_bad
-        agg["n_bad_rows"] = int(pc.sum(
-            meta_table.column("n_bad_rows")).as_py() or 0) \
-            if "n_bad_rows" in names else 0
+               for c in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes",
+                         "n_bad_rows")}
+        # error rows and per-file skipped-row summaries
+        # (batch_idx == -1) are bookkeeping, not chunks
+        agg["n_chunks"] = int(pc.sum(pc.not_equal(
+            meta_table.column("batch_idx"), -1)).as_py() or 0)
+        agg["n_bad_files"] = (meta_table.num_rows
+                              - meta_table.column("error").null_count)
     else:
         chunks = spark.read.parquet(
             fsutil.spark_path(f"{out_dir}/chunks/wave={wave_id}"))
@@ -280,8 +262,9 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def vacuum(out_dir: str) -> dict:
     """Remove crashed-job debris the manifest does not reference: chunk
-    directories and chunks_meta of UNCOMMITTED waves, plus stray ``.tmp``
-    part files anywhere under ``chunks/`` (a task killed mid-rename).
+    directories and chunks_meta of UNCOMMITTED waves (either chunks_meta
+    layout), plus stray ``.tmp`` files anywhere under ``chunks/``,
+    ``chunks_meta/`` and ``manifest/`` (a writer killed mid-rename).
 
     The manifest is the single visibility point, so nothing removed here
     was ever readable (`read_chunks`/`decode_chunks` are manifest-gated);
@@ -318,34 +301,29 @@ def vacuum(out_dir: str) -> dict:
             filesystem.delete_file(p)
 
     waves_removed = tmp_removed = reclaimed = 0
-    chunks_root = f"{root}/chunks"
     if fsutil.isdir(f"{out_dir}/chunks"):
         for d in fsutil.listdir(f"{out_dir}/chunks"):
             m = re.match(r"wave=(\d+)$", d)
             if m and int(m.group(1)) not in committed:
-                p = f"{chunks_root}/{d}"
+                p = f"{root}/chunks/{d}"
                 reclaimed += _tree_size(p)
                 _rm(p)
                 waves_removed += 1
-        for f in filesystem.get_file_info(
-                pafs.FileSelector(chunks_root, recursive=True)):
-            if f.type == pafs.FileType.File and f.path.endswith(".tmp"):
-                reclaimed += f.size or 0
-                filesystem.delete_file(f.path)
-                tmp_removed += 1
-    meta_root = f"{root}/chunks_meta"
     if fsutil.isdir(f"{out_dir}/chunks_meta"):
         for d in fsutil.listdir(f"{out_dir}/chunks_meta"):
             m = re.match(r"wave-(\d+)(\.parquet)?$", d)
             if m and int(m.group(1)) not in committed:
-                p = f"{meta_root}/{d}"
+                p = f"{root}/chunks_meta/{d}"
                 reclaimed += _tree_size(p)
                 _rm(p)
-        # committed waves can still hold .tmp sidecar debris: a task
-        # killed between write and os.replace whose RETRY then committed
-        # the wave — equally manifest-invisible, swept the same way
+    # a writer killed between its temp write and the rename leaves a
+    # ``.tmp`` (a chunk task, ``fsutil.put_bytes``/``write_json_atomic``),
+    # in committed waves too when a retry then committed the wave
+    for sub in ("chunks", "chunks_meta", "manifest"):
+        if not fsutil.isdir(f"{out_dir}/{sub}"):
+            continue
         for f in filesystem.get_file_info(
-                pafs.FileSelector(meta_root, recursive=True)):
+                pafs.FileSelector(f"{root}/{sub}", recursive=True)):
             if f.type == pafs.FileType.File and f.path.endswith(".tmp"):
                 reclaimed += f.size or 0
                 filesystem.delete_file(f.path)

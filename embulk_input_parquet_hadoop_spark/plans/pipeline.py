@@ -36,13 +36,17 @@ files LPT-packed into at most one Spark task per core:
   *visible* once its manifest record commits (see ``manifest.py``), which
   is our output-commit protocol;
 - tasks return lightweight per-chunk stat rows (no payloads) to the driver;
-  the driver aggregates them for the wave's manifest record and persists
-  them as the queryable ``chunks_meta`` table.
+  the driver aggregates them for the wave's manifest record and writes
+  them as the wave's ``chunks_meta/wave-K.parquet``. What the driver holds
+  is one wave's rows, so ``waves`` bounds it at any tree size.
 
-An alternative DataFrame-source path (``encode_df``) keeps the
-``mapInArrow``-on-a-scan route for inputs that are not plain files (Iceberg
-tables with row-level deletes, pre-filtered/clustered DataFrames): there
-Catalyst pushdown and the salted clustering repartition apply first.
+Table sources with row-level deletes take the file path too: each task
+masks its own file's position and equality deletes (``encode_path``'s
+``row_deletes`` / ``eq_deletes``). An alternative DataFrame-source path
+(``encode_df``) keeps the ``mapInArrow``-on-a-scan route for inputs that
+are DataFrames rather than files (pre-filtered DataFrames, and the
+``cluster_partitions`` clustering): there Catalyst pushdown and the salted
+clustering repartition apply first.
 """
 
 from __future__ import annotations
@@ -129,21 +133,6 @@ CHUNK_META_ARROW_SCHEMA = pa.schema([
 
 DEFAULT_BATCH_ROWS = 16384
 
-# distributed-meta mode: tasks yield one summary row per source file
-# (O(files) to the driver, never O(chunks)); the full per-chunk meta rows
-# land as task-written parquet sidecars next to the chunk data
-FILE_SUMMARY_ARROW_SCHEMA = pa.schema([
-    pa.field("source_file", pa.string()),
-    pa.field("n_chunks", pa.int64()),
-    pa.field("n_rows", pa.int64()),
-    pa.field("n_tokens", pa.int64()),
-    pa.field("raw_bytes", pa.int64()),
-    pa.field("enc_bytes", pa.int64()),
-    pa.field("n_bad_rows", pa.int64()),
-    pa.field("error", pa.string()),
-    pa.field("schema", pa.string()),
-])
-
 # one encode task input row per source file: the path, its Iceberg
 # position-delete files, its equality-delete descriptors (JSON) and its
 # constant columns (JSON); the side inputs are null when absent
@@ -156,9 +145,10 @@ FILE_ROWS_ARROW_SCHEMA = pa.schema([
 
 
 def meta_files(out_dir: str, wave_id: int) -> list[str]:
-    """chunks_meta parquet paths for a wave, either layout: the driver-mode
-    single file (``wave-K.parquet``) or the distributed-mode sidecar dir
-    (``wave-K/part-*.parquet``). URI-aware via ``fsutil`` like the
+    """chunks_meta parquet paths for a wave, either layout: the single
+    driver-written file (``wave-K.parquet``) or the per-file sidecar dir
+    (``wave-K/part-*.parquet``) that earlier builds could write, so their
+    trees still verify. URI-aware via ``fsutil`` like the
     manifest reads — a tree encoded locally then served from hdfs:/file:
     must list lineage the same way it lists waves."""
     from . import fsutil
@@ -759,7 +749,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                          batch_rows: int = DEFAULT_BATCH_ROWS,
                          columns: list[str] | None = None,
                          bad_record_threshold: float = 0.0,
-                         meta_dir: str | None = None,
                          entropy: bool = False,
                          const_schema: dict[str, str] | None = None,
                          column_renames: list[dict] | None = None):
@@ -795,16 +784,7 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
     fails (none of its chunks commit) and the driver's per-wave
     ``bad_file_threshold`` takes over.
 
-    ``meta_dir`` (distributed-meta mode, VERDICT r2 #7 / SCALE.md
-    break-order #2): each file's per-chunk meta rows are written as a
-    parquet sidecar under it — atomically renamed at the *same commit
-    point* as the chunk file, so lineage and data commit together — and
-    the task yields only one O(1) summary row per source file
-    (``FILE_SUMMARY_ARROW_SCHEMA``). The driver-side materialization is
-    then O(files), never O(chunks): at a 10^6-chunk wave the r2 driver
-    collected every chunk's column stats.
-
-    Each file's stat or summary rows carry the ``_schema_key`` of its
+    Each file's stat rows carry the ``_schema_key`` of its
     first batch (after projection, renames and constants).
     """
 
@@ -835,26 +815,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 "n_rows": 0, "n_tokens": 0, "raw_bytes": 0, "enc_bytes": 0,
                 "wall_ms": 0.0}
 
-    def summary_row(path, pending, n_bad_rows=0, error=None, schema=None):
-        metas = pa.Table.from_batches(pending, CHUNK_META_ARROW_SCHEMA) \
-            if pending else None
-        import pyarrow.compute as pc
-
-        def tot(col):
-            return int(pc.sum(metas.column(col)).as_py() or 0) \
-                if metas is not None else 0
-        return pa.RecordBatch.from_arrays(
-            [pa.array([path]),
-             pa.array([len(pending)], type=pa.int64()),
-             pa.array([tot("n_rows")], type=pa.int64()),
-             pa.array([tot("n_tokens")], type=pa.int64()),
-             pa.array([tot("raw_bytes")], type=pa.int64()),
-             pa.array([tot("enc_bytes")], type=pa.int64()),
-             pa.array([n_bad_rows], type=pa.int64()),
-             pa.array([error], type=pa.string()),
-             pa.array([schema], type=pa.string())],
-            schema=FILE_SUMMARY_ARROW_SCHEMA)
-
     def encode_files(batches):
         from . import fsutil
         set_entropy_mode(entropy)
@@ -866,8 +826,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
         # object stores, temp+move on rename-capable remote filesystems)
         local = fsutil.is_local(wave_dir)
         fsutil.makedirs_any(wave_dir)
-        if meta_dir is not None:
-            fsutil.makedirs_any(meta_dir)
         bidx = 0
         fseq = 0
         for b in batches:
@@ -901,7 +859,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 writer = None
                 pending = []  # stat rows held until the file commits
                 skipped = []  # rows lost per skipped corrupt row group
-                committed_final = None  # set once os.replace lands
                 schema = None
                 try:
                     for batch in _source_batches(
@@ -928,7 +885,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                                                 _cols_of(chunk_row),
                                                 schema=schema))
                         bidx += 1
-                    bad_rows = sum(skipped)
                     if writer is not None:
                         writer.close()
                         writer = None
@@ -936,41 +892,16 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                             os.replace(tmp, final)  # per-file commit point
                         else:
                             # publish the spooled chunk file at its final
-                            # key (atomic at upload completion), then drop
-                            # the spool
+                            # key (atomic at upload completion); the
+                            # finally below drops the spool
                             fsutil.put_file(final, tmp)
-                            os.remove(tmp)
-                        committed_final = final
-                    if meta_dir is not None:
-                        # sidecar commits WITH the chunk file: same
-                        # atomic-visibility discipline, so meta never
-                        # describes uncommitted data (and a sidecar
-                        # failure rolls the already-published chunk file
-                        # back — see the except path — so "failed file
-                        # contributes nothing" holds in meta mode too)
-                        if pending:
-                            mname = f"part-{pid:05d}-f{fseq - 1:04d}.parquet"
-                            mtable = pa.Table.from_batches(
-                                pending, CHUNK_META_ARROW_SCHEMA)
-                            # put_bytes is atomic-at-visibility on every
-                            # scheme (local: tmp + os.replace); sidecars
-                            # are small, so buffering in memory is fine
-                            import io as _io
-                            buf = _io.BytesIO()
-                            pq.write_table(mtable, buf)
-                            fsutil.put_bytes(f"{meta_dir}/{mname}",
-                                             buf.getvalue())
-                        yield summary_row(path, pending,
-                                          n_bad_rows=bad_rows,
-                                          schema=schema)
-                    else:
-                        yield from pending
-                        if bad_rows:
-                            yield meta_row(
-                                _zero_stats(
-                                    f"w{wave_id}-p{pid}-skip{fseq - 1}",
-                                    pid),
-                                path, final, [], n_bad_rows=bad_rows)
+                    yield from pending
+                    bad_rows = sum(skipped)
+                    if bad_rows:
+                        yield meta_row(
+                            _zero_stats(f"w{wave_id}-p{pid}-skip{fseq - 1}",
+                                        pid),
+                            path, final, [], n_bad_rows=bad_rows)
                 except Exception as exc:  # noqa: BLE001
                     # file-level failure (unreadable footer, over-threshold
                     # corruption, encode error): discard the partial chunk
@@ -979,25 +910,16 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                     if writer is not None:
                         writer.close()
                         writer = None
+                    yield meta_row(
+                        _zero_stats(f"w{wave_id}-p{pid}-err{fseq - 1}", pid),
+                        path, "", [], error=f"{type(exc).__name__}: {exc}")
+                finally:
+                    # a failed file's partial chunk file or a published
+                    # file's spool (nothing is left after os.replace)
                     try:
                         os.remove(tmp)
                     except OSError:
                         pass
-                    if committed_final is not None:
-                        # a sidecar failure AFTER the chunk publish must
-                        # roll the chunk back: a chunk file without its
-                        # meta sidecar would be served with no lineage
-                        # while the source file re-encodes in a later
-                        # wave (duplicate rows)
-                        fsutil.delete_quiet(committed_final)
-                    err = f"{type(exc).__name__}: {exc}"
-                    if meta_dir is not None:
-                        yield summary_row(path, [], error=err)
-                    else:
-                        yield meta_row(
-                            _zero_stats(f"w{wave_id}-p{pid}-err{fseq - 1}",
-                                        pid),
-                            path, "", [], error=err)
 
     return encode_files
 
@@ -1336,7 +1258,6 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                 bad_file_threshold: float = 0.0,
                 bad_record_threshold: float = 0.0,
                 schema_mode: str = "single",
-                meta_mode: str = "driver",
                 entropy: bool = False,
                 input_files: list[str] | None = None,
                 append: bool = False,
@@ -1486,13 +1407,12 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     long): encode such a snapshot with ``"mixed"``, as
     ``jobs/encode_job.py`` does by default for table sources.
 
-    ``meta_mode="distributed"`` keeps every per-chunk meta row OUT of the
-    driver: tasks write parquet sidecars (committed atomically with their
-    chunk file) and yield one summary row per source file, so the
-    driver-side materialization is O(files) instead of O(chunks) — the
-    documented scale fallback for waves whose chunk count outgrows driver
-    memory (VERDICT r2 #7, SCALE.md break-order #2). Manifest totals are
-    identical in both modes (tested).
+    Every file-source wave's per-chunk stat rows come back to the driver,
+    which writes them as ``chunks_meta/wave-K.parquet`` (one
+    ``fsutil.put_bytes`` on every scheme) before it commits the wave's
+    manifest record. The driver holds one wave's rows at a time, about
+    0.5 KB per chunk row, so raising ``waves`` bounds its memory at any
+    tree size (SCALE.md break-order #2).
     """
     if schema_mode not in ("single", "mixed"):
         raise ValueError(f"unknown schema_mode {schema_mode!r}")
@@ -1503,8 +1423,6 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
             "cluster_partitions requires schema_mode='single': it reads "
             "each wave through one spark.read.parquet, which applies one "
             "file's schema to all of them")
-    if meta_mode not in ("driver", "distributed"):
-        raise ValueError(f"unknown meta_mode {meta_mode!r}")
     if append and resume:
         raise ValueError("append and resume are mutually exclusive: "
                          "resume re-runs a fixed input's missing waves, "
@@ -1677,16 +1595,9 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                            if any(side)}),
                 ("const_schema", const_schema),
                 ("column_renames", column_renames)) if v}
-            distributed = meta_mode == "distributed"
-            wave_meta_dir = (f"{out_dir}/chunks_meta/wave-{wave_id}"
-                             if distributed else None)
-            if distributed:
-                # stale sidecars from a failed attempt would double-count
-                fsutil.rmtree_any(wave_meta_dir)
             # files LPT-packed on source bytes into at most one task per
             # core; the commit and error unit is still the file. What
-            # comes back to the driver is O(n_chunks) stat rows (driver
-            # mode) or O(n_files) summaries (distributed mode) — never
+            # comes back to the driver is the wave's stat rows, never
             # payloads
             meta = run_file_tasks(
                 spark, rows, FILE_ROWS_ARROW_SCHEMA,
@@ -1694,12 +1605,10 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                                      columns=columns,
                                      bad_record_threshold=(
                                          bad_record_threshold),
-                                     meta_dir=wave_meta_dir,
                                      entropy=entropy,
                                      const_schema=const_schema,
                                      column_renames=column_renames),
-                FILE_SUMMARY_ARROW_SCHEMA if distributed
-                else CHUNK_META_ARROW_SCHEMA,
+                CHUNK_META_ARROW_SCHEMA,
                 weights=fsutil.file_sizes(wfiles))
             bad = meta.filter(pa.compute.is_valid(meta.column("error")))
             if bad.num_rows > len(wfiles) * bad_file_threshold:
@@ -1713,17 +1622,10 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                 if k is not None)
             if schema_mode == "single":
                 _refuse_second_schema(wave_id, meta, wave_schemas, schemas)
-            if not distributed:
-                meta_path = (f"{out_dir}/chunks_meta/"
-                             f"wave-{wave_id}.parquet")
-                if fsutil.is_local(out_dir):
-                    os.makedirs(f"{out_dir}/chunks_meta", exist_ok=True)
-                    pq.write_table(meta, meta_path)
-                else:
-                    import io
-                    buf = io.BytesIO()
-                    pq.write_table(meta, buf)
-                    fsutil.put_bytes(meta_path, buf.getvalue())
+            buf = pa.BufferOutputStream()
+            pq.write_table(meta, buf)
+            fsutil.put_bytes(f"{out_dir}/chunks_meta/wave-{wave_id}.parquet",
+                             buf.getvalue().to_pybytes())
         wall_s = time.perf_counter() - t0
         stats = mf.commit_wave(spark, out_dir, wave_id, wfiles, wall_s,
                                meta_table=meta, plan=plan,

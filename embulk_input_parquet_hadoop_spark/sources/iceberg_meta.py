@@ -160,20 +160,20 @@ def _latest_metadata(table_dir: str) -> str:
     """Path (or URI — every metadata read routes through ``fsutil``, so
     tables living on object stores / HDFS scan exactly like local ones)
     of the table's current metadata.json."""
-    meta_dir = f"{table_dir.rstrip('/')}/metadata"
-    hint = f"{meta_dir}/version-hint.text"
+    metadata_dir = f"{table_dir.rstrip('/')}/metadata"
+    hint = f"{metadata_dir}/version-hint.text"
     if fsutil.exists(hint):
         v = fsutil.read_bytes(hint).decode().strip()
-        path = f"{meta_dir}/v{v}.metadata.json"
+        path = f"{metadata_dir}/v{v}.metadata.json"
         if fsutil.exists(path):
             return path
     cands = sorted(
-        (f for f in fsutil.listdir(meta_dir)
+        (f for f in fsutil.listdir(metadata_dir)
          if f.endswith(".metadata.json")),
         key=lambda f: (len(f), f))
     if not cands:
-        raise IcebergMetaError(f"no metadata.json under {meta_dir}")
-    return f"{meta_dir}/{cands[-1]}"
+        raise IcebergMetaError(f"no metadata.json under {metadata_dir}")
+    return f"{metadata_dir}/{cands[-1]}"
 
 
 def _resolve(table_dir: str, location: str, path: str) -> str:
@@ -687,12 +687,12 @@ def _write_pos_delete_parquet(data_dir: str,
     return del_path, len(rows)
 
 
-def _pos_delete_manifest(meta_dir: str, snapshot_id: int,
+def _pos_delete_manifest(metadata_dir: str, snapshot_id: int,
                          sequence_number: int,
                          delete_files: list[tuple[str, int]]) -> dict:
     """Delete manifest (content 1) referencing existing position-delete
     parquet files; returns the manifest-list record for it."""
-    del_man = os.path.join(meta_dir, f"del-{uuid.uuid4().hex}.avro")
+    del_man = os.path.join(metadata_dir, f"del-{uuid.uuid4().hex}.avro")
     avro_io.write_avro(del_man, _MANIFEST_SCHEMA, [{
         "status": 1, "snapshot_id": snapshot_id,
         "sequence_number": None,
@@ -713,7 +713,7 @@ def _pos_delete_manifest(meta_dir: str, snapshot_id: int,
     }
 
 
-def _write_snapshot(meta_dir: str, snapshot_id: int,
+def _write_snapshot(metadata_dir: str, snapshot_id: int,
                     parquet_files: list[str],
                     record_counts: list[int],
                     delete_files: list[tuple[str, int]] | None = None
@@ -731,7 +731,7 @@ def _write_snapshot(meta_dir: str, snapshot_id: int,
             "record_count": int(n),
             "file_size_in_bytes": _fixture_size(p),
         }} for p, n in zip(parquet_files, record_counts)]
-    man_path = os.path.join(meta_dir, f"man-{uuid.uuid4().hex}.avro")
+    man_path = os.path.join(metadata_dir, f"man-{uuid.uuid4().hex}.avro")
     avro_io.write_avro(man_path, _MANIFEST_SCHEMA, entries)
     manifests = [{
         "manifest_path": man_path,
@@ -743,8 +743,8 @@ def _write_snapshot(meta_dir: str, snapshot_id: int,
     }]
     if delete_files:
         manifests.append(_pos_delete_manifest(
-            meta_dir, snapshot_id, snapshot_id + 1, delete_files))
-    mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
+            metadata_dir, snapshot_id, snapshot_id + 1, delete_files))
+    mlist = os.path.join(metadata_dir, f"snap-{snapshot_id}.avro")
     avro_io.write_avro(mlist, _MANIFEST_LIST_SCHEMA, manifests)
     return mlist
 
@@ -806,8 +806,8 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
     (exercising the puffin-footer fallback of ``snapshot_scan``) — the
     v3 ``referenced_data_file``/``content_offset``/
     ``content_size_in_bytes`` fields. Sets ``format-version: 3``."""
-    meta_dir = os.path.join(table_dir, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
+    metadata_dir = os.path.join(table_dir, "metadata")
+    os.makedirs(metadata_dir, exist_ok=True)
     if record_counts is None:
         record_counts = [0] * len(parquet_files)
     snap_records = []
@@ -828,7 +828,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
                 carried_deletes.append((dp, n))
         else:
             sfiles, dels = spec, None
-        ml = _write_snapshot(meta_dir, sid, sfiles, [0] * len(sfiles),
+        ml = _write_snapshot(metadata_dir, sid, sfiles, [0] * len(sfiles),
                              delete_files=dels)
         snap_records.append({"snapshot-id": sid, "manifest-list": ml,
                              # deterministic spec-shaped commit time:
@@ -859,7 +859,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
         entries.append({"status": 1, "snapshot_id": snapshot_id,
                         "sequence_number": None,  # inherit from list
                         "data_file": df_rec})
-    man_path = os.path.join(meta_dir, f"man-{uuid.uuid4().hex}.avro")
+    man_path = os.path.join(metadata_dir, f"man-{uuid.uuid4().hex}.avro")
     avro_io.write_avro(man_path, schema, entries)
     manifests = [{
         "manifest_path": man_path,
@@ -870,7 +870,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
         "added_snapshot_id": snapshot_id,
     }]
     if with_deletes:
-        del_man = os.path.join(meta_dir, f"del-{uuid.uuid4().hex}.avro")
+        del_man = os.path.join(metadata_dir, f"del-{uuid.uuid4().hex}.avro")
         avro_io.write_avro(del_man, _MANIFEST_SCHEMA, [{
             "status": 1, "snapshot_id": snapshot_id,
             "sequence_number": None,
@@ -897,7 +897,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
         dp, n = _write_pos_delete_parquet(
             os.path.join(table_dir, "data"), position_deletes)
         manifests.append(_pos_delete_manifest(
-            meta_dir, snapshot_id, data_sequence_number + 1, [(dp, n)]))
+            metadata_dir, snapshot_id, data_sequence_number + 1, [(dp, n)]))
     if deletion_vectors:
         from . import puffin
         data_dir = os.path.join(table_dir, "data")
@@ -924,7 +924,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
             dv_entries.append({"status": 1, "snapshot_id": snapshot_id,
                                "sequence_number": None,
                                "data_file": rec})
-        dv_man = os.path.join(meta_dir, f"dv-{uuid.uuid4().hex}.avro")
+        dv_man = os.path.join(metadata_dir, f"dv-{uuid.uuid4().hex}.avro")
         avro_io.write_avro(
             dv_man, _manifest_schema(with_dv_fields=dv_manifest_fields),
             dv_entries)
@@ -937,7 +937,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
             "added_snapshot_id": snapshot_id,
         })
     if equality_deletes:
-        eq_man = os.path.join(meta_dir, f"eqdel-{uuid.uuid4().hex}.avro")
+        eq_man = os.path.join(metadata_dir, f"eqdel-{uuid.uuid4().hex}.avro")
         avro_io.write_avro(eq_man, _MANIFEST_SCHEMA, [{
             "status": 1, "snapshot_id": snapshot_id,
             "sequence_number": None,
@@ -996,7 +996,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
         }
         if part:
             df_rec["partition"] = dict(part)
-        eq_man = os.path.join(meta_dir, f"eqdel-{uuid.uuid4().hex}.avro")
+        eq_man = os.path.join(metadata_dir, f"eqdel-{uuid.uuid4().hex}.avro")
         avro_io.write_avro(eq_man, eq_schema, [{
             "status": 1, "snapshot_id": snapshot_id,
             "sequence_number": None,  # inherited from the list record
@@ -1012,9 +1012,9 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
         })
     if carried_deletes:
         manifests.append(_pos_delete_manifest(
-            meta_dir, snapshot_id, data_sequence_number + 1,
+            metadata_dir, snapshot_id, data_sequence_number + 1,
             carried_deletes))
-    mlist = os.path.join(meta_dir, f"snap-{snapshot_id}.avro")
+    mlist = os.path.join(metadata_dir, f"snap-{snapshot_id}.avro")
     avro_io.write_avro(mlist, _MANIFEST_LIST_SCHEMA, manifests)
     meta = {
         "format-version": 3 if deletion_vectors else 2,
@@ -1100,9 +1100,9 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
             "schema.name-mapping.default": json.dumps(
                 [_name_map(nm, field_ids[nm], typ)
                  for nm, typ, _r in _sf])}
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as f:
+    with open(os.path.join(metadata_dir, "v1.metadata.json"), "w") as f:
         json.dump(meta, f)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
+    with open(os.path.join(metadata_dir, "version-hint.text"), "w") as f:
         f.write("1")
     return table_dir
 

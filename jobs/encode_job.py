@@ -66,12 +66,6 @@ def main() -> int:
                    help="tolerated fraction of rows per file lost to "
                         "corrupt row groups (the reference's "
                         "parquet.read.bad.record.threshold)")
-    p.add_argument("--meta-mode", choices=("driver", "distributed"),
-                   default="driver",
-                   help="'distributed' writes per-chunk meta as task-side "
-                        "sidecars and sends only O(files) summaries to the "
-                        "driver — use when a wave's chunk count outgrows "
-                        "driver memory")
     p.add_argument("--relayout-columnar", metavar="DIR", default=None,
                    help="after encoding, re-layout committed chunks into "
                         "a per-column Hive-partitioned tree at DIR "
@@ -377,7 +371,7 @@ def main() -> int:
         schema_mode=args.schema_mode,
         bad_file_threshold=args.bad_file_threshold,
         bad_record_threshold=args.bad_record_threshold,
-        meta_mode=args.meta_mode, entropy=args.entropy,
+        entropy=args.entropy,
         row_deletes=row_deletes, eq_deletes=eq_deletes,
         const_columns=const_columns, const_schema=const_schema,
         column_renames=column_renames)

@@ -86,7 +86,7 @@ def test_compression_beats_parquet_raw_tokens(spark, tokens_path, tmp_path):
                                   cluster_partitions=4)
     bpt = totals["enc_bytes"] / totals["n_tokens"]
     assert bpt < 4.0  # strictly better than raw int32
-    stats = mf.wave_chunk_stats(spark, out, 0)
+    stats = mf.all_chunk_stats(spark, out)
     # every column chunk recorded its codec decision
     kinds = {r.kind for r in stats.select("kind").distinct().collect()}
     assert "list_i32" in kinds

@@ -407,67 +407,6 @@ def test_nested_columns_through_file_pipeline(spark, tmp_path):
         assert got[i] == (want_attrs, (i, i + 1, i + 2)), i
 
 
-def test_distributed_meta_mode_identical_totals(spark, tokens_dir, tmp_path):
-    """VERDICT r2 #7: meta_mode='distributed' writes per-chunk meta as
-    task-side sidecars (committed with the chunk file) and sends only
-    O(files) summary rows to the driver; manifest totals, decoded data,
-    and the channel-free verify must be identical to driver mode."""
-    from embulk_input_parquet_hadoop_spark.plans import verify
-    out_drv = str(tmp_path / "out_drv")
-    out_dst = str(tmp_path / "out_dst")
-    t1 = pipeline.encode_path(spark, tokens_dir, out_drv, waves=2)
-    t2 = pipeline.encode_path(spark, tokens_dir, out_dst, waves=2,
-                              meta_mode="distributed")
-    for k in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes", "waves_run"):
-        assert t1[k] == t2[k], k
-    m1 = mf.read_manifest(spark, out_drv).collect()
-    m2 = mf.read_manifest(spark, out_dst).collect()
-    tot1 = {(r.wave_id, r.n_chunks, r.n_rows, r.n_tokens) for r in m1}
-    tot2 = {(r.wave_id, r.n_chunks, r.n_rows, r.n_tokens) for r in m2}
-    assert tot1 == tot2
-    # sidecar layout exists and carries per-chunk lineage + col stats
-    assert pipeline.meta_files(out_dst, 0)
-    meta = spark.read.parquet(*pipeline.meta_files(out_dst, 0))
-    assert {"source_file", "chunk_file", "cols"} <= set(meta.columns)
-    # the channel-free verify consumes the sidecar lineage
-    res = verify.verify_files(spark, out_dst)
-    assert res["ok"] and res["rows_compared"] == t2["n_rows"]
-
-
-def test_distributed_meta_stale_sidecars_cleaned(spark, tokens_dir,
-                                                 tmp_path):
-    """A failed attempt's leftover meta sidecars must not double-count on
-    retry: the wave's meta dir is cleaned before re-running, so manifest
-    totals and verify stay exact."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from embulk_input_parquet_hadoop_spark.plans import verify
-    out = str(tmp_path / "out_stale_meta")
-    # forge a stale sidecar from a "previous crashed attempt"
-    stale_dir = f"{out}/chunks_meta/wave-0"
-    os.makedirs(stale_dir)
-    stale = pa.Table.from_arrays(
-        [pa.array(["w0-p9-b0"]), pa.array([0], pa.int32()),
-         pa.array([9], pa.int32()), pa.array([0], pa.int32()),
-         pa.array([999], pa.int64()), pa.array([999], pa.int64()),
-         pa.array([999], pa.int64()), pa.array([999], pa.int64()),
-         pa.array([1.0], pa.float64()), pa.array(["ghost.parquet"]),
-         pa.array(["ghost-chunk.parquet"]),
-         pa.array([[]], pa.list_(pipeline._COL_STRUCT)),
-         pa.array([0], pa.int64()), pa.array([None], pa.string()),
-         pa.array([None], pa.string())],
-        schema=pipeline.CHUNK_META_ARROW_SCHEMA)
-    pq.write_table(stale, f"{stale_dir}/part-99999-f0000.parquet")
-    totals = pipeline.encode_path(spark, tokens_dir, out,
-                                  meta_mode="distributed")
-    assert totals["n_rows"] == 2000
-    rec = mf.read_manifest(spark, out).collect()[0]
-    assert rec.n_rows == 2000  # the ghost's 999 rows are gone
-    meta = spark.read.parquet(*pipeline.meta_files(out, 0))
-    assert meta.filter(F.col("source_file") == "ghost.parquet").count() == 0
-    assert verify.verify_files(spark, out)["ok"]
-
-
 def test_zone_map_pruning_temporal(spark, tmp_path):
     """Temporal columns carry zone maps on their storage ints, so chunk
     pruning works on timestamp ranges like Parquet row-group stats."""
@@ -545,38 +484,6 @@ def test_read_decoded_rejects_undecoded_filter_column(spark, tmp_path,
     with pytest.raises(ValueError, match="int_ranges"):
         pipeline.read_decoded(spark, out, ["doc_id"], "doc_id string",
                               int_ranges={"n_tok": (10, 20)})
-
-
-def test_sidecar_failure_rolls_back_chunk_commit(tmp_path, monkeypatch):
-    """Distributed-meta mode: if the meta sidecar fails to write AFTER the
-    chunk file renamed in, the chunk must be rolled back — a committed
-    chunk without lineage would double its rows when the 'failed' source
-    file re-encodes in a later wave (review r3)."""
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    src = tmp_path / "src.parquet"
-    pq.write_table(pa.table({"a": list(range(100))}), src)
-    wave_dir = str(tmp_path / "chunks" / "wave=0")
-    meta_dir = str(tmp_path / "chunks_meta" / "wave-0")
-    from embulk_input_parquet_hadoop_spark.plans import fsutil
-    real_put = fsutil.put_bytes
-
-    def boom(dest, data):
-        if str(dest).startswith(meta_dir):
-            raise OSError("No space left on device")
-        return real_put(dest, data)
-
-    monkeypatch.setattr(fsutil, "put_bytes", boom)
-    fn = pipeline.make_encode_files_fn(0, wave_dir, meta_dir=meta_dir)
-    rows = list(fn(iter([pa.RecordBatch.from_pylist(
-        [{"path": str(src)}], schema=pipeline.FILE_ROWS_ARROW_SCHEMA)])))
-    assert glob.glob(f"{wave_dir}/*.parquet") == []   # chunk rolled back
-    assert glob.glob(f"{meta_dir}/*") == []           # no sidecar debris
-    assert len(rows) == 1
-    err = rows[0].column("error")[0].as_py()
-    assert err and "No space left" in err
 
 
 def test_read_manifest_missing_out_dir_raises(spark, tmp_path):
@@ -710,18 +617,19 @@ def test_vacuum_clean_tree_is_noop(spark, tokens_dir, tmp_path):
 
 
 def test_vacuum_sweeps_committed_wave_meta_tmp(spark, tokens_dir,
-                                               tmp_path):
-    """A sidecar .tmp orphaned by a killed task whose RETRY committed the
-    wave must still be reclaimed (review: the sweep covered chunks/
-    only)."""
+                                               tmp_path, killed_put):
+    """A ``put_bytes`` killed before its rename leaves its temp file in
+    a committed tree; vacuum reclaims it under ``manifest/`` and
+    ``chunks_meta/`` and leaves the committed wave alone."""
     out = str(tmp_path / "vac_meta")
-    pipeline.encode_path(spark, tokens_dir, out, meta_mode="distributed")
-    stray = f"{out}/chunks_meta/wave-0/part-00000.parquet.dead.tmp"
-    with open(stray, "wb") as f:
-        f.write(b"x" * 64)
+    pipeline.encode_path(spark, tokens_dir, out)
+    left = [killed_put(f"{out}/manifest/wave-0.json"),
+            killed_put(f"{out}/chunks_meta/wave-0.parquet")]
     res = mf.vacuum(out)
-    assert res["tmp_removed"] == 1 and not os.path.exists(stray)
+    assert res["tmp_removed"] == 2
+    assert not any(os.path.exists(p) for p in left)
     assert res["waves_removed"] == 0  # the committed wave is untouched
+    assert verify.verify_files(spark, out)["ok"]
 
 
 # -- file-task job shape: one Python stage, files packed per core ---------

@@ -38,12 +38,11 @@ def _wave_files(out: str) -> list[str]:
     return glob.glob(f"{out}/manifest/wave-*.json")
 
 
-@pytest.mark.parametrize("meta_mode", ["driver", "distributed"])
-def test_single_refuses_a_multi_schema_wave(spark, tmp_path, meta_mode):
+def test_single_refuses_a_multi_schema_wave(spark, tmp_path):
     src = _probe_tree(str(tmp_path / "src"))
     out = str(tmp_path / "enc")
     with pytest.raises(ValueError, match=r"b\.parquet|/c has") as ei:
-        pipeline.encode_path(spark, src, out, meta_mode=meta_mode)
+        pipeline.encode_path(spark, src, out)
     assert "schema_mode='single'" in str(ei.value)
     assert _wave_files(out) == []
     assert pipeline.read_chunks(spark, out).count() == 0

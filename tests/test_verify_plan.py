@@ -155,10 +155,8 @@ def test_plain_wave_record_keeps_its_keys(spark, tmp_path, src_files):
     assert set(rec) == PLAIN_RECORD_KEYS
 
 
-@pytest.mark.parametrize("meta_mode", ["driver", "distributed"])
 def test_recorded_plan_survives_checkpoint_and_resume(spark, tmp_path,
-                                                      src_files,
-                                                      meta_mode):
+                                                      src_files):
     """Two delete-masked waves: after ``compact_manifest`` the plan is
     served from ``checkpoint-1.json``; after ``wave-1.json`` is deleted,
     the ``resume=True`` re-commit carries the plan again."""
@@ -168,8 +166,7 @@ def test_recorded_plan_survives_checkpoint_and_resume(spark, tmp_path,
                                      position_deletes=dels)
     scan = iceberg_meta.snapshot_scan(tdir)
     kw = dict(input_files=scan["data_files"],
-              row_deletes=scan["position_deletes"], waves=2,
-              meta_mode=meta_mode)
+              row_deletes=scan["position_deletes"], waves=2)
     out = str(tmp_path / "enc")
     assert pipeline.encode_path(spark, tdir, out, **kw)["waves_run"] == 2
     live = 300 - 4
