@@ -52,6 +52,11 @@ DTYPE_IDS = {
     "int64": 3,
     "bytes": 4,
     "uint1": 5,  # validity bitmap
+    # f32/f64 values v stored as the int64 integers rint(v * 10**e), e in
+    # the params (operators/encode.py); their own ids, so a build that
+    # predates them raises instead of reading the integers as float bits
+    "dec32": 6,
+    "dec64": 7,
 }
 DTYPE_NAMES = {v: k for k, v in DTYPE_IDS.items()}
 

@@ -12,11 +12,15 @@ Column kinds:
   list_i32   frames: [offsets] [values]       (tokens: array<int32> not null)
   str_direct frames: [validity?] [offsets] [bytes]
   str_dict   frames: [validity?] [indices] [offsets] [bytes]   (dict strings)
-  f32 / f64  frames: [validity?] [values]     values is either a ``bytes``
-             frame of raw floats (byte planes + zstd) or an ``int32`` /
-             ``int64`` int-cascade frame over the floats' bit patterns,
-             whichever is smaller; trees holding only ``bytes`` float
-             frames decode on builds that predate the cascade frame
+  f32 / f64  frames: [validity?] [values]     values is the smaller of a
+             ``bytes`` frame of raw floats (byte planes + zstd) and an
+             int-cascade frame: ``dec32``/``dec64`` over the integers
+             ``rint(v * 10**e)`` when every value is a decimal at one
+             exponent ``e`` <= 18 (in its params), else ``int32`` /
+             ``int64`` over the floats' bit patterns; trees holding only
+             ``bytes`` float frames decode on builds that predate the
+             cascade frames, and builds that predate ``dec32``/``dec64``
+             raise on those
 
 Any frame payload may additionally be zstd-compressed when that wins by
 >4%: ``params["z"]`` is ``"zs"`` for zstd over the payload or ``"zp"``
@@ -72,15 +76,17 @@ def _plane_transpose(payload: bytes, stride: int) -> bytes:
     the write side of the codecs the reference decodes."""
     a = np.frombuffer(payload, dtype=np.uint8)
     usable = (len(a) // stride) * stride
-    return (a[:usable].reshape(-1, stride).T.tobytes()
-            + a[usable:].tobytes())
+    # ascontiguousarray first: tobytes() of the transposed view walks it
+    # byte by byte, 2-4x slower than numpy's strided copy
+    return (np.ascontiguousarray(a[:usable].reshape(-1, stride).T)
+            .tobytes() + a[usable:].tobytes())
 
 
 def _plane_untranspose(data: bytes, stride: int) -> bytes:
     a = np.frombuffer(data, dtype=np.uint8)
     usable = (len(a) // stride) * stride
-    return (a[:usable].reshape(stride, -1).T.tobytes()
-            + a[usable:].tobytes())
+    return (np.ascontiguousarray(a[:usable].reshape(stride, -1).T)
+            .tobytes() + a[usable:].tobytes())
 
 
 def _maybe_compress(payload: bytes, params: dict,
@@ -139,10 +145,13 @@ def _codec_stride(codec: str, params: dict) -> int:
     return 1
 
 
-def _int_frame(a: np.ndarray, dtype_name: str, selection=None) -> bytes:
+def _int_frame(a: np.ndarray, dtype_name: str, selection=None,
+               extra: dict | None = None) -> bytes:
+    """``extra`` params ride in the frame next to the codec's own."""
     codec, payload, params = encode_best(a, selection)
     payload, params = _maybe_compress(payload, params,
                                       _codec_stride(codec, params))
+    params.update(extra or {})
     frame = framing.write_frame(codec, dtype_name, len(a), params, payload)
     if _ENTROPY_MODE and len(a) >= _ENTROPY_MIN_N \
             and _entropy_could_win(a, len(frame)):
@@ -151,6 +160,7 @@ def _int_frame(a: np.ndarray, dtype_name: str, selection=None) -> bytes:
             rp, rparams = rans.rans_encode(a)
         except OverflowError:
             return frame  # >16-bit value range (offsets, ids, ...)
+        rparams.update(extra or {})
         if not rparams.get("deg"):
             # no outer zstd stage: the payload is already entropy-coded
             rframe = framing.write_frame("rans", dtype_name, len(a),
@@ -495,17 +505,73 @@ def decode_string_column(kind: str, blob: bytes) -> pa.Array:
 _FLOAT_DTYPES = {pa.float32(): ("f32", np.float32),
                  pa.float64(): ("f64", np.float64)}
 
+# decimal-scaled float frames (ALP, Afroozeh et al., SIGMOD 2023): a value
+# v is stored as the integer rint(v * 10**e). Every 10**e here is exact
+# in float64, and |rint(v * 10**e)| <= 2**53 keeps the integer exact as
+# a float64 on decode.
+_DEC_POW10 = 10.0 ** np.arange(19)
+_DEC_MAX_INT = 2.0 ** 53
+_DEC_SAMPLE = 32
+
+
+def _dec_unscale(ints: np.ndarray, e, np_dtype) -> np.ndarray:
+    """The decimal frame's decode: float64 division, then the column's
+    width. The encoder keeps a chunk only if this gives back its bits."""
+    return (ints / _DEC_POW10[e]).astype(np_dtype, copy=False)
+
+
+def _dec_round(v: np.ndarray, e) -> np.ndarray:
+    """rint(v * 10**e), computed in float64 for either width."""
+    with np.errstate(over="ignore", invalid="ignore"):  # inf and NaN
+        x = np.multiply(v, _DEC_POW10[e], dtype=np.float64)
+    return np.rint(x, out=x)
+
+
+def _decimal_ints(a: np.ndarray) -> tuple[int, np.ndarray] | None:
+    """(e, ints) for the smallest e in 0..18 at which every value of ``a``
+    decodes bit for bit from ``ints = rint(a * 10**e)``, else None.
+
+    Every e is tried at once on an evenly spaced sample; only the first e
+    that passes it is checked on the whole chunk, so a non-decimal chunk
+    costs one small matrix, not 19 passes over the chunk. NaN and +-inf
+    fail the range check; -0.0 and subnormals fail the bit check, as the
+    integer 0 decodes to +0.0."""
+    ubits = a.dtype.str.replace("f", "u")
+    s = a[::max(1, len(a) // _DEC_SAMPLE), None]
+    x = _dec_round(s, slice(None))
+    ok = np.abs(x) <= _DEC_MAX_INT
+    ints = np.where(ok, x, 0.0).astype(np.int64)
+    ok &= (_dec_unscale(ints, slice(None), a.dtype).view(ubits)
+           == s.view(ubits))
+    passing = ok.all(axis=0)
+    if not passing.any():
+        return None
+    e = int(np.argmax(passing))
+    x = _dec_round(a, e)
+    if not (np.abs(x) <= _DEC_MAX_INT).all():
+        return None
+    ints = x.astype(np.int64)
+    if not np.array_equal(_dec_unscale(ints, e, a.dtype).view(ubits),
+                          a.view(ubits)):
+        return None
+    return e, ints
+
 
 def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
     """float32/float64: the smaller of two frames, by actual bytes.
 
     The byte-plane frame (dtype ``bytes``) is the BYTE_STREAM_SPLIT trade
     for floating point: exponent/sign bytes compress, mantissa bytes
-    don't. The cascade frame (dtype ``int32``/``int64``) runs the
-    values' bit patterns through the int codec cascade, where a
-    low-cardinality column (prices, discounts, tax rates) gets dict or
-    RLE instead of eight planes of mostly-random mantissa bytes. Both
-    are bit-exact: NaN payloads and -0.0 survive as bits."""
+    don't. A chunk whose every value is a decimal at some exponent
+    e <= 18 (prices, balances, rates: ``v == rint(v * 10**e) / 10**e``
+    bit for bit, see ``_decimal_ints``) competes with a decimal frame
+    (dtype ``dec32``/``dec64``, ``e`` in its params): the integers
+    ``rint(v * 10**e)`` through the int codec cascade. Any other chunk
+    competes with a cascade frame (dtype ``int32``/``int64``) over the
+    values' bit patterns, where a low-cardinality column gets dict or
+    RLE instead of eight planes of mostly-random mantissa bytes. All
+    are bit-exact: NaN payloads and -0.0 survive as bits, and a chunk
+    holding one (or an infinity) never takes a decimal frame."""
     kind, np_dtype = _FLOAT_DTYPES[arr.type]
     blob = b""
     if arr.null_count:
@@ -517,14 +583,31 @@ def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
     payload, params = _maybe_compress(a.tobytes(), {"dt": a.dtype.str},
                                       a.dtype.itemsize)
     frame = framing.write_frame("plain", "bytes", len(a), params, payload)
-    bits = a.view(f"<i{a.itemsize}")
-    selection = select_int_codec(bits)
-    # a plain cascade payload is the byte-plane frame's bytes again
-    if selection[0] != "plain":
-        cascade = _int_frame(bits, bits.dtype.name, selection)
-        if len(cascade) < len(frame):
-            frame = cascade
+    decimal = _decimal_ints(a)
+    if decimal is not None:
+        e, ints = decimal
+        cascade = _int_frame(ints, f"dec{8 * a.itemsize}", extra={"e": e})
+    else:
+        bits = a.view(f"<i{a.itemsize}")
+        selection = select_int_codec(bits)
+        # a plain cascade payload is the byte-plane frame's bytes again
+        cascade = (_int_frame(bits, bits.dtype.name, selection)
+                   if selection[0] != "plain" else frame)
+    if len(cascade) < len(frame):
+        frame = cascade
     return kind, blob + frame
+
+
+def _decode_decimal_frame(frame: framing.Frame) -> np.ndarray:
+    e = frame.params.get("e")
+    # the CRC covers the payload only: a bad exponent must not scale
+    if type(e) is not int or not 0 <= e < len(_DEC_POW10):
+        raise framing.FrameError(f"bad decimal exponent {e!r}")
+    _, dec = INT_CODECS[frame.codec]
+    ints = dec(_decompress(frame), frame.params, frame.n).astype(
+        np.int64, copy=False)
+    return _dec_unscale(ints, e, np.float32 if frame.dtype == "dec32"
+                        else np.float64)
 
 
 def decode_float_column(kind: str, blob: bytes) -> pa.Array:
@@ -536,6 +619,8 @@ def decode_float_column(kind: str, blob: bytes) -> pa.Array:
     if frames[0].dtype == "bytes":
         data = _decompress(frames[0])
         vals = np.frombuffer(data, dtype=np.dtype(frames[0].params["dt"]))
+    elif frames[0].dtype in ("dec32", "dec64"):
+        vals = _decode_decimal_frame(frames[0])
     else:
         bits = _decode_int_frame(frames[0])
         vals = bits.view(f"<f{bits.itemsize}")
@@ -681,7 +766,7 @@ def encode_nested_column(arr: pa.Array) -> tuple[str, bytes]:
     ``encode_column`` — so the leaves of an arbitrarily nested column get
     the same lightweight codecs as top-level columns (FOR/delta ints,
     dict/FSST strings, floats as byte planes or through the int cascade
-    on their bits), where the r2 Arrow-IPC
+    on their decimal integers or their bits), where the r2 Arrow-IPC
     fallback got zero codec wins. Write-side inversion of the reference's
     field-by-field nested decode (``ParquetValueConverter.java:282-337``
     struct, ``:513-596`` lists incl. legacy layouts, ``:598-679`` maps,

@@ -1,15 +1,23 @@
-"""f32/f64 chunks: the smaller of the byte-plane frame and the int-codec
-cascade over the values' bit patterns, bit-exact either way."""
+"""f32/f64 chunks: the smaller of the byte-plane frame and an int-codec
+cascade frame, over the values' decimal integers ``rint(v * 10**e)`` when
+every value is a decimal and over their bit patterns otherwise;
+bit-exact whichever wins."""
 
 from __future__ import annotations
 
+import glob
+import shutil
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from embulk_input_parquet_hadoop_spark.codecs import framing
 from embulk_input_parquet_hadoop_spark.operators import encode as E
+from embulk_input_parquet_hadoop_spark.operators.select import select_int_codec
 
 _UINT = {32: (np.uint32, pa.uint32(), np.float32, pa.float32()),
          64: (np.uint64, pa.uint64(), np.float64, pa.float64())}
@@ -49,16 +57,38 @@ def _bits_equal(decoded: pa.Array, original: pa.Array) -> bool:
             and decoded.view(ubits).equals(original.view(ubits)))
 
 
+# the values no decimal frame may hold: NaNs, -0.0, infinities, subnormals
+_NOT_DECIMAL = {w: [b for b in bits if b & ((1 << (w - 1)) - 1)]
+                + [1 << (w - 1)] for w, bits in _SPECIAL.items()}
+
+
+def _has_non_decimal(arr: pa.Array) -> bool:
+    """Any valid NaN, +-inf, -0.0 or subnormal."""
+    a = np.asarray(arr.drop_null())
+    return bool((~np.isfinite(a)).any() or np.signbit(a[a == 0]).any()
+                or ((a != 0) & (np.abs(a) < np.finfo(a.dtype).tiny)).any())
+
+
 @st.composite
 def float_chunks(draw):
     width = draw(st.sampled_from([32, 64]))
     n = draw(st.integers(0, 3000))
     shape = draw(st.sampled_from(
-        ["constant", "lowcard", "sorted", "random", "special"]))
+        ["constant", "lowcard", "sorted", "random", "special", "decimal"]))
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     udt, _, fdt, patype = _UINT[width]
     special = np.array(_SPECIAL[width], dtype=udt)
-    if shape == "random":
+    if shape == "decimal":
+        # k / 10**e at every exponent the encoder tries, signed, up to the
+        # 2**53 bound on |k|
+        e = draw(st.integers(0, 18))
+        top = draw(st.sampled_from([9, 10**4, 10**9, 2**53 - 1, 2**53 + 2]))
+        bits = (rng.integers(-top, top, n, endpoint=True) / 10.0 ** e
+                ).astype(fdt).view(udt)
+        if n and draw(st.booleans()):
+            poison = np.array(_NOT_DECIMAL[width], dtype=udt)
+            bits[rng.integers(0, n)] = poison[rng.integers(0, len(poison))]
+    elif shape == "random":
         bits = rng.integers(0, np.iinfo(udt).max, n, dtype=udt,
                             endpoint=True)
     elif shape == "sorted":
@@ -79,44 +109,131 @@ def float_chunks(draw):
     return pa.array(bits.view(fdt), type=patype, mask=mask)
 
 
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=200, deadline=None)
 @given(float_chunks())
 def test_float_roundtrip_bit_exact_and_never_larger(arr):
     kind, blob = E.encode_column(arr)
     assert kind == ("f32" if arr.type == pa.float32() else "f64")
     assert _bits_equal(E.decode_column(kind, blob), arr)
     assert len(blob) <= len(_legacy_blob(arr))
+    if _has_non_decimal(arr):
+        assert framing.read_frames(blob)[-1].dtype not in ("dec32", "dec64")
+
+
+@pytest.mark.parametrize("dt", [pa.float32(), pa.float64()])
+def test_decimal_chunks_take_a_decimal_frame_at_their_exponent(dt):
+    rng = np.random.default_rng(7)
+    for e in range(19):
+        k = rng.integers(-10**6, 10**6, 2000)
+        k[0] = 10**6 - 1  # one valid value whose last digit is not 0
+        mask = rng.random(2000) < 0.1
+        mask[0] = False
+        arr = pa.array((k / 10.0 ** e).astype(dt.to_pandas_dtype()),
+                       type=dt, mask=mask)
+        kind, blob = E.encode_column(arr)
+        frame = framing.read_frames(blob)[-1]
+        assert frame.dtype == ("dec32" if dt == pa.float32() else "dec64")
+        assert frame.params["e"] == e
+        assert len(blob) < len(_legacy_blob(arr))
+        assert _bits_equal(E.decode_column(kind, blob), arr), e
+
+
+@pytest.mark.parametrize("width", [32, 64])
+def test_one_non_decimal_value_keeps_a_chunk_off_decimal_frames(width):
+    """One NaN, infinity, -0.0 or subnormal between sampled positions:
+    the full-chunk check still refuses the decimal frame."""
+    udt, _, fdt, patype = _UINT[width]
+    rng = np.random.default_rng(width)
+    for poison in _NOT_DECIMAL[width]:
+        bits = (rng.integers(90_000, 10_500_000, 3000) / 100.0
+                ).astype(fdt).view(udt)
+        bits[1] = poison
+        arr = pa.array(bits.view(fdt), type=patype)
+        kind, blob = E.encode_column(arr)
+        frame = framing.read_frames(blob)[-1]
+        assert frame.dtype not in ("dec32", "dec64"), hex(poison)
+        assert _bits_equal(E.decode_column(kind, blob), arr), hex(poison)
+
+
+def test_decimal_frame_bound_is_two_to_the_53():
+    edge = 2.0 ** 53
+    rng = np.random.default_rng(3)
+    vals = np.concatenate([[edge], edge - rng.integers(0, 10**6, 2000)])
+    ok = pa.array(vals)
+    frame = framing.read_frames(E.encode_column(ok)[1])[-1]
+    assert (frame.dtype, frame.params["e"]) == ("dec64", 0)
+    vals[0] = edge + 2  # an integer, but past the bound
+    over = pa.array(vals)
+    kind, blob = E.encode_column(over)
+    assert framing.read_frames(blob)[-1].dtype not in ("dec32", "dec64")
+    for arr in (ok, over):
+        assert _bits_equal(E.decode_column(*E.encode_column(arr)), arr)
+
+
+def test_decimal_frame_with_a_bad_exponent_raises():
+    arr = pa.array(np.arange(3000) % 11 / 100.0)
+    (frame,) = framing.read_frames(E.encode_column(arr)[1])
+    assert frame.dtype == "dec64"
+    for bad in (19, -1, 2.0, "2", True, None):
+        params = dict(frame.params, e=bad)
+        blob = framing.write_frame(frame.codec, frame.dtype, frame.n, params,
+                                   bytes(frame.payload))
+        with pytest.raises(framing.FrameError):
+            E.decode_column("f64", blob)
+    params = {k: v for k, v in frame.params.items() if k != "e"}
+    blob = framing.write_frame(frame.codec, frame.dtype, frame.n, params,
+                               bytes(frame.payload))
+    with pytest.raises(framing.FrameError):
+        E.decode_column("f64", blob)
 
 
 def test_low_cardinality_floats_take_the_cascade():
-    # an l_discount-shaped chunk: 11 distinct values
+    # an l_discount-shaped chunk: 11 distinct values, now a decimal frame
+    # at e=2 that is no larger than the frame over its bit patterns
     rng = np.random.default_rng(11)
     for dt in (pa.float32(), pa.float64()):
         arr = pa.array(rng.integers(0, 11, 3000) / 100.0, type=dt)
         kind, blob = E.encode_column(arr)
         (frame,) = framing.read_frames(blob)
-        assert frame.dtype == ("int32" if dt == pa.float32() else "int64")
-        assert frame.codec == "dict"
+        assert frame.dtype == ("dec32" if dt == pa.float32() else "dec64")
+        assert frame.params["e"] == 2
+        bits = np.asarray(arr).view(f"<i{dt.bit_width // 8}")
+        bits_frame = E._int_frame(bits, bits.dtype.name)
+        assert framing.read_frames(bits_frame)[0].codec == "dict"
+        assert len(blob) <= len(bits_frame)
         assert len(blob) * 3 < len(_legacy_blob(arr))
         assert _bits_equal(E.decode_column(kind, blob), arr)
 
 
 def test_byte_plane_frame_kept_when_the_cascade_is_larger():
-    # p_retailprice's TPC-H formula: the cascade picks dict from its
-    # sample, and its frame comes out ~5x the byte-plane frame
+    # p_retailprice's TPC-H formula in thirds of a cent, which no decimal
+    # exponent represents: the bit-pattern cascade picks dict from its
+    # sample, and its frame comes out ~3x the byte-plane frame
     k = np.arange(1, 20001)
-    arr = pa.array((90000 + (k // 10) % 20001 + 100 * (k % 1000)) / 100)
+    cents = 90000 + (k // 10) % 20001 + 100 * (k % 1000)
+    arr = pa.array(cents / 300)
+    assert E._decimal_ints(np.asarray(arr)) is None
     kind, blob = E.encode_column(arr)
     (frame,) = framing.read_frames(blob)
     assert frame.dtype == "bytes"
     bits = np.asarray(arr).view(np.int64)
+    assert select_int_codec(bits)[0] == "dict"
     assert len(E._int_frame(bits, "int64")) > 2 * len(blob)
     assert blob == _legacy_blob(arr)
     assert _bits_equal(E.decode_column(kind, blob), arr)
+    # the formula itself is in cents: a decimal frame, smaller still
+    arr = pa.array(cents / 100)
+    kind, blob = E.encode_column(arr)
+    (frame,) = framing.read_frames(blob)
+    assert (frame.dtype, frame.params["e"]) == ("dec64", 2)
+    assert len(blob) * 3 < len(_legacy_blob(arr))
+    assert _bits_equal(E.decode_column(kind, blob), arr)
 
 
-# byte-plane blobs as the encoder wrote them before float chunks could
-# take the cascade; trees holding them must keep decoding
+# float blobs as earlier builds wrote them (byte planes, then the
+# bit-pattern cascade) and as this one writes decimal frames; trees
+# holding them must keep decoding
+_L_DISCOUNT_24 = (np.arange(24) * 7 % 11) / 100.0
 _PINNED = [
     # f64 [NaN with payload 0x123, -0.0, 1.5, inf]: raw, no outer stage
     ("f64",
@@ -139,6 +256,29 @@ _PINNED = [
      "1415161718191a1b1c1d1e1f20202121222223232424252526262727282829292a"
      "2a2b2b2c2c2d2d2e2e2f2f003f3f40400400030705209c5c23b8548005",
      (np.arange(64) * 0.25).view(np.uint64).tolist()),
+    # f64 l_discount-shaped, 24 values: a bit-pattern cascade frame
+    # (int64, dict), as builds before decimal frames wrote it
+    ("f64",
+     "4346010403180000002d00000062000000000000000c3b62c07b2263617264223a"
+     "31312c226977223a342c22646d696e223a302c226477223a36322c22646c656e22"
+     "3a38367d00000000000000c01e85eb51b81ee1bf47e17a14ae47f9e37a14ae47e1"
+     "7afe7b14ae47e17aa4bf666666666666ea8feb51b81e85ebfab347e17a14aec7fe"
+     "7b14ae47e17ab4bfc2f5285c8fc2edaf999999999999fb0370a326598104376a92"
+     "154870",
+     _L_DISCOUNT_24.view(np.uint64).tolist()),
+    # the same values as a decimal frame: dec64, e=2, for
+    ("f64",
+     "434601010718000000150000000c00000000000000431a906f7b226d696e223a30"
+     "2c2277223a342c2265223a327d70a326598104376a92154870",
+     _L_DISCOUNT_24.view(np.uint64).tolist()),
+    # f32 (k % 11) / 10 - 0.5 with one null: validity + dec32, e=1, for
+    ("f32",
+     "434601000510000000020000000200000000000000a2247b6a7b7ddfff43460101"
+     "0610000000160000000800000000000000aa90693f7b226d696e223a2d352c2277"
+     "223a342c2265223a317d70a356598104376a",
+     [3204448256, 1045220557, 3192704205, 1056964608, 1036831949, None,
+      1053609165, 0, 3201092813, 1050253722, 3184315597, 3204448256,
+      1045220557, 3192704205, 1056964608, 1036831949]),
 ]
 
 
@@ -154,25 +294,54 @@ def test_pinned_byte_plane_blobs_still_decode():
         assert out.view(ubits).equals(want)
 
 
+def test_decimal_frames_are_not_read_as_float_bits():
+    """A decimal frame has its own dtype id: the bit-pattern path and a
+    reader that predates the id both raise instead of decoding the
+    integers as float bits."""
+    blob = bytes.fromhex(_PINNED[4][1])
+    (frame,) = framing.read_frames(blob)
+    assert frame.dtype == "dec64"
+    with pytest.raises(KeyError):
+        E._decode_int_frame(frame)
+    earlier_ids = {v: k for k, v in framing.DTYPE_IDS.items()
+                   if k not in ("dec32", "dec64")}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(framing, "DTYPE_NAMES", earlier_ids)
+        with pytest.raises(KeyError):
+            E.decode_column("f64", blob)
+
+
 def test_struct_float_leaf_roundtrips():
     n = 2000
     xs = np.round(np.arange(n) % 9 / 100.0, 2)
     xs[3], xs[4] = np.nan, -0.0
     arr = pa.StructArray.from_arrays(
         [pa.array(xs), pa.array(np.arange(n) % 50, type=pa.int64()),
-         pa.array(xs.astype(np.float32), mask=np.arange(n) % 13 == 0)],
-        names=["x", "k", "y"],
+         pa.array(xs.astype(np.float32), mask=np.arange(n) % 13 == 0),
+         pa.array(np.arange(n) % 9 / 100.0, mask=np.arange(n) % 7 == 0)],
+        names=["x", "k", "y", "d"],
         mask=pa.array(np.arange(n) % 101 == 0))
     kind, blob = E.encode_nested_column(arr)
     out = E.decode_column(kind, blob)
     assert out.is_valid().equals(arr.is_valid())
-    for name in ("x", "y"):
+    for name in ("x", "y", "d"):
         assert _bits_equal(out.field(name), arr.field(name)), name
     assert out.field("k").equals(arr.field("k"))
+    # the leaves' value frames: NaN and -0.0 keep x and y off decimal
+    # frames; d, all decimals, takes one
+    head, pos = framing.read_frame(blob)
+    pos = framing.read_frame(blob, pos)[1]  # the struct's validity
+    leaf_dtypes = []
+    for ln in head.params["nl"]:
+        leaf_dtypes.append(framing.read_frames(blob[pos:pos + ln])[-1].dtype)
+        pos += ln
+    assert leaf_dtypes[0] not in ("dec32", "dec64")
+    assert leaf_dtypes[2] not in ("dec32", "dec64")
+    assert leaf_dtypes[3] == "dec64"
     # and the dispatcher's pick (nested shred or IPC) round-trips too
     kind, blob = E.encode_column(arr)
     out = E.decode_column(kind, blob)
-    for name in ("x", "y"):
+    for name in ("x", "y", "d"):
         assert _bits_equal(out.field(name), arr.field(name)), name
 
 
@@ -187,3 +356,50 @@ def test_null_list_elements_survive():
             assert E.decode_column(kind, blob).equals(a), (t, kind)
         kind, _ = E.encode_column(arr.slice(2))
         assert kind in ("list_i32", "list_f32")
+
+
+_SF_FLOAT_TABLES = {"lineitem": ["l_orderkey", "l_linenumber"],
+                    "orders": ["o_orderkey"], "customer": ["c_custkey"],
+                    "supplier": ["s_suppkey"], "part": ["p_partkey"],
+                    "events": ["event_id"]}
+_SPARK_TYPES = {pa.int32(): "int", pa.int64(): "bigint",
+                pa.float32(): "float", pa.float64(): "double"}
+
+
+def test_sf_float_columns_roundtrip_through_the_pipeline(spark, tmp_path):
+    """encode_path -> verify_files -> read_decoded on every sf0.001 table
+    with a float column: decoded floats match the source bit for bit,
+    and the price columns are stored as decimal frames."""
+    from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
+    from test_oracle_parity import SF_DIR
+    dec_chunks = {"l_extendedprice": 0, "o_totalprice": 0}
+    for table, keys in _SF_FLOAT_TABLES.items():
+        in_dir = tmp_path / table
+        in_dir.mkdir()
+        shutil.copy(f"{SF_DIR}/{table}.parquet", in_dir)
+        out = str(tmp_path / f"{table}_enc")
+        pipeline.encode_path(spark, str(in_dir), out)
+        assert verify.verify_files(spark, out)["ok"], table
+        src = pq.read_table(in_dir / f"{table}.parquet")
+        floats = [f.name for f in src.schema
+                  if pa.types.is_floating(f.type)]
+        cols = keys + floats
+        ddl = ", ".join(f"{c} {_SPARK_TYPES[src.schema.field(c).type]}"
+                        for c in cols)
+        order = [(k, "ascending") for k in keys]
+        got = pipeline.read_decoded(spark, out, cols, ddl).toArrow() \
+            .sort_by(order)
+        want = src.select(cols).sort_by(order)
+        assert got.num_rows == want.num_rows, table
+        for c in floats:
+            assert _bits_equal(got.column(c).combine_chunks(),
+                               want.column(c).combine_chunks()), (table, c)
+        for f in glob.glob(f"{out}/chunks/**/*.parquet", recursive=True):
+            for batch in pq.ParquetFile(f).iter_batches():
+                for chunk in pipeline.chunk_columns(batch):
+                    for name, _kind, blob in chunk:
+                        if name in dec_chunks:
+                            frame = framing.read_frames(blob)[-1]
+                            assert frame.dtype == "dec64", (name, frame)
+                            dec_chunks[name] += 1
+    assert all(dec_chunks.values()), dec_chunks
