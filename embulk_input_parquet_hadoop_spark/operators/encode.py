@@ -12,15 +12,14 @@ Column kinds:
   list_i32   frames: [offsets] [values]       (tokens: array<int32> not null)
   str_direct frames: [validity?] [offsets] [bytes]
   str_dict   frames: [validity?] [indices] [offsets] [bytes]   (dict strings)
-  f32 / f64  frames: [validity?] [values]     values is the smaller of a
-             ``bytes`` frame of raw floats (byte planes + zstd) and an
-             int-cascade frame: ``dec32``/``dec64`` over the integers
-             ``rint(v * 10**e)`` when every value is a decimal at one
-             exponent ``e`` <= 18 (in its params), else ``int32`` /
-             ``int64`` over the floats' bit patterns; trees holding only
-             ``bytes`` float frames decode on builds that predate the
-             cascade frames, and builds that predate ``dec32``/``dec64``
-             raise on those
+  f32 / f64  frames: [validity?] [values]     values is a ``bytes``
+             frame of raw floats (byte planes + zstd) or, when every
+             value is a decimal at one exponent ``e`` <= 18 and it is
+             smaller, a ``dec32``/``dec64`` int-cascade frame over the
+             integers ``rint(v * 10**e)``, ``e`` in its params. The
+             decoder also reads ``int32``/``int64`` cascade frames over
+             the floats' bit patterns, which earlier builds wrote; builds
+             that predate ``dec32``/``dec64`` raise on those
 
 Any frame payload may additionally be zstd-compressed when that wins by
 >4%: ``params["z"]`` is ``"zs"`` for zstd over the payload or ``"zp"``
@@ -41,7 +40,7 @@ import pyarrow as pa
 
 from ..codecs import framing, fsst
 from ..codecs.intcodecs import INT_CODECS
-from .select import encode_best, select_int_codec
+from .select import encode_best
 
 _COMPRESS_GAIN = 0.96
 # level 1, not 3: measured on the bench corpus (interleaved best-of-4,
@@ -76,17 +75,15 @@ def _plane_transpose(payload: bytes, stride: int) -> bytes:
     the write side of the codecs the reference decodes."""
     a = np.frombuffer(payload, dtype=np.uint8)
     usable = (len(a) // stride) * stride
-    # ascontiguousarray first: tobytes() of the transposed view walks it
-    # byte by byte, 2-4x slower than numpy's strided copy
-    return (np.ascontiguousarray(a[:usable].reshape(-1, stride).T)
-            .tobytes() + a[usable:].tobytes())
+    return (a[:usable].reshape(-1, stride).T.tobytes()
+            + a[usable:].tobytes())
 
 
 def _plane_untranspose(data: bytes, stride: int) -> bytes:
     a = np.frombuffer(data, dtype=np.uint8)
     usable = (len(a) // stride) * stride
-    return (np.ascontiguousarray(a[:usable].reshape(stride, -1).T)
-            .tobytes() + a[usable:].tobytes())
+    return (a[:usable].reshape(stride, -1).T.tobytes()
+            + a[usable:].tobytes())
 
 
 def _maybe_compress(payload: bytes, params: dict,
@@ -145,10 +142,10 @@ def _codec_stride(codec: str, params: dict) -> int:
     return 1
 
 
-def _int_frame(a: np.ndarray, dtype_name: str, selection=None,
+def _int_frame(a: np.ndarray, dtype_name: str,
                extra: dict | None = None) -> bytes:
     """``extra`` params ride in the frame next to the codec's own."""
-    codec, payload, params = encode_best(a, selection)
+    codec, payload, params = encode_best(a)
     payload, params = _maybe_compress(payload, params,
                                       _codec_stride(codec, params))
     params.update(extra or {})
@@ -527,38 +524,43 @@ def _dec_round(v: np.ndarray, e) -> np.ndarray:
     return np.rint(x, out=x)
 
 
+def _dec_exact(v: np.ndarray, e) -> tuple[np.ndarray, np.ndarray]:
+    """(ok, ints): ``ints = rint(v * 10**e)``, and ``ok`` where a value
+    decodes from its integer bit for bit. ``e`` is an exponent or a slice
+    of them, broadcast against ``v`` (a column of values for a slice)."""
+    x = _dec_round(v, e)
+    ok = np.abs(x) <= _DEC_MAX_INT
+    ints = np.where(ok, x, 0.0).astype(np.int64)
+    ubits = v.dtype.str.replace("f", "u")
+    ok &= _dec_unscale(ints, e, v.dtype).view(ubits) == v.view(ubits)
+    return ok, ints
+
+
 def _decimal_ints(a: np.ndarray) -> tuple[int, np.ndarray] | None:
     """(e, ints) for the smallest e in 0..18 at which every value of ``a``
     decodes bit for bit from ``ints = rint(a * 10**e)``, else None.
 
-    Every e is tried at once on an evenly spaced sample; only the first e
-    that passes it is checked on the whole chunk, so a non-decimal chunk
-    costs one small matrix, not 19 passes over the chunk. NaN and +-inf
-    fail the range check; -0.0 and subnormals fail the bit check, as the
-    integer 0 decodes to +0.0."""
-    ubits = a.dtype.str.replace("f", "u")
+    Every e is tried at once on an evenly spaced sample, so a non-decimal
+    chunk costs one small matrix, not 19 passes over the chunk. The whole
+    chunk is checked at the smallest e the sample passes; up to 32 values
+    that fail there are tried at every e at once, and the next check is
+    at the smallest e that they and the sample pass. NaN and +-inf fail the
+    range check; -0.0 and subnormals fail the bit check, as the integer 0
+    decodes to +0.0."""
     s = a[::max(1, len(a) // _DEC_SAMPLE), None]
-    x = _dec_round(s, slice(None))
-    ok = np.abs(x) <= _DEC_MAX_INT
-    ints = np.where(ok, x, 0.0).astype(np.int64)
-    ok &= (_dec_unscale(ints, slice(None), a.dtype).view(ubits)
-           == s.view(ubits))
-    passing = ok.all(axis=0)
-    if not passing.any():
-        return None
-    e = int(np.argmax(passing))
-    x = _dec_round(a, e)
-    if not (np.abs(x) <= _DEC_MAX_INT).all():
-        return None
-    ints = x.astype(np.int64)
-    if not np.array_equal(_dec_unscale(ints, e, a.dtype).view(ubits),
-                          a.view(ubits)):
-        return None
-    return e, ints
+    passing = _dec_exact(s, slice(None))[0].all(axis=0)
+    while passing.any():
+        e = int(np.argmax(passing))
+        ok, ints = _dec_exact(a, e)
+        if ok.all():
+            return e, ints
+        failed = a[~ok][:_DEC_SAMPLE, None]
+        passing &= _dec_exact(failed, slice(None))[0].all(axis=0)
+    return None
 
 
 def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
-    """float32/float64: the smaller of two frames, by actual bytes.
+    """float32/float64: the byte-plane frame, or a smaller decimal frame.
 
     The byte-plane frame (dtype ``bytes``) is the BYTE_STREAM_SPLIT trade
     for floating point: exponent/sign bytes compress, mantissa bytes
@@ -566,12 +568,10 @@ def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
     e <= 18 (prices, balances, rates: ``v == rint(v * 10**e) / 10**e``
     bit for bit, see ``_decimal_ints``) competes with a decimal frame
     (dtype ``dec32``/``dec64``, ``e`` in its params): the integers
-    ``rint(v * 10**e)`` through the int codec cascade. Any other chunk
-    competes with a cascade frame (dtype ``int32``/``int64``) over the
-    values' bit patterns, where a low-cardinality column gets dict or
-    RLE instead of eight planes of mostly-random mantissa bytes. All
-    are bit-exact: NaN payloads and -0.0 survive as bits, and a chunk
-    holding one (or an infinity) never takes a decimal frame."""
+    ``rint(v * 10**e)`` through the int codec cascade, kept by actual
+    bytes. Both are bit-exact: NaN payloads and -0.0 survive as bits in
+    the byte planes, and a chunk holding one (or an infinity) never
+    takes a decimal frame."""
     kind, np_dtype = _FLOAT_DTYPES[arr.type]
     blob = b""
     if arr.null_count:
@@ -587,14 +587,8 @@ def encode_float_column(arr: pa.Array) -> tuple[str, bytes]:
     if decimal is not None:
         e, ints = decimal
         cascade = _int_frame(ints, f"dec{8 * a.itemsize}", extra={"e": e})
-    else:
-        bits = a.view(f"<i{a.itemsize}")
-        selection = select_int_codec(bits)
-        # a plain cascade payload is the byte-plane frame's bytes again
-        cascade = (_int_frame(bits, bits.dtype.name, selection)
-                   if selection[0] != "plain" else frame)
-    if len(cascade) < len(frame):
-        frame = cascade
+        if len(cascade) < len(frame):
+            frame = cascade
     return kind, blob + frame
 
 
@@ -621,7 +615,7 @@ def decode_float_column(kind: str, blob: bytes) -> pa.Array:
         vals = np.frombuffer(data, dtype=np.dtype(frames[0].params["dt"]))
     elif frames[0].dtype in ("dec32", "dec64"):
         vals = _decode_decimal_frame(frames[0])
-    else:
+    else:  # int32/int64 over the bit patterns, as earlier builds wrote
         bits = _decode_int_frame(frames[0])
         vals = bits.view(f"<f{bits.itemsize}")
     if valid is None:
@@ -766,7 +760,7 @@ def encode_nested_column(arr: pa.Array) -> tuple[str, bytes]:
     ``encode_column`` — so the leaves of an arbitrarily nested column get
     the same lightweight codecs as top-level columns (FOR/delta ints,
     dict/FSST strings, floats as byte planes or through the int cascade
-    on their decimal integers or their bits), where the r2 Arrow-IPC
+    on their decimal integers), where the r2 Arrow-IPC
     fallback got zero codec wins. Write-side inversion of the reference's
     field-by-field nested decode (``ParquetValueConverter.java:282-337``
     struct, ``:513-596`` lists incl. legacy layouts, ``:598-679`` maps,

@@ -1,7 +1,6 @@
-"""f32/f64 chunks: the smaller of the byte-plane frame and an int-codec
-cascade frame, over the values' decimal integers ``rint(v * 10**e)`` when
-every value is a decimal and over their bit patterns otherwise;
-bit-exact whichever wins."""
+"""f32/f64 chunks: the byte-plane frame, or an int-codec cascade frame
+over the values' decimal integers ``rint(v * 10**e)`` when every value is
+a decimal and that frame is smaller; bit-exact whichever wins."""
 
 from __future__ import annotations
 
@@ -118,6 +117,8 @@ def test_float_roundtrip_bit_exact_and_never_larger(arr):
     assert len(blob) <= len(_legacy_blob(arr))
     if _has_non_decimal(arr):
         assert framing.read_frames(blob)[-1].dtype not in ("dec32", "dec64")
+    if framing.read_frames(blob)[-1].dtype not in ("dec32", "dec64"):
+        assert blob == _legacy_blob(arr)
 
 
 @pytest.mark.parametrize("dt", [pa.float32(), pa.float64()])
@@ -135,6 +136,29 @@ def test_decimal_chunks_take_a_decimal_frame_at_their_exponent(dt):
         assert frame.dtype == ("dec32" if dt == pa.float32() else "dec64")
         assert frame.params["e"] == e
         assert len(blob) < len(_legacy_blob(arr))
+        assert _bits_equal(E.decode_column(kind, blob), arr), e
+
+
+@pytest.mark.parametrize("dt", [pa.float32(), pa.float64()])
+def test_finer_values_between_sampled_positions_raise_the_exponent(dt):
+    """Tenths with a few hundredths, then thousandths, where the sample
+    does not look: the sample passes at e=1, and the check moves on to
+    the exponent the refused values need instead of giving up."""
+    fdt = dt.to_pandas_dtype()
+    vals = np.random.default_rng(5).integers(-10**5, 10**5, 3000) / 10.0
+    step = len(vals) // E._DEC_SAMPLE
+    for e, at, finer in ((1, [], []), (2, [1, 500, 2999], [1234.57, -0.01,
+                                                           77.77]),
+                         (3, [2, 1001], [7.125, -3.001])):
+        assert all(i % step for i in at)
+        vals[at] = finer
+        a = vals.astype(fdt)
+        assert E._decimal_ints(a[::step])[0] == 1
+        arr = pa.array(a, type=dt)
+        kind, blob = E.encode_column(arr)
+        frame = framing.read_frames(blob)[-1]
+        assert frame.dtype == ("dec32" if dt == pa.float32() else "dec64")
+        assert frame.params["e"] == e
         assert _bits_equal(E.decode_column(kind, blob), arr), e
 
 
@@ -207,8 +231,9 @@ def test_low_cardinality_floats_take_the_cascade():
 
 def test_byte_plane_frame_kept_when_the_cascade_is_larger():
     # p_retailprice's TPC-H formula in thirds of a cent, which no decimal
-    # exponent represents: the bit-pattern cascade picks dict from its
-    # sample, and its frame comes out ~3x the byte-plane frame
+    # exponent represents: a cascade over the bit patterns, which earlier
+    # builds tried, picks dict from its sample and comes out ~3x the
+    # byte-plane frame the chunk keeps
     k = np.arange(1, 20001)
     cents = 90000 + (k // 10) % 20001 + 100 * (k % 1000)
     arr = pa.array(cents / 300)
