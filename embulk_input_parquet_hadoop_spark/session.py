@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 
@@ -21,6 +22,18 @@ _UDS_DIR = "spark.python.unix.domain.socket.dir"
 # NUL). Spark names each socket "<dir>/.<uuid4>.sock": 43 bytes past <dir>.
 _SUN_PATH_MAX = 107
 _SOCK_NAME_LEN = 43
+_DRIVER_JAVA = "spark.driver.extraJavaOptions"
+_DRIVER_DEFAULT_JAVA = "spark.driver.defaultJavaOptions"
+# The local-mode JVM is driver and executor at once. G1, the JDK's default
+# collector, grows its heap after any young pause that finds recent pauses
+# over ~8% of wall time, so a host that stalls the JVM during a pause
+# leaves the session 100-400 MB larger for the rest of its life (the
+# append_mixed benchmark on a 4-core host: peak RSS 1.24-1.32 GB in most
+# runs, 1.49-1.72 GB in some, same inputs). The parallel collector with
+# fixed generation sizes grows the heap on occupancy alone (1.13-1.15 GB
+# in every run).
+_GC_OPTIONS = "-XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy"
+_COLLECTOR_FLAG = re.compile(r"-XX:\+Use\w+GC\b")
 
 
 def unix_socket_dir(base: str | None = None) -> str | None:
@@ -68,6 +81,13 @@ def get_spark(app_name: str = "columnar-encode",
     On loopback TCP every Python task stalled about 40 ms waiting for its
     partition data (``PythonRunner`` ``finish`` 39-42 ms for a no-op task
     on a 4-core host; 0-1 ms on the Unix socket).
+
+    The JVM runs the parallel collector with fixed generation sizes
+    (``spark.driver.defaultJavaOptions``), so its resident memory does not
+    depend on how long its pauses took. A caller that names a collector in
+    ``spark.driver.extraJavaOptions``, ``JAVA_TOOL_OPTIONS`` or
+    ``JDK_JAVA_OPTIONS`` keeps it (the JVM refuses two), and
+    ``extra_conf`` may set ``spark.driver.defaultJavaOptions`` itself.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -96,8 +116,15 @@ def get_spark(app_name: str = "columnar-encode",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
         "spark.sql.files.maxPartitionBytes": "268435456",
         "spark.ui.enabled": "false",
+        _DRIVER_DEFAULT_JAVA: _GC_OPTIONS,
         **(extra_conf or {}),
     }
+    chosen = " ".join([conf.get(_DRIVER_JAVA, ""),
+                       os.environ.get("JAVA_TOOL_OPTIONS", ""),
+                       os.environ.get("JDK_JAVA_OPTIONS", "")])
+    if conf[_DRIVER_DEFAULT_JAVA] == _GC_OPTIONS \
+            and _COLLECTOR_FLAG.search(chosen):
+        del conf[_DRIVER_DEFAULT_JAVA]
     sock_dir = None
     if _UDS_ENABLED not in conf:
         sock_dir = unix_socket_dir(conf.get(_UDS_DIR))

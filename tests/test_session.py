@@ -95,3 +95,36 @@ def test_worker_channel_runs_on_unix_socket(spark):
         lambda _: os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")).collect()
     # the JVM passes the flag as "True"; pyspark compares it lower-cased
     assert [v.lower() for v in env] == ["true"]
+
+
+def test_collector_default_yields_to_callers_collector(monkeypatch):
+    def built(extra_conf=None, env=None):
+        builder = _FakeBuilder()
+        monkeypatch.setattr(session, "SparkSession",
+                            type("FakeSession", (), {"builder": builder}))
+        for k in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"):
+            monkeypatch.delenv(k, raising=False)
+        for k, v in (env or {}).items():
+            monkeypatch.setenv(k, v)
+        session.get_spark(cores=1, extra_conf={
+            "spark.python.unix.domain.socket.enabled": "false",
+            **(extra_conf or {})})
+        return builder.conf.get("spark.driver.defaultJavaOptions")
+
+    gc = "-XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy"
+    assert built() == gc
+    # other driver options leave the default in place
+    assert built({"spark.driver.extraJavaOptions": "-XX:-UsePerfData"}) == gc
+    # a collector named elsewhere is kept: the JVM refuses two
+    assert built({"spark.driver.extraJavaOptions": "-XX:+UseG1GC"}) is None
+    assert built(env={"JAVA_TOOL_OPTIONS": "-XX:+UseSerialGC"}) is None
+    assert built(env={"JDK_JAVA_OPTIONS": "-XX:+UseZGC -Xss2m"}) is None
+    assert built({"spark.driver.defaultJavaOptions": "-Xss2m"}) == "-Xss2m"
+
+
+def test_jvm_runs_the_parallel_collector_with_fixed_sizes(spark):
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    names = {b.getName() for b in mf.getGarbageCollectorMXBeans()}
+    assert names == {"PS Scavenge", "PS MarkSweep"}
+    assert "-XX:-UseAdaptiveSizePolicy" in list(
+        mf.getRuntimeMXBean().getInputArguments())
