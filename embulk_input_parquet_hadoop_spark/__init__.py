@@ -8,9 +8,10 @@ parquet_hadoop/ParquetHadoopInputPlugin.java:78-190) inverted into an
 *encode* pipeline per the north rule: read tables of pre-tokenized training
 sequences ``(doc_id string, tokens array<int32>, n_tok int32, source
 string)``, encode every column chunk with lightweight codecs (dictionary,
-RLE, FSST-style symbol table, bit-packing, frame-of-reference), pick the
-codec per column chunk by sampled cost estimation inside Arrow-vectorized
-UDFs, and guarantee decode is bit-identical to the input.
+delta, bit-packing, frame-of-reference, exception planes), pick the codec
+per column chunk by sampled cost estimation inside Arrow-vectorized UDFs,
+and guarantee decode is bit-identical to the input. RLE and FSST-style
+symbol-table frames that earlier builds wrote are still decoded.
 
 Layout:
   codecs/     numpy codec kernels + chunk framing (no Spark imports)

@@ -27,8 +27,12 @@ for zstd over its byte-plane transposition (stride ``params["ps"]``) —
 a general-purpose outer stage on top of the lightweight codec, analogous
 to Parquet's SNAPPY/GZIP/ZSTD block compression on top of PLAIN/RLE/DICT
 pages (the reference reads such files:
-``compat/TestParquetCompatibility.java:52-57``). ``"z": 1`` (zlib) is
-only decoded, for frames older builds wrote.
+``compat/TestParquetCompatibility.java:52-57``).
+
+Written codecs: int frames plain/for/delta/dict/xp (rans in entropy
+mode), byte frames ``bytes_plain``. Read only, for frames earlier builds
+wrote: ``rle`` int frames, ``fsst`` byte frames, the zlib outer stage
+(``"z": 1``) and the ``int32``/``int64`` float bit-pattern frames.
 """
 
 from __future__ import annotations
@@ -38,8 +42,8 @@ import zlib
 import numpy as np
 import pyarrow as pa
 
-from ..codecs import framing, fsst
-from ..codecs.intcodecs import INT_CODECS
+from ..codecs import framing
+from ..codecs.intcodecs import INT_DECODERS
 from .select import encode_best
 
 _COMPRESS_GAIN = 0.96
@@ -192,47 +196,32 @@ def _entropy_could_win(a: np.ndarray, frame_bytes: int) -> bool:
 
 def _decode_int_frame(frame: framing.Frame) -> np.ndarray:
     payload = _decompress(frame)
-    _, dec = INT_CODECS[frame.codec]
-    vals = dec(payload, frame.params, frame.n)
+    vals = INT_DECODERS[frame.codec](payload, frame.params, frame.n)
     np_dtype = {"int8": np.int8, "int16": np.int16, "int32": np.int32,
                 "int64": np.int64}[frame.dtype]
     return vals.astype(np_dtype)
 
 
 def _bytes_frame(data: bytes) -> bytes:
-    """Byte-payload frame: plain vs FSST, each with the optional zstd outer
-    stage, chosen by *total* frame cost — payload plus the serialized
-    symbol table (the table rides in the frame params, so an uncounted
-    table would silently inflate small chunks)."""
-    import json
+    """Byte-payload frame: the raw bytes with the optional zstd stage."""
+    payload, params = _maybe_compress(data, {})
+    return framing.write_frame("bytes_plain", "bytes", len(data), params,
+                               payload)
 
-    plain_payload, plain_params = _maybe_compress(data, {})
-    best = ("bytes_plain", plain_payload, plain_params,
-            len(plain_payload) + len(json.dumps(plain_params)))
-    # FSST training costs ~100ms per chunk; when zstd alone already gets
-    # below ~4x, the symbol table wins <1% — skip the attempt entirely
-    if data and len(plain_payload) / len(data) <= 0.25:
-        codec, payload, params, _ = best
-        return framing.write_frame(codec, "bytes", len(data), params,
-                                   payload)
-    fsst_payload, fsst_params = fsst.encode(data)
-    if fsst_params["syms"]:
-        fsst_payload, fsst_params = _maybe_compress(fsst_payload,
-                                                    fsst_params)
-        cost = len(fsst_payload) + len(json.dumps(fsst_params))
-        if cost < best[3]:
-            best = ("fsst", fsst_payload, fsst_params, cost)
-    codec, payload, params, _ = best
-    return framing.write_frame(codec, "bytes", len(data), params, payload)
+
+def _fsst_decode(payload: bytes, params: dict) -> bytes:
+    """Decode an ``fsst`` frame (earlier builds wrote them): each code
+    byte stands for one symbol, and codes never occur in a symbol."""
+    for sym_hex, code in zip(params["syms"], params["codes"]):
+        payload = payload.replace(bytes([code]), bytes.fromhex(sym_hex))
+    return payload
 
 
 def _decode_bytes_frame(frame: framing.Frame) -> bytes:
     payload = _decompress(frame)
     if frame.codec == "fsst":
-        # fsst.decode needs bytes.replace; frames may carry zero-copy views
-        if not isinstance(payload, bytes):
-            payload = bytes(payload)
-        return fsst.decode(payload, frame.params)
+        # bytes.replace needs bytes; frames may carry zero-copy views
+        return _fsst_decode(bytes(payload), frame.params)
     return payload
 
 
@@ -597,7 +586,7 @@ def _decode_decimal_frame(frame: framing.Frame) -> np.ndarray:
     # the CRC covers the payload only: a bad exponent must not scale
     if type(e) is not int or not 0 <= e < len(_DEC_POW10):
         raise framing.FrameError(f"bad decimal exponent {e!r}")
-    _, dec = INT_CODECS[frame.codec]
+    dec = INT_DECODERS[frame.codec]
     ints = dec(_decompress(frame), frame.params, frame.n).astype(
         np.int64, copy=False)
     return _dec_unscale(ints, e, np.float32 if frame.dtype == "dec32"
@@ -680,7 +669,7 @@ def decode_bool_column(blob) -> pa.Array:
 def encode_binary_column(arr: pa.Array) -> tuple[str, bytes]:
     """binary/large_binary: offsets + byte payload, the string encoder's
     machinery without utf-8 semantics (no dictionary probe — opaque blobs
-    rarely repeat; the bytes stage still tries FSST + zstd)."""
+    rarely repeat; the bytes stage is the plain frame + optional zstd)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     blob = b""
@@ -759,7 +748,7 @@ def encode_nested_column(arr: pa.Array) -> tuple[str, bytes]:
     field-wise: validity + offsets + each child recursively through
     ``encode_column`` — so the leaves of an arbitrarily nested column get
     the same lightweight codecs as top-level columns (FOR/delta ints,
-    dict/FSST strings, floats as byte planes or through the int cascade
+    dictionary strings, floats as byte planes or through the int cascade
     on their decimal integers), where the r2 Arrow-IPC
     fallback got zero codec wins. Write-side inversion of the reference's
     field-by-field nested decode (``ParquetValueConverter.java:282-337``

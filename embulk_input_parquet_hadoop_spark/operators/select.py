@@ -4,10 +4,11 @@ The reference *reads* per-column-chunk codec decisions some writer made
 (its fixture ``.meta`` files list ``ENC:PLAIN_DICTIONARY,PLAIN,RLE`` per
 column chunk). This module makes that decision explicit on the write side:
 sample <= ``SAMPLE`` values of the chunk, compute cheap statistics
-(cardinality, run count, value range, sortedness), estimate the encoded
-size of every applicable codec, and pick the argmin. The estimate is then
-checked against the *actual* encoded size of the winner vs. ``plain`` so a
-bad estimate can never make a chunk bigger than plain + one header.
+(cardinality, value range, sortedness), estimate the encoded size of every
+applicable codec (plain, for, delta, dict, xp), and pick the argmin. The
+estimate is then checked against the *actual* encoded size of the winner
+vs. ``plain`` so a bad estimate can never make a chunk bigger than plain +
+one header.
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ class ChunkStats:
     vmin: int
     vmax: int
     card_est: int
-    runs_est: int
     sorted_frac: float
     itemsize: int
     frac_big: float = 1.0  # fraction of sampled (v - vmin) >= 256
@@ -38,7 +38,7 @@ class ChunkStats:
 def stats_of(a: np.ndarray) -> ChunkStats:
     n = len(a)
     if n == 0:
-        return ChunkStats(0, 0, 0, 0, 0, 1.0, a.dtype.itemsize)
+        return ChunkStats(0, 0, 0, 0, 1.0, a.dtype.itemsize)
     if n > SAMPLE:
         # deterministic stratified sample: SAMPLE evenly spaced values
         idx = np.linspace(0, n - 1, SAMPLE).astype(np.int64)
@@ -58,11 +58,9 @@ def stats_of(a: np.ndarray) -> ChunkStats:
                        vmax - vmin + 1)
         card_est = max(card_est, u)
     diffs = np.diff(s.astype(np.int64))
-    runs_sample = int((diffs != 0).sum()) + 1
-    runs_est = min(n, max(1, int(runs_sample * scale)))
     sorted_frac = float((diffs >= 0).mean()) if len(diffs) else 1.0
     frac_big = float((s.astype(np.int64) - vmin >= 256).mean())
-    return ChunkStats(n, vmin, vmax, card_est, runs_est, sorted_frac,
+    return ChunkStats(n, vmin, vmax, card_est, sorted_frac,
                       a.dtype.itemsize, frac_big)
 
 
@@ -80,10 +78,6 @@ def estimate_sizes(st: ChunkStats) -> dict[str, float]:
         avg_delta = max(1, rng // max(st.n, 1))
         w_d = bitpack.bit_width(avg_delta * 4 + 1)
         est["delta"] = st.n * w_d / 8 + _HEADER_OVERHEAD
-    if st.runs_est < st.n / 2:
-        vw = w_for
-        rw = bitpack.bit_width(max(1, st.n // max(st.runs_est, 1)) * 8)
-        est["rle"] = st.runs_est * (vw + rw) / 8 + _HEADER_OVERHEAD
     if st.card_est < st.n / 2:
         iw = bitpack.bit_width(max(st.card_est - 1, 0))
         est["dict"] = (st.card_est * max(w_for, 1) / 8

@@ -269,8 +269,9 @@ def make_encode_fn(wave_id: int, entropy: bool = False):
 # Constant-column injection: types a per-file constant may carry.
 # Partition values in Delta live only in the commit log and in Hive
 # trees only in the directory names — injecting them as constant
-# columns is the only way the encoded output can serve them. Constant
-# columns RLE down to one run per chunk, so the storage cost is nil.
+# columns is the only way the encoded output can serve them. A constant
+# chunk costs a frame header or two: its ints take FOR at width 0 with an
+# empty payload, its strings a one-entry dictionary.
 _CONST_TYPES = {
     "string": pa.string(), "bool": pa.bool_(),
     "int8": pa.int8(), "int16": pa.int16(), "int32": pa.int32(),
@@ -1300,10 +1301,10 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     ``delta_meta.partition_const_columns``; Hive trees:
     ``table.hive_partitioned_files``). Values ride the path DataFrame
     as JSON and cast to the declared type in-task (dates as ISO
-    strings; None = typed null). A constant column RLEs to one run per
-    chunk, so the storage cost is nil; a name colliding with a physical
-    column fails that file loudly. File-source path only, like the
-    delete mappings.
+    strings; None = typed null). A constant chunk takes FOR at width 0
+    (an empty payload), so the storage cost is nil; a name colliding with
+    a physical column fails that file loudly. File-source path only, like
+    the delete mappings.
 
     ``column_renames`` ([{"logical", "physical", "id"}]) maps
     column-mapped physical parquet names to the table's LOGICAL schema

@@ -236,17 +236,25 @@ def verify_files(spark: SparkSession, out_dir: str,
     before waves recorded their plan is replayed with none: if it was
     encoded with deletes, constants or renames it now FAILS this check
     and must be re-encoded to verify — a false fail, never a false
-    pass.
+    pass. So does a tree holding a wave with no chunks_meta lineage (a
+    ``cluster_partitions`` wave, or one whose lineage file is gone):
+    each such wave is named in ``errors``.
     """
     from . import fsutil
     rows = {}
+    unverified = []
     for rec in mf.wave_records(out_dir):
         plan = rec.get("plan", {})
         sides = plan.get("files", {})
         wave_plan = {k: plan[k] for k in ("const_schema", "column_renames")
                      if k in plan}
         wave_plan = json.dumps(wave_plan) if wave_plan else None
-        for p in pipeline.meta_files(out_dir, rec["wave_id"]):
+        metas = pipeline.meta_files(out_dir, rec["wave_id"])
+        if not metas:
+            unverified.append(
+                f"wave {rec['wave_id']}: no chunks_meta lineage to "
+                "replay; check it with verify_path")
+        for p in metas:
             t = fsutil.read_parquet(
                 p, columns=["source_file", "chunk_file", "error"])
             for s, c, e in zip(t.column("source_file").to_pylist(),
@@ -265,7 +273,7 @@ def verify_files(spark: SparkSession, out_dir: str,
         make_verify_files_fn(batch_rows), VERIFY_FILES_ARROW_SCHEMA,
         weights=fsutil.file_sizes([r[0] for r in rows]))
     import pyarrow.compute as pc
-    errs = [e for e in res.column("err").to_pylist() if e]
+    errs = unverified + [e for e in res.column("err").to_pylist() if e]
     mism = int(pc.sum(res.column("mismatch_chunks")).as_py() or 0)
     out = {
         "files_compared": res.num_rows,

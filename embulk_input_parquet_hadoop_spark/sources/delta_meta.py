@@ -786,7 +786,8 @@ def partition_const_columns(scan: dict) -> tuple[dict, dict]:
     string serialization through the table schema's logical types;
     decimal/binary/nested partition types refuse (no unambiguous
     string parse here — partition on simpler types or pre-join).
-    Constant columns RLE to one run per chunk, so storage cost is nil.
+    A constant chunk takes FOR at width 0 (an empty payload), so storage
+    cost is nil.
     """
     pcols = scan["partition_columns"]
     if not pcols:

@@ -3,18 +3,23 @@
 Mirrors the reference's correctness contract — golden value equality after
 decode (``parquet-msgpack/.../spark/SparkTestBase.java:115-133``) — applied
 to every kernel on adversarial arrays: empty, single, constant, sorted,
-negative, full-range int32/int64.
+negative, full-range int32/int64. Codecs that are read but no longer
+written (``rle``, ``fsst``) are pinned by frames an earlier encoder wrote.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from embulk_input_parquet_hadoop_spark.codecs import bitpack, framing, fsst
-from embulk_input_parquet_hadoop_spark.codecs.intcodecs import INT_CODECS
+from embulk_input_parquet_hadoop_spark.codecs import bitpack, framing
+from embulk_input_parquet_hadoop_spark.codecs.intcodecs import (
+    INT_CODECS, rle_decode)
+from embulk_input_parquet_hadoop_spark.operators.encode import (
+    _decode_bytes_frame, decode_column)
 from embulk_input_parquet_hadoop_spark.operators.select import (
     encode_best, select_int_codec)
 
@@ -43,7 +48,7 @@ def test_int_codec_roundtrip(codec, idx):
     try:
         payload, params = enc(arr)
     except OverflowError:
-        pytest.skip("documented codec range limit (FOR/RLE/dict 63-bit, "
+        pytest.skip("documented codec range limit (FOR/dict 63-bit, "
                     "xp 16-bit); encode_best never selects out of range")
     out = dec(payload, params, len(arr))
     np.testing.assert_array_equal(out, arr)
@@ -93,10 +98,11 @@ def test_bitpack_layout_pinned(width):
 
 def test_selector_prefers_sensible_codecs():
     const = np.full(10000, 42, dtype=np.int64)
-    # constant chunk: FOR at width 0 (zero payload) or RLE are both optimal
+    # constant chunk: FOR at width 0, an empty payload
     choice, _, est = select_int_codec(const)
-    assert choice in ("for", "rle")
-    assert est[choice] <= 80  # near-zero payload either way
+    assert choice == "for"
+    assert est[choice] <= 80
+    assert encode_best(const) == ("for", b"", {"min": 42, "w": 0})
     sorted_ids = np.arange(10**6, 10**6 + 50000, dtype=np.int64)
     assert select_int_codec(sorted_ids)[0] == "delta"
     lowcard = RNG.integers(0, 16, 50000).astype(np.int64) * 1_000_003
@@ -217,31 +223,77 @@ def test_frame_crc_detects_corruption():
         framing.read_frames(bytes(blob))
 
 
-FSST_CASES = [
-    b"",
-    b"aaaaaaaaaaaaaaaaaaaaaa",
-    b"the quick brown fox jumps over the lazy dog " * 50,
-    "héllo wörld ünïcode ".encode() * 30,
-    bytes(range(256)) * 4,  # full alphabet -> identity
-    b"ab" * 5000,
+# Column blobs an earlier encoder wrote with the codecs that are now
+# decode-only, and the values they hold: each must decode bit for bit.
+_RLE_BLOBS = [
+    # int64, 4 runs: rle params vw=27 rw=10
+    ("4346010303d00700002e0000001300000000000000d24efbfc7b2272756e7322"
+     "3a342c22766d696e223a2d352c227677223a32372c227277223a31302c22766c"
+     "656e223a31347d48420f00000080ddb2285f0000002cd1870cfa",
+     pa.array(np.repeat(np.array([1000003, -5, 77777777, 42]),
+                        [300, 500, 200, 1000]))),
+    # int16, 3 runs, negative vmin
+    ("4346010301e80700002f0000000b00000000000000ee0053727b2272756e7322"
+     "3a332c22766d696e223a2d3330302c227677223a31342c227277223a31312c22"
+     "766c656e223a367d0000030c0000bcd2823401",
+     pa.array(np.repeat(np.array([-300, 12000, -300], dtype=np.int16),
+                        [700, 90, 1234]))),
+    # int32 with nulls: validity frame, then 5 runs over the filled slots
+    ("434601000587000000020000001100000000000000d52e63c57b7df8ffffffff"
+     "e7ffffffffffffffffffff7f4346010302870000002b00000007000000000000"
+     "0017cb3f6c7b2272756e73223a352c22766d696e223a2d322c227677223a342c"
+     "227277223a362c22766c656e223a337d920209032af01e",
+     pa.array([None] * 3 + [7] * 40 + [None] * 2 + [-2] * 60 + [7] * 30,
+              pa.int32())),
+]
+
+# fsst byte frames: symbols of "a" runs, codes 0..4
+_FSST_BLOBS = [
+    ("str_direct",
+     "434601020312000000110000000d00000000000000b0679c0f7b226669727374"
+     "223a302c2277223a367d0261200ae3401265611ae78122434601060499000000"
+     "5b000000140000000000000043ca60357b2273796d73223a5b22363136313631"
+     "36313631363136313631222c22363136313631363136313631222c2236313631"
+     "36313631222c22363136313631222c2236313631225d2c22636f646573223a5b"
+     "302c312c322c332c345d7d0000000000000000000000000000000000000061",
+     ["a" * k for k in range(1, 18)]),
+    ("str_dict",
+     "434601000529000000020000000600000000000000bee180d07b7dfeffffffff"
+     "014346010103290000000f0000001a0000000000000052e6ccc07b226d696e22"
+     "3a302c2277223a357d2088418a3928a9c59a7b30ca498318a49883925aacb907"
+     "a39c144346010203160000001100000010000000000000007e9f18917b226669"
+     "727374223a302c2277223a367d80401888c23890445998c679a0489a28434601"
+     "0604d20000005b0000001b00000000000000aa96171d7b2273796d73223a5b22"
+     "36313631363136313631363136313631222c2236313631363136313631363122"
+     "2c223631363136313631222c22363136313631222c2236313631225d2c22636f"
+     "646573223a5b302c312c322c332c345d7d000000000000000000000000000000"
+     "000000000000000000000004",
+     [None] + ["a" * k for k in range(1, 21)] * 2),
 ]
 
 
-@pytest.mark.parametrize("idx", range(len(FSST_CASES)))
-def test_fsst_roundtrip(idx):
-    data = FSST_CASES[idx]
-    payload, params = fsst.encode(data)
-    assert fsst.decode(payload, params) == data
+@pytest.mark.parametrize("idx", range(len(_RLE_BLOBS)))
+def test_rle_frames_pinned(idx):
+    hexblob, expected = _RLE_BLOBS[idx]
+    blob = bytes.fromhex(hexblob)
+    frame = framing.read_frames(blob)[-1]
+    assert frame.codec == "rle"
+    vals = rle_decode(frame.payload, frame.params, frame.n)
+    valid = np.asarray(expected.is_valid())
+    np.testing.assert_array_equal(
+        vals[valid], expected.drop_null().to_numpy().astype(np.int64))
+    out = decode_column("int", blob)
+    assert out.type == expected.type and out.equals(expected)
 
 
-def test_fsst_compresses_repetitive_text():
-    data = (b"https://example.com/docs/page?id=" + b"x" * 5) * 400
-    payload, params = fsst.encode(data)
-    assert len(payload) < len(data) * 0.5
-
-
-@given(st.binary(max_size=2000))
-@settings(max_examples=80, deadline=None)
-def test_fsst_roundtrip_hypothesis(data):
-    payload, params = fsst.encode(data)
-    assert fsst.decode(payload, params) == data
+@pytest.mark.parametrize("idx", range(len(_FSST_BLOBS)))
+def test_fsst_frames_pinned(idx):
+    kind, hexblob, expected = _FSST_BLOBS[idx]
+    blob = bytes.fromhex(hexblob)
+    frame = framing.read_frames(blob)[-1]
+    assert frame.codec == "fsst"
+    data = _decode_bytes_frame(frame)
+    distinct = dict.fromkeys(v for v in expected if v is not None)
+    strings = distinct if kind == "str_dict" else expected
+    assert data == "".join(strings).encode()
+    assert decode_column(kind, blob).equals(pa.array(expected, pa.string()))

@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
-from embulk_input_parquet_hadoop_spark.codecs import bitpack, fsst
+from embulk_input_parquet_hadoop_spark.codecs import bitpack
 from embulk_input_parquet_hadoop_spark.codecs.intcodecs import INT_CODECS
 from embulk_input_parquet_hadoop_spark.operators.encode import (
     decode_column, encode_column)
@@ -41,7 +41,7 @@ def test_every_int_codec_roundtrip(vals):
         try:
             payload, params = enc(vals)
         except OverflowError:
-            continue  # documented FOR/RLE/dict range limit
+            continue  # documented FOR/dict range limit
         out = dec(payload, params, len(vals))
         assert np.array_equal(out, vals), name
 
@@ -54,13 +54,6 @@ def test_encode_best_roundtrip_int32(vals):
     _, dec = INT_CODECS[codec]
     assert np.array_equal(dec(payload, params, len(vals)),
                           vals.astype(np.int64))
-
-
-@given(data=st.binary(max_size=2000))
-@settings(**SETTINGS)
-def test_fsst_roundtrip(data):
-    payload, params = fsst.encode(data)
-    assert fsst.decode(payload, params) == data
 
 
 @given(rows=st.lists(st.one_of(

@@ -278,3 +278,27 @@ def test_nested_float_leaves_verify_by_their_bits(spark, tmp_path,
 
     monkeypatch.setattr(verify, "decode_column", unsigned_zero)
     assert verify._verify_one(*args)[4] == 1
+
+
+def test_wave_without_lineage_fails_verify(spark, tmp_path):
+    """A ``cluster_partitions`` wave writes no chunks_meta lineage, so
+    ``verify_files`` cannot replay it: it names the wave instead of
+    passing on the file-source waves alone."""
+    src = tmp_path / "tokens"
+    gen = tmp_path / "gen"
+    generate(str(gen), n_docs=400, seed=5, n_files=2)
+    first, second = sorted(glob.glob(f"{gen}/*.parquet"))
+    src.mkdir()
+    os.replace(first, src / "a.parquet")
+    out = str(tmp_path / "enc")
+    pipeline.encode_path(spark, str(src), out)
+    os.replace(second, src / "b.parquet")
+    pipeline.encode_path(spark, str(src), out, append=True,
+                         cluster_partitions=2)
+    assert sorted(r["wave_id"] for r in mf.wave_records(out)) == [0, 1]
+    assert sum(r["n_rows"] for r in mf.wave_records(out)) == 400
+    v = verify.verify_files(spark, out)
+    assert not v["ok"], v
+    assert v["rows_compared"] == 200
+    assert any(e.startswith("wave 1:") and "verify_path" in e
+               for e in v["errors"]), v
