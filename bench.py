@@ -57,7 +57,7 @@ def ensure_tokens(tag: str, n_docs: int, n_files: int) -> str:
 
 
 def run_encode(cores: int, tokens_path: str, tag: str,
-               repeats: int = 2, entropy: bool = False) -> dict:
+               repeats: int = 2) -> dict:
     """Best-of-N encode wall time (the sandbox's CPU-steal noise makes
     single runs vary +-50%; best-of reflects the engine, not the host)."""
     spark = get_spark(f"bench-encode-{tag}", cores=cores,
@@ -68,7 +68,7 @@ def run_encode(cores: int, tokens_path: str, tag: str,
         spark.read.parquet(tokens_path).limit(1000).count()
         # Untimed warmup through the FULL Python encode path (one source
         # file): pays the python daemon start, worker forks, and module
-        # imports (and, under entropy, the rANS model code) OUTSIDE the
+        # imports (and the C kernels' .so load) OUTSIDE the
         # timed wall. Without this every scaling leg charges session
         # cold-start to its wall — a per-leg constant that deflates the
         # high-core legs far more than the low-core ones (r4 verdict:
@@ -80,15 +80,14 @@ def run_encode(cores: int, tokens_path: str, tag: str,
             scratch = f"{WORK}/warmup_{tag}"
             shutil.rmtree(scratch, ignore_errors=True)
             pipeline.encode_path(
-                spark, tokens_path, scratch, waves=1, entropy=entropy,
+                spark, tokens_path, scratch, waves=1,
                 input_files=[f"{tokens_path}/{one[0]}"])
             shutil.rmtree(scratch, ignore_errors=True)
         best = None
         for _ in range(repeats):
             shutil.rmtree(out, ignore_errors=True)
             t0 = time.perf_counter()
-            totals = pipeline.encode_path(spark, tokens_path, out, waves=1,
-                                          entropy=entropy)
+            totals = pipeline.encode_path(spark, tokens_path, out, waves=1)
             wall = time.perf_counter() - t0
             if best is None or wall < best["wall_s"]:
                 best = {"cores": cores, "wall_s": wall,
@@ -196,11 +195,12 @@ def run_queries(sf_dir: str) -> tuple[dict, dict]:
 def main() -> None:
     sf = _sf_from_dir(SF_DIR)
     os.makedirs(WORK, exist_ok=True)
-    # Pin the rANS C build before ANY timed leg: on a machine with a cold
-    # cache every worker that misses the .so races its own `cc` (up to 32
-    # concurrent compiles of the same source) inside the first entropy
-    # encode's timed wall. Importing here compiles once on the driver;
-    # workers then CDLL-load the cached .so.
+    # Pin the C kernel build (the xp codec and the rANS decoder) before
+    # ANY timed leg: on a machine with a cold cache every worker that
+    # misses the .so races its own `cc` (up to 32 concurrent compiles of
+    # the same source) inside the first encode's timed wall. Importing
+    # here compiles once on the driver; workers then CDLL-load the cached
+    # .so.
     from embulk_input_parquet_hadoop_spark.codecs import _rans_c  # noqa: F401
     tokens_path = ensure_tokens(f"sf{sf}", datagen.sf_to_docs(sf), 32)
     # Scaling leg on the big table: N vs 4N cores, same input (the sandbox
@@ -286,19 +286,6 @@ def main() -> None:
     ref_bytes = parquet_reference_size(tokens_path)
     enc_disk = dir_size(f"{high['out_dir']}/chunks")
 
-    # Opt-in entropy mode (order-1 rANS competitor), measured on the
-    # SCALE table — its ~2.8M-token chunks amortize the context model;
-    # the sf-sized table's chunks are too small for rans to ever win the
-    # per-frame pick-best, so measuring it there would show nothing.
-    # Best-of-2 like the headline legs: the r5 single-shot legs recorded
-    # 39.8M/50.1M in steal windows where best-of-3 measured 77-82M —
-    # a secondary trade-curve point still shouldn't record the host's
-    # bad minute.
-    ent = run_encode(CPUS, scale_path, f"ent-c{CPUS}", repeats=2,
-                     entropy=True)
-    ent_disk = dir_size(f"{ent['out_dir']}/chunks")
-    scale_disk = dir_size(f"{high_scale['out_dir']}/chunks")
-
     # decode-verify (correctness gate inside the bench).
     # Timed leg: the channel-free positional verify (decode + compare in
     # the workers, each source file on its own — the path that scales), on
@@ -323,14 +310,7 @@ def main() -> None:
         vf_scale["ok"] = bool(vf_scale["ok"] and vf_warm["ok"])
         vres = verify.verify_path(spark, tokens_path, high["out_dir"])
         vf_sf = verify.verify_files(spark, high["out_dir"])
-        # entropy-mode tree must decode bit-exactly through the same
-        # read path (rans frames dispatch on codec id)
-        t0 = time.perf_counter()
-        vf_ent = verify.verify_files(spark, ent["out_dir"])
-        ent_decode_tps = vf_ent["tokens_compared"] / (
-            time.perf_counter() - t0)
-        vres["ok"] = bool(vres["ok"] and vf_scale["ok"] and vf_sf["ok"]
-                          and vf_ent["ok"])
+        vres["ok"] = bool(vres["ok"] and vf_scale["ok"] and vf_sf["ok"])
     finally:
         spark.stop()
 
@@ -395,23 +375,6 @@ def main() -> None:
             "bytes_per_token_parquet_zstd":
                 round(ref_bytes / high["n_tokens"], 4),
             "vs_parquet_zstd": round(enc_disk / ref_bytes, 4),
-        },
-        "entropy_mode": {
-            "n_tokens": ent["n_tokens"],
-            "tokens_per_sec": round(ent["tokens_per_sec"], 1),
-            "bytes_per_token_on_disk": round(
-                ent_disk / ent["n_tokens"], 4),
-            "bytes_per_token_default": round(
-                scale_disk / high_scale["n_tokens"], 4),
-            "size_vs_default": round(
-                (ent_disk / ent["n_tokens"])
-                / (scale_disk / high_scale["n_tokens"]), 4),
-            "speed_vs_default": round(
-                ent["tokens_per_sec"] / high_scale["tokens_per_sec"], 4),
-            # decode+compare of the rans-bearing tree (verify_files leg),
-            # so the trade curve records all three axes: size, encode
-            # speed, decode speed
-            "decode_verify_tokens_per_sec": round(ent_decode_tps, 1),
         },
         "verify_ok": vres["ok"],
         "decode_verify_tokens_per_sec": round(

@@ -1,28 +1,27 @@
-"""Optional C hot loops: the rANS coder (``codecs/rans.py``) and the
-exception-plane codec (``codecs/intcodecs.py`` ``xp_*``) share this one
-compile-and-cache module — one source blob, one .so, one build.
+"""Optional C hot loops: the rANS decode loop (``codecs/rans.py``) and
+the exception-plane codec (``codecs/intcodecs.py`` ``xp_*``) share this
+one compile-and-cache module — one source blob, one .so, one build.
 
-The numpy coder is the REFERENCE implementation: it runs the lane loop
-as O(n / L) interpreter steps of L-wide vector ops, which bounds encode
-at a few Mtok/s/core no matter the lane count (measured: 4.6 -> 5.1
-Mtok/s from 1024 -> 8192 lanes — the bottleneck is per-step kernel
-dispatch, not arithmetic). This module compiles the same two loops as
-scalar C with the system compiler at first use and binds them via
-ctypes; the frame format, model, and emitted bits are IDENTICAL
-(equality-tested against the numpy path on random inputs), so trees
-written by either implementation decode with either.
+The numpy implementations stay the REFERENCE: the rANS decoder runs its
+lane loop as O(n / L) interpreter steps of L-wide vector ops, bounded by
+per-step kernel dispatch rather than arithmetic. This module compiles the
+same loops as scalar C with the system compiler at first use and binds
+them via ctypes; the output is IDENTICAL (the tests decode every pinned
+rANS frame both ways and compare the xp kernels on random inputs).
 
 Build notes:
 - cc -O2 -shared -fPIC into a content-addressed path under
   ``$XDG_CACHE_HOME`` (fallback /tmp) + atomic rename, so concurrent
   Spark workers racing to build collide harmlessly on the same bytes.
-- No compiler / failed build -> ``LIB is None`` and rans.py keeps the
-  numpy path. Nothing is installed; only the stdlib + cc are used.
-- Input trust: payloads reach either decoder only AFTER the frame
-  CRC32 check (``framing.decode_frames`` raises on mismatch), so the C
-  loop never sees corrupt bytes short of a 2^-32 CRC collision. The
-  numpy path's bounds-checked indexing is the extra defense-in-depth
-  there; set ``SPARK_GRAFT_NO_RANS_C=1`` when decoding untrusted trees.
+- No compiler / failed build -> ``LIB is None`` and the callers keep the
+  numpy paths. Nothing is installed; only the stdlib + cc are used.
+- Input trust: ``framing.read_frames`` checks each payload's CRC32
+  before either decoder sees it, but the frame header (value count,
+  params) is not CRC-covered. The C rANS loop therefore bounds every
+  stream read by its lane's word end, and ``rans_decode`` raises
+  ``framing.FrameError`` unless every lane ends at the encoder's start
+  state with its words consumed, on both paths.
+  ``SPARK_GRAFT_NO_RANS_C=1`` forces the numpy paths.
 """
 
 from __future__ import annotations
@@ -36,173 +35,29 @@ import tempfile
 _SRC = r"""
 #include <stdint.h>
 
-/* push one value: at most one 32-bit word out, then the state update */
-static inline uint64_t push(uint64_t s, uint64_t f, uint64_t c,
-                            uint64_t M, uint64_t thresh,
-                            uint32_t *buf, int64_t *w) {
-    if (s >= thresh) { buf[(*w)++] = (uint32_t)s; s >>= 32; }
-    uint64_t q = s / f;
-    return q * M + (s - q * f) + c;
-}
-
-/* Encode all lanes. Per position the caller pre-selected (fsel, csel,
-   mb) = dedicated entry or the ESC entry, plus the shared-table entry
-   (f0, c0, mb0) used when escflag is set. Emission order per escaped
-   position: shared value first, then ESC — matching the numpy coder. */
-/* Both encode loops are block-interleaved like the decoder below: a
-   single lane is one serial chain through push()'s division (~25-cycle
-   latency each) and, in the dense variant, gathers into 32MB planes —
-   lockstepping BLK independent lanes overlaps those latencies. Each
-   lane's positions are still visited strictly descending and its words
-   land in its own buf region, so emitted bits are IDENTICAL. The
-   ragged head (lanes one longer than the block minimum) encodes first —
-   descending order means the extra position precedes the lockstep. */
-void rans_encode_lanes(int64_t lanes, const int64_t *starts,
-                       const int64_t *lens,
-                       const uint64_t *fsel, const uint64_t *csel,
-                       const uint8_t *mb, const uint8_t *escflag,
-                       const uint64_t *f0, const uint64_t *c0,
-                       uint8_t mb0,
-                       uint32_t *buf, int64_t maxw,
-                       int64_t *wptr, uint64_t *states) {
-    enum { BLK = 128 };
-    uint64_t s[BLK];
-    int64_t w[BLK];
-    uint64_t M0 = 1ULL << mb0;
-    for (int64_t b0 = 0; b0 < lanes; b0 += BLK) {
-        int64_t nb = lanes - b0 < BLK ? lanes - b0 : BLK;
-        int64_t minlen = lens[b0];
-        for (int64_t i = 1; i < nb; i++)
-            if (lens[b0 + i] < minlen) minlen = lens[b0 + i];
-        for (int64_t i = 0; i < nb; i++) { s[i] = 1ULL << 32; w[i] = 0; }
-        for (int64_t i = 0; i < nb; i++) {      /* ragged head first */
-            int64_t l = b0 + i;
-            uint32_t *b = buf + l * maxw;
-            for (int64_t k = lens[l] - 1; k >= minlen; k--) {
-                int64_t p = starts[l] + k;
-                if (escflag[p]) {
-                    uint64_t th0 = f0[p] << (64 - mb0);
-                    s[i] = push(s[i], f0[p], c0[p], M0, th0, b, &w[i]);
-                }
-                uint64_t M = 1ULL << mb[p];
-                uint64_t th = fsel[p] << (64 - mb[p]);
-                s[i] = push(s[i], fsel[p], csel[p], M, th, b, &w[i]);
-            }
-        }
-        for (int64_t k = minlen - 1; k >= 0; k--) {
-            for (int64_t i = 0; i < nb; i++) {
-                int64_t l = b0 + i;
-                int64_t p = starts[l] + k;
-                uint32_t *b = buf + l * maxw;
-                if (escflag[p]) {
-                    uint64_t th0 = f0[p] << (64 - mb0);
-                    s[i] = push(s[i], f0[p], c0[p], M0, th0, b, &w[i]);
-                }
-                uint64_t M = 1ULL << mb[p];
-                uint64_t th = fsel[p] << (64 - mb[p]);
-                s[i] = push(s[i], fsel[p], csel[p], M, th, b, &w[i]);
-            }
-        }
-        for (int64_t i = 0; i < nb; i++) {
-            wptr[b0 + i] = w[i];
-            states[b0 + i] = s[i];
-        }
-    }
-}
-
-/* Fused dense-plane encode: per position looks up (tid<<16|u) in the
-   INTERLEAVED fc gather plane (fc[2k] = f, fc[2k+1] = cum) inside the
-   loop — no 2M-element numpy intermediates, and the (f, c) pair of a
-   key shares one cache line (separate planes cost two misses per
-   position; the loop is gather-miss-bound). Valid only when the dense
-   plane exists (ntab <= 64); the pre-gathered entry point above covers
-   the searchsorted case. */
-static inline uint64_t enc1_dense(uint64_t s, int64_t p,
-                                  const int64_t *u, const int64_t *tids,
-                                  const int64_t *fc,
-                                  const uint64_t *esc_f,
-                                  const uint64_t *esc_c,
-                                  const uint8_t *mbits,
-                                  int64_t shared_tid, uint8_t mb0,
-                                  uint64_t M0, uint32_t *b, int64_t *w) {
-    int64_t tid = tids[p];
-    int64_t key = ((tid << 16) | u[p]) << 1;
-    uint64_t f = (uint64_t)fc[key];
-    uint64_t c, M, th;
-    if (f == 0) {                       /* escape */
-        int64_t sk = ((shared_tid << 16) | u[p]) << 1;
-        uint64_t f0 = (uint64_t)fc[sk];
-        th = f0 << (64 - mb0);
-        s = push(s, f0, (uint64_t)fc[sk + 1], M0, th, b, w);
-        f = esc_f[tid];
-        c = esc_c[tid];
-    } else {
-        c = (uint64_t)fc[key + 1];
-    }
-    uint8_t mb = mbits[tid];
-    M = 1ULL << mb;
-    th = f << (64 - mb);
-    return push(s, f, c, M, th, b, w);
-}
-
-void rans_encode_lanes_dense(int64_t lanes, const int64_t *starts,
-                             const int64_t *lens,
-                             const int64_t *u, const int64_t *tids,
-                             const int64_t *fc,
-                             const uint64_t *esc_f, const uint64_t *esc_c,
-                             const uint8_t *mbits, int64_t shared_tid,
-                             uint32_t *buf, int64_t maxw,
-                             int64_t *wptr, uint64_t *states) {
-    enum { BLK = 128 };
-    uint64_t s[BLK];
-    int64_t w[BLK];
-    uint8_t mb0 = mbits[shared_tid];
-    uint64_t M0 = 1ULL << mb0;
-    for (int64_t b0 = 0; b0 < lanes; b0 += BLK) {
-        int64_t nb = lanes - b0 < BLK ? lanes - b0 : BLK;
-        int64_t minlen = lens[b0];
-        for (int64_t i = 1; i < nb; i++)
-            if (lens[b0 + i] < minlen) minlen = lens[b0 + i];
-        for (int64_t i = 0; i < nb; i++) { s[i] = 1ULL << 32; w[i] = 0; }
-        for (int64_t i = 0; i < nb; i++) {      /* ragged head first */
-            int64_t l = b0 + i;
-            uint32_t *b = buf + l * maxw;
-            for (int64_t k = lens[l] - 1; k >= minlen; k--)
-                s[i] = enc1_dense(s[i], starts[l] + k, u, tids, fc,
-                                  esc_f, esc_c, mbits, shared_tid, mb0,
-                                  M0, b, &w[i]);
-        }
-        for (int64_t k = minlen - 1; k >= 0; k--) {
-            for (int64_t i = 0; i < nb; i++) {
-                int64_t l = b0 + i;
-                s[i] = enc1_dense(s[i], starts[l] + k, u, tids, fc,
-                                  esc_f, esc_c, mbits, shared_tid, mb0,
-                                  M0, buf + l * maxw, &w[i]);
-            }
-        }
-        for (int64_t i = 0; i < nb; i++) {
-            wptr[b0 + i] = w[i];
-            states[b0 + i] = s[i];
-        }
-    }
-}
-
 /* pop one symbol from table tid; reads at most one stream word.
-   M is a power of two, so the state split is mask+shift, never a div. */
+   M is a power of two, so the state split is mask+shift, never a div.
+   A read at or past the lane's word end `re` yields 0 and still
+   advances *rp, so an overrun shows in the final read pointer. */
 static inline uint16_t pop(uint64_t *sp, int64_t tid,
                            const int64_t *slot_off,
                            const uint16_t *sym_plane,
                            const uint32_t *f_plane,
                            const uint32_t *c_plane,
                            const uint8_t *mbits,
-                           const uint32_t *stream, int64_t *rp) {
+                           const uint32_t *stream, int64_t *rp,
+                           int64_t re) {
     uint64_t s = *sp;
     uint8_t mb = mbits[tid];
     uint64_t slot = s & ((1ULL << mb) - 1);
     int64_t g = slot_off[tid] + (int64_t)slot;
     uint16_t sym = sym_plane[g];
     s = (uint64_t)f_plane[g] * (s >> mb) + slot - (uint64_t)c_plane[g];
-    if (s < (1ULL << 32)) s = (s << 32) | (uint64_t)stream[(*rp)++];
+    if (s < (1ULL << 32)) {
+        uint32_t w = *rp < re ? stream[*rp] : 0;
+        (*rp)++;
+        s = (s << 32) | (uint64_t)w;
+    }
     *sp = s;
     return sym;
 }
@@ -216,7 +71,10 @@ static inline uint16_t pop(uint64_t *sp, int64_t tid,
    so gather misses overlap. Output writes stay within BLK cache lines
    per step (out[starts[l]+k] with k advancing), and each lane still
    reads its own stream region strictly in order — emitted values and
-   consumed words are IDENTICAL to the lane-at-a-time loop. */
+   consumed words are IDENTICAL to the lane-at-a-time loop. Lane l
+   reads only words [rptr[l], rend[l]); on return states[] and rptr[]
+   hold each lane's final state and read pointer for the caller's
+   end-state check. */
 void rans_decode_lanes(int64_t lanes, const int64_t *starts,
                        const int64_t *lens,
                        const int64_t *slot_off, const uint16_t *sym_plane,
@@ -224,11 +82,11 @@ void rans_decode_lanes(int64_t lanes, const int64_t *starts,
                        const uint8_t *mbits,
                        const int64_t *ctx_map, int64_t B,
                        int64_t shared_tid, uint16_t esc_sym,
-                       const uint32_t *stream, const int64_t *rstart,
-                       const uint64_t *states, int64_t *out) {
+                       const uint32_t *stream, int64_t *rptr,
+                       const int64_t *rend, uint64_t *states, int64_t *out) {
     enum { BLK = 128 };
     uint64_t s[BLK];
-    int64_t r[BLK], prev[BLK];
+    int64_t r[BLK], e[BLK], prev[BLK];
     int64_t Bm = B - 1;
     for (int64_t b0 = 0; b0 < lanes; b0 += BLK) {
         int64_t nb = lanes - b0 < BLK ? lanes - b0 : BLK;
@@ -237,17 +95,20 @@ void rans_decode_lanes(int64_t lanes, const int64_t *starts,
             if (lens[b0 + i] < minlen) minlen = lens[b0 + i];
         for (int64_t i = 0; i < nb; i++) {
             s[i] = states[b0 + i];
-            r[i] = rstart[b0 + i];
+            r[i] = rptr[b0 + i];
+            e[i] = rend[b0 + i];
             prev[i] = 0;
         }
         for (int64_t k = 0; k < minlen; k++) {
             for (int64_t i = 0; i < nb; i++) {
                 int64_t tid = ctx_map[prev[i] & Bm];
                 uint16_t sym = pop(&s[i], tid, slot_off, sym_plane,
-                                   f_plane, c_plane, mbits, stream, &r[i]);
+                                   f_plane, c_plane, mbits, stream, &r[i],
+                                   e[i]);
                 if (sym == esc_sym)
                     sym = pop(&s[i], shared_tid, slot_off, sym_plane,
-                              f_plane, c_plane, mbits, stream, &r[i]);
+                              f_plane, c_plane, mbits, stream, &r[i],
+                              e[i]);
                 out[starts[b0 + i] + k] = (int64_t)sym;
                 prev[i] = (int64_t)sym;
             }
@@ -258,70 +119,23 @@ void rans_decode_lanes(int64_t lanes, const int64_t *starts,
             for (int64_t k = minlen; k < lens[l]; k++) {
                 int64_t tid = ctx_map[prev[i] & Bm];
                 uint16_t sym = pop(&s[i], tid, slot_off, sym_plane,
-                                   f_plane, c_plane, mbits, stream, &r[i]);
+                                   f_plane, c_plane, mbits, stream, &r[i],
+                                   e[i]);
                 if (sym == esc_sym)
                     sym = pop(&s[i], shared_tid, slot_off, sym_plane,
-                              f_plane, c_plane, mbits, stream, &r[i]);
+                              f_plane, c_plane, mbits, stream, &r[i],
+                              e[i]);
                 out[starts[l] + k] = (int64_t)sym;
                 prev[i] = (int64_t)sym;
             }
+            states[l] = s[i];
+            rptr[l] = r[i];
         }
     }
-}
-
-/* Joint (candidate-context, symbol) counting for the model build: the
-   numpy path sorts a ~n-element key array (np.unique) which costs more
-   than the whole C lane loop on big chunks; one open-addressing pass
-   counts the same pairs in O(n) probes. hkeys must arrive filled with
-   -1 (hcnt is written only on first insert). Returns the number of
-   distinct keys, or -1 once distinct would pass ~70% load — the caller
-   retries with a larger table, so the result is table-size-independent
-   and identical to np.unique's (after the caller's sort-by-key). */
-int64_t pair_count(int64_t n, const int64_t *ctx, const int64_t *u,
-                   const int64_t *cand_rank, int64_t hbits,
-                   int64_t *hkeys, int64_t *hcnt) {
-    int64_t size = 1LL << hbits;
-    int64_t mask = size - 1;
-    int64_t cap = size - (size >> 2) - (size >> 4);  /* ~0.69 * size */
-    int64_t distinct = 0;
-    /* the probes are random over a table far past L2 — a plain loop
-       runs ~1 miss in flight (measured 38 ms / 2M probes). Batch the
-       hash computation and PREFETCH each batch's slots before probing;
-       counts (and, after the caller's sort, the whole result) are
-       order-independent, so batching changes nothing but latency. */
-    enum { PBLK = 64 };
-    int64_t keys[PBLK], js[PBLK];
-    for (int64_t i0 = 0; i0 < n; i0 += PBLK) {
-        int64_t hi = i0 + PBLK < n ? i0 + PBLK : n;
-        int64_t m = 0;
-        for (int64_t i = i0; i < hi; i++) {
-            int64_t r = cand_rank[ctx[i]];
-            if (r < 0) continue;
-            int64_t key = (r << 16) | u[i];
-            uint64_t h = (uint64_t)key * 0x9E3779B97F4A7C15ULL;
-            int64_t j = (int64_t)(h >> 32) & mask;
-            keys[m] = key; js[m] = j; m++;
-            __builtin_prefetch(&hkeys[j], 1);
-            __builtin_prefetch(&hcnt[j], 1);
-        }
-        for (int64_t t = 0; t < m; t++) {
-            int64_t key = keys[t], j = js[t];
-            for (;;) {
-                if (hkeys[j] == key) { hcnt[j]++; break; }
-                if (hkeys[j] < 0) {
-                    if (distinct >= cap) return -1;
-                    hkeys[j] = key; hcnt[j] = 1; distinct++;
-                    break;
-                }
-                j = (j + 1) & mask;
-            }
-        }
-    }
-    return distinct;
 }
 
 /* --- exception-plane (xp) codec kernels (codecs/intcodecs.py) ----------
-   Same build/dispatch infrastructure as the rANS loops above; the numpy
+   Same build/dispatch infrastructure as the rANS loop above; the numpy
    implementations in intcodecs.py stay the byte-exact reference. The
    encode split is one fused streaming pass emitting all three planes
    ([lo bytes][big-endian exception bitmap][hi bytes of the >=256
@@ -450,22 +264,11 @@ def _build() -> ctypes.CDLL | None:
     u32p = ctypes.POINTER(ctypes.c_uint32)
     u16p = ctypes.POINTER(ctypes.c_uint16)
     u8p = ctypes.POINTER(ctypes.c_uint8)
-    lib.rans_encode_lanes.argtypes = [
-        ctypes.c_int64, i64p, i64p, u64p, u64p, u8p, u8p, u64p, u64p,
-        ctypes.c_uint8, u32p, ctypes.c_int64, i64p, u64p]
-    lib.rans_encode_lanes.restype = None
-    lib.rans_encode_lanes_dense.argtypes = [
-        ctypes.c_int64, i64p, i64p, i64p, i64p, i64p, u64p, u64p,
-        u8p, ctypes.c_int64, u32p, ctypes.c_int64, i64p, u64p]
-    lib.rans_encode_lanes_dense.restype = None
     lib.rans_decode_lanes.argtypes = [
         ctypes.c_int64, i64p, i64p, i64p, u16p, u32p, u32p, u8p,
         i64p, ctypes.c_int64, ctypes.c_int64, ctypes.c_uint16, u32p,
-        i64p, u64p, i64p]
+        i64p, i64p, u64p, i64p]
     lib.rans_decode_lanes.restype = None
-    lib.pair_count.argtypes = [
-        ctypes.c_int64, i64p, i64p, i64p, ctypes.c_int64, i64p, i64p]
-    lib.pair_count.restype = ctypes.c_int64
     i32p = ctypes.POINTER(ctypes.c_int32)
     lib.xp_split_i32.argtypes = [
         ctypes.c_int64, i32p, ctypes.c_int32, u8p, u8p, u8p]

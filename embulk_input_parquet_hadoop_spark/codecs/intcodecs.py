@@ -9,8 +9,10 @@ RLE, BIT_PACKED — see the ``ENC:`` lines in
 ``parquet-msgpack/src/test/resources/test-data/*/*.meta`` and the
 dictionary-expansion decode path in
 ``parquet-msgpack/src/main/java/jp/co/cyberagent/parquet/msgpack/read/
-converter/ParquetStringConverter.java:44-57``). ``rle`` is decode-only:
-earlier builds wrote it; it saved under 0.001% on the one corpus it won.
+converter/ParquetStringConverter.java:44-57``). ``rle`` and ``rans``
+(``codecs/rans.py``) are decode-only: earlier builds wrote them. ``rle``
+saved under 0.001% on the one corpus it won; the opt-in ``rans`` mode
+saved 0–4% at a 40–50x slower encode.
 
 Values are treated as signed 64-bit; the caller (column encoder) records the
 original dtype and casts back after decode.
@@ -23,6 +25,7 @@ import ctypes
 import numpy as np
 
 from . import _rans_c, bitpack
+from .rans import rans_decode
 
 _I64_MAX = (1 << 63) - 1
 _I64_MIN = -(1 << 63)
@@ -268,14 +271,7 @@ INT_CODECS = {
     "xp": (xp_encode, xp_decode),
 }
 
-# the order-1 entropy codec lives in its own module (it carries a model
-# and a pyarrow-zstd dependency); registered here so frame decode
-# dispatches uniformly. It is NOT in select.py's default estimates —
-# encode reaches it only through the opt-in entropy mode.
-from . import rans as _rans  # noqa: E402
-
-INT_CODECS["rans"] = (_rans.rans_encode, _rans.rans_decode)
-
-# every int codec a frame may name: the written ones plus ``rle``
+# every int codec a frame may name: the written ones plus the decode-only
 INT_DECODERS = {name: dec for name, (_, dec) in INT_CODECS.items()}
 INT_DECODERS["rle"] = rle_decode
+INT_DECODERS["rans"] = rans_decode

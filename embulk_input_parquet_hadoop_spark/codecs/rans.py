@@ -1,52 +1,29 @@
-"""Order-1 context-modeled rANS entropy codec for token-id chunks.
+"""Decoder for order-1 context-modeled rANS int frames (codec id 8).
 
-The lightweight cascade (FOR/dict/xp + outer zstd) stops ~5% above the
-corpus's order-0 entropy floor and ~8-13% above the practical bucketed
-order-1 floors (``jobs/entropy_floor.py`` measures both). This codec
-closes that gap with classic range-variant ANS (Duda 2013; the tANS
-sibling is what zstd's FSE implements) driven by an order-1 context
-model: the coding table for each token is chosen by the PREVIOUS token's
-bucket (``prev & (B-1)``), which is exactly the conditional structure the
-floor job quantified.
+Builds up to commit f1ef865 could write these frames in an opt-in
+entropy mode; this build only reads them (pinned by
+``tests/fixtures/rans``). A frame codes a chunk with range-variant ANS
+(Duda 2013) driven by an order-1 context model: the coding table for
+each value is chosen by the PREVIOUS value's bucket (``prev & (B-1)``).
+Each *dedicated* table holds a context's frequent symbols plus an ESC
+entry that escapes to a shared order-0 table over the chunk's alphabet.
 
-Design constraints, in order:
+Frame payload: ``[u32 model blob length][u32 raw model length]
+[zstd model blob][u32 word stream]``. The model holds ``B``, the context
+map, each table's quantized frequencies (precision ``2^mbits``), and
+each lane's final encoder state and word count. The chunk is split into
+``L`` contiguous lanes (the first ``n % L`` one value longer), each an
+independent rANS stream whose words sit in lane order.
 
-1. **Bit-exact roundtrip** on any int array with ``max - min <= 65534``
-   and >= 2 distinct values (the caller gates; chunk CRC rides in the
-   frame like every codec).
-2. **No per-value Python.** The coder runs L independent rANS lanes over
-   L contiguous segments; every per-symbol operation is a numpy op over
-   the lane vector, so the interpreter executes ``O(n / L)`` steps of
-   ``O(L)``-wide arithmetic. Escapes are a masked sub-step. When the
-   system compiler is available, the same two loops run as scalar C
-   (``_rans_c.py``) — bit-identical frames, equality-tested; the numpy
-   form remains the reference implementation and the fallback.
-3. **Compact per-chunk model.** Closed-alphabet order-1 tables would be
-   megabytes (dense contexts); instead each *dedicated* context keeps
-   only its frequent symbols plus an ESC entry, escaping to a shared
-   order-0 table over the chunk's full alphabet. Context and symbol
-   selection are cost-based: a context earns a dedicated table only if
-   its measured conditional-entropy gain (in bits, from the actual joint
-   counts) exceeds the serialized table cost. The model is zstd-packed
-   into the frame payload, so a chunk with no order-1 structure pays a
-   few hundred bytes, not a fixed 26 MB.
+rANS invariants (uint64 states, 32-bit renormalization): a state lies
+in [2^32, 2^64); a pop reads at most one word (``state < 2^32``). The
+encoder started every lane at state 2^32, so an exact decode ends each
+lane there with all of its words read; ``rans_decode`` raises
+``framing.FrameError`` otherwise.
 
-rANS invariants (uint64 states, 32-bit renormalization):
-    state in [2^32, 2^64); per-table precision M_t = 2^mbits (mbits 14
-    for dedicated tables, up to 20 for the shared table — a 50k-symbol
-    Zipf alphabet needs M >> alphabet or the min-1 frequency floor
-    crushes the head symbols' probabilities, which is exactly what a
-    16-bit-precision variant measured: +0.6 B/token). Encode emits at
-    most one 32-bit word per push (``state >= f << (64 - mbits)``);
-    decode reads at most one per pop (``state < 2^32``) — fixed bounds,
-    so both renormalizations are single masked vector ops.
-
-The reference decodes Parquet pages whose value streams sit on exactly
-this kind of entropy layer (RLE/bit-pack under snappy/gzip page
-compression, ``compat/TestParquetCompatibility.java:52-57``); this module
-is the write-side inversion taken one step further than zstd can go,
-because zstd's FSE stage is order-0 over *bytes* while this models
-order-1 over *tokens*.
+Two decoders give identical output: scalar C (``_rans_c.py``) when the
+system compiler is available, and the numpy reference, which runs the
+lanes as ``O(n / L)`` steps of ``L``-wide vector ops.
 """
 
 from __future__ import annotations
@@ -56,22 +33,11 @@ import ctypes
 import numpy as np
 import pyarrow as pa
 
-from . import _rans_c
+from . import _rans_c, framing
 
 _ZSTD = pa.Codec("zstd", compression_level=1)
 
 ESC = 0xFFFF          # reserved symbol id marking "escape to shared table"
-_MAX_RANGE = 0xFFFE   # so real symbols never collide with ESC
-_SHARED_MBITS_MAX = 20
-_DED_MBITS = 14       # dedicated tables: few hundred entries, 2^14 plenty
-_B_DEFAULT = 4096     # context buckets (prev & (B-1))
-# the significance work is done by the per-pair gain gate below; these two
-# are only cheap pre-filters. _MIN_CTX=1024 (the first cut) silently
-# disabled the model on any chunk where n/B < 1024 — a 400k-token chunk
-# with strong bigram structure earned ZERO tables and coded at order-0
-_MIN_CTX = 32         # contexts below this count can't amortize a table
-_MIN_SYM = 4          # per-context symbol inclusion floor
-_ENTRY_COST_BITS = 28.0   # serialized+quantization cost per table entry
 
 
 def _lane_layout(n: int, lanes: int) -> tuple[np.ndarray, np.ndarray, int, int]:
@@ -84,221 +50,33 @@ def _lane_layout(n: int, lanes: int) -> tuple[np.ndarray, np.ndarray, int, int]:
     return starts, lens, base, rem
 
 
-def _quantize(counts: np.ndarray, mbits: int) -> np.ndarray:
-    """Deterministic largest-remainder quantization of positive counts to
-    frequencies >= 1 summing to exactly 2^mbits."""
-    m = 1 << mbits
-    k = len(counts)
-    if k > m:
-        raise ValueError(f"{k} entries exceed precision {m}")
-    total = int(counts.sum())
-    scaled = counts.astype(np.float64) * (m / total)
-    f = np.floor(scaled).astype(np.int64)
-    np.maximum(f, 1, out=f)
-    diff = m - int(f.sum())
-    if diff > 0:
-        # hand surplus slots to the largest remainders (ties: lower index)
-        rema = scaled - np.floor(scaled)
-        order = np.lexsort((np.arange(k), -rema))
-        f[order[:diff]] += 1
-    elif diff < 0:
-        # reclaim from the largest frequencies that stay >= 1
-        order = np.lexsort((np.arange(k), -f))
-        take = order[f[order] > 1]
-        idx = 0
-        while diff < 0 and idx < len(take):
-            room = int(f[take[idx]]) - 1
-            cut = min(room, -diff)
-            f[take[idx]] -= cut
-            diff += cut
-            idx += 1
-        if diff < 0:
-            raise ValueError("cannot quantize: too many entries for M")
-    return f
-
-
 class _Model:
-    """Quantized coding tables + dense lookup planes shared by both sides."""
+    """Quantized coding tables and the slot -> (sym, f, cumbase) decode
+    planes, concatenated over tables."""
 
-    __slots__ = ("B", "ctx_map", "tables", "mbits", "slot_off",
-                 "sym_of_slot", "f_of_slot", "cbase_of_slot",
-                 "esc_f", "esc_c", "shared_tid")
+    __slots__ = ("B", "ctx_map", "mbits", "slot_off", "sym_of_slot",
+                 "f_of_slot", "cbase_of_slot", "shared_tid")
 
     def __init__(self, B: int, ctx_map: np.ndarray,
                  tables: list[tuple[np.ndarray, np.ndarray]],
                  mbits: np.ndarray):
         self.B = B
         self.ctx_map = ctx_map          # uint16[B] -> table id
-        self.tables = tables            # [(syms u16 sorted, qf i64)]
         self.mbits = mbits              # uint8 per table
         self.shared_tid = len(tables) - 1
         sizes = (1 << mbits.astype(np.int64))
         self.slot_off = np.concatenate(
             [[0], np.cumsum(sizes)]).astype(np.int64)
-        # decode slot planes are LAZY (ensure_slot_planes): the encoder
-        # never reads them and their np.repeat fills cost ~6% of a
-        # 2M-token encode. ESC entries come straight from the tables
-        # (esc_c = sum(qf[:-1]) — the cum base of the last entry).
-        self.sym_of_slot = None
-        self.f_of_slot = None
-        self.cbase_of_slot = None
-        self.esc_f = np.zeros(len(tables), dtype=np.uint32)
-        self.esc_c = np.zeros(len(tables), dtype=np.uint32)
+        total = int(sizes.sum())
+        self.sym_of_slot = np.empty(total, dtype=np.uint16)
+        self.f_of_slot = np.empty(total, dtype=np.uint32)
+        self.cbase_of_slot = np.empty(total, dtype=np.uint32)
         for t, (syms, qf) in enumerate(tables):
-            if len(syms) and syms[-1] == ESC:
-                self.esc_f[t] = qf[-1]
-                self.esc_c[t] = int(qf.sum()) - int(qf[-1])
-
-    def ensure_slot_planes(self) -> None:
-        """Build the concatenated slot -> (sym, f, cumbase) decode
-        planes on first decode use."""
-        if self.sym_of_slot is not None:
-            return
-        sizes = (1 << self.mbits.astype(np.int64))
-        self.sym_of_slot = np.empty(int(sizes.sum()), dtype=np.uint16)
-        self.f_of_slot = np.empty(int(sizes.sum()), dtype=np.uint32)
-        self.cbase_of_slot = np.empty(int(sizes.sum()), dtype=np.uint32)
-        for t, (syms, qf) in enumerate(self.tables):
             cum = np.concatenate([[0], np.cumsum(qf)[:-1]]).astype(np.int64)
             o = self.slot_off[t]
             self.sym_of_slot[o:o + sizes[t]] = np.repeat(syms, qf)
             self.f_of_slot[o:o + sizes[t]] = np.repeat(qf, qf)
             self.cbase_of_slot[o:o + sizes[t]] = np.repeat(cum, qf)
-
-
-def _pair_counts_c(u: np.ndarray, ctx: np.ndarray,
-                   cand_rank: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """``np.unique(rank << 16 | sym, return_counts=True)`` over the
-    candidate contexts, via the C open-addressing counter: one O(n)
-    probe pass instead of building the masked key array and sorting it
-    (the two together cost more than the whole C lane loop on 2M-token
-    chunks — measured 63 of 158 ms/call). The final sort-by-key over
-    the ~distinct keys keeps the output exactly np.unique's, so the
-    model — and therefore every emitted frame — is bit-identical to the
-    numpy path's."""
-    # as_ptr passes raw pointers — the C loop reads int64 strides, so a
-    # caller handing e.g. int32 views would count garbage silently
-    assert u.dtype == ctx.dtype == cand_rank.dtype == np.int64
-    assert u.flags.c_contiguous and ctx.flags.c_contiguous \
-        and cand_rank.flags.c_contiguous
-    n = len(u)
-    hbits = max(14, int(n).bit_length() - 1)
-    while True:
-        hkeys = np.full(1 << hbits, -1, dtype=np.int64)
-        hcnt = np.empty(1 << hbits, dtype=np.int64)
-        i64 = ctypes.c_int64
-        d = _rans_c.LIB.pair_count(
-            n, _rans_c.as_ptr(ctx, i64), _rans_c.as_ptr(u, i64),
-            _rans_c.as_ptr(cand_rank, i64), hbits,
-            _rans_c.as_ptr(hkeys, i64), _rans_c.as_ptr(hcnt, i64))
-        if d >= 0:
-            break
-        hbits += 2  # ~70% load reached: rare, retry 4x larger
-    filled = np.flatnonzero(hkeys >= 0)
-    keys = hkeys[filled]
-    cnts = hcnt[filled]
-    if len(keys) and int(keys.max()) < (1 << 31) and n < (1 << 32):
-        # pack (key, count) into one int64 and sort ONCE — np.argsort's
-        # indirection costs ~4x a direct sort at these sizes, and keys
-        # are distinct so the order is exactly sort-by-key
-        packed = np.sort((keys << 32) | cnts)
-        return packed >> 32, packed & np.int64(0xFFFFFFFF)
-    order = np.argsort(keys)
-    return keys[order], cnts[order]
-
-
-def _build_model(u: np.ndarray, ctx: np.ndarray, B: int) -> _Model:
-    """Cost-based model construction from the chunk's own joint counts."""
-    cnt0 = np.bincount(u)
-    present = np.flatnonzero(cnt0)
-    n = len(u)
-    p0 = cnt0[present] / n
-    bits0 = np.full(len(cnt0), 64.0)
-    bits0[present] = -np.log2(p0)        # order-0 cost of each symbol
-
-    # joint (ctx, sym) counts, sparse: only heavy contexts are candidates
-    ctx_counts = np.bincount(ctx, minlength=B)
-    cand = np.flatnonzero(ctx_counts >= _MIN_CTX)
-    ctx_map = np.full(B, 0, dtype=np.uint16)
-    tables: list[tuple[np.ndarray, np.ndarray]] = []
-    if len(cand):
-        cand_rank = np.full(B, -1, dtype=np.int64)
-        cand_rank[cand] = np.arange(len(cand))
-        if _rans_c.LIB is not None:
-            pairs, pair_cnt = _pair_counts_c(u, ctx, cand_rank)
-        else:
-            mask = cand_rank[ctx] >= 0
-            key = cand_rank[ctx[mask]] * 65536 + u[mask]
-            pairs, pair_cnt = np.unique(key, return_counts=True)
-        pctx = (pairs >> 16).astype(np.int64)    # candidate rank
-        psym = (pairs & 0xFFFF).astype(np.int64)
-        m_of = ctx_counts[cand][pctx].astype(np.float64)  # ctx totals
-        # per-pair gain of coding sym via a dedicated table at its exact
-        # conditional probability vs the shared order-0 table
-        cond_bits = -np.log2(pair_cnt / m_of)
-        gain = pair_cnt * (bits0[psym] - cond_bits)
-        keep = (pair_cnt >= _MIN_SYM) & (gain > _ENTRY_COST_BITS)
-        # a context earns its table only if kept-symbol gains beat the
-        # per-entry serialization cost (ESC entry included)
-        kept_gain = np.bincount(pctx[keep], weights=gain[keep],
-                                minlength=len(cand))
-        kept_n = np.bincount(pctx[keep], minlength=len(cand))
-        ok = kept_gain > (_ENTRY_COST_BITS * (kept_n + 1) + 64)
-        # capacity: entries + ESC must fit the dedicated precision
-        ok &= kept_n <= (1 << _DED_MBITS) - 1
-        for rank in np.flatnonzero(ok):
-            sel = keep & (pctx == rank)
-            syms = psym[sel]
-            cnts = pair_cnt[sel].astype(np.int64)
-            esc_cnt = max(int(ctx_counts[cand[rank]] - cnts.sum()), 1)
-            tables.append((
-                np.concatenate([syms, [ESC]]).astype(np.uint16),
-                np.concatenate([cnts, [esc_cnt]]),
-            ))
-            ctx_map[cand[rank]] = len(tables)  # shifted below
-    # shared order-0 table is last; ctx_map: 0 was a placeholder meaning
-    # "shared", dedicated ids were stored +1 — rewrite to final ids
-    shared_tid = len(tables)
-    final_map = np.where(ctx_map == 0, shared_tid, ctx_map - 1)
-    tables.append((present.astype(np.uint16), cnt0[present].astype(np.int64)))
-    mbits = np.full(len(tables), _DED_MBITS, dtype=np.uint8)
-    # precision must dwarf the alphabet: with M ~ alphabet the min-1
-    # floor would consume most of the mass and squash the Zipf head
-    shared_bits = int(np.ceil(np.log2(max(len(present), 2)))) + 5
-    mbits[shared_tid] = max(_DED_MBITS, min(_SHARED_MBITS_MAX,
-                                            shared_bits))
-    qtables = [(syms, _quantize(cnt, int(mbits[t])))
-               for t, (syms, cnt) in enumerate(tables)]
-    return _Model(B, final_map.astype(np.uint16), qtables, mbits)
-
-
-def _serialize_model(model: _Model, lanes: int, states: np.ndarray,
-                     wcounts: np.ndarray) -> bytes:
-    """Model layout tuned for the outer zstd pass: symbols as sorted
-    deltas (a dense Zipf alphabet becomes runs of 1s), quantized
-    frequencies as a uint8 low plane plus sparse (idx, hi) exceptions
-    (post-quantization most frequencies are 1, so qf-1 is runs of 0s).
-    The naive (u16 sym, u32 qf) pairs cost 0.07 B/token on a 50k-vocab
-    2M-token chunk — this layout cuts the serialized model ~6x."""
-    parts = [np.array([model.B, len(model.tables)],
-                      dtype=np.uint32).tobytes(),
-             model.ctx_map.tobytes(), model.mbits.tobytes()]
-    for syms, qf in model.tables:
-        s64 = syms.astype(np.int64)
-        dsyms = np.diff(s64, prepend=0)
-        qm1 = (qf - 1).astype(np.int64)
-        lo = (qm1 & 0xFF).astype(np.uint8)
-        exc = np.flatnonzero(qm1 >= 256)
-        parts.append(np.array([len(syms), len(exc)],
-                              dtype=np.uint32).tobytes())
-        parts.append(dsyms.astype(np.uint16).tobytes())
-        parts.append(lo.tobytes())
-        parts.append(exc.astype(np.uint32).tobytes())
-        parts.append((qm1[exc] >> 8).astype(np.uint32).tobytes())
-    parts.append(states.astype(np.uint64).tobytes())
-    parts.append(wcounts.astype(np.uint32).tobytes())
-    raw = b"".join(parts)
-    return bytes(_ZSTD.compress(raw)), len(raw)
 
 
 def _deserialize_model(blob: bytes, rawlen: int,
@@ -335,231 +113,18 @@ def _deserialize_model(blob: bytes, rawlen: int,
             states, wcounts)
 
 
-def _pick_lanes(n: int) -> int:
-    """Lane count trades coder state overhead (12 B/lane in the frame)
-    for fewer interpreter-level steps (n / lanes). Measured on 2M-token
-    chunks: n//1024 capped at 2048 is +0.3% frame size but +40% encode
-    speed vs n//2048 capped at 1024."""
-    return int(min(2048, max(64, n // 1024))) if n >= 128 else max(1, n)
-
-
-def _pack_payload(model: _Model, lanes: int, states: np.ndarray,
-                  wcounts: np.ndarray, buf: np.ndarray,
-                  maxw: int) -> bytes:
-    """Frame payload from per-lane word buffers: model blob + per-lane
-    streams reversed (emission is LIFO, the decoder reads forward)."""
-    model_blob, rawlen = _serialize_model(model, lanes, states, wcounts)
-    total_w = int(wcounts.sum())
-    stream = np.empty(total_w, dtype=np.uint32)
-    off = 0
-    for li in range(lanes):
-        w = int(wcounts[li])
-        o = li * maxw
-        stream[off:off + w] = buf[o:o + w][::-1]
-        off += w
-    return (np.array([len(model_blob), rawlen], dtype=np.uint32).tobytes()
-            + model_blob + stream.tobytes())
-
-
-def rans_encode(arr: np.ndarray, B: int = _B_DEFAULT) -> tuple[bytes, dict]:
-    n = len(arr)
-    if n == 0:
-        return b"", {"min": 0, "deg": 1, "B": B, "L": 0}
-    a = arr.astype(np.int64, copy=False)
-    vmin = int(a.min())
-    vmax = int(a.max())
-    if vmax - vmin > _MAX_RANGE:
-        raise OverflowError("rans range exceeds 16 bits - 1")
-    if n < 2 or vmax == vmin:
-        # a constant (or single-value) chunk carries zero entropy; the
-        # coder proper needs >= 2 distinct symbols, so store just the value
-        return b"", {"min": vmin, "deg": 1, "B": B, "L": 0}
-    u = (a - vmin).astype(np.int64)
-    lanes = _pick_lanes(n)
-    starts, lens, base, rem = _lane_layout(n, lanes)
-
-    ctx = np.empty(n, dtype=np.int64)
-    ctx[1:] = u[:-1] & (B - 1)
-    ctx[starts] = 0
-    model = _build_model(u, ctx, B)
-
-    # dense per-position coding plan, all vectorized up front ------------
-    tids = model.ctx_map[ctx].astype(np.int64)
-    ntab = len(model.tables)
-    if _rans_c.LIB is not None and ntab <= 64:
-        # fully fused C path: the per-position plane lookup happens
-        # inside the lane loop — no 2M-element intermediates at all
-        fc = _dense_planes(model)
-        maxw = int(2 * (n // lanes + 2) + 4)
-        buf = np.empty(lanes * maxw, dtype=np.uint32)
-        wptr = np.zeros(lanes, dtype=np.int64)
-        states_c = np.empty(lanes, dtype=np.uint64)
-        i64, u64, u32, u8 = (ctypes.c_int64, ctypes.c_uint64,
-                             ctypes.c_uint32, ctypes.c_uint8)
-        _rans_c.LIB.rans_encode_lanes_dense(
-            lanes, _rans_c.as_ptr(starts, i64), _rans_c.as_ptr(lens, i64),
-            _rans_c.as_ptr(u, i64), _rans_c.as_ptr(tids, i64),
-            _rans_c.as_ptr(fc, i64),
-            _rans_c.as_ptr(model.esc_f.astype(np.uint64), u64),
-            _rans_c.as_ptr(model.esc_c.astype(np.uint64), u64),
-            _rans_c.as_ptr(np.ascontiguousarray(model.mbits), u8),
-            int(model.shared_tid), _rans_c.as_ptr(buf, u32), maxw,
-            _rans_c.as_ptr(wptr, i64), _rans_c.as_ptr(states_c, u64))
-        return (_pack_payload(model, lanes, states_c, wptr, buf, maxw),
-                {"min": vmin, "B": B, "L": lanes})
-    poskey = (tids << 16) | u
-    if ntab <= 64:
-        # dense (tid, sym) gather plane: 64 tables x 65536 x 16B = 64MB
-        # ceiling, one fancy-index instead of a log-k searchsorted
-        fc = _dense_planes(model)
-        f = fc[poskey << 1]
-        found = f > 0
-        c = fc[(poskey << 1) | 1]
-        st = model.shared_tid
-        off0 = np.int64(st) << 16
-        f0 = fc[(off0 | u) << 1]
-        c0 = fc[((off0 | u) << 1) | 1]
-    else:
-        allkeys, allf, allc = _encode_planes(model)
-        j = np.searchsorted(allkeys, poskey)
-        j = np.minimum(j, len(allkeys) - 1)
-        found = allkeys[j] == poskey
-        f = np.where(found, allf[j], 0)
-        c = np.where(found, allc[j], 0)
-        st = model.shared_tid
-        skey = (np.int64(st) << 16) | u
-        js = np.searchsorted(allkeys, skey)
-        f0 = allf[js]
-        c0 = allc[js]
-    f = np.where(found, f, model.esc_f[tids]).astype(np.uint64)
-    c = np.where(found, c, model.esc_c[tids]).astype(np.uint64)
-    mb = model.mbits[tids].astype(np.uint64)
-    f0 = f0.astype(np.uint64)
-    c0 = c0.astype(np.uint64)
-    mb0 = np.uint64(model.mbits[st])
-
-    if _rans_c.LIB is not None:
-        # scalar C lane loop over the pre-gathered per-position plan
-        # (the >64-table case): same emission order, bit-identical
-        # output (tests force both paths and compare)
-        maxw = int(2 * (n // lanes + 2) + 4)
-        buf = np.empty(lanes * maxw, dtype=np.uint32)
-        wptr = np.zeros(lanes, dtype=np.int64)
-        states_c = np.empty(lanes, dtype=np.uint64)
-        escflag = (~found).astype(np.uint8)
-        i64, u64, u32, u8 = (ctypes.c_int64, ctypes.c_uint64,
-                             ctypes.c_uint32, ctypes.c_uint8)
-        _rans_c.LIB.rans_encode_lanes(
-            lanes, _rans_c.as_ptr(starts, i64), _rans_c.as_ptr(lens, i64),
-            _rans_c.as_ptr(f, u64), _rans_c.as_ptr(c, u64),
-            _rans_c.as_ptr(mb.astype(np.uint8), u8),
-            _rans_c.as_ptr(escflag, u8),
-            _rans_c.as_ptr(f0, u64), _rans_c.as_ptr(c0, u64),
-            int(mb0), _rans_c.as_ptr(buf, u32), maxw,
-            _rans_c.as_ptr(wptr, i64), _rans_c.as_ptr(states_c, u64))
-        return (_pack_payload(model, lanes, states_c, wptr, buf, maxw),
-                {"min": vmin, "B": B, "L": lanes})
-
-    # step-major plan matrices: row s_i holds every lane's
-    # (f, c, M=2^mbits, renorm threshold, esc) for its s_i-th value, so
-    # the hot loop reads contiguous rows instead of doing strided
-    # gathers per step — and does NO variable-count shifts (measured
-    # slower than 64-bit division on this numpy): the threshold
-    # f << (64-mbits) and the table size M are precomputed en masse, so
-    # the per-step state update is q = s // f; s' = q*M + (s - q*f) + c.
-    # Rows past a lane's length are clamped junk, never read (the tail
-    # step slices [:rem]). Scratch: ~44 bytes/value; freed at return.
-    steps = base + (1 if rem else 0)
-    posm = np.minimum(starts[None, :] + np.arange(steps)[:, None],
-                      n - 1)
-    thresh = f << (np.uint64(64) - mb)
-    Mv = (np.uint64(1) << mb)
-    fm = f[posm]
-    cm = c[posm].astype(np.uint32)
-    Mm = Mv[posm].astype(np.uint32)
-    thm = thresh[posm]
-    escm = (~found)[posm]
-    esc_rows = np.flatnonzero(escm.any(axis=1))
-    del posm
-    thresh0 = f0 << (np.uint64(64) - mb0)
-    M0 = np.uint64(1) << mb0
-
-    # lane-parallel backward coding --------------------------------------
-    state = np.full(lanes, 1 << 32, dtype=np.uint64)
-    maxw = int(2 * (base + 1) + 4)
-    buf = np.empty(lanes * maxw, dtype=np.uint32)  # flat: row l at l*maxw
-    wptr = np.zeros(lanes, dtype=np.int64)
-    wbase = np.arange(lanes, dtype=np.int64) * maxw
-    U32 = np.uint64(32)
-    MASK32 = np.uint64(0xFFFFFFFF)
-
-    def push_sub(idx, fv, cv, Mvv, thv):
-        s = state[idx]  # fancy indexing: already a copy
-        need = s >= thv
-        if need.any():
-            ni = idx[need]
-            buf[wbase[ni] + wptr[ni]] = s[need] & MASK32
-            wptr[ni] += 1
-            s[need] >>= U32
-        q = s // fv
-        state[idx] = q * Mvv + (s - q * fv) + cv
-
-    esc_rows_set = set(esc_rows.tolist())
-    for s_i in range(steps - 1, -1, -1):
-        full = s_i < base
-        if s_i in esc_rows_set:
-            em = escm[s_i] if full else escm[s_i, :rem]
-            ei = np.flatnonzero(em)
-            ep = starts[ei] + s_i
-            push_sub(ei, f0[ep], c0[ep], M0, thresh0[ep])
-        if not full:
-            push_sub(np.arange(rem, dtype=np.int64), fm[s_i, :rem],
-                     cm[s_i, :rem], Mm[s_i, :rem], thm[s_i, :rem])
-            continue
-        # full-lane fast path: whole-array state ops, no fancy indexing
-        fv = fm[s_i]
-        need = state >= thm[s_i]
-        if need.any():
-            ni = np.flatnonzero(need)
-            buf[wbase[ni] + wptr[ni]] = state[ni] & MASK32
-            wptr[ni] += 1
-            state[ni] >>= U32
-        q = state // fv
-        state[:] = q * Mm[s_i] + (state - q * fv) + cm[s_i]
-
-    return (_pack_payload(model, lanes, state, wptr, buf, maxw),
-            {"min": vmin, "B": B, "L": lanes})
-
-
-def _dense_planes(model: _Model) -> np.ndarray:
-    """INTERLEAVED (f, cum) gather plane indexed by tid<<16|sym:
-    fc[2k] = f, fc[2k+1] = cum, so one position's pair sits in one
-    cache line — the separate-array layout cost TWO misses per encoded
-    position and the fused C loop is gather-miss-bound. f == 0 marks
-    'symbol not in table' (quantized frequencies are always >= 1)."""
-    ntab = len(model.tables)
-    fc = np.zeros(ntab << 17, dtype=np.int64)
-    for t, (syms, qf) in enumerate(model.tables):
-        real = syms != ESC
-        cum = np.concatenate([[0], np.cumsum(qf)[:-1]])
-        k = (np.int64(t) << 16) | syms[real].astype(np.int64)
-        fc[k << 1] = qf[real]
-        fc[(k << 1) | 1] = cum[real]
-    return fc
-
-
-def _encode_planes(model: _Model) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Globally sorted (tid<<16|sym) -> (f, cum) planes: one searchsorted
-    serves every position's table lookup."""
-    keys, fs, cs = [], [], []
-    for t, (syms, qf) in enumerate(model.tables):
-        real = syms != ESC
-        cum = np.concatenate([[0], np.cumsum(qf)[:-1]])
-        keys.append((np.int64(t) << 16) | syms[real].astype(np.int64))
-        fs.append(qf[real])
-        cs.append(cum[real])
-    return (np.concatenate(keys), np.concatenate(fs).astype(np.int64),
-            np.concatenate(cs).astype(np.int64))
+def _check_end_state(state: np.ndarray, rptr: np.ndarray,
+                     rend: np.ndarray) -> None:
+    """The encoder starts every lane at state 2^32, so an exact decode
+    ends each lane there with all of its words read. The frame CRC
+    covers the payload but not the header's ``n``: a wrong ``n`` lays
+    the lanes out differently and fails this check instead of decoding
+    a different column."""
+    if not (np.array_equal(rptr, rend)
+            and bool((state == np.uint64(1 << 32)).all())):
+        raise framing.FrameError(
+            "rANS frame inconsistent: a lane did not end at the encoder's "
+            "start state with its words consumed (wrong value count?)")
 
 
 def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
@@ -568,28 +133,22 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
     if params.get("deg"):
         return np.full(n, params["min"], dtype=np.int64)
     lanes = params["L"]
-    B = params["B"]
     mlen, rawlen = np.frombuffer(payload, dtype=np.uint32, count=2)
     model, state, wcounts = _deserialize_model(
         bytes(payload[8:8 + int(mlen)]), int(rawlen), lanes)
-    model.ensure_slot_planes()
+    B = model.B
     raw_stream = np.frombuffer(payload, dtype=np.uint32,
                                offset=8 + int(mlen))
     starts, lens, base, rem = _lane_layout(n, lanes)
     rptr = np.concatenate([[0], np.cumsum(wcounts)[:-1]]).astype(np.int64)
-    # the C loop does no bounds checking (the numpy path raises
-    # IndexError on a short stream) — reject internally-inconsistent
-    # frames (truncation that slipped past the CRC, or a caller handing
-    # a cut buffer straight to rans_decode) before handing it pointers
+    rend = rptr + wcounts
+    # lane l owns words [rptr[l], rend[l]); the C loop bounds its reads
+    # by rend, which is only safe when the last lane ends in the buffer
     if int(wcounts.sum()) != len(raw_stream):
-        raise ValueError(
+        raise framing.FrameError(
             f"rANS frame inconsistent: lane word counts sum to "
             f"{int(wcounts.sum())} but stream holds {len(raw_stream)} "
             f"words (truncated frame?)")
-    if int(lens.sum()) != n:
-        raise ValueError(
-            f"rANS frame inconsistent: lane layout covers {int(lens.sum())} "
-            f"values for n={n}")
 
     if _rans_c.LIB is not None:
         out = np.empty(n, dtype=np.int64)
@@ -612,12 +171,21 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
             _rans_c.as_ptr(c32, u32),
             _rans_c.as_ptr(np.ascontiguousarray(model.mbits), u8),
             _rans_c.as_ptr(ctx64, i64),
-            int(model.B), int(model.shared_tid), int(ESC),
+            int(B), int(model.shared_tid), int(ESC),
             _rans_c.as_ptr(stream_c, u32), _rans_c.as_ptr(rptr, i64),
+            _rans_c.as_ptr(rend, i64),
             _rans_c.as_ptr(state, u64), _rans_c.as_ptr(out, i64))
+        _check_end_state(state, rptr, rend)
         return out + np.int64(params["min"])
 
-    stream = raw_stream.astype(np.uint64)
+    # one zero word past the end: a read at or past a lane's word end
+    # yields it and still advances rptr, exactly as the C loop does
+    stream = np.append(raw_stream.astype(np.uint64), np.uint64(0))
+    pad = len(raw_stream)
+
+    def words(ni):
+        r = rptr[ni]
+        return stream[np.where(r < rend[ni], r, pad)]
 
     prev = np.zeros(lanes, dtype=np.int64)
     slot_off = model.slot_off
@@ -627,7 +195,7 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
     ctx_map = model.ctx_map.astype(np.int64)
     # per-table slot mask and size, gathered by table id per step —
     # variable-count shifts measure slower than gathers + division on
-    # this numpy (see the encode-side twin of this trade)
+    # this numpy
     mask_t = ((np.uint64(1) << model.mbits.astype(np.uint64))
               - np.uint64(1))
     M_t = mask_t + np.uint64(1)
@@ -648,7 +216,7 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
         need = s < LO
         if need.any():
             ni = idx[need]
-            s[need] = (s[need] << U32) | stream[rptr[ni]]
+            s[need] = (s[need] << U32) | words(ni)
             rptr[ni] += 1
         state[idx] = s
         return sym
@@ -679,7 +247,7 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
         need = s < LO
         if need.any():
             ni = np.flatnonzero(need)
-            s[ni] = (s[ni] << U32) | stream[rptr[ni]]
+            s[ni] = (s[ni] << U32) | words(ni)
             rptr[ni] += 1
         state = s
         esc = sym == ESC
@@ -692,6 +260,7 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
         else:
             outm[s_i] = sym
         prev = outm[s_i]
+    _check_end_state(state, rptr, rend)
     # unravel: lane l's values are column l's first lens[l] rows
     out = np.empty(n, dtype=np.int64)
     outT = np.ascontiguousarray(outm.T)

@@ -53,9 +53,10 @@ import pyarrow  # noqa: F401
 # initialization, so even numpy's lazily-created cast loops are inherited.
 from embulk_input_parquet_hadoop_spark.operators import encode  # noqa: F401
 from embulk_input_parquet_hadoop_spark.plans import pipeline  # noqa: F401
-# (the encode import above also pulls in codecs.rans via intcodecs'
-# codec registry, which builds/loads the optional C hot loop — forked
-# workers inherit the bound library instead of compiling on first use)
+# (the encode import above also pulls in codecs._rans_c via intcodecs,
+# which builds/loads the optional C hot loops for the xp codec and the
+# rANS decoder — forked workers inherit the bound library instead of
+# compiling on first use)
 
 from pyspark.daemon import manager
 

@@ -29,9 +29,9 @@ to Parquet's SNAPPY/GZIP/ZSTD block compression on top of PLAIN/RLE/DICT
 pages (the reference reads such files:
 ``compat/TestParquetCompatibility.java:52-57``).
 
-Written codecs: int frames plain/for/delta/dict/xp (rans in entropy
-mode), byte frames ``bytes_plain``. Read only, for frames earlier builds
-wrote: ``rle`` int frames, ``fsst`` byte frames, the zlib outer stage
+Written codecs: int frames plain/for/delta/dict/xp, byte frames
+``bytes_plain``. Read only, for frames earlier builds wrote: ``rle`` and
+``rans`` int frames, ``fsst`` byte frames, the zlib outer stage
 (``"z": 1``) and the ``int32``/``int64`` float bit-pattern frames.
 """
 
@@ -52,23 +52,6 @@ _COMPRESS_GAIN = 0.96
 # than level 3 on bit-packed plane-transposed payloads (1.2529 vs 1.2764
 # B/token) — zstd's higher levels buy nothing on already-packed entropy
 _ZSTD = pa.Codec("zstd", compression_level=1)
-
-# Opt-in order-1 entropy coding (codecs/rans.py): when on, every int frame
-# big enough to amortize the context model also tries rANS and keeps the
-# smaller ACTUAL frame. Off by default — it trades encode/decode
-# throughput (~2-5M tokens/s/core vs ~20M for the cascade) for bytes
-# (measured -2.5% on the i.i.d. bench corpus, -28% on order-1-structured
-# token streams, tests/test_rans.py). Module-level because the flag must
-# reach code running inside forked Python workers: the encode closures
-# call set_entropy_mode() at task start.
-_ENTROPY_MODE = False
-_ENTROPY_MIN_N = 65536
-
-
-def set_entropy_mode(on: bool) -> None:
-    global _ENTROPY_MODE
-    _ENTROPY_MODE = bool(on)
-
 
 def _plane_transpose(payload: bytes, stride: int) -> bytes:
     """Byte-plane shuffle: [v0b0 v0b1 v1b0 v1b1 ...] -> all b0s, all b1s.
@@ -153,45 +136,7 @@ def _int_frame(a: np.ndarray, dtype_name: str,
     payload, params = _maybe_compress(payload, params,
                                       _codec_stride(codec, params))
     params.update(extra or {})
-    frame = framing.write_frame(codec, dtype_name, len(a), params, payload)
-    if _ENTROPY_MODE and len(a) >= _ENTROPY_MIN_N \
-            and _entropy_could_win(a, len(frame)):
-        from ..codecs import rans
-        try:
-            rp, rparams = rans.rans_encode(a)
-        except OverflowError:
-            return frame  # >16-bit value range (offsets, ids, ...)
-        rparams.update(extra or {})
-        if not rparams.get("deg"):
-            # no outer zstd stage: the payload is already entropy-coded
-            rframe = framing.write_frame("rans", dtype_name, len(a),
-                                         rparams, rp)
-            if len(rframe) < len(frame):
-                return rframe
-    return frame
-
-
-def _entropy_could_win(a: np.ndarray, frame_bytes: int) -> bool:
-    """Cheap pre-gate for the rANS attempt: an OPTIMISTIC lower bound on
-    its output — sampled order-0 entropy with NO model/lane/order-1
-    allowance (sampling truncates the alphabet tail, so this H0
-    UNDERESTIMATES; order-1 structure lowers the optimum further, which
-    this bound already concedes by charging zero for it). Skipping is
-    therefore always safe, and it fires exactly where the cascade
-    already crushed the frame below any entropy coder's reach — runs,
-    sorted deltas, near-constant columns — which would otherwise pay
-    ~10x the cascade's CPU per frame for a guaranteed loss. Zipf-ish
-    frames always pass the gate and settle by actual-size pick-best."""
-    n = len(a)
-    idx = np.linspace(0, n - 1, 4096).astype(np.int64)
-    s = a[idx].astype(np.int64)
-    vmin = s.min()
-    if s.max() - vmin > 65534:
-        return False  # rans_encode would raise OverflowError anyway
-    cnt = np.bincount(s - vmin)
-    p = cnt[cnt > 0] / len(s)
-    h0_bits = float(-(p * np.log2(p)).sum())
-    return n * h0_bits / 8 < frame_bytes
+    return framing.write_frame(codec, dtype_name, len(a), params, payload)
 
 
 def _decode_int_frame(frame: framing.Frame) -> np.ndarray:

@@ -64,8 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.encode import (decode_column, encode_column,
-                                set_entropy_mode, temporal_int_view)
+from ..operators.encode import decode_column, encode_column, temporal_int_view
 from . import manifest as mf
 from .filetasks import run_file_tasks
 
@@ -251,12 +250,11 @@ def _encode_one_batch(batch: pa.RecordBatch, wave_id: int, pid: int,
     return chunk_row, stats
 
 
-def make_encode_fn(wave_id: int, entropy: bool = False):
+def make_encode_fn(wave_id: int):
     """mapInArrow fn for the DataFrame-source path: rows in, chunk rows
     (with payloads) out."""
 
     def encode_batches(batches):
-        set_entropy_mode(entropy)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         for bidx, batch in enumerate(batches):
@@ -750,7 +748,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                          batch_rows: int = DEFAULT_BATCH_ROWS,
                          columns: list[str] | None = None,
                          bad_record_threshold: float = 0.0,
-                         entropy: bool = False,
                          const_schema: dict[str, str] | None = None,
                          column_renames: list[dict] | None = None):
     """Task fn for the file-source path (run by
@@ -818,7 +815,6 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
 
     def encode_files(batches):
         from . import fsutil
-        set_entropy_mode(entropy)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         # local out_dirs commit with in-place tmp + os.replace; non-local
@@ -1032,8 +1028,7 @@ def decode_chunks(chunks_df: DataFrame, column_order: list[str],
 
 def encode_df(spark: SparkSession, df: DataFrame, out_dir: str,
               wave_id: int = 0,
-              cluster_partitions: int | None = None,
-              entropy: bool = False) -> DataFrame:
+              cluster_partitions: int | None = None) -> DataFrame:
     """DataFrame-source encode (Catalyst filters/pushdown upstream apply).
 
     Writes chunk rows (with payloads) via Spark's writer; returns nothing
@@ -1047,8 +1042,7 @@ def encode_df(spark: SparkSession, df: DataFrame, out_dir: str,
         df = cluster_for_encode(df, cluster_partitions)
     from . import fsutil
     wave_path = fsutil.spark_path(f"{out_dir}/chunks/wave={wave_id}")
-    enc = df.mapInArrow(make_encode_fn(wave_id, entropy=entropy),
-                        CHUNK_SPARK_SCHEMA)
+    enc = df.mapInArrow(make_encode_fn(wave_id), CHUNK_SPARK_SCHEMA)
     (enc.write.mode("overwrite")
         .option("compression", "uncompressed")
         .option("parquet.enable.dictionary", "false")
@@ -1259,7 +1253,6 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                 bad_file_threshold: float = 0.0,
                 bad_record_threshold: float = 0.0,
                 schema_mode: str = "single",
-                entropy: bool = False,
                 input_files: list[str] | None = None,
                 append: bool = False,
                 row_deletes: dict[str, list[str]] | None = None,
@@ -1356,13 +1349,6 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     (``_list_parquet_files``). An empty listing still fails with
     Spark's ``UNABLE_TO_INFER_SCHEMA`` and a missing path with
     ``PATH_NOT_FOUND``, before anything is written under ``out_dir``.
-
-    ``entropy=True`` turns on the opt-in order-1 rANS competitor for
-    large int frames (``codecs/rans.py``): smaller output (measured
-    -2.5% bytes/token on the i.i.d. bench corpus, far more on real
-    token streams with conditional structure) at ~5-10x the encode CPU
-    per tokens plane. The flag is write-side only — decode dispatches
-    on the frame's codec id, so mixed trees read fine.
 
     ``waves`` > 1 splits the input *file list* into that many sub-jobs, each
     committed to the manifest on completion — kill the job after wave k and a
@@ -1606,7 +1592,6 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                                      columns=columns,
                                      bad_record_threshold=(
                                          bad_record_threshold),
-                                     entropy=entropy,
                                      const_schema=const_schema,
                                      column_renames=column_renames),
                 CHUNK_META_ARROW_SCHEMA,

@@ -32,18 +32,13 @@ TOKENS_DDL = ("doc_id string, tokens array<int>, n_tok int, source string")
 def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
                   checkpoint_dir: str,
                   max_files_per_trigger: int | None = None,
-                  available_now: bool = True,
-                  entropy: bool = False):
+                  available_now: bool = True):
     """Start the streaming encode; returns the StreamingQuery.
 
     Each micro-batch is one wave: chunks land under
     ``{out_dir}/chunks/wave={epoch}``, a manifest record commits the epoch.
     Restart with the same checkpoint dir and Spark replays only unconsumed
     files — streaming resume on top of our wave manifest.
-    ``entropy`` threads through to the batch encode kernels (same opt-in
-    rANS competitor as ``encode_path``); note micro-batch chunks are
-    usually far below the >=1M-token model-amortization point, so it
-    only pays on large-trigger streams.
     """
     reader = (spark.readStream.schema(TOKENS_DDL))
     if max_files_per_trigger is not None:
@@ -52,8 +47,7 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
 
     def handle_batch(df: DataFrame, epoch_id: int) -> None:
         spark_b = df.sparkSession
-        pipeline.encode_df(spark_b, df, out_dir, wave_id=int(epoch_id),
-                           entropy=entropy)
+        pipeline.encode_df(spark_b, df, out_dir, wave_id=int(epoch_id))
         files = [r.f for r in
                  df.select(F.input_file_name().alias("f")).distinct()
                  .collect()]

@@ -176,11 +176,6 @@ def main() -> int:
                    help="with --iceberg: encode the latest snapshot "
                         "committed at or before the given epoch-ms "
                         "(snapshot timestamp-ms records)")
-    p.add_argument("--entropy", action="store_true",
-                   help="opt-in order-1 rANS competitor for large int "
-                        "frames: smaller output (bytes/token) at ~5-10x "
-                        "the encode CPU on the tokens plane; read side "
-                        "is unchanged (frames are self-describing)")
     p.add_argument("--vacuum", action="store_true",
                    help="before encoding: remove crashed-attempt debris "
                         "(uncommitted waves, stray .tmp parts) from "
@@ -371,7 +366,6 @@ def main() -> int:
         schema_mode=args.schema_mode,
         bad_file_threshold=args.bad_file_threshold,
         bad_record_threshold=args.bad_record_threshold,
-        entropy=args.entropy,
         row_deletes=row_deletes, eq_deletes=eq_deletes,
         const_columns=const_columns, const_schema=const_schema,
         column_renames=column_renames)

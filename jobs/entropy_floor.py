@@ -21,14 +21,12 @@ Measured on the bench corpus (150k docs, seed 7, Zipf token ids): H0 =
 (h1_bucket*) are EMPIRICAL conditional entropies and overstate the real
 headroom on this corpus: datagen draws tokens i.i.d. (sources/datagen.py
 ``rng.zipf(1.2) % VOCAB``), so the apparent conditional structure is
-small-sample bias (~500 samples per context over a 50k alphabet). The
-order-1 rANS codec is now implemented (``codecs/rans.py``, opt-in via
-``encode_path(entropy=True)``); this job also reports its measured
-density so the model-cost-inclusive number sits next to the floors: on
-i.i.d. data it wins only what quantization + framing overhead allow
-(~2.5% under the cascade at 2M-token chunks), on genuinely
-bigram-structured streams it reaches near the conditional entropy
-(tests/test_rans.py::test_markov_small_vocab_approaches_conditional_entropy).
+small-sample bias (~500 samples per context over a 50k alphabet).
+Earlier builds carried an opt-in order-1 rANS coder aimed at these
+floors; it bought 2.2% on this corpus and 0-4% on a real token corpus
+at a 40-50x slower encode, and was retired (``codecs/rans.py`` keeps
+only its decoder). The floors stay the yardstick for any future context
+model.
 """
 from __future__ import annotations
 
@@ -60,19 +58,14 @@ def measure(tokens_dir: str, max_files: int = 4) -> dict:
     h0_bits = float(-(p * np.log2(p)).sum())
     blob = encode._int_frame(flat.astype(np.int32), "int32")
     density = len(blob) / len(flat)
-    from embulk_input_parquet_hadoop_spark.codecs import rans
-    rans_payload, _ = rans.rans_encode(flat.astype(np.int64))
-    rans_density = len(rans_payload) / len(flat)
 
     # Bucketed order-1 floors: what a PRACTICAL context model (prev
     # token hashed into B buckets -> bounded CDF tables) could reach.
     # Measured on the bench corpus: B=256 -> 1.055 B/token, B=4096 ->
     # 0.995 (full-context H1 ~0.94) vs engine 1.16 — a real 10-15%
     # headroom, BUT the quantized model is B x vocab x 2 bytes (26MB at
-    # B=256), amortizable only at wave scale; the rANS coder + escape
-    # coding to shrink it is the documented round-4 candidate, NOT a
-    # few-percent tweak. This function records the numbers so the trade
-    # stays quantified.
+    # B=256), amortizable only at wave scale. This function records the
+    # numbers so the trade stays quantified.
     V = int(flat.max()) + 1
     prev, cur = flat[:-1].astype(np.int64), flat[1:].astype(np.int64)
     bucketed = {}
@@ -95,9 +88,7 @@ def measure(tokens_dir: str, max_files: int = 4) -> dict:
         "h0_bits_per_token": round(h0_bits, 4),
         "h0_bytes_per_token": round(h0_bits / 8, 4),
         "engine_bytes_per_token": round(density, 4),
-        "rans_bytes_per_token": round(rans_density, 4),
         "overhead_vs_h0": round(density / (h0_bits / 8), 4),
-        "rans_overhead_vs_h0": round(rans_density / (h0_bits / 8), 4),
         **bucketed,
     }
 

@@ -4,10 +4,13 @@ Mirrors the reference's correctness contract — golden value equality after
 decode (``parquet-msgpack/.../spark/SparkTestBase.java:115-133``) — applied
 to every kernel on adversarial arrays: empty, single, constant, sorted,
 negative, full-range int32/int64. Codecs that are read but no longer
-written (``rle``, ``fsst``) are pinned by frames an earlier encoder wrote.
+written (``rle``, ``fsst`` here, ``rans`` in test_rans.py) are pinned by
+frames an earlier encoder wrote.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
@@ -297,3 +300,17 @@ def test_fsst_frames_pinned(idx):
     strings = distinct if kind == "str_dict" else expected
     assert data == "".join(strings).encode()
     assert decode_column(kind, blob).equals(pa.array(expected, pa.string()))
+
+
+def test_every_codec_is_written_or_pinned():
+    """Each codec a frame may name is either written by this build or
+    pinned by frames an earlier encoder wrote, so the next codec to
+    leave the encoder cannot take its decode coverage with it."""
+    blobs = ([bytes.fromhex(h) for h, _ in _RLE_BLOBS]
+             + [bytes.fromhex(h) for _, h, _ in _FSST_BLOBS]
+             + [p.read_bytes() for p in
+                (Path(__file__).parent / "fixtures" / "rans").glob("*.bin")])
+    pinned = {f.codec for blob in blobs for f in framing.read_frames(blob)}
+    written = set(INT_CODECS) | {"bytes_plain"}
+    for codec in framing.CODEC_IDS:
+        assert codec in written or codec in pinned, codec

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,115 +124,3 @@ def test_verify_files_detects_tampering(spark, tmp_path):
     res = verify.verify_files(spark, out)
     assert not res["ok"]
     assert res["mismatch_chunks"] >= 1
-
-
-def test_entropy_mode_roundtrip_and_smaller(spark, tmp_path):
-    """encode_path(entropy=True): the rANS competitor must (a) stay
-    bit-exact end to end, (b) actually shrink the tree on a corpus with
-    order-1 structure (real token streams have it; the i.i.d. datagen
-    corpus only rewards rans at >1M-token chunks where the model
-    amortizes — tests/test_rans.py covers that boundary), (c) be a pure
-    write-side flag — the same read path decodes both trees.
-
-    The corpus: Markov bigram structure over a 4k vocab, written as the
-    input_hint table shape.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tests.test_rans import markov_tokens
-    rng = np.random.default_rng(11)
-    vocab = 4096
-    n_docs, doc_len = 2000, 200
-    flat = markov_tokens(rng, n_docs * doc_len, vocab)
-    offs = np.arange(0, (n_docs + 1) * doc_len, doc_len, dtype=np.int32)
-    tokens = pa.ListArray.from_arrays(
-        pa.array(offs), pa.array(flat.astype(np.int32), type=pa.int32()))
-    tbl = pa.table({
-        "doc_id": pa.array([f"d{i:08d}" for i in range(n_docs)]),
-        "tokens": tokens.cast(pa.list_(
-            pa.field("item", pa.int32(), nullable=False))),
-        "n_tok": pa.array(np.full(n_docs, doc_len, dtype=np.int32)),
-        "source": pa.array(["web"] * n_docs),
-    })
-    src = str(tmp_path / "markov_src")
-    import os
-    os.makedirs(src)
-    pq.write_table(tbl, f"{src}/part-0.parquet")
-
-    base_out = str(tmp_path / "enc_base")
-    ent_out = str(tmp_path / "enc_ent")
-    base = pipeline.encode_path(spark, src, base_out)
-    ent = pipeline.encode_path(spark, src, ent_out, entropy=True)
-    assert ent["n_tokens"] == base["n_tokens"]
-    assert ent["enc_bytes"] < 0.95 * base["enc_bytes"], (
-        f"entropy mode did not shrink: {ent['enc_bytes']} vs "
-        f"{base['enc_bytes']}")
-
-    result = verify.verify_path(spark, src, ent_out)
-    assert result["ok"], result
-    assert result["rows_compared"] == n_docs
-
-    # at least one chunk actually carries a rans frame (the flag could
-    # silently no-op and (b) still pass by noise)
-    from embulk_input_parquet_hadoop_spark.codecs import framing
-    chunks = pipeline.read_chunks(spark, ent_out)
-    row = chunks.select("blobs").first()
-    codecs_seen = set()
-    for blob in row.blobs:
-        for fr in framing.read_frames(blob):
-            codecs_seen.add(fr.codec)
-    assert "rans" in codecs_seen, codecs_seen
-
-
-def test_mixed_entropy_waves_decode_together(spark, tokens_path, tmp_path):
-    """A tree whose waves mix entropy on/off (e.g. a resume with the
-    flag flipped) must stay readable through the one read path — frames
-    are self-describing, so this is the documented contract."""
-    out = str(tmp_path / "mix_enc")
-    pipeline.encode_path(spark, tokens_path, out, waves=2)
-    # drop wave 1's manifest + chunks, then re-run with entropy=True:
-    # resume skips wave 0, re-encodes wave 1 with the flag on
-    import os
-    import shutil
-    os.remove(f"{out}/manifest/wave-1.json")
-    shutil.rmtree(f"{out}/chunks/wave=1")
-    totals = pipeline.encode_path(spark, tokens_path, out, waves=2,
-                                  resume=True, entropy=True)
-    assert totals["waves_skipped"] == 1 and totals["waves_run"] == 1
-    result = verify.verify_path(spark, tokens_path, out)
-    assert result["ok"], result
-    assert result["rows_compared"] == 3000
-
-
-def test_encode_df_entropy_flag(spark, tmp_path):
-    """The DataFrame-source path (encode_df / cluster mode) must thread
-    the entropy flag into its mapInArrow workers too."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from tests.test_rans import markov_tokens
-    rng = np.random.default_rng(4)
-    n_docs, doc_len, vocab = 1500, 200, 4096
-    flat = markov_tokens(rng, n_docs * doc_len, vocab)
-    offs = np.arange(0, (n_docs + 1) * doc_len, doc_len, dtype=np.int32)
-    tokens = pa.ListArray.from_arrays(
-        pa.array(offs), pa.array(flat.astype(np.int32), type=pa.int32()))
-    tbl = pa.table({
-        "doc_id": pa.array([f"d{i}" for i in range(n_docs)]),
-        "tokens": tokens.cast(pa.list_(
-            pa.field("item", pa.int32(), nullable=False))),
-        "n_tok": pa.array(np.full(n_docs, doc_len, dtype=np.int32)),
-        "source": pa.array(["web"] * n_docs),
-    })
-    src = str(tmp_path / "df_src")
-    import os
-    os.makedirs(src)
-    pq.write_table(tbl, f"{src}/part-0.parquet")
-    df = spark.read.parquet(src).coalesce(1)
-
-    base = pipeline.encode_df(spark, df, str(tmp_path / "df_base"))
-    ent = pipeline.encode_df(spark, df, str(tmp_path / "df_ent"),
-                             entropy=True)
-    b = base.agg(F.sum("enc_bytes")).collect()[0][0]
-    e = ent.agg(F.sum("enc_bytes")).collect()[0][0]
-    assert e < 0.95 * b, (e, b)

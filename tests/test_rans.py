@@ -1,207 +1,99 @@
-"""Order-1 rANS codec: roundtrips, model behavior, and the compression
-claim it exists for (closing the gap between the order-0 cascade and the
-bucketed order-1 entropy floor that ``jobs/entropy_floor.py`` measures).
+"""Order-1 rANS frames: decode-only, pinned by bytes the last encoder wrote.
 
-The generic INT_CODECS roundtrips in test_codecs.py already run rans over
-the adversarial corpus + hypothesis; this file adds the structure-specific
-cases: lane boundaries, escape-heavy chunks, order-1-structured data where
-the codec must actually beat the order-0 cascade, and the degenerate
-payloads.
+Builds up to commit f1ef865 wrote rANS int frames in an opt-in entropy
+mode; this build reads them and never writes them. Each pin under
+``tests/fixtures/rans`` (see its README) must decode bit for bit on the C
+loop (``codecs/_rans_c.py``) and on the numpy reference path, directly and
+through ``decode_column``. The frame CRC does not cover the header's value
+count, so a frame whose ``n`` is wrong must raise, not decode to a
+different column.
 """
 from __future__ import annotations
 
+import struct
+from contextlib import contextmanager
+from pathlib import Path
+
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from embulk_input_parquet_hadoop_spark.codecs import rans
-from embulk_input_parquet_hadoop_spark.codecs.intcodecs import INT_CODECS
-from embulk_input_parquet_hadoop_spark.operators.select import encode_best
+from embulk_input_parquet_hadoop_spark.codecs import _rans_c, framing, rans
+from embulk_input_parquet_hadoop_spark.codecs.intcodecs import (
+    INT_CODECS, INT_DECODERS)
+from embulk_input_parquet_hadoop_spark.operators.encode import decode_column
 
-RNG = np.random.default_rng(7)
-
-
-def markov_tokens(rng, n, vocab, p_follow=0.6, base=None):
-    """Properly *chained* first-order Markov tokens: with prob p_follow,
-    token i is follow(token i-1) of the FINAL sequence (a naive
-    one-shot vectorized rewrite only chains ~p*(1-p) of pairs because
-    numpy evaluates the RHS on the pre-rewrite array). Vectorized via
-    run-length scan + precomputed permutation powers."""
-    follow = rng.permutation(vocab).astype(np.int64)
-    orig = (base if base is not None
-            else rng.integers(0, vocab, n)).astype(np.int64)
-    mask = rng.random(n) < p_follow
-    mask[0] = False
-    idx = np.arange(n)
-    last_free = np.maximum.accumulate(np.where(~mask, idx, -1))
-    r = idx - last_free  # chain length ending at i
-    maxr = int(r.max())
-    pow_ = np.empty((maxr + 1, vocab), dtype=np.int64)
-    pow_[0] = np.arange(vocab)
-    for k in range(1, maxr + 1):
-        pow_[k] = follow[pow_[k - 1]]
-    return pow_[r, orig[last_free]]
+FIXTURES = Path(__file__).parent / "fixtures" / "rans"
+# single-frame pins; list_i32.bin is a whole column blob
+PINS = sorted(p.stem for p in FIXTURES.glob("*.bin") if p.stem != "list_i32")
+# deg frames carry no stream: any n decodes to n copies of ``min``
+STREAM_PINS = [p for p in PINS if not p.startswith("deg_")]
 
 
-def _roundtrip(a: np.ndarray, **kw) -> bytes:
-    payload, params = rans.rans_encode(a, **kw)
-    out = rans.rans_decode(payload, params, len(a))
-    np.testing.assert_array_equal(out, a)
-    return payload
+@contextmanager
+def _numpy_path():
+    lib = _rans_c.LIB
+    _rans_c.LIB = None
+    try:
+        yield
+    finally:
+        _rans_c.LIB = lib
+
+
+def _both_paths(fn):
+    """``fn()`` on the C loop (when it built) and on the numpy path."""
+    outs = [fn()] if _rans_c.LIB is not None else []
+    with _numpy_path():
+        outs.append(fn())
+    return outs
+
+
+def _load(name: str) -> tuple[bytes, np.ndarray]:
+    return ((FIXTURES / f"{name}.bin").read_bytes(),
+            np.load(FIXTURES / f"{name}.npz")["values"])
+
+
+def _assert_pin(name: str) -> None:
+    blob, expected = _load(name)
+    (frame,) = framing.read_frames(blob)
+    assert frame.codec == "rans" and frame.n == len(expected)
+    for out in _both_paths(
+            lambda: rans.rans_decode(frame.payload, frame.params, frame.n)):
+        assert out.dtype == np.int64
+        np.testing.assert_array_equal(out, expected)
+    want = pa.array(expected.astype(frame.dtype))
+    for col in _both_paths(lambda: decode_column("int", blob)):
+        assert col.equals(want)
+
+
+def _raises_on_both_paths(fn, match=None) -> None:
+    if _rans_c.LIB is not None:
+        with pytest.raises(framing.FrameError, match=match):
+            fn()
+    with _numpy_path(), pytest.raises(framing.FrameError, match=match):
+        fn()
+
+
+def _with_n(blob: bytes, n: int) -> bytes:
+    """The frame with its header value count replaced; the CRC covers
+    only the payload, so the frame still parses."""
+    head = bytearray(blob)
+    struct.pack_into("<I", head, 5, n)
+    return bytes(head)
 
 
 def test_registered_in_codec_table():
-    enc, dec = INT_CODECS["rans"]
-    assert enc is rans.rans_encode and dec is rans.rans_decode
+    assert INT_DECODERS["rans"] is rans.rans_decode
+    assert "rans" not in INT_CODECS
+    assert framing.CODEC_IDS["rans"] == 8
 
 
 @pytest.mark.parametrize("n", [2, 3, 63, 64, 65, 127, 128, 129, 2047,
                                2048, 2049, 100_000])
 def test_lane_boundary_sizes(n):
-    """Sizes straddling the lane-count breakpoints and the uneven-remainder
-    split (first ``rem`` lanes one longer)."""
-    a = RNG.integers(0, 50_000, n, dtype=np.int64)
-    if len(np.unique(a)) < 2:
-        a[0] = 0
-        a[-1] = 1
-    _roundtrip(a)
-
-
-def test_zipf_order1_structured_beats_cascade():
-    """Bigram-structured Zipf tokens (the bench corpus shape): rans must
-    decode bit-exactly AND beat the order-0 cascade's actual frame size —
-    otherwise the opt-in mode has no reason to exist."""
-    n = 200_000
-    vocab = 50_000
-    # Markov chain: each token's distribution depends on prev's bucket,
-    # the exact conditional structure the context model targets
-    zipf = (1.0 / np.arange(1, vocab + 1) ** 1.1)
-    zipf /= zipf.sum()
-    base = RNG.choice(vocab, size=n, p=zipf).astype(np.int64)
-    a = markov_tokens(RNG, n, vocab, p_follow=0.5, base=base)
-    payload = _roundtrip(a)
-
-    _, casc_payload, _ = encode_best(a)
-    assert len(payload) < len(casc_payload), (
-        f"rans {len(payload)} >= cascade {len(casc_payload)}")
-
-
-def test_markov_small_vocab_approaches_conditional_entropy():
-    """Dense uniform vocab with 60% follow structure: H1 ~ 5.9 bits/token
-    vs H0 = 12. The model must land well under order-0 — this is the
-    regression test for the _MIN_CTX=1024 bug that silently disabled
-    the model whenever n/B < 1024 (every context starved below the hard
-    gate, zero tables, order-0 coding)."""
-    vocab = 4096
-    n = 400_000
-    a = markov_tokens(np.random.default_rng(11), n, vocab)
-    payload = _roundtrip(a)
-    bpt = len(payload) / n
-    assert bpt < 1.05, f"{bpt:.4f} B/token — order-1 model not engaged"
-    _, casc_payload, _ = encode_best(a)
-    assert len(payload) < 0.75 * len(casc_payload)
-
-
-def test_iid_zipf_no_worse_than_20pct_over_cascade():
-    """On i.i.d. (no order-1 structure) data the model must cost little:
-    contexts don't earn tables, so rans ~ shared order-0 table ~ H0."""
-    n = 100_000
-    vocab = 50_000
-    zipf = (1.0 / np.arange(1, vocab + 1) ** 1.1)
-    zipf /= zipf.sum()
-    a = RNG.choice(vocab, size=n, p=zipf).astype(np.int64)
-    payload = _roundtrip(a)
-    _, casc_payload, _ = encode_best(a)
-    assert len(payload) <= 1.2 * len(casc_payload)
-
-
-def test_escape_heavy_chunk():
-    """A chunk where most contexts are too cold for dedicated tables —
-    nearly everything escapes to the shared table."""
-    a = RNG.integers(0, 65_000, 5_000, dtype=np.int64)
-    _roundtrip(a)
-
-
-def test_negative_and_offset_ranges():
-    a = RNG.integers(-40_000, 25_000, 20_000, dtype=np.int64)
-    _roundtrip(a)
-    b = RNG.integers(10**9, 10**9 + 60_000, 20_000, dtype=np.int64)
-    _roundtrip(b)
-
-
-def test_range_overflow_raises():
-    a = np.array([0, 70_000], dtype=np.int64)
-    with pytest.raises(OverflowError):
-        rans.rans_encode(a)
-
-
-@pytest.mark.parametrize("a", [
-    np.array([], dtype=np.int64),
-    np.array([42], dtype=np.int64),
-    np.full(10_000, -7, dtype=np.int64),
-])
-def test_degenerate_chunks(a):
-    payload, params = rans.rans_encode(a)
-    assert payload == b""
-    out = rans.rans_decode(payload, params, len(a))
-    np.testing.assert_array_equal(out, a)
-
-
-def test_two_distinct_values_alternating():
-    a = np.tile(np.array([5, 9], dtype=np.int64), 30_000)
-    payload = _roundtrip(a)
-    # perfectly predictable under order-1: payload ~ model only
-    assert len(payload) < 3_000
-
-
-def test_deterministic_encode():
-    a = RNG.integers(0, 30_000, 50_000, dtype=np.int64)
-    p1, _ = rans.rans_encode(a)
-    p2, _ = rans.rans_encode(a)
-    assert p1 == p2
-
-
-def test_small_context_bucket_count():
-    a = RNG.integers(0, 1_000, 50_000, dtype=np.int64)
-    _roundtrip(a, B=256)
-
-
-def test_c_and_numpy_coders_bit_identical():
-    """The optional C hot loop (codecs/_rans_c.py) must produce
-    byte-identical frames to the numpy reference and cross-decode in
-    both directions, across the dense-plane (<=64 tables), searchsorted
-    (>64 tables via a structured stream), and tail/edge regimes."""
-    import numpy as np
-    import pytest
-
-    from embulk_input_parquet_hadoop_spark.codecs import _rans_c, rans
-    if _rans_c.LIB is None:
-        pytest.skip("no C compiler available")
-    rng = np.random.default_rng(77)
-    cases = [rng.integers(0, 50_000, size=100_003).astype(np.int64)]
-    T = 300
-    trans = rng.integers(0, T, size=(T, 4))
-    seq = np.empty(120_000, dtype=np.int64)
-    s = 0
-    ch = rng.integers(0, 4, size=len(seq))
-    for i in range(len(seq)):
-        s = trans[s, ch[i]]
-        seq[i] = s
-    cases.append(seq)                      # many dedicated tables
-    cases.append(rng.integers(0, 3, size=257).astype(np.int64))
-    cases.append(np.array([7, 9] * 40, dtype=np.int64))
-    for arr in cases:
-        pc, prc = rans.rans_encode(arr)
-        lib = _rans_c.LIB
-        try:
-            _rans_c.LIB = None
-            pn, prn = rans.rans_encode(arr)
-            dec_numpy = rans.rans_decode(pc, prc, len(arr))
-        finally:
-            _rans_c.LIB = lib
-        dec_c = rans.rans_decode(pn, prn, len(arr))
-        assert pc == pn and prc == prn
-        assert np.array_equal(dec_numpy, arr)
-        assert np.array_equal(dec_c, arr)
+    """Sizes straddling the encoder's lane-count breakpoints and the
+    uneven-remainder split (first ``rem`` lanes one longer)."""
+    _assert_pin(f"sizes_{n}")
 
 
 @pytest.mark.parametrize("lanes,delta", [
@@ -209,83 +101,85 @@ def test_c_and_numpy_coders_bit_identical():
     (256, 0), (256, 255), (257, 0),
 ])
 def test_block_boundary_lane_counts_bit_identical(lanes, delta):
-    """The C loops are block-interleaved 128 lanes at a time
-    (codecs/_rans_c.py ``BLK = 128``): lane counts straddling the block
-    boundary (127/128/129, 256/257) plus ragged-head remainders (the
-    first ``rem`` lanes run one value longer) must stay bit-identical
-    to the numpy reference and cross-decode. ``_pick_lanes`` gives
-    ``lanes = n // 1024`` in this range, so n = lanes*1024 + delta
-    pins both the lane count and the remainder split."""
-    from embulk_input_parquet_hadoop_spark.codecs import _rans_c
-    if _rans_c.LIB is None:
-        pytest.skip("no C compiler available")
-    n = lanes * 1024 + delta
-    arr = markov_tokens(np.random.default_rng(lanes * 1000 + delta),
-                        n, 512)
-    pc, prc = rans.rans_encode(arr)
-    lib = _rans_c.LIB
-    try:
-        _rans_c.LIB = None
-        pn, prn = rans.rans_encode(arr)
-        dec_numpy = rans.rans_decode(pc, prc, n)
-    finally:
-        _rans_c.LIB = lib
-    dec_c = rans.rans_decode(pn, prn, n)
-    assert pc == pn and prc == prn
-    assert np.array_equal(dec_numpy, arr)
-    assert np.array_equal(dec_c, arr)
+    """The C decode loop runs 128 lanes at a time (``BLK = 128``): lane
+    counts straddling the block boundary plus ragged remainders (the
+    first ``delta`` lanes one value longer)."""
+    _assert_pin(f"block_{lanes}_{delta}")
+
+
+def test_escape_heavy_chunk():
+    _assert_pin("escape_heavy")
+
+
+def test_negative_and_offset_ranges():
+    _assert_pin("negative_min")
+    _assert_pin("offset_1e9")
+
+
+@pytest.mark.parametrize("name", ["deg_empty", "deg_single", "deg_const"],
+                         ids=["a0", "a1", "a2"])
+def test_degenerate_chunks(name):
+    blob, _ = _load(name)
+    (frame,) = framing.read_frames(blob)
+    assert frame.payload == b"" and frame.params["deg"] == 1
+    _assert_pin(name)
+
+
+def test_two_distinct_values_alternating():
+    _assert_pin("two_distinct")
+
+
+def test_small_context_bucket_count():
+    blob, _ = _load("buckets_128")
+    assert framing.read_frames(blob)[0].params["B"] == 128
+    _assert_pin("buckets_128")
+
+
+def test_c_and_numpy_coders_bit_identical():
+    """The dense-plane (<=64 tables) and >64-table encode paths, one lane
+    and one-value lanes: both decoders give the pinned values."""
+    for name in ("dense", "structured_300", "lanes_1", "tiny_257", "alt_80"):
+        _assert_pin(name)
+
+
+def test_list_column_blob_pinned():
+    blob = (FIXTURES / "list_i32.bin").read_bytes()
+    want = np.load(FIXTURES / "list_i32.npz")
+    assert [f.codec for f in framing.read_frames(blob)] == ["delta", "rans"]
+    expected = pa.ListArray.from_arrays(pa.array(want["offsets"]),
+                                        pa.array(want["values"]))
+    for col in _both_paths(lambda: decode_column("list_i32", blob)):
+        assert col.equals(expected)
+
+
+@pytest.mark.parametrize("delta", [-1, 1, 100])
+@pytest.mark.parametrize("name", STREAM_PINS)
+def test_wrong_value_count_raises(name, delta):
+    """A wrong header ``n`` lays the lanes out differently: some lane
+    then stops short of the encoder's start state or runs past its
+    words. Both paths raise instead of returning a different column (the
+    C loop bounds each read by the lane's word end)."""
+    blob, expected = _load(name)
+    (frame,) = framing.read_frames(_with_n(blob, len(expected) + delta))
+    _raises_on_both_paths(
+        lambda: rans.rans_decode(frame.payload, frame.params, frame.n))
+
+
+def test_wrong_value_count_in_column_blob_raises():
+    blob = (FIXTURES / "list_i32.bin").read_bytes()
+    _, values_at = framing.read_frame(blob, 0)  # past the offsets frame
+    values, _ = framing.read_frame(blob, values_at)
+    bad = blob[:values_at] + _with_n(blob[values_at:], values.n + 1)
+    _raises_on_both_paths(lambda: decode_column("list_i32", bad))
 
 
 def test_truncated_frame_raises_not_crashes():
-    """A frame whose word stream is shorter than the lane word counts
-    claim (truncation that bypassed the outer CRC, e.g. a cut buffer
-    handed straight to rans_decode) must raise, not read past the
-    buffer — the C decode loop does no bounds checking, so the guard
-    sits in front of it."""
-    a = markov_tokens(np.random.default_rng(3), 50_000, 512)
-    payload, params = rans.rans_encode(a)
-    cut = payload[:-8]  # drop two 4-byte stream words
-    with pytest.raises(ValueError, match="truncated|inconsistent"):
-        rans.rans_decode(cut, params, len(a))
-
-
-def test_pair_counts_c_matches_unique_including_retry():
-    """The C open-addressing pair counter must return EXACTLY
-    np.unique(key, return_counts=True) — including through the
-    load-cap retry (hbits growth), which needs > ~11k distinct keys
-    to trigger at the 2^14 floor table."""
-    import numpy as np
-    import pytest
-
-    from embulk_input_parquet_hadoop_spark.codecs import _rans_c, rans
-    if _rans_c.LIB is None:
-        pytest.skip("no C compiler")
-    rng = np.random.default_rng(11)
-    B = 4096
-    cases = []
-    # dense-distinct case: 13000 distinct (ctx, sym) pairs, each once,
-    # inside a 13000-element array -> 2^14 table hits the ~0.69 load
-    # cap and the counter must retry with a larger table
-    n = 13_000
-    ctx = rng.integers(0, 64, n).astype(np.int64)
-    u = np.arange(n, dtype=np.int64) % 60000
-    cases.append((ctx, u, np.arange(B, dtype=np.int64) % 64))
-    # zipf-ish case with repeats, some contexts non-candidates
-    n = 200_000
-    u = (rng.zipf(1.2, n).astype(np.int64) % 30000)
-    ctx = np.empty(n, dtype=np.int64)
-    ctx[0] = 0
-    ctx[1:] = u[:-1] & (B - 1)
-    cand_rank = np.full(B, -1, dtype=np.int64)
-    cand = rng.choice(B, 700, replace=False)
-    cand_rank[np.sort(cand)] = np.arange(700)
-    cases.append((ctx, u, cand_rank))
-    # empty-candidate-hit case: every ctx masked out
-    cases.append((ctx, u, np.full(B, -1, dtype=np.int64)))
-    for ctx, u, cand_rank in cases:
-        got_k, got_c = rans._pair_counts_c(u, ctx, cand_rank)
-        mask = cand_rank[ctx] >= 0
-        key = cand_rank[ctx[mask]] * 65536 + u[mask]
-        want_k, want_c = np.unique(key, return_counts=True)
-        assert np.array_equal(got_k, want_k)
-        assert np.array_equal(got_c, want_c)
+    """A word stream shorter than the lane word counts claim (a cut
+    buffer handed straight to rans_decode) must raise before the C loop
+    gets its pointers."""
+    blob, expected = _load("dense")
+    (frame,) = framing.read_frames(blob)
+    cut = bytes(frame.payload)[:-8]  # drop two 4-byte stream words
+    _raises_on_both_paths(
+        lambda: rans.rans_decode(cut, frame.params, len(expected)),
+        match="truncated")

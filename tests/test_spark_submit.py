@@ -167,11 +167,10 @@ def test_encode_job_hudi_mor_via_spark_submit(tmp_path):
 
 @pytest.mark.skipif(not (SPARK_SUBMIT and os.path.exists(SPARK_SUBMIT)),
                     reason="spark-submit not on PATH")
-def test_encode_job_iceberg_entropy_via_spark_submit(tmp_path, spark):
+def test_encode_job_iceberg_via_spark_submit(tmp_path, spark):
     """The full north-rule deployment in one run: spark-submit
     --py-files, input resolved from ICEBERG TABLE METADATA (--iceberg,
-    no runtime jar), the opt-in entropy competitor on (--entropy), and
-    the channel-free verify green."""
+    no runtime jar), and the channel-free verify green."""
     zpath = tmp_path / "engine.zip"
     pkg = os.path.join(REPO, "embulk_input_parquet_hadoop_spark")
     with zipfile.ZipFile(zpath, "w") as z:
@@ -204,7 +203,7 @@ def test_encode_job_iceberg_entropy_via_spark_submit(tmp_path, spark):
          "--py-files", str(zpath),
          os.path.join(REPO, "jobs", "encode_job.py"),
          "--input", str(tmp_path / "table"), "--output", out,
-         "--iceberg", "--entropy", "--verify-files"],
+         "--iceberg", "--verify-files"],
         capture_output=True, text=True, timeout=600, env=env,
         cwd=str(tmp_path))
     assert proc.returncode == 0, proc.stderr[-3000:]
