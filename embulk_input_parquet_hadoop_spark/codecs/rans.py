@@ -81,34 +81,44 @@ class _Model:
 
 def _deserialize_model(blob: bytes, rawlen: int,
                        lanes: int) -> tuple[_Model, np.ndarray, np.ndarray]:
-    raw = bytes(_ZSTD.decompress(blob, rawlen))
-    B, ntab = np.frombuffer(raw, dtype=np.uint32, count=2)
-    pos = 8
-    ctx_map = np.frombuffer(raw, dtype=np.uint16, count=B, offset=pos)
-    pos += 2 * int(B)
-    mbits = np.frombuffer(raw, dtype=np.uint8, count=ntab, offset=pos).copy()
-    pos += int(ntab)
+    """The model region, parsed for ``lanes`` lanes; a region that does
+    not decompress, or is shorter or longer than its tables and lanes
+    need, raises ``framing.FrameError``."""
+    try:
+        raw = bytes(_ZSTD.decompress(blob, rawlen))
+    except OSError as exc:
+        raise framing.FrameError(f"rANS model blob: {exc}") from exc
+    pos = 0
+
+    def take(dtype, count) -> np.ndarray:
+        nonlocal pos
+        try:
+            a = np.frombuffer(raw, dtype=dtype, count=int(count), offset=pos)
+        except ValueError as exc:
+            raise framing.FrameError(
+                f"rANS model region too short for its tables and "
+                f"L={lanes} lanes") from exc
+        pos += a.nbytes
+        return a
+
+    B, ntab = take(np.uint32, 2)
+    ctx_map = take(np.uint16, B)
+    mbits = take(np.uint8, ntab).copy()
     tables = []
     for _ in range(int(ntab)):
-        k, ne = np.frombuffer(raw, dtype=np.uint32, count=2, offset=pos)
-        pos += 8
-        dsyms = np.frombuffer(raw, dtype=np.uint16, count=k, offset=pos)
-        pos += 2 * int(k)
-        syms = np.cumsum(dsyms.astype(np.int64)).astype(np.uint16)
-        qm1 = np.frombuffer(raw, dtype=np.uint8, count=k,
-                            offset=pos).astype(np.int64)
-        pos += int(k)
-        exc = np.frombuffer(raw, dtype=np.uint32, count=ne, offset=pos)
-        pos += 4 * int(ne)
-        hi = np.frombuffer(raw, dtype=np.uint32, count=ne, offset=pos)
-        pos += 4 * int(ne)
+        k, ne = take(np.uint32, 2)
+        syms = np.cumsum(take(np.uint16, k).astype(np.int64)).astype(np.uint16)
+        qm1 = take(np.uint8, k).astype(np.int64)
+        exc = take(np.uint32, ne)
+        hi = take(np.uint32, ne)
         qm1[exc] |= hi.astype(np.int64) << 8
         tables.append((syms, qm1 + 1))
-    states = np.frombuffer(raw, dtype=np.uint64, count=lanes,
-                           offset=pos).copy()
-    pos += 8 * lanes
-    wcounts = np.frombuffer(raw, dtype=np.uint32, count=lanes,
-                            offset=pos).astype(np.int64)
+    states = take(np.uint64, lanes).copy()
+    wcounts = take(np.uint32, lanes).astype(np.int64)
+    if pos != len(raw):
+        raise framing.FrameError(
+            f"rANS model region holds {len(raw) - pos} bytes past its "
+            f"tables and L={lanes} lanes")
     return (_Model(int(B), ctx_map.copy(), tables, mbits),
             states, wcounts)
 
@@ -133,7 +143,13 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
     if params.get("deg"):
         return np.full(n, params["min"], dtype=np.int64)
     lanes = params["L"]
+    if len(payload) < 8:
+        raise framing.FrameError("rANS frame truncated: no model header")
     mlen, rawlen = np.frombuffer(payload, dtype=np.uint32, count=2)
+    if 8 + int(mlen) > len(payload):
+        raise framing.FrameError(
+            f"rANS frame truncated: a {int(mlen)}-byte model blob in a "
+            f"{len(payload)}-byte payload")
     model, state, wcounts = _deserialize_model(
         bytes(payload[8:8 + int(mlen)]), int(rawlen), lanes)
     B = model.B

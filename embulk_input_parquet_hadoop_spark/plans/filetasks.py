@@ -1,4 +1,5 @@
-"""Per-file task jobs: one Python stage, at most one task per core.
+"""Per-file task jobs: at most one task per core, in a Spark stage or,
+for a small wave, in the driver.
 
 Every file-source job in the package has one shape: the driver holds a
 list of per-file input rows (paths, plus per-file side inputs), a task
@@ -8,19 +9,28 @@ needs the O(files) or O(chunks) output whole. ``encode_path``'s waves,
 ``verify.verify_files``, ``jsonl_io``'s JSONL/CSV/Avro/ORC staging and
 ``hudi_log``'s MOR staging all run through :func:`run_file_tasks`.
 
-Job shape: ``sc.parallelize(bins, n_tasks).mapPartitions(...).collect()``
-— one Python stage. Each task builds one input ``RecordBatch`` from its
-rows, runs the task function on it, and returns the output batches as one
-Arrow IPC stream; the driver concatenates the streams. A DataFrame route
+Packing: rows are packed into ``min(rows, defaultParallelism)`` bins by
+greedy LPT on each row's source bytes. The packing is deterministic —
+ties break by listing order — because a bin's index ``pid`` names its
+outputs (chunk ids ``w{wave}-p{pid}-b{batch}`` and chunk files
+``part-{pid}-f{seq}``): a re-run or retry of the same file list lands
+the same names. ``run_file_tasks`` hands each task function its ``pid``
+on both routes below.
+
+Spark route: ``sc.parallelize(bins, n_tasks).mapPartitionsWithIndex(...)
+.collect()`` — one Python stage, one task per bin. Each task builds one
+input ``RecordBatch`` from its rows, runs the task function on it, and
+returns the output batches as one Arrow IPC stream; the driver
+concatenates the streams. A DataFrame route
 (``createDataFrame(parallelize(rows))`` + ``mapInArrow`` + ``toArrow``)
 runs two chained Python workers per task (the row conversion's
 PythonRDD, then the Arrow UDF): on a 4-core host 8 no-op file tasks cost
 1.31 s that way against 0.65 s with one Python worker per task, and the
 session keeps twice the idle Python workers alive.
 
-Packing: each task round of a Python stage has a fixed cost. Most of it
-used to be worker CPU, not waiting: every task's ``setup_spark_files``
-re-read the central directories of ``pyspark.zip``, the py4j zip and the
+Each task round of a Python stage has a fixed cost. Most of it used to
+be worker CPU, not waiting: every task's ``setup_spark_files`` re-read
+the central directories of ``pyspark.zip``, the py4j zip and the
 spark-core jar (0.24–0.51 s per task on a 4-core host), which the package
 daemon now skips for unchanged archives (``daemon.guard_zip_rereads``).
 Then each task stalled about 40 ms on the loopback-TCP worker channel
@@ -29,12 +39,49 @@ moving the channel onto a Unix domain socket (``finish`` 0–1 ms). What
 is left still grows with task rounds: on that host, warm, a no-op Python
 job costs 0.04–0.05 s as 1 task, 0.06–0.09 s as 4 and 0.12–0.13 s as 8
 (quartiles of 15; on TCP 0.08–0.09, 0.10–0.11 and 0.19–0.23 s; before
-the guard 0.22–0.24, 0.28–0.34 and 0.54–0.67 s). Files are
-therefore packed into ``min(files, defaultParallelism)`` tasks by greedy
-LPT on a per-file weight (source bytes). The packing is deterministic — ties break
-by listing order — because task ids name outputs (chunk ids
-``w{wave}-p{pid}-b{batch}`` and chunk files ``part-{pid}-f{seq}``): a
-re-run or retry of the same file list lands the same names.
+the guard 0.22–0.24, 0.28–0.34 and 0.54–0.67 s).
+
+Driver route: a wave of at most ``DRIVER_WAVE_BYTES`` source bytes runs
+its bins one after another in the driver process, in bin order, each
+with its own ``pid``, and concatenates their batches: the same rows,
+names and outputs as the Spark route, without the job. An error that
+escapes the task function reaches the caller as itself (the Spark route
+raises the job failure, ``Py4JJavaError``); a crash in native code ends
+the driver instead of failing a task. The cut is where the sequential
+body of the caller with the slowest bytes passes the job it saves: the
+Spark route runs its bins in parallel, so the dearer a byte, the earlier
+the driver route loses. Measured on a 4-core host, warm, medians of 8
+to 14 alternated pairs, driver against Spark route, per caller:
+
+- ``encode_path`` waves of append_mixed slices
+  (``pipeline.make_encode_files_fn``): events (~19 KB files, 310–430
+  ns/B in the driver) 8 vs 46 ms at 19 KB, 49 vs 72 ms at 149 KB, 93 vs
+  87 ms at 298 KB; lineitem (~75 KB files, 160–200 ns/B) 25 vs 54 ms at
+  151 KB, 100 vs 98 ms at 602 KB.
+- ``verify.verify_files`` of encoded events slices (200–390 ns/B): 7 vs
+  46 ms at 19 KB, 30 vs 87 ms at 149 KB, 63 vs 85 ms at 298 KB.
+- JSONL staging of gzipped events rows (~19 KB ``.jsonl.gz`` files,
+  weighed by their compressed bytes; 230–260 ns/B): 4 vs 44 ms at 19
+  KB, 37 vs 75 ms at 152 KB, 70 vs 80 ms at 304 KB.
+- Hudi MOR staging, each slice an events base and a log of half its rows
+  as an Avro data block (~56 KB a slice; 230–280 ns/B): 13 vs 48 ms at
+  56 KB, 63 vs 83 ms at 224 KB, 102 vs 86 ms at 449 KB.
+- Avro staging (deflate containers, decoded a record at a time in
+  Python): events rows (~17 KB files, 680–980 ns/B) 34 vs 66 ms at 35
+  KB, 65 vs 87 ms at 69 KB, 71 vs 85 ms at 104 KB, 108 vs 89 ms at 139
+  KB, 127 vs 105 ms at 174 KB; lineitem rows (~72 KB files, 580–970
+  ns/B) 83 vs 86 ms at 144 KB, 155 vs 104 ms at 217 KB.
+
+Avro bytes are the slowest measured and break even near 110–140 KB, so
+the cut is 64 KiB: at their slowest (~1 us/B) a wave at the cut costs
+the driver ~65 ms, under the 66–87 ms the Spark route took for Avro
+waves of 35–69 KB. A source that packs more rows into a byte (a more
+compressible container) costs more per byte; the cut bounds its
+in-driver body to 64 KiB of it. The other callers would still win at
+256 KiB, but one constant serves them all: an append wave of two events
+slices (~38 KB) runs in the driver, one of two lineitem slices (~150 KB)
+keeps its Spark stage, as does a wave of larger files (an encode_tokens
+wave of ~4 MB files).
 """
 
 from __future__ import annotations
@@ -43,6 +90,9 @@ import heapq
 
 import pyarrow as pa
 from pyspark.sql import SparkSession
+
+# the driver route's cut in source bytes, measured in the module docstring
+DRIVER_WAVE_BYTES = 64 * 1024
 
 
 def pack_lpt(weights: list[int], n_bins: int) -> list[list[int]]:
@@ -62,30 +112,40 @@ def pack_lpt(weights: list[int], n_bins: int) -> list[list[int]]:
 
 def run_file_tasks(spark: SparkSession, rows: list[tuple],
                    in_schema: pa.Schema, task_fn, out_schema: pa.Schema,
-                   weights: list[int] | None = None) -> pa.Table:
-    """Run ``task_fn`` over ``rows`` (tuples in ``in_schema`` field order)
-    as one Spark stage of ``min(len(rows), defaultParallelism)`` tasks,
-    rows LPT-packed on ``weights`` (unit weights when None). ``task_fn``
-    takes an iterator of input ``RecordBatch``es and yields batches in
-    ``out_schema``; the result is every task's output in task order."""
+                   weights: list[int]) -> pa.Table:
+    """Run ``task_fn`` over ``rows`` (tuples in ``in_schema`` field order),
+    LPT-packed on ``weights`` (each row's source bytes) into
+    ``min(len(rows), defaultParallelism)`` bins. ``task_fn(pid, batch)``
+    takes a bin's index and its rows as one input ``RecordBatch`` and
+    yields batches in ``out_schema``; the result is every bin's output in
+    bin order. A wave of at most ``DRIVER_WAVE_BYTES`` source bytes runs
+    its bins one after another in the driver; any other wave runs them
+    as one Spark stage, one task per bin."""
     if not rows:
         return out_schema.empty_table()
     sc = spark.sparkContext
     n_tasks = min(len(rows), sc.defaultParallelism)
-    bins = [[rows[i] for i in b]
-            for b in pack_lpt(weights or [1] * len(rows), n_tasks)]
+    bins = [[rows[i] for i in b] for b in pack_lpt(weights, n_tasks)]
     names = in_schema.names
 
-    def task(parts):
+    def run(pid, part):
+        return task_fn(pid, pa.RecordBatch.from_pylist(
+            [dict(zip(names, r)) for r in part], schema=in_schema))
+
+    if sum(weights) <= DRIVER_WAVE_BYTES:
+        return pa.Table.from_batches(
+            [out for pid, part in enumerate(bins) for out in run(pid, part)],
+            schema=out_schema)
+
+    def task(pid, parts):
         for part in parts:
-            batch = pa.RecordBatch.from_pylist(
-                [dict(zip(names, r)) for r in part], schema=in_schema)
             sink = pa.BufferOutputStream()
             with pa.ipc.new_stream(sink, out_schema) as writer:
-                for out in task_fn(iter([batch])):
+                for out in run(pid, part):
                     writer.write_batch(out)
             yield sink.getvalue().to_pybytes()
 
-    streams = sc.parallelize(bins, n_tasks).mapPartitions(task).collect()
+    streams = (sc.parallelize(bins, n_tasks)
+               .mapPartitionsWithIndex(task).collect())
     return pa.concat_tables(pa.ipc.open_stream(s).read_all()
                             for s in streams)

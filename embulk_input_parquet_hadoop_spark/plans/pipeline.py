@@ -25,8 +25,10 @@ files LPT-packed into at most one Spark task per core:
   0.06–0.09 s as 4 tasks and 0.12–0.13 s as 8, with the daemon's zip
   re-read guard and the Unix domain socket worker channel; see
   ``daemon.py`` and ``session.py``), which a task per file would pay
-  once per round. The commit and error unit is still the
-  file: each file's chunks commit, or fail, on their own;
+  once per round. A wave of at most ``filetasks.DRIVER_WAVE_BYTES``
+  source bytes runs the same tasks in the driver, without a job. The
+  commit and error unit is still the file: each file's chunks commit, or
+  fail, on their own;
 - each chunk (one Arrow batch, the row-group analogue) is encoded per
   column with the codec cascade and appended to an uncompressed Parquet
   chunk file per source file, written with pyarrow (uncompressed: the
@@ -751,7 +753,8 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                          const_schema: dict[str, str] | None = None,
                          column_renames: list[dict] | None = None):
     """Task fn for the file-source path (run by
-    ``filetasks.run_file_tasks``): paths in, chunk *stats* out.
+    ``filetasks.run_file_tasks``): paths in, chunk *stats* out. ``pid``,
+    the index of the task's bin, names its chunk ids and chunk files.
 
     Each input row is one source file in ``FILE_ROWS_ARROW_SCHEMA``:
     its path and its raw per-file side inputs (position deletes,
@@ -813,10 +816,8 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
                 "n_rows": 0, "n_tokens": 0, "raw_bytes": 0, "enc_bytes": 0,
                 "wall_ms": 0.0}
 
-    def encode_files(batches):
+    def encode_files(pid, files):
         from . import fsutil
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         # local out_dirs commit with in-place tmp + os.replace; non-local
         # ones spool the chunk file on task-local disk and publish it via
         # fsutil.put_file (atomic-at-visibility: direct final-key PUT on
@@ -825,98 +826,97 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
         fsutil.makedirs_any(wave_dir)
         bidx = 0
         fseq = 0
-        for b in batches:
-            # the per-file side inputs ride the input rows themselves —
-            # no closure state, Spark distributes them with the file
-            for path, dfiles, eqjson, cjson in zip(
-                    *b.to_pydict().values()):
-                if local:
-                    final = os.path.join(
-                        wave_dir, f"part-{pid:05d}-f{fseq:04d}.parquet")
-                    tmp = os.path.join(
-                        wave_dir,
-                        f".part-{pid:05d}-f{fseq:04d}."
-                        f"{uuid.uuid4().hex}.tmp")
-                else:
-                    final = f"{wave_dir}/part-{pid:05d}-f{fseq:04d}.parquet"
-                    import tempfile as _tf
-                    # spool on Spark's executor-local dirs when set (sized
-                    # for shuffle spill; /tmp is often a small tmpfs on
-                    # real clusters), else the system tempdir. Unique name
-                    # per attempt; the except path removes it, and a
-                    # hard-killed worker's spool dies with the local dir's
-                    # normal app cleanup
-                    spool_base = (os.environ.get("SPARK_LOCAL_DIRS", "")
-                                  .split(",")[0].strip()
-                                  or _tf.gettempdir())
-                    tmp = os.path.join(
-                        spool_base,
-                        f".spool-{uuid.uuid4().hex}.parquet")
-                fseq += 1
-                writer = None
-                pending = []  # stat rows held until the file commits
-                skipped = []  # rows lost per skipped corrupt row group
-                schema = None
-                try:
-                    for batch in _source_batches(
-                            path, batch_rows, columns, dfiles, eqjson,
-                            cjson, const_schema, column_renames,
-                            bad_record_threshold, skipped):
-                        if schema is None:
-                            schema = _schema_key(batch.schema)
-                        chunk_row, stats = _encode_one_batch(
-                            batch, wave_id, pid, bidx)
-                        if writer is None:
-                            # blobs are already coded: a dictionary
-                            # attempt on them always falls back to
-                            # plain, and their min/max statistics cost
-                            # more footer than small chunks' blobs.
-                            # Nothing reads chunk-file statistics
-                            # (prune_chunks filters the cols zone maps)
-                            writer = pq.ParquetWriter(
-                                tmp, CHUNK_ARROW_SCHEMA,
-                                compression="none", use_dictionary=False,
-                                write_statistics=False)
-                        writer.write_batch(chunk_row)
-                        pending.append(meta_row(stats, path, final,
-                                                _cols_of(chunk_row),
-                                                schema=schema))
-                        bidx += 1
-                    if writer is not None:
-                        writer.close()
-                        writer = None
-                        if local:
-                            os.replace(tmp, final)  # per-file commit point
-                        else:
-                            # publish the spooled chunk file at its final
-                            # key (atomic at upload completion); the
-                            # finally below drops the spool
-                            fsutil.put_file(final, tmp)
-                    yield from pending
-                    bad_rows = sum(skipped)
-                    if bad_rows:
-                        yield meta_row(
-                            _zero_stats(f"w{wave_id}-p{pid}-skip{fseq - 1}",
-                                        pid),
-                            path, final, [], n_bad_rows=bad_rows)
-                except Exception as exc:  # noqa: BLE001
-                    # file-level failure (unreadable footer, over-threshold
-                    # corruption, encode error): discard the partial chunk
-                    # file; record the failure and keep going — the driver
-                    # enforces bad_file_threshold per wave
-                    if writer is not None:
-                        writer.close()
-                        writer = None
+        # the per-file side inputs ride the input rows themselves — no
+        # closure state, the task gets them with the file
+        for path, dfiles, eqjson, cjson in zip(
+                *files.to_pydict().values()):
+            if local:
+                final = os.path.join(
+                    wave_dir, f"part-{pid:05d}-f{fseq:04d}.parquet")
+                tmp = os.path.join(
+                    wave_dir,
+                    f".part-{pid:05d}-f{fseq:04d}."
+                    f"{uuid.uuid4().hex}.tmp")
+            else:
+                final = f"{wave_dir}/part-{pid:05d}-f{fseq:04d}.parquet"
+                import tempfile as _tf
+                # spool on Spark's executor-local dirs when set (sized
+                # for shuffle spill; /tmp is often a small tmpfs on
+                # real clusters), else the system tempdir. Unique name
+                # per attempt; the except path removes it, and a
+                # hard-killed worker's spool dies with the local dir's
+                # normal app cleanup
+                spool_base = (os.environ.get("SPARK_LOCAL_DIRS", "")
+                              .split(",")[0].strip()
+                              or _tf.gettempdir())
+                tmp = os.path.join(
+                    spool_base,
+                    f".spool-{uuid.uuid4().hex}.parquet")
+            fseq += 1
+            writer = None
+            pending = []  # stat rows held until the file commits
+            skipped = []  # rows lost per skipped corrupt row group
+            schema = None
+            try:
+                for batch in _source_batches(
+                        path, batch_rows, columns, dfiles, eqjson,
+                        cjson, const_schema, column_renames,
+                        bad_record_threshold, skipped):
+                    if schema is None:
+                        schema = _schema_key(batch.schema)
+                    chunk_row, stats = _encode_one_batch(
+                        batch, wave_id, pid, bidx)
+                    if writer is None:
+                        # blobs are already coded: a dictionary
+                        # attempt on them always falls back to
+                        # plain, and their min/max statistics cost
+                        # more footer than small chunks' blobs.
+                        # Nothing reads chunk-file statistics
+                        # (prune_chunks filters the cols zone maps)
+                        writer = pq.ParquetWriter(
+                            tmp, CHUNK_ARROW_SCHEMA,
+                            compression="none", use_dictionary=False,
+                            write_statistics=False)
+                    writer.write_batch(chunk_row)
+                    pending.append(meta_row(stats, path, final,
+                                            _cols_of(chunk_row),
+                                            schema=schema))
+                    bidx += 1
+                if writer is not None:
+                    writer.close()
+                    writer = None
+                    if local:
+                        os.replace(tmp, final)  # per-file commit point
+                    else:
+                        # publish the spooled chunk file at its final
+                        # key (atomic at upload completion); the
+                        # finally below drops the spool
+                        fsutil.put_file(final, tmp)
+                yield from pending
+                bad_rows = sum(skipped)
+                if bad_rows:
                     yield meta_row(
-                        _zero_stats(f"w{wave_id}-p{pid}-err{fseq - 1}", pid),
-                        path, "", [], error=f"{type(exc).__name__}: {exc}")
-                finally:
-                    # a failed file's partial chunk file or a published
-                    # file's spool (nothing is left after os.replace)
-                    try:
-                        os.remove(tmp)
-                    except OSError:
-                        pass
+                        _zero_stats(f"w{wave_id}-p{pid}-skip{fseq - 1}",
+                                    pid),
+                        path, final, [], n_bad_rows=bad_rows)
+            except Exception as exc:  # noqa: BLE001
+                # file-level failure (unreadable footer, over-threshold
+                # corruption, encode error): discard the partial chunk
+                # file; record the failure and keep going — the driver
+                # enforces bad_file_threshold per wave
+                if writer is not None:
+                    writer.close()
+                    writer = None
+                yield meta_row(
+                    _zero_stats(f"w{wave_id}-p{pid}-err{fseq - 1}", pid),
+                    path, "", [], error=f"{type(exc).__name__}: {exc}")
+            finally:
+                # a failed file's partial chunk file or a published
+                # file's spool (nothing is left after os.replace)
+                try:
+                    os.remove(tmp)
+                except OSError:
+                    pass
 
     return encode_files
 
@@ -1344,7 +1344,9 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     ``.parquet`` suffix and qualified URIs follow Spark's rules, and no
     Spark job runs. Only ``expected_schema`` and ``cluster_partitions``
     make Spark infer the source schema (one Spark job that reads a
-    footer); otherwise the driver opens no footer. Schemes the JVM
+    footer); otherwise the listing opens no footer (the encode tasks of
+    a wave small enough to run in the driver open theirs there,
+    ``filetasks.DRIVER_WAVE_BYTES``). Schemes the JVM
     cannot list (``mock-s3``) are listed with pyarrow
     (``_list_parquet_files``). An empty listing still fails with
     Spark's ``UNABLE_TO_INFER_SCHEMA`` and a missing path with

@@ -198,18 +198,17 @@ def _same_values(decoded: pa.Array, source: pa.Array) -> bool:
 
 
 def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS):
-    def fn(batches):
-        for b in batches:
-            for src, chk, *side in zip(*b.to_pydict().values()):
-                s, c, r, t, m, e = _verify_one(src, chk, batch_rows, *side)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([s], type=pa.string()),
-                     pa.array([c], type=pa.string()),
-                     pa.array([r], type=pa.int64()),
-                     pa.array([t], type=pa.int64()),
-                     pa.array([m], type=pa.int64()),
-                     pa.array([e], type=pa.string())],
-                    schema=VERIFY_FILES_ARROW_SCHEMA)
+    def fn(_pid, files):
+        for src, chk, *side in zip(*files.to_pydict().values()):
+            s, c, r, t, m, e = _verify_one(src, chk, batch_rows, *side)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([s], type=pa.string()),
+                 pa.array([c], type=pa.string()),
+                 pa.array([r], type=pa.int64()),
+                 pa.array([t], type=pa.int64()),
+                 pa.array([m], type=pa.int64()),
+                 pa.array([e], type=pa.string())],
+                schema=VERIFY_FILES_ARROW_SCHEMA)
 
     return fn
 
@@ -219,7 +218,8 @@ def verify_files(spark: SparkSession, out_dir: str,
     """Distributed positional bit-identity check per source file.
 
     Source files are LPT-packed on their bytes into at most one task per
-    core (``filetasks.run_file_tasks``); each file is still checked, and
+    core (``filetasks.run_file_tasks``; a tree of small source files is
+    checked in the driver); each file is still checked, and
     reports its error, on its own. Requires the file-source encode path
     (chunks_meta carries the source-file -> chunk-file lineage);
     ``batch_rows`` must match the encode run's. Only O(n_files) stat rows

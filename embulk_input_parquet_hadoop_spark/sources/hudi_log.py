@@ -456,10 +456,10 @@ def staged_slice_name(slice_: dict) -> str:
 def stage_mor_slices(spark, scan: dict, staging_dir: str,
                      compression: str = "zstd") -> dict:
     """Materialize every log-bearing slice of a ``hudi_meta``
-    MOR ``snapshot_scan`` into ``staging_dir`` (one Python stage; slices,
-    which have no single source file, pack round-robin into at most one
-    task per core, ``filetasks.run_file_tasks``; each slice stages on its
-    own with atomically-visible idempotent writes) and return
+    MOR ``snapshot_scan`` into ``staging_dir`` (slices LPT-packed on
+    their base and log bytes into at most one task per core,
+    ``filetasks.run_file_tasks``; each slice stages on its own with
+    atomically-visible idempotent writes) and return
     ``{"files": [encode inputs: passthrough bases + staged parquet],
     "n_staged", "n_skipped", "n_passthrough", "partitions"}`` for
     ``encode_path(input_files=...)``."""
@@ -482,52 +482,56 @@ def stage_mor_slices(spark, scan: dict, staging_dir: str,
                              ("n_rows", pa.int64()),
                              ("skipped", pa.bool_())])
         jobs = []
+        sources = []  # each slice's base and log paths
         for key, s in sorted(todo.items()):
             staged = f"{base}/{staged_slice_name(s)}"
             jobs.append((json.dumps({
                 "base": s.get("base"), "logs": s["logs"],
                 "staged": staged})))
+            sources.append([p for p in (s.get("base"), *s["logs"]) if p])
             partitions[staged] = key[0]
             out_files.append(staged)
+        # a slice's source bytes, from one size lookup for every slice
+        sizes = iter(fsutil.file_sizes([p for ps in sources for p in ps]))
+        weights = [sum(next(sizes) for _ in ps) for ps in sources]
 
-        def _stage(batches):
+        def _stage(_pid, slices):
             import pyarrow.parquet as pq
             vset = set(valid)
-            for b in batches:
-                for spec_json in b.column("spec").to_pylist():
-                    spec = json.loads(spec_json)
-                    staged = spec["staged"]
-                    if fsutil.exists(staged) and \
-                            fsutil.file_size(staged) > 0:
-                        yield pa.RecordBatch.from_pylist(
-                            [{"staged": staged, "n_rows": 0,
-                              "skipped": True}], schema=summary)
-                        continue
-                    tbl = merge_slice(spec["base"], spec["logs"], vset)
-                    if local:
-                        tmp = f"{base}/.{uuid.uuid4().hex}.tmp"
-                        pq.write_table(tbl, tmp, compression=compression)
-                        os.replace(tmp, staged)
-                    else:
-                        spool = (os.environ.get("SPARK_LOCAL_DIRS", "")
-                                 .split(",")[0].strip()
-                                 or tempfile.gettempdir())
-                        tmp = os.path.join(spool,
-                                           f".mor-{uuid.uuid4().hex}")
-                        try:
-                            pq.write_table(tbl, tmp,
-                                           compression=compression)
-                            fsutil.put_file(staged, tmp)
-                        finally:
-                            if os.path.exists(tmp):
-                                os.remove(tmp)
+            for spec_json in slices.column("spec").to_pylist():
+                spec = json.loads(spec_json)
+                staged = spec["staged"]
+                if fsutil.exists(staged) and \
+                        fsutil.file_size(staged) > 0:
                     yield pa.RecordBatch.from_pylist(
-                        [{"staged": staged, "n_rows": tbl.num_rows,
-                          "skipped": False}], schema=summary)
+                        [{"staged": staged, "n_rows": 0,
+                          "skipped": True}], schema=summary)
+                    continue
+                tbl = merge_slice(spec["base"], spec["logs"], vset)
+                if local:
+                    tmp = f"{base}/.{uuid.uuid4().hex}.tmp"
+                    pq.write_table(tbl, tmp, compression=compression)
+                    os.replace(tmp, staged)
+                else:
+                    spool = (os.environ.get("SPARK_LOCAL_DIRS", "")
+                             .split(",")[0].strip()
+                             or tempfile.gettempdir())
+                    tmp = os.path.join(spool,
+                                       f".mor-{uuid.uuid4().hex}")
+                    try:
+                        pq.write_table(tbl, tmp,
+                                       compression=compression)
+                        fsutil.put_file(staged, tmp)
+                    finally:
+                        if os.path.exists(tmp):
+                            os.remove(tmp)
+                yield pa.RecordBatch.from_pylist(
+                    [{"staged": staged, "n_rows": tbl.num_rows,
+                      "skipped": False}], schema=summary)
 
         rows = run_file_tasks(
             spark, [(j,) for j in jobs], pa.schema([("spec", pa.string())]),
-            _stage, summary).to_pylist()
+            _stage, summary, weights=weights).to_pylist()
         n_staged = sum(1 for r in rows if not r["skipped"])
         n_skipped = sum(1 for r in rows if r["skipped"])
     return {"files": sorted(passthrough + out_files),

@@ -24,9 +24,10 @@ Writes publish atomically-at-visibility via ``fsutil.put_file`` (local
 spool -> temp+rename, or direct final-key PUT on object stores), so a
 half-written staged file is never visible as non-empty.
 
-Scale shape: one Python stage, source files LPT-packed on their bytes
-into at most one task per core (``filetasks.run_file_tasks``), zero
-shuffles, O(files) summary rows to the driver. Each file still stages,
+Scale shape: source files LPT-packed on their bytes into at most one
+task per core, one Python stage (``filetasks.run_file_tasks``; a set of
+small files runs in the driver), zero shuffles, O(files) summary rows to
+the driver. Each file still stages,
 and fails, on its own. Per-file schema inference can differ across files
 (a field absent from one file infers as missing) — pass ``schema_ddl``
 to pin types and column order, or encode with ``schema_mode="mixed"``
@@ -422,78 +423,77 @@ def _stage_files(spark: SparkSession, inputs: str | list[str],
     fsutil.makedirs_any(base)
     local = fsutil.is_local(base)
 
-    def _stage(batches):
+    def _stage(_pid, files):
         import pyarrow.parquet as pq
         schema = (pa.ipc.read_schema(pa.py_buffer(schema_ser))
                   if schema_ser is not None else None)
-        for b in batches:
-            for src in b.column("path").to_pylist():
-                staged = f"{base}/{staged_name(src)}"
-                try:
-                    src_size = fsutil.file_size(src)
-                    if fsutil.exists(staged) and \
-                            fsutil.file_size(staged) > 0:
-                        meta = (fsutil.parquet_file(staged)
-                                .schema_arrow.metadata or {})
-                        rec = meta.get(b"spark_graft_src_size")
-                        if rec is not None and int(rec) != src_size:
-                            # a mutated source under an idempotent
-                            # staged name would silently lose rows (a
-                            # skip) or duplicate them (a re-stage after
-                            # the old bytes were already encoded) —
-                            # refuse loudly instead
-                            raise RuntimeError(
-                                f"source changed since staged "
-                                f"({int(rec)} -> {src_size} bytes): "
-                                "the drop-directory contract is "
-                                f"immutable files; remove {staged} AND "
-                                "re-encode into a fresh tree to pick "
-                                "up the new content")
-                        yield pa.RecordBatch.from_pylist(
-                            [{"source": src, "staged": staged,
-                              "n_rows": 0, "skipped": True,
-                              "error": None}], schema=STAGE_SUMMARY_SCHEMA)
-                        continue
-                    tbl = (_read_jsonl_table(src, schema)
-                           if fmt == "jsonl"
-                           else _read_avro_table(src, schema)
-                           if fmt == "avro"
-                           else _read_orc_table(src, schema)
-                           if fmt == "orc"
-                           else _read_csv_table(src, schema, delimiter))
-                    # record the source identity the skip check needs
-                    tbl = tbl.replace_schema_metadata(
-                        {**(tbl.schema.metadata or {}),
-                         b"spark_graft_src_size":
-                             str(src_size).encode()})
-                    if local:
-                        tmp = f"{base}/.{uuid.uuid4().hex}.tmp"
-                        pq.write_table(tbl, tmp, compression=compression)
-                        os.replace(tmp, staged)
-                    else:
-                        spool_base = (os.environ
-                                      .get("SPARK_LOCAL_DIRS", "")
-                                      .split(",")[0].strip()
-                                      or tempfile.gettempdir())
-                        tmp = os.path.join(
-                            spool_base, f".stage-{uuid.uuid4().hex}")
-                        try:
-                            pq.write_table(tbl, tmp,
-                                           compression=compression)
-                            fsutil.put_file(staged, tmp)
-                        finally:
-                            if os.path.exists(tmp):
-                                os.remove(tmp)
+        for src in files.column("path").to_pylist():
+            staged = f"{base}/{staged_name(src)}"
+            try:
+                src_size = fsutil.file_size(src)
+                if fsutil.exists(staged) and \
+                        fsutil.file_size(staged) > 0:
+                    meta = (fsutil.parquet_file(staged)
+                            .schema_arrow.metadata or {})
+                    rec = meta.get(b"spark_graft_src_size")
+                    if rec is not None and int(rec) != src_size:
+                        # a mutated source under an idempotent
+                        # staged name would silently lose rows (a
+                        # skip) or duplicate them (a re-stage after
+                        # the old bytes were already encoded) —
+                        # refuse loudly instead
+                        raise RuntimeError(
+                            f"source changed since staged "
+                            f"({int(rec)} -> {src_size} bytes): "
+                            "the drop-directory contract is "
+                            f"immutable files; remove {staged} AND "
+                            "re-encode into a fresh tree to pick "
+                            "up the new content")
                     yield pa.RecordBatch.from_pylist(
                         [{"source": src, "staged": staged,
-                          "n_rows": tbl.num_rows, "skipped": False,
+                          "n_rows": 0, "skipped": True,
                           "error": None}], schema=STAGE_SUMMARY_SCHEMA)
-                except Exception as exc:  # noqa: BLE001
-                    yield pa.RecordBatch.from_pylist(
-                        [{"source": src, "staged": None, "n_rows": 0,
-                          "skipped": False,
-                          "error": f"{type(exc).__name__}: {exc}"}],
-                        schema=STAGE_SUMMARY_SCHEMA)
+                    continue
+                tbl = (_read_jsonl_table(src, schema)
+                       if fmt == "jsonl"
+                       else _read_avro_table(src, schema)
+                       if fmt == "avro"
+                       else _read_orc_table(src, schema)
+                       if fmt == "orc"
+                       else _read_csv_table(src, schema, delimiter))
+                # record the source identity the skip check needs
+                tbl = tbl.replace_schema_metadata(
+                    {**(tbl.schema.metadata or {}),
+                     b"spark_graft_src_size":
+                         str(src_size).encode()})
+                if local:
+                    tmp = f"{base}/.{uuid.uuid4().hex}.tmp"
+                    pq.write_table(tbl, tmp, compression=compression)
+                    os.replace(tmp, staged)
+                else:
+                    spool_base = (os.environ
+                                  .get("SPARK_LOCAL_DIRS", "")
+                                  .split(",")[0].strip()
+                                  or tempfile.gettempdir())
+                    tmp = os.path.join(
+                        spool_base, f".stage-{uuid.uuid4().hex}")
+                    try:
+                        pq.write_table(tbl, tmp,
+                                       compression=compression)
+                        fsutil.put_file(staged, tmp)
+                    finally:
+                        if os.path.exists(tmp):
+                            os.remove(tmp)
+                yield pa.RecordBatch.from_pylist(
+                    [{"source": src, "staged": staged,
+                      "n_rows": tbl.num_rows, "skipped": False,
+                      "error": None}], schema=STAGE_SUMMARY_SCHEMA)
+            except Exception as exc:  # noqa: BLE001
+                yield pa.RecordBatch.from_pylist(
+                    [{"source": src, "staged": None, "n_rows": 0,
+                      "skipped": False,
+                      "error": f"{type(exc).__name__}: {exc}"}],
+                    schema=STAGE_SUMMARY_SCHEMA)
 
     summary = run_file_tasks(spark, [(f,) for f in files],
                              _STAGE_ROWS_SCHEMA, _stage,

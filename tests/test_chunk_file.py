@@ -38,8 +38,8 @@ def test_chunk_file_is_mostly_blobs(tmp_path):
     pq.write_table(table, src)
     wave_dir = str(tmp_path / "chunks" / "wave=0")
     fn = pipeline.make_encode_files_fn(0, wave_dir)
-    (row,) = fn(iter([pa.RecordBatch.from_pylist(
-        [{"path": src}], schema=pipeline.FILE_ROWS_ARROW_SCHEMA)]))
+    (row,) = fn(0, pa.RecordBatch.from_pylist(
+        [{"path": src}], schema=pipeline.FILE_ROWS_ARROW_SCHEMA))
     assert row.column("error")[0].as_py() is None
     (chunk_file,) = glob.glob(f"{wave_dir}/*.parquet")  # committed
 

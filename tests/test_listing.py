@@ -15,7 +15,8 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from embulk_input_parquet_hadoop_spark.plans import manifest as mf
-from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
+from embulk_input_parquet_hadoop_spark.plans import (filetasks, pipeline,
+                                                      verify)
 from embulk_input_parquet_hadoop_spark.sources import datagen
 
 
@@ -139,9 +140,13 @@ def _group_jobs(sc, group: str) -> list[list[str]]:
 
 
 def test_expected_schema_still_runs_inference_first(spark, four_files,
-                                                    tmp_path):
+                                                    tmp_path, monkeypatch):
     # without expected_schema the encode runs no `parquet at` job at all
-    # (test_wave_runs_as_one_stage_packed_per_core pins that job shape)
+    # (test_wave_runs_as_one_stage_packed_per_core pins that job shape).
+    # These files are small enough for the driver route, which runs no
+    # job for the wave; the Spark route is forced to see the wave's job
+    # follow the inference job
+    monkeypatch.setattr(filetasks, "DRIVER_WAVE_BYTES", 0)
     sc = spark.sparkContext
     try:
         sc.setJobGroup("inferred", "encode with expected_schema")

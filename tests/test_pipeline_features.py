@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from embulk_input_parquet_hadoop_spark.plans import filetasks, fsutil
 from embulk_input_parquet_hadoop_spark.plans import manifest as mf
 from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
 from embulk_input_parquet_hadoop_spark.sources import datagen
@@ -636,10 +637,14 @@ def test_vacuum_sweeps_committed_wave_meta_tmp(spark, tokens_dir,
 
 @pytest.fixture(scope="module")
 def many_files_dir(spark, tmp_path_factory):
-    """More source files than the session has cores."""
+    """More source files than the session has cores, and more source
+    bytes than a wave that runs in the driver: their waves run as a
+    Spark stage."""
     n = spark.sparkContext.defaultParallelism + 3
     path = str(tmp_path_factory.mktemp("packed") / "tokens")
     datagen.generate(path, n_docs=40 * n, seed=17, n_files=n)
+    files = [os.path.join(path, f) for f in _parquet_names(path)]
+    assert sum(fsutil.file_sizes(files)) > filetasks.DRIVER_WAVE_BYTES
     return path
 
 

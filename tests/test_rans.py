@@ -6,7 +6,8 @@ mode; this build reads them and never writes them. Each pin under
 loop (``codecs/_rans_c.py``) and on the numpy reference path, directly and
 through ``decode_column``. The frame CRC does not cover the header's value
 count, so a frame whose ``n`` is wrong must raise, not decode to a
-different column.
+different column. A model region that does not fit the params' lane count
+``L``, or is cut short, raises ``FrameError`` too.
 """
 from __future__ import annotations
 
@@ -183,3 +184,31 @@ def test_truncated_frame_raises_not_crashes():
     _raises_on_both_paths(
         lambda: rans.rans_decode(cut, frame.params, len(expected)),
         match="truncated")
+
+
+@pytest.mark.parametrize("delta", [-1, 1])
+def test_wrong_lane_count_raises(delta):
+    """The model region holds one final state and word count per lane:
+    a params ``L`` one off leaves bytes over or runs out of them. Both
+    raise ``FrameError`` (a too-large ``L`` used to raise numpy's
+    ``ValueError``)."""
+    blob, expected = _load("dense")
+    (frame,) = framing.read_frames(blob)
+    params = dict(frame.params, L=frame.params["L"] + delta)
+    _raises_on_both_paths(
+        lambda: rans.rans_decode(frame.payload, params, len(expected)),
+        match="model region")
+
+
+def test_truncated_model_blob_raises():
+    """A model blob cut short, with its header length cut to match or
+    left as written, raises ``FrameError`` on both paths."""
+    blob, expected = _load("dense")
+    (frame,) = framing.read_frames(blob)
+    payload = bytes(frame.payload)
+    mlen, rawlen = struct.unpack_from("<II", payload)
+    short = (struct.pack("<II", mlen - 5, rawlen) + payload[8:8 + mlen - 5]
+             + payload[8 + mlen:])
+    for cut in (short, payload[:8 + mlen - 5], payload[:4]):
+        _raises_on_both_paths(
+            lambda: rans.rans_decode(cut, frame.params, len(expected)))

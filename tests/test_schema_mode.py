@@ -1,7 +1,9 @@
 """``schema_mode`` is one policy over one listing and one wave sequence:
 each encode task keys its files by schema, ``single`` refuses a wave
 that brings a second schema (before it commits), ``mixed`` lets files of
-any schemas share waves, and the driver opens no footer in either."""
+any schemas share waves, and the driver opens no footer in either for a
+wave that runs as a Spark stage (a wave of at most
+``filetasks.DRIVER_WAVE_BYTES`` runs its encode tasks in the driver)."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from embulk_input_parquet_hadoop_spark.plans import fsutil
+from embulk_input_parquet_hadoop_spark.plans import filetasks, fsutil
 from embulk_input_parquet_hadoop_spark.plans import manifest as mf
 from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
 
@@ -155,7 +157,8 @@ def test_checkpoint_keeps_the_wave_schemas(spark, tmp_path):
 @pytest.mark.parametrize("schema_mode", ["single", "mixed"])
 def test_driver_opens_no_footer(spark, tmp_path, monkeypatch, schema_mode):
     """Footers are opened in the encode tasks only (Spark's Python workers
-    are other processes, untouched by this patch)."""
+    are other processes, untouched by this patch). A wave this small
+    would run its tasks in the driver, so the Spark route is forced."""
     src = str(tmp_path / "src")
     os.makedirs(src)
     for i in range(3):
@@ -165,6 +168,7 @@ def test_driver_opens_no_footer(spark, tmp_path, monkeypatch, schema_mode):
     def no_footer(path):
         raise AssertionError(f"driver opened the footer of {path}")
 
+    monkeypatch.setattr(filetasks, "DRIVER_WAVE_BYTES", 0)
     monkeypatch.setattr(fsutil, "parquet_file", no_footer)
     totals = pipeline.encode_path(spark, src, str(tmp_path / "enc"),
                                   schema_mode=schema_mode)

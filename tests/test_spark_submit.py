@@ -7,7 +7,9 @@ master comes from the submit conf (no --cores, so the job's
 getOrCreate() branch runs), and the job completes encode + channel-free
 verify and prints clean JSON totals. (The driver side also finds the
 package next to the script — encode_job.py self-inserts its repo root —
-but the executors' Python workers resolve it from the shipped zip.)
+but the executors' Python workers resolve it from the shipped zip. Small
+waves run in the driver, so the token-table test writes waves above
+``filetasks.DRIVER_WAVE_BYTES`` to keep a Python task on the executors.)
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ import sys
 import zipfile
 
 import pytest
+
+from embulk_input_parquet_hadoop_spark.plans import filetasks
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or os.path.join(
@@ -39,14 +43,21 @@ def test_encode_job_via_spark_submit(tmp_path, spark):
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, REPO))
 
-    # a small token table from the suite's session (stopped JVMs don't
-    # conflict: spark-submit gets its own)
+    # a token table from the suite's session (stopped JVMs don't
+    # conflict: spark-submit gets its own). Every two of its files hold
+    # more than filetasks.DRIVER_WAVE_BYTES, so each of the two encode
+    # waves, and verify, run as Spark tasks: the executors' Python
+    # workers must import the package from the zip
     tok = str(tmp_path / "tokens")
-    rows = [(f"d{i}", list(range(i % 50 + 1)), i % 50 + 1, f"s{i % 3}")
-            for i in range(200)]
+    n_toks = [150 + i % 100 for i in range(2000)]
+    rows = [(f"d{i}", [(i * 7919 + j * 104729) % 50_000 for j in range(n)],
+             n, f"s{i % 3}") for i, n in enumerate(n_toks)]
     (spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string")
      .repartition(4).write.parquet(tok))
+    sizes = [os.path.getsize(os.path.join(tok, f)) for f in os.listdir(tok)
+             if f.endswith(".parquet")]
+    assert len(sizes) == 4 and 2 * min(sizes) > filetasks.DRIVER_WAVE_BYTES
 
     out = str(tmp_path / "encoded")
     env = dict(os.environ)
@@ -70,7 +81,7 @@ def test_encode_job_via_spark_submit(tmp_path, spark):
             if ln.startswith("{")][-1]
     res = json.loads(line)
     assert res["verify"]["ok"] is True, res
-    assert res["n_tokens"] == sum(i % 50 + 1 for i in range(200)), res
+    assert res["n_tokens"] == sum(n_toks), res
     assert os.path.isdir(os.path.join(out, "chunks")), "no chunk tree"
     assert os.path.isdir(os.path.join(out, "manifest")), "no manifest"
     assert set(res["columnar"]) == {"doc_id", "tokens", "n_tok", "source"}
