@@ -41,47 +41,50 @@ job costs 0.04–0.05 s as 1 task, 0.06–0.09 s as 4 and 0.12–0.13 s as 8
 (quartiles of 15; on TCP 0.08–0.09, 0.10–0.11 and 0.19–0.23 s; before
 the guard 0.22–0.24, 0.28–0.34 and 0.54–0.67 s).
 
-Driver route: a wave of at most ``DRIVER_WAVE_BYTES`` source bytes runs
-its bins one after another in the driver process, in bin order, each
-with its own ``pid``, and concatenates their batches: the same rows,
-names and outputs as the Spark route, without the job. An error that
-escapes the task function reaches the caller as itself (the Spark route
-raises the job failure, ``Py4JJavaError``); a crash in native code ends
-the driver instead of failing a task. The cut is where the sequential
-body of the caller with the slowest bytes passes the job it saves: the
-Spark route runs its bins in parallel, so the dearer a byte, the earlier
-the driver route loses. Measured on a 4-core host, warm, medians of 8
-to 14 alternated pairs, driver against Spark route, per caller:
+Driver route: a wave whose weights sum to at most ``DRIVER_WAVE_BYTES``
+runs its bins one after another in the driver process, in bin order,
+each with its own ``pid``, and concatenates their batches: the same
+rows, names and outputs as the Spark route, without the job. An error
+that escapes the task function reaches the caller as itself (the Spark
+route raises the job failure, ``Py4JJavaError``); a crash in native code
+ends the driver instead of failing a task.
 
-- ``encode_path`` waves of append_mixed slices
-  (``pipeline.make_encode_files_fn``): events (~19 KB files, 310–430
-  ns/B in the driver) 8 vs 46 ms at 19 KB, 49 vs 72 ms at 149 KB, 93 vs
-  87 ms at 298 KB; lineitem (~75 KB files, 160–200 ns/B) 25 vs 54 ms at
-  151 KB, 100 vs 98 ms at 602 KB.
-- ``verify.verify_files`` of encoded events slices (200–390 ns/B): 7 vs
-  46 ms at 19 KB, 30 vs 87 ms at 149 KB, 63 vs 85 ms at 298 KB.
-- JSONL staging of gzipped events rows (~19 KB ``.jsonl.gz`` files,
-  weighed by their compressed bytes; 230–260 ns/B): 4 vs 44 ms at 19
-  KB, 37 vs 75 ms at 152 KB, 70 vs 80 ms at 304 KB.
-- Hudi MOR staging, each slice an events base and a log of half its rows
-  as an Avro data block (~56 KB a slice; 230–280 ns/B): 13 vs 48 ms at
-  56 KB, 63 vs 83 ms at 224 KB, 102 vs 86 ms at 449 KB.
-- Avro staging (deflate containers, decoded a record at a time in
-  Python): events rows (~17 KB files, 680–980 ns/B) 34 vs 66 ms at 35
-  KB, 65 vs 87 ms at 69 KB, 71 vs 85 ms at 104 KB, 108 vs 89 ms at 139
-  KB, 127 vs 105 ms at 174 KB; lineitem rows (~72 KB files, 580–970
-  ns/B) 83 vs 86 ms at 144 KB, 155 vs 104 ms at 217 KB.
+A row's weight is its source bytes scaled by what its caller pays per
+byte in the driver. Only Avro staging scales them
+(``jsonl_io._AVRO_BYTE_COST``, 3: its containers are decoded a record
+at a time in Python); every other caller passes plain bytes. A caller
+scales every weight of a wave by the same factor, so the bins, pids and
+output names are those of plain bytes. The cut is where the sequential
+body of the dearest bytes passes the job it saves: the Spark route runs
+its bins in parallel, so the dearer a byte, the earlier the driver
+route loses. Each caller near the cut, on a 4-core host, warm (3
+warm-up pairs, then 10 alternated pairs), the whole ``run_file_tasks``
+call, median ms in the driver against the Spark route, and the driver's
+ns per source byte:
 
-Avro bytes are the slowest measured and break even near 110–140 KB, so
-the cut is 64 KiB: at their slowest (~1 us/B) a wave at the cut costs
-the driver ~65 ms, under the 66–87 ms the Spark route took for Avro
-waves of 35–69 KB. A source that packs more rows into a byte (a more
-compressible container) costs more per byte; the cut bounds its
-in-driver body to 64 KiB of it. The other callers would still win at
-256 KiB, but one constant serves them all: an append wave of two events
-slices (~38 KB) runs in the driver, one of two lineitem slices (~150 KB)
-keeps its Spark stage, as does a wave of larger files (an encode_tokens
-wave of ~4 MB files).
+===========================================  ============  ==========  ====
+caller, source files                         source bytes  driver/ms   ns/B
+===========================================  ============  ==========  ====
+encode wave, 11 events slices (~19 KB)       209 KB        63 vs 119   303
+encode wave, 2 lineitem slices (~98 KB)      195 KB        24 vs 71    125
+``verify_files``, 11 encoded events slices   209 KB        44 vs 67    210
+JSONL staging, 11 ``.jsonl.gz`` (events)     209 KB        52 vs 78    249
+CSV staging, 4 ``.csv`` (events)             214 KB        15 vs 63    70
+ORC staging, 7 ``.orc`` (events)             214 KB        20 vs 65    92
+Hudi MOR staging, 4 slices (base + log)      180 KB        63 vs 78    348
+Hudi MOR staging, 5 slices (base + log)      226 KB        68 vs 93    302
+Avro staging, 4 deflate ``.avro`` (events)   69 KB         80 vs 111   1166
+Avro staging, 12 deflate ``.avro`` (events)  206 KB        134 vs 107  651
+===========================================  ============  ==========  ====
+
+Every caller at 1x wins at ~196 KB; Avro wins at 64 KiB of container
+bytes and loses at ~196 KB, so its bytes weigh 3x and its cut stays at
+64 KiB. An earlier sweep on the same host put the break-even of events
+encode waves near 280 KB, of lineitem encode waves near 600 KB, and of
+Avro staging near 110–140 KB. So an append wave of two events slices
+(~38 KB) or two lineitem slices (~150 KB) runs in the driver; a wave of
+larger files (an encode_tokens wave of ~4 MB files) keeps its Spark
+stage.
 """
 
 from __future__ import annotations
@@ -91,8 +94,9 @@ import heapq
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
-# the driver route's cut in source bytes, measured in the module docstring
-DRIVER_WAVE_BYTES = 64 * 1024
+# the driver route's cut in weighted source bytes, measured in the
+# module docstring
+DRIVER_WAVE_BYTES = 192 * 1024
 
 
 def pack_lpt(weights: list[int], n_bins: int) -> list[list[int]]:
@@ -114,12 +118,13 @@ def run_file_tasks(spark: SparkSession, rows: list[tuple],
                    in_schema: pa.Schema, task_fn, out_schema: pa.Schema,
                    weights: list[int]) -> pa.Table:
     """Run ``task_fn`` over ``rows`` (tuples in ``in_schema`` field order),
-    LPT-packed on ``weights`` (each row's source bytes) into
+    LPT-packed on ``weights`` (each row's source bytes, scaled by the
+    caller's cost per byte; see the module docstring) into
     ``min(len(rows), defaultParallelism)`` bins. ``task_fn(pid, batch)``
     takes a bin's index and its rows as one input ``RecordBatch`` and
     yields batches in ``out_schema``; the result is every bin's output in
-    bin order. A wave of at most ``DRIVER_WAVE_BYTES`` source bytes runs
-    its bins one after another in the driver; any other wave runs them
+    bin order. A wave whose weights sum to at most ``DRIVER_WAVE_BYTES``
+    runs its bins one after another in the driver; any other wave runs them
     as one Spark stage, one task per bin."""
     if not rows:
         return out_schema.empty_table()

@@ -26,9 +26,10 @@ files LPT-packed into at most one Spark task per core:
   re-read guard and the Unix domain socket worker channel; see
   ``daemon.py`` and ``session.py``), which a task per file would pay
   once per round. A wave of at most ``filetasks.DRIVER_WAVE_BYTES``
-  source bytes runs the same tasks in the driver, without a job. The
-  commit and error unit is still the file: each file's chunks commit, or
-  fail, on their own;
+  (192 KiB) of source bytes, such as an append of two lineitem- or
+  events-sized slices, runs the same tasks in the driver, without a
+  job. The commit and error unit is still the file: each file's chunks
+  commit, or fail, on their own;
 - each chunk (one Arrow batch, the row-group analogue) is encoded per
   column with the codec cascade and appended to an uncompressed Parquet
   chunk file per source file, written with pyarrow (uncompressed: the
@@ -1185,20 +1186,41 @@ def _uri_to_path(uri: str) -> str:
     return uri
 
 
+# UTF-16 units per py4j answer of the listing, far below the ~8 KB at
+# which an answer stalls (``spark_input_files``)
+_LISTING_CHUNK = 2048
+
+
 def spark_input_files(df: DataFrame) -> list[str]:
-    """``df.inputFiles()`` in a fixed number of py4j calls. pyspark's own
+    """``df.inputFiles()`` in a few py4j calls. pyspark's own
     ``inputFiles`` converts the JVM array one element per round trip
-    (13-18 ms for 128 files on a 4-core host, against ~2 ms here);
-    this joins it JVM-side. The class is named directly, not walked
-    package by package from ``spark._jvm``, which would cost one round
-    trip per name component. Spark lists URIs, which percent-encode a
-    newline in a name (``%0A``), so the joined string splits back
-    exactly."""
+    (13-18 ms for 128 files on a 4-core host); this joins it JVM-side
+    into a ``StringBuilder`` and fetches the joined string in substrings
+    of at most ``_LISTING_CHUNK`` UTF-16 units. A single py4j answer
+    above ~8 KB costs a fixed ~43 ms on that host (a listing of 110
+    append_mixed files, ~9.9 KB, took 44 ms in one answer and 1 ms at
+    5.3 KB); the likely cause, not verified, is delayed ACK against
+    Nagle on the gateway's JVM side (setting ``TCP_NODELAY`` or
+    ``TCP_QUICKACK`` on the Python side did not help). Each substring
+    ends on a code-point boundary (``offsetByCodePoints``), so a name
+    with an astral-plane character is never cut inside its surrogate
+    pair. The classes are named directly, not walked package by package
+    from ``spark._jvm``, which would cost one round trip per name
+    component. Spark lists URIs, which percent-encode a newline in a
+    name (``%0A``), so the joined string splits back exactly."""
     from py4j.java_gateway import JavaClass
-    array_seq = JavaClass("scala.collection.immutable.ArraySeq",
-                          df.sparkSession._jvm._gateway_client)
-    joined = array_seq.unsafeWrapArray(df._jdf.inputFiles()).mkString("\n")
-    return joined.split("\n") if joined else []
+    gateway = df.sparkSession._jvm._gateway_client
+    builder = JavaClass("scala.collection.mutable.StringBuilder", gateway)()
+    joined = (JavaClass("scala.collection.immutable.ArraySeq", gateway)
+              .unsafeWrapArray(df._jdf.inputFiles())
+              .addString(builder, "\n").underlying())
+    n, start, parts = joined.length(), 0, []
+    while start < n:
+        end = (n if n - start <= _LISTING_CHUNK else
+               joined.offsetByCodePoints(start + _LISTING_CHUNK, -1))
+        parts.append(joined.substring(start, end))
+        start = end
+    return "".join(parts).split("\n") if n else []
 
 
 def _lineage_key(path: str) -> str:
@@ -1345,8 +1367,10 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     Spark job runs. Only ``expected_schema`` and ``cluster_partitions``
     make Spark infer the source schema (one Spark job that reads a
     footer); otherwise the listing opens no footer (the encode tasks of
-    a wave small enough to run in the driver open theirs there,
-    ``filetasks.DRIVER_WAVE_BYTES``). Schemes the JVM
+    a wave of at most ``filetasks.DRIVER_WAVE_BYTES`` run in the driver
+    and open theirs there). The listing comes back through
+    ``spark_input_files`` in answers of at most ``_LISTING_CHUNK``
+    UTF-16 units, so a long one costs no py4j stall. Schemes the JVM
     cannot list (``mock-s3``) are listed with pyarrow
     (``_list_parquet_files``). An empty listing still fails with
     Spark's ``UNABLE_TO_INFER_SCHEMA`` and a missing path with

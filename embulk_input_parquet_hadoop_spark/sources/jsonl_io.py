@@ -59,6 +59,11 @@ STAGE_SUMMARY_SCHEMA = pa.schema([
     ("error", pa.string())])
 _STAGE_ROWS_SCHEMA = pa.schema([("path", pa.string())])
 
+# an Avro container's bytes weigh this many source bytes of the other
+# formats in the driver-wave cut: decoded a record at a time in Python,
+# they cost ~3x as much per byte (``filetasks`` module docstring)
+_AVRO_BYTE_COST = 3
+
 _EXTS = {"jsonl": (".jsonl", ".json", ".ndjson", ".jsonl.gz",
                    ".json.gz", ".ndjson.gz"),
          "csv": (".csv", ".tsv", ".csv.gz", ".tsv.gz"),
@@ -279,7 +284,8 @@ def stage_avro(spark: SparkSession, inputs: str | list[str],
     fixed); ``schema_ddl`` pins types/order across files exactly like
     the JSONL path. Decode is record-at-a-time Python — a documented
     staging-pass cost (one pass, embarrassingly parallel), not an
-    encode-path cost."""
+    encode-path cost; it is why a container's bytes weigh
+    ``_AVRO_BYTE_COST`` times their size in the driver-wave cut."""
     return _stage_files(spark, inputs, staging_dir, "avro", schema_ddl,
                         bad_file_threshold, compression, None)
 
@@ -495,10 +501,12 @@ def _stage_files(spark: SparkSession, inputs: str | list[str],
                       "error": f"{type(exc).__name__}: {exc}"}],
                     schema=STAGE_SUMMARY_SCHEMA)
 
+    cost = _AVRO_BYTE_COST if fmt == "avro" else 1
     summary = run_file_tasks(spark, [(f,) for f in files],
                              _STAGE_ROWS_SCHEMA, _stage,
                              STAGE_SUMMARY_SCHEMA,
-                             weights=fsutil.file_sizes(files))
+                             weights=[cost * size for size
+                                      in fsutil.file_sizes(files)])
     rows = summary.to_pylist()
     by_src = {r["source"]: r for r in rows}
     errors = [(r["source"], r["error"]) for r in rows if r["error"]]

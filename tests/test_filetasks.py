@@ -233,6 +233,75 @@ def test_routes_stage_the_same_jsonl(spark, tmp_path, monkeypatch):
     assert strip == {k: v for k, v in spk.items() if k != "files"}
 
 
+def _lineitem_slice(path: str, rng, n: int = 3000) -> int:
+    """A Parquet (zstd) slice shaped like TPC-H lineitem rows, ~75 KB at
+    3,000 rows; returns its size."""
+    pq.write_table(pa.table({
+        "l_orderkey": rng.integers(0, 150_000, n),
+        "l_partkey": rng.integers(0, 20_000, n),
+        "l_suppkey": rng.integers(0, 1_000, n),
+        "l_linenumber": rng.integers(1, 8, n).astype(np.int32),
+        "l_quantity": rng.integers(1, 51, n).astype(np.float64),
+        "l_extendedprice": rng.integers(90_000, 10_500_000, n) / 100.0,
+        "l_discount": rng.integers(0, 11, n) / 100.0,
+        "l_tax": rng.integers(0, 9, n) / 100.0,
+        "l_returnflag": rng.choice(np.array(["A", "N", "R"]), n),
+        "l_linestatus": rng.choice(np.array(["O", "F"]), n),
+        "l_shipdate": pa.array(rng.integers(9_132, 11_631, n)
+                               * 86_400_000_000, pa.timestamp("us")),
+    }), path, compression="zstd")
+    return os.path.getsize(path)
+
+
+def test_lineitem_append_runs_in_the_driver(spark, tmp_path):
+    """An append of two ~75 KB lineitem slices, more than 64 KiB but
+    within ``DRIVER_WAVE_BYTES``, encodes without a Spark job."""
+    rng = np.random.default_rng(3)
+    src, out = tmp_path / "lineitem", str(tmp_path / "enc")
+    src.mkdir()
+    _lineitem_slice(str(src / "s0.parquet"), rng)
+    pipeline.encode_path(spark, str(src), out)
+    sizes = [_lineitem_slice(str(src / f"s{k}.parquet"), rng)
+             for k in (1, 2)]
+    assert 64 * 1024 < sum(sizes) <= filetasks.DRIVER_WAVE_BYTES
+    totals, jobs = _jobs_of(spark, "lineitem-append", lambda: (
+        pipeline.encode_path(spark, str(src), out, append=True)))
+    assert jobs == []
+    assert totals["n_rows"] == 6000
+    v = verify.verify_files(spark, out)
+    assert v["ok"] and v["files_compared"] == 3
+
+
+def test_avro_bytes_weigh_more_than_jsonl(spark, tmp_path):
+    """Staging weighs an Avro container's bytes at
+    ``jsonl_io._AVRO_BYTE_COST`` times their size (decoded a record at a
+    time in Python): 64–192 KiB of Avro runs as a Spark job, the same
+    bytes of JSONL in the driver."""
+    from embulk_input_parquet_hadoop_spark.sources import avro_io
+    rng = np.random.default_rng(4)
+    schema = {"type": "record", "name": "doc", "fields": [
+        {"name": "doc_id", "type": "long"},
+        {"name": "text", "type": "string"}]}
+    avro_dir, jsonl_dir = tmp_path / "avro", tmp_path / "jsonl"
+    avro_dir.mkdir()
+    jsonl_dir.mkdir()
+    for k in range(2):
+        docs = [{"doc_id": i, "text": rng.bytes(24).hex()}
+                for i in range(1600)]
+        avro_io.write_avro(str(avro_dir / f"p{k}.avro"), schema, docs)
+        (jsonl_dir / f"p{k}.jsonl").write_text(
+            "".join(json.dumps(d) + "\n" for d in docs[:650]))
+    for d in (avro_dir, jsonl_dir):
+        total = sum(f.stat().st_size for f in d.iterdir())
+        assert 64 * 1024 < total <= filetasks.DRIVER_WAVE_BYTES, (d, total)
+    av, jobs = _jobs_of(spark, "avro-stage", lambda: jl.stage_avro(
+        spark, str(avro_dir), str(tmp_path / "stg_avro")))
+    assert len(jobs) == 1 and av["n_rows"] == 3200
+    js, jobs = _jobs_of(spark, "jsonl-stage", lambda: jl.stage_jsonl(
+        spark, str(jsonl_dir), str(tmp_path / "stg_jsonl")))
+    assert jobs == [] and js["n_rows"] == 1300
+
+
 def test_escaping_error_reaches_the_caller(spark, monkeypatch):
     """An error that escapes the task function reaches the caller as
     itself on the driver route; the Spark route wraps it in the job

@@ -98,26 +98,35 @@ def test_lineage_matches_spark_inference_listing(spark, tmp_path,
 
 
 def test_one_call_listing_keeps_every_name(spark, tmp_path):
-    """``spark_input_files`` joins the JVM listing in one py4j call; a
-    newline in a file name (listed as ``%0A``) must not split it."""
+    """``spark_input_files`` joins the JVM listing JVM-side and fetches
+    it in substrings of at most ``_LISTING_CHUNK`` UTF-16 units;
+    a newline in a file name (listed as ``%0A``) must not split it, nor
+    a substring boundary an astral-plane character's surrogate pair
+    (the names carry runs of them, so some boundary falls inside one)."""
     from pyspark.sql.types import StructType
 
     from embulk_input_parquet_hadoop_spark.sources import table
     tree = str(tmp_path / "odd")
-    for k, name in enumerate(("a\nb.parquet", "c d%e.parquet",
-                              "part-0.parquet")):
+    astral = "\U0001F600"
+    names = ["a\nb.parquet", "c d%e.parquet", "part-0.parquet"] + [
+        f"{i:03d}-{astral * (30 + i % 17)}-é%\n.parquet" for i in range(300)]
+    for k, name in enumerate(names):
         _write(f"{tree}/{name}", 10 * k)
     df = spark.read.schema(StructType()).parquet(tree)
     listed = pipeline.spark_input_files(df)
-    assert listed == df.inputFiles() and len(listed) == 3
+    assert listed == df.inputFiles() and len(listed) == len(names)
+    units = len("\n".join(listed).encode("utf-16-le")) // 2
+    assert units > 3 * pipeline._LISTING_CHUNK
     assert table.table_files(df) == sorted(df.inputFiles())
     assert pipeline.spark_input_files(spark.range(3)) == []
 
     out = str(tmp_path / "out")
     pipeline.encode_path(spark, tree, out)
-    assert f"{tree}/a\nb.parquet" in mf.committed_input_files(out)
+    assert sorted(mf.committed_input_files(out)) == sorted(
+        f"{tree}/{n}" for n in names)
     v = verify.verify_files(spark, out)
-    assert v["ok"] and v["files_compared"] == 3 and v["rows_compared"] == 30
+    assert v["ok"] and v["files_compared"] == len(names)
+    assert v["rows_compared"] == 10 * len(names)
 
 
 def test_empty_and_missing_inputs_keep_sparks_refusal(spark, tmp_path):
