@@ -737,9 +737,7 @@ def q57_bpe_pair_counts(spark, sf_dir):
     identical set). Pair extraction is map-only slice+zip+explode JVM
     built-ins; the count is one keyed shuffle with map-side combine
     over the live-pair key space (≤ vocab², corpus-size independent);
-    only the counted aggregate sorts. The merge step
-    (`vocab.apply_bpe_merge`, greedy left-to-right) is unit-gated
-    against a pure-Python reference in tests/test_vocab.py."""
+    only the counted aggregate sorts."""
     toks = _t(spark, sf_dir, "documents").select(
         token_ids(F.col("text"), VOCAB).alias("tokens"))
     return vocab.pair_counts(toks, top_k=50)

@@ -195,7 +195,7 @@ def run_queries(sf_dir: str) -> tuple[dict, dict]:
 def main() -> None:
     sf = _sf_from_dir(SF_DIR)
     os.makedirs(WORK, exist_ok=True)
-    # Pin the C kernel build (the xp codec and the rANS decoder) before
+    # Pin the C kernel build (the xp codec) before
     # ANY timed leg: on a machine with a cold cache every worker that
     # misses the .so races its own `cc` (up to 32 concurrent compiles of
     # the same source) inside the first encode's timed wall. Importing

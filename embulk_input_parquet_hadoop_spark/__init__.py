@@ -19,7 +19,6 @@ Layout:
   sources/    parquet/iceberg-style scan helpers, token-table datagen
   plans/      encode pipeline, verify, resumable manifest
   functions/  oracle-stable hash/text helpers shared by Spark + DuckDB
-  streaming/  structured-streaming encode (foreachBatch micro-batch)
 """
 
 __version__ = "0.1.0"

@@ -164,8 +164,8 @@ def dict_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
 # faster to encode than 16-bit pack + byte-plane transpose (measured on the
 # bench corpus: 1.163 vs 1.232 B/token, 37 vs 75 ms per 2.8M values).
 #
-# When the shared C module is available (codecs/_rans_c.py — same build
-# as the rANS loops), both directions run fused single-pass kernels:
+# When the C module is available (codecs/_rans_c.py), both directions
+# run fused single-pass kernels:
 # encode 27 -> 9 ms and decode 51 -> 12 ms per 4.4M values (measured,
 # best-of-7). The numpy code below stays the byte-exact reference and
 # the no-compiler fallback; SPARK_GRAFT_NO_RANS_C=1 forces it.

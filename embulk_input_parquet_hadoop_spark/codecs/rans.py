@@ -21,19 +21,17 @@ encoder started every lane at state 2^32, so an exact decode ends each
 lane there with all of its words read; ``rans_decode`` raises
 ``framing.FrameError`` otherwise.
 
-Two decoders give identical output: scalar C (``_rans_c.py``) when the
-system compiler is available, and the numpy reference, which runs the
-lanes as ``O(n / L)`` steps of ``L``-wide vector ops.
+The decoder is numpy alone: it runs the lanes as ``O(n / L)`` steps of
+``L``-wide vector ops. No build writes these frames, so its speed
+bounds only the reading of trees that older builds wrote.
 """
 
 from __future__ import annotations
 
-import ctypes
-
 import numpy as np
 import pyarrow as pa
 
-from . import _rans_c, framing
+from . import framing
 
 _ZSTD = pa.Codec("zstd", compression_level=1)
 
@@ -158,44 +156,17 @@ def rans_decode(payload: bytes, params: dict, n: int) -> np.ndarray:
     starts, lens, base, rem = _lane_layout(n, lanes)
     rptr = np.concatenate([[0], np.cumsum(wcounts)[:-1]]).astype(np.int64)
     rend = rptr + wcounts
-    # lane l owns words [rptr[l], rend[l]); the C loop bounds its reads
-    # by rend, which is only safe when the last lane ends in the buffer
+    # lane l owns words [rptr[l], rend[l]); reads are bounded by rend,
+    # which is only sound when the last lane ends in the buffer
     if int(wcounts.sum()) != len(raw_stream):
         raise framing.FrameError(
             f"rANS frame inconsistent: lane word counts sum to "
             f"{int(wcounts.sum())} but stream holds {len(raw_stream)} "
             f"words (truncated frame?)")
 
-    if _rans_c.LIB is not None:
-        out = np.empty(n, dtype=np.int64)
-        # the word stream starts at 8 + model-blob length — arbitrary, so
-        # ~3/4 of frames are 4-byte MISaligned; ascontiguousarray does
-        # NOT fix alignment, and a misaligned uint32* is UB in C
-        stream_c = (raw_stream if raw_stream.flags["ALIGNED"]
-                    else raw_stream.copy())
-        ctx64 = model.ctx_map.astype(np.int64)
-        f32 = np.ascontiguousarray(model.f_of_slot)
-        c32 = np.ascontiguousarray(model.cbase_of_slot)
-        sym16 = np.ascontiguousarray(model.sym_of_slot)
-        i64, u64, u32, u16, u8 = (ctypes.c_int64, ctypes.c_uint64,
-                                  ctypes.c_uint32, ctypes.c_uint16,
-                                  ctypes.c_uint8)
-        _rans_c.LIB.rans_decode_lanes(
-            lanes, _rans_c.as_ptr(starts, i64), _rans_c.as_ptr(lens, i64),
-            _rans_c.as_ptr(model.slot_off, i64),
-            _rans_c.as_ptr(sym16, u16), _rans_c.as_ptr(f32, u32),
-            _rans_c.as_ptr(c32, u32),
-            _rans_c.as_ptr(np.ascontiguousarray(model.mbits), u8),
-            _rans_c.as_ptr(ctx64, i64),
-            int(B), int(model.shared_tid), int(ESC),
-            _rans_c.as_ptr(stream_c, u32), _rans_c.as_ptr(rptr, i64),
-            _rans_c.as_ptr(rend, i64),
-            _rans_c.as_ptr(state, u64), _rans_c.as_ptr(out, i64))
-        _check_end_state(state, rptr, rend)
-        return out + np.int64(params["min"])
-
     # one zero word past the end: a read at or past a lane's word end
-    # yields it and still advances rptr, exactly as the C loop does
+    # yields it and still advances rptr, so an overrun shows in the final
+    # read pointer
     stream = np.append(raw_stream.astype(np.uint64), np.uint64(0))
     pad = len(raw_stream)
 

@@ -54,9 +54,8 @@ import pyarrow  # noqa: F401
 from embulk_input_parquet_hadoop_spark.operators import encode  # noqa: F401
 from embulk_input_parquet_hadoop_spark.plans import pipeline  # noqa: F401
 # (the encode import above also pulls in codecs._rans_c via intcodecs,
-# which builds/loads the optional C hot loops for the xp codec and the
-# rANS decoder — forked workers inherit the bound library instead of
-# compiling on first use)
+# which builds/loads the optional C hot loops of the xp codec — forked
+# workers inherit the bound library instead of compiling on first use)
 
 from pyspark.daemon import manager
 

@@ -95,55 +95,20 @@ class IvfIndex:
     set)`` filter becomes Spark partition pruning and only the probed
     buckets' files are ever read. VERDICT r2 #3: build once, search many —
     no per-query retrain, no per-query full-corpus assignment scan.
-
-    ``qvectors`` (optional, ``sq8=True`` at build) is the same posting-list
-    layout with int8 scalar-quantized vectors — the FAISS SQ8 analogue:
-    ~4x less scan IO per probe at 100 TB, with ``ivf_search_sq`` rescoring
-    its shortlist against the exact vectors.
     """
 
     def __init__(self, centroids: np.ndarray, vectors: DataFrame,
-                 id_col: str, vec_col: str,
-                 qvectors: DataFrame | None = None):
+                 id_col: str, vec_col: str):
         self.centroids = np.ascontiguousarray(centroids, dtype=np.float64)
         self.vectors = vectors
         self.id_col = id_col
         self.vec_col = vec_col
-        self.qvectors = qvectors
-
-
-def sq8_quantize(vectors: DataFrame, id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
-    """Per-vector int8 scalar quantization: q = round(127 * v / max|v|),
-    one numpy pass per Arrow batch (map-only, no shuffle, no per-row
-    Python). The per-vector scale is NOT stored: cosine is scale-invariant,
-    so search needs only the quantized direction — the whole win is that a
-    probe scans array<tinyint> posting lists (~1/4 the bytes of float32).
-    """
-    def kernel(batches):
-        for b in batches:
-            V = _fixed_matrix(b.column(vec_col)).astype(np.float64)
-            n, d = V.shape
-            s = np.abs(V).max(axis=1)
-            s[s == 0] = 1.0
-            Q = np.clip(np.rint(V / s[:, None] * 127.0),
-                        -127, 127).astype(np.int8)
-            qarr = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32)),
-                pa.array(Q.reshape(-1)))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(id_col).cast(pa.int64()),
-                 b.column("centroid").cast(pa.int64()), qarr],
-                names=[id_col, "centroid", "qvec"])
-
-    return vectors.select(id_col, "centroid", vec_col).mapInArrow(
-        kernel, f"{id_col} bigint, centroid bigint, qvec array<tinyint>")
 
 
 def ivf_build(emb: DataFrame, n_centroids: int = 16, n_iters: int = 8,
               sample: int = 4096, id_col: str = "vec_id",
               vec_col: str = "embedding",
-              out_path: str | None = None, sq8: bool = False) -> IvfIndex:
+              out_path: str | None = None) -> IvfIndex:
     """Train centroids (bounded sample) and materialize the assignment.
 
     With ``out_path``: writes ``centroids.json`` + ``vectors/`` partitioned
@@ -153,33 +118,21 @@ def ivf_build(emb: DataFrame, n_centroids: int = 16, n_iters: int = 8,
     stays a lazy plan joined back to ``emb`` (cheap one-shot path; each
     search action re-runs the assignment map — use ``out_path`` to amortize
     over many queries).
-
-    ``sq8=True`` additionally materializes int8-quantized posting lists
-    (``qvectors/`` on disk) for ``ivf_search_sq``'s low-IO probe scans.
     """
     C = train_centroids(emb, n_centroids, n_iters, sample, id_col, vec_col)
     assign = ivf_assign(emb, C, id_col, vec_col)
     vectors = emb.select(id_col, vec_col).join(assign, id_col)
     if out_path is None:
-        qvectors = sq8_quantize(vectors, id_col, vec_col) if sq8 else None
-        return IvfIndex(C, vectors, id_col, vec_col, qvectors)
+        return IvfIndex(C, vectors, id_col, vec_col)
     import json
     import os
     spark = emb.sparkSession
     (vectors.write.mode("overwrite").partitionBy("centroid")
      .parquet(f"{out_path}/vectors"))
-    if sq8:
-        # quantize from the just-written tree, not the lazy `vectors`
-        # plan: re-running that plan would repeat the full source scan +
-        # assignment (doubling build cost at corpus scale)
-        written = spark.read.parquet(f"{out_path}/vectors")
-        (sq8_quantize(written, id_col, vec_col)
-         .write.mode("overwrite").partitionBy("centroid")
-         .parquet(f"{out_path}/qvectors"))
     os.makedirs(out_path, exist_ok=True)
     with open(f"{out_path}/centroids.json", "w") as f:
         json.dump({"centroids": C.tolist(), "id_col": id_col,
-                   "vec_col": vec_col, "sq8": sq8}, f)
+                   "vec_col": vec_col}, f)
     return ivf_load(spark, out_path)
 
 
@@ -189,10 +142,8 @@ def ivf_load(spark, out_path: str) -> IvfIndex:
     with open(f"{out_path}/centroids.json") as f:
         meta = json.load(f)
     vectors = spark.read.parquet(f"{out_path}/vectors")
-    qvectors = (spark.read.parquet(f"{out_path}/qvectors")
-                if meta.get("sq8") else None)
     return IvfIndex(np.array(meta["centroids"], dtype=np.float64), vectors,
-                    meta["id_col"], meta["vec_col"], qvectors)
+                    meta["id_col"], meta["vec_col"])
 
 
 def ivf_search(index: IvfIndex, query_vec, k: int = 20, nprobe: int = 4,
@@ -218,52 +169,6 @@ def ivf_search(index: IvfIndex, query_vec, k: int = 20, nprobe: int = 4,
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
-def ivf_search_sq(index: IvfIndex, query_vec, k: int = 20, nprobe: int = 4,
-                  rescore: int | None = 4,
-                  exclude_id: int | None = None) -> DataFrame:
-    """SQ8 search: probe the int8 posting lists, shortlist by quantized
-    cosine, then rescore the shortlist against the exact vectors.
-
-    The probe scan reads ~1/4 the bytes of the float path (the 100 TB
-    win); quantization only reorders *candidate generation* — the returned
-    ``cos_sim`` values are exact, computed on the float vectors for the
-    ``rescore * k`` best quantized candidates (ties by id). With a rescore
-    pool covering every candidate the result is bit-identical to
-    ``ivf_search`` (tested); ``rescore=None`` skips the refine step and
-    returns the quantized approximation of the scores themselves.
-    """
-    if index.qvectors is None:
-        raise ValueError("index built without sq8=True")
-    id_col, vec_col = index.id_col, index.vec_col
-    qv_raw = np.asarray(query_vec, dtype=np.float64)
-    qv = _unit_rows(qv_raw[None, :])[0]
-    probe = [int(p) for p in
-             np.argsort(-(index.centroids @ qv))[:nprobe]]
-    cand = index.qvectors.filter(F.col("centroid").isin(probe))
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    qarr = F.array(*[F.lit(float(x)) for x in qv_raw])
-    qdenom = _norm(F.col("qvec")) * _norm(qarr)
-    qcos = F.when(qdenom != 0.0, _dot(F.col("qvec"), qarr) / qdenom) \
-        .otherwise(F.lit(0.0))
-    approx = cand.select(F.col(id_col), F.round(qcos, 4).alias("cos_sim"))
-    if rescore is None:
-        return approx.orderBy(F.col("cos_sim").desc(),
-                              F.col(id_col)).limit(k)
-    short = (approx.orderBy(F.col("cos_sim").desc(), F.col(id_col))
-             .limit(rescore * k).select(id_col))
-    # shortlist ids all come from the probed buckets, so the rescore read
-    # stays partition-pruned to them — without this the refine pass would
-    # scan every float posting list and forfeit the SQ8 IO win
-    exact = (index.vectors.filter(F.col("centroid").isin(probe))
-             .join(F.broadcast(short), id_col))
-    denom = _norm(F.col(vec_col)) * _norm(qarr)
-    cos = F.when(denom != 0.0, _dot(F.col(vec_col), qarr) / denom) \
-        .otherwise(F.lit(0.0))
-    return (exact.select(F.col(id_col), F.round(cos, 4).alias("cos_sim"))
-            .orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k))
-
-
 def ivf_topk(emb: DataFrame, query_id: int, k: int = 20,
              n_centroids: int = 16, nprobe: int = 4, n_iters: int = 8,
              sample: int = 4096, id_col: str = "vec_id",
@@ -279,58 +184,3 @@ def ivf_topk(emb: DataFrame, query_id: int, k: int = 20,
                       nprobe, exclude_id=query_id)
 
 
-def ivf_search_many(index: IvfIndex, queries: DataFrame, k: int = 20,
-                    nprobe: int = 4, qid_col: str = "query_id",
-                    qvec_col: str = "qvec") -> DataFrame:
-    """Batched ANN: top-k for EVERY query in one pass over the index.
-
-    The per-query loop of repeated ``ivf_search`` calls would scan the
-    index Q times; this runs the whole workload as one plan:
-
-    1. map-only: each query row expands to its ``nprobe`` nearest
-       centroids (numpy argsort against the broadcast centroid matrix —
-       (Q x nprobe) rows, no shuffle);
-    2. equi-join probes with the index vectors on ``centroid`` — the same
-       shuffle key the index is partitioned by, so candidate generation
-       is bucket-local and a vector in an unprobed bucket is never read;
-    3. per-(query, vector) cosine with the JVM expression kernel
-       (sequential fold — identical semantics to the exact path);
-    4. per-query top-k via a rank window partitioned by query id.
-
-    Ties broken by vector id (same as ``cosine_topk``). With
-    ``nprobe == n_centroids`` this reproduces the exact per-query top-k
-    bit-for-bit (tested).
-    """
-    import pyarrow as pa
-
-    id_col, vec_col = index.id_col, index.vec_col
-    C = index.centroids
-
-    def probe_kernel(batches):
-        for b in batches:
-            V = _unit_rows(_fixed_matrix(b.column(qvec_col))
-                           .astype(np.float64))
-            order = np.argsort(-(V @ C.T), axis=1)[:, :nprobe]
-            n, p = order.shape
-            qids = b.column(qid_col).cast(pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [qids.take(pa.array(np.repeat(np.arange(n), p))),
-                 pa.array(order.reshape(-1).astype(np.int64))],
-                names=[qid_col, "centroid"])
-
-    probes = queries.select(qid_col, qvec_col).mapInArrow(
-        probe_kernel, f"{qid_col} bigint, centroid bigint")
-    qside = queries.select(F.col(qid_col), F.col(qvec_col)).join(
-        probes, qid_col)
-    cand = qside.join(index.vectors, "centroid")
-    denom = _norm(F.col(vec_col)) * _norm(F.col(qvec_col))
-    cos = F.when(denom != 0.0,
-                 _dot(F.col(vec_col), F.col(qvec_col)) / denom) \
-        .otherwise(F.lit(0.0))
-    scored = cand.select(F.col(qid_col), F.col(id_col),
-                         F.round(cos, 4).alias("cos_sim"))
-    from pyspark.sql import Window
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos_sim").desc(),
-                                            F.col(id_col))
-    return (scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k).drop("_rk"))

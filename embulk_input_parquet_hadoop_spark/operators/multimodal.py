@@ -9,10 +9,10 @@ media pipeline shape for training data:
           sample_rate int, payload binary)
 
 Spark-side plumbing (schema, partitioning, Arrow batch shape, vectorized
-kernels) is real and tested. The *actual* image/audio decoding is stubbed
-behind ``decode_real_media`` (the codec libraries are not in this
-container); everything downstream operates on the deterministic synthetic
-payloads from :func:`synth_media`, so the pipeline is exercised end-to-end.
+kernels) is real and tested. No image/audio codec is decoded (the codec
+libraries are not in this container); everything operates on the
+deterministic synthetic payloads from :func:`synth_media`, so the
+pipeline is exercised end-to-end.
 
 All per-batch kernels are vectorized over the Arrow binary column's
 (offsets, values) buffers with ``np.add.reduceat`` — no per-row Python
@@ -24,7 +24,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -139,92 +138,3 @@ def extract_features(media: DataFrame) -> DataFrame:
 
     return media.select("doc_id", "kind", "payload").mapInArrow(
         kernel, FEATURE_SCHEMA)
-
-
-def frame_sample(media: DataFrame, stride: int = 2) -> DataFrame:
-    """Keep every ``stride``-th frame of each payload (frame = payload
-    split into n_frames equal slices). Vectorized gather over the batch's
-    concatenated bytes; output schema == input schema with new payload."""
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pay = batch.column("payload")
-            if isinstance(pay, pa.ChunkedArray):
-                pay = pay.combine_chunks()
-            offs, data = _binary_buffers(pay)
-            sizes = np.diff(offs)
-            nf = np.asarray(batch.column("n_frames"), dtype=np.int64)
-            frame_len = np.floor_divide(sizes, nf,
-                                        out=np.zeros_like(sizes),
-                                        where=nf > 0)
-            kept = (nf + stride - 1) // stride
-            # gather index: for each row, frames 0, stride, 2*stride, ...
-            out_sizes = kept * frame_len
-            out_offs = np.zeros(len(sizes) + 1, dtype=np.int64)
-            np.cumsum(out_sizes, out=out_offs[1:])
-            idx = np.empty(int(out_sizes.sum()), dtype=np.int64)
-            # per-row frame starts: vectorized per frame rank (<= max kept,
-            # a handful), not per row
-            max_kept = int(kept.max()) if len(kept) else 0
-            for k in range(max_kept):
-                rows = np.flatnonzero(kept > k)
-                fstart = offs[:-1][rows] + k * stride * frame_len[rows]
-                dst = out_offs[:-1][rows] + k * frame_len[rows]
-                # copy each kept frame via one big fancy-index per rank
-                span = frame_len[rows]
-                reps = np.repeat(fstart, span) + _intra_offsets(span)
-                dsts = np.repeat(dst, span) + _intra_offsets(span)
-                idx[dsts] = reps
-            new_pay = pa.LargeBinaryArray.from_buffers(
-                pa.large_binary(), len(sizes),
-                [None, pa.py_buffer(out_offs.tobytes()),
-                 pa.py_buffer(data[idx].tobytes())]).cast(pa.binary())
-            arrays = [batch.column(c) if c != "payload" else new_pay
-                      for c in batch.schema.names]
-            yield pa.RecordBatch.from_arrays(arrays,
-                                             names=batch.schema.names)
-
-    return media.mapInArrow(kernel, media.schema)
-
-
-def _intra_offsets(span: np.ndarray) -> np.ndarray:
-    """[0..span0-1, 0..span1-1, ...] without Python loops."""
-    total = int(span.sum())
-    if total == 0:
-        return np.zeros(0, dtype=np.int64)
-    out = np.ones(total, dtype=np.int64)
-    ends = np.cumsum(span)[:-1]
-    out[0] = 0
-    out[ends] = 1 - span[:-1]
-    return np.cumsum(out)
-
-
-def decode_real_media(media: DataFrame, target_size: tuple[int, int] = (224, 224)):
-    """Decode actual image/audio codecs and resize — STUB.
-
-    The sandbox has no image/audio libraries; on a real cluster this would
-    be a ``mapInPandas`` over payload bytes using PIL/libsndfile, with the
-    exact batch shape used by :func:`extract_features`. Raises unless a
-    decoder library is importable.
-    """
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "real media decoding needs PIL/soundfile, not present in this "
-            "environment; use synth_media + extract_features for the "
-            "pipeline shape") from exc
-
-    def kernel(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import PIL.Image as Image
-        for pdf in pdfs:
-            decoded = []
-            for buf in pdf["payload"]:
-                img = Image.open(io.BytesIO(buf)).resize(target_size)
-                decoded.append(np.asarray(img).tobytes())
-            pdf = pdf.assign(payload=decoded)
-            yield pdf
-
-    return media.mapInPandas(kernel, media.schema)

@@ -2,9 +2,8 @@
 vector columns, as an auditable DataFrame operator.
 
 A 100 TB embedding corpus at float32 is 4 bytes/dim; per-vector max-abs
-int8 scalar quantization (the FAISS SQ8 layout `operators/ivf.py`
-materializes inside its posting lists) cuts that 4x before the columnar
-encoder even sees the data. What a pipeline owner needs before flipping
+int8 scalar quantization (the FAISS SQ8 layout) cuts that 4x before the
+columnar encoder even sees the data. What a pipeline owner needs before flipping
 that switch is the ERROR PROFILE on their own corpus — this module
 computes it exactly, corpus-wide, as one shuffle.
 
@@ -43,18 +42,6 @@ def _with_scale(emb: DataFrame, vec_col: str) -> DataFrame:
         "_m", F.array_max(F.transform(v, lambda x: F.abs(x.cast("double")))))
     return d.withColumn(
         "_m", F.when(F.col("_m") != 0.0, F.col("_m")).otherwise(F.lit(1.0)))
-
-
-def quantize_int8(emb: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
-    """(id, qvec array<int>, scale double): per-vector max-abs int8
-    quantization. Map-only — no shuffle, no UDF."""
-    d = _with_scale(emb, vec_col)
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * 127.0 / F.col("_m")
-                          + F.lit(0.5)).cast("int"))
-    return d.select(id_col, q.alias("qvec"), F.col("_m").alias("scale"))
 
 
 def sq8_error_stats(emb: DataFrame, group_col: str = "label",

@@ -1340,12 +1340,13 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
     in any committed wave's manifest lineage are subtracted from the
     input, and the remaining (new) files are encoded as fresh waves
     numbered past the existing ones. Feed it a growing directory, or an
-    Iceberg snapshot diff (``iceberg_meta.added_data_files``), and each
-    run encodes exactly the unseen files — idempotent under crashes for
-    the same reason ``resume`` is: a killed append run's committed waves
-    are in the manifest, so the re-run subtracts their files and only
-    encodes the remainder (file identity is the listing string, which is
-    stable across runs of the same listing path). ``resume`` and
+    Iceberg snapshot diff (``iceberg_meta.snapshot_scan_diff``'s
+    ``data_files``), and each run encodes exactly the unseen files —
+    idempotent under crashes for the same reason ``resume`` is: a killed
+    append run's committed waves are in the manifest, so the re-run
+    subtracts their files and only encodes the remainder (file identity
+    is the listing string, which is stable across runs of the same
+    listing path). ``resume`` and
     ``append`` are mutually exclusive: resume re-runs a fixed input's
     missing waves; append extends a tree with new input.
 

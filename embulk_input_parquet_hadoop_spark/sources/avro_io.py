@@ -278,15 +278,6 @@ def _decompress(codec: str, data: bytes) -> bytes:
     raise ValueError(f"unsupported avro codec {codec!r}")
 
 
-def read_avro(path: str) -> tuple[dict, list]:
-    """Read a local Avro container file -> (writer schema, records).
-    For remote/URI sources read the bytes with an fs layer and call
-    ``read_avro_bytes``."""
-    with open(path, "rb") as f:
-        data = f.read()
-    return read_avro_bytes(data, name=path)
-
-
 def read_avro_bytes(data: bytes, name: str = "<bytes>") -> tuple[dict,
                                                                  list]:
     """Parse an Avro container from bytes -> (writer schema, records)."""
@@ -386,27 +377,6 @@ def avro_record_count_ranged(path: str) -> int:
         pos += buf.tell() + blen + 16
     if pos != size:
         raise ValueError(f"trailing garbage after last block: {path}")
-    return total
-
-
-def avro_record_count(data: bytes, name: str = "<bytes>") -> int:
-    """Record count of a container from its block headers alone — no
-    payload decompression or datum decode (each block prefix carries
-    its record count), so counting a file costs its block count, not
-    its size. The readback gate for ``decode_job --format avro``."""
-    buf = io.BytesIO(data)
-    if buf.read(4) != _MAGIC:
-        raise ValueError(f"not an avro container file: {name}")
-    _decode({"type": "map", "values": "bytes"}, buf, {})
-    sync = buf.read(16)
-    total = 0
-    while buf.tell() < len(data):
-        n = _read_long(buf)
-        size = _read_long(buf)
-        buf.seek(size, 1)
-        if buf.read(16) != sync:
-            raise ValueError(f"sync marker mismatch in {name}")
-        total += n
     return total
 
 

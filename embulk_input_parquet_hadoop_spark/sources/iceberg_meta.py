@@ -584,13 +584,11 @@ def snapshot_scan_diff(table_dir: str, from_snapshot_id: int,
     REMOVED between the snapshots (COW deletes, compaction, and
     delete-applying rewrites all land as removals — re-encoding the
     rewritten file would duplicate its live rows while any
-    newly-retracted rows stay served from the committed chunks; note
-    the plain ``added_data_files`` path deliberately carves compaction
-    rewrites OUT of this guarantee — this diff is the strict variant).
+    newly-retracted rows stay served from the committed chunks).
     Such tables need a fresh full encode (or a downstream anti-join).
 
-    On an append-only COW table this degenerates to
-    ``added_data_files`` with empty mappings, so callers can use it
+    On an append-only COW table this degenerates to the live-file set
+    difference with empty mappings, so callers can use it
     unconditionally. Cost: two metadata reads plus the delete-file
     ``file_path``-column reads of both scans.
     """
@@ -635,25 +633,6 @@ def snapshot_scan_diff(table_dir: str, from_snapshot_id: int,
                              new["equality_deletes"].items()
                              if f in added_set},
     }
-
-
-def added_data_files(table_dir: str, from_snapshot_id: int,
-                     to_snapshot_id: int | None = None,
-                     partition_filter: dict | None = None) -> list[str]:
-    """Data files live in ``to`` (default: current) but not in ``from`` —
-    the incremental-ingest unit: feed the diff to
-    ``encode_path(input_files=..., append=True)`` and each run encodes
-    exactly the bytes new since the last processed snapshot. Defined as
-    the live-file set difference, so compaction rewrites (new files
-    carrying old rows) are *included* — they are new bytes the encode
-    tree has not seen; dedup against re-encoded rows is the reader's
-    concern, as in Iceberg itself. Two metadata reads (O(manifests),
-    measured ~80k entries/s), no data IO.
-    """
-    old = set(snapshot_data_files(table_dir, from_snapshot_id,
-                                  partition_filter))
-    new = snapshot_data_files(table_dir, to_snapshot_id, partition_filter)
-    return sorted(f for f in new if f not in old)
 
 
 def _fixture_abs(p: str) -> str:

@@ -304,16 +304,6 @@ def decode_dv_blob(blob: bytes) -> np.ndarray:
 # Puffin container
 # ---------------------------------------------------------------------
 
-def read_footer(data: bytes) -> dict:
-    """FileMetadata JSON of a whole in-memory puffin file."""
-    if len(data) < 20:
-        raise PuffinError(f"puffin file too short ({len(data)} bytes)")
-    if data[:4] != MAGIC or data[-4:] != MAGIC:
-        raise PuffinError("bad puffin magic")
-    return _parse_trailer(data[-12:], lambda off, ln:
-                          data[len(data) - off:len(data) - off + ln])
-
-
 def read_footer_path(path: str) -> dict:
     """FileMetadata JSON via two ranged reads (12-byte trailer, then
     footer payload) — planning never downloads blob data."""

@@ -1,90 +1,18 @@
-"""Pluggable table source: Iceberg catalog table or plain Parquet path.
+"""File-granular table sources for ``encode_path(input_files=...)``.
 
 The north rule names Iceberg tables of pre-tokenized sequences as the
-input. Three paths, identical DataFrame/file shape:
+input. Besides plain Parquet trees (listed by ``encode_path`` itself),
+two table layouts resolve to data-file lists here, with no runtime jar:
 
-- Iceberg catalog via the Spark runtime jar when present
-  (``read_tokens_table(..., fmt="iceberg")``);
-- **Iceberg table format WITHOUT the jar**:
-  ``table_files_from_metadata`` reads the table's own metadata
+- ``table_files_from_metadata`` reads an Iceberg table's own metadata
   (metadata.json -> manifest list -> manifests, pure-Python Avro in
-  ``iceberg_meta.py``) and returns the current snapshot's data files
-  for ``encode_path(input_files=...)`` — snapshot-consistent
-  file-granular encode with merge-on-read refusal;
-- plain Parquet trees.
-
-The original plugin notes (kept for the jar path):
-
-- ``read_tokens_table(spark, "db.tokens", fmt="iceberg")`` — catalog table
-  via the Iceberg Spark runtime when present;
-- ``read_tokens_table(spark, "/data/tokens")`` — Parquet file tree.
-
-For the file-granular encode path, ``table_files`` exposes the table's
-current data-file snapshot (``DataFrame.inputFiles`` — for Iceberg this is
-the planned file scan of the current snapshot, the same per-file unit the
-reference fans out on, ``ParquetHadoopInputPlugin.java:85-119``).
-Copy-on-write Iceberg tables' data files are plain Parquet and feed
-``encode_path`` directly; merge-on-read tables with row-level delete files
-must go through the DataFrame path (``encode_df``) so the Iceberg reader
-applies the deletes — ``table_files`` raises if it detects that case is
-possible and ``allow_mor`` is not set.
+  ``iceberg_meta.py``) and returns a snapshot's data files —
+  snapshot-consistent file-granular encode with merge-on-read refusal;
+- ``hive_partitioned_files`` scans a ``key=value`` directory tree and
+  re-injects the partition values as constant columns.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        # py4j resolves missing packages lazily; Class.forName is definitive
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.source.SparkTable")
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def read_tokens_table(spark: SparkSession, ref: str,
-                      fmt: str | None = None) -> DataFrame:
-    """Load the tokens table from an Iceberg identifier or a Parquet path.
-
-    ``fmt``: "iceberg" | "parquet" | None (auto: path-like refs -> parquet,
-    dotted identifiers -> iceberg when the runtime is on the classpath).
-    """
-    if fmt is None:
-        looks_like_path = "/" in ref or ref.endswith(".parquet")
-        fmt = "parquet" if looks_like_path or not iceberg_available(spark) \
-            else "iceberg"
-    if fmt == "iceberg":
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                "iceberg runtime not on the Spark classpath; add "
-                "org.apache.iceberg:iceberg-spark-runtime or pass a "
-                "parquet path")
-        return spark.read.format("iceberg").load(ref)
-    if fmt == "parquet":
-        return spark.read.parquet(ref)
-    raise ValueError(f"unknown source format {fmt!r}")
-
-
-def table_files(df: DataFrame, allow_mor: bool = False) -> list[str]:
-    """Data files of the table's current snapshot, for ``encode_path``.
-
-    Raises for Iceberg merge-on-read inputs unless ``allow_mor`` — reading
-    those data files directly would resurrect deleted rows; use
-    ``encode_df`` on the DataFrame instead.
-    """
-    from ..plans.pipeline import spark_input_files
-    files = sorted(spark_input_files(df))
-    non_parquet = [f for f in files if not f.endswith(".parquet")]
-    if non_parquet and not allow_mor:
-        raise ValueError(
-            f"non-parquet data files in scan (merge-on-read deletes?): "
-            f"{non_parquet[:3]} — encode via encode_df instead")
-    return files
 
 
 def hive_partitioned_files(root: str,

@@ -15,6 +15,7 @@ import pytest
 from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
 from embulk_input_parquet_hadoop_spark.sources import delta_meta as dm
 from embulk_input_parquet_hadoop_spark.sources import table as tbl
+from fixtures.delta_fixture import write_delta_fixture
 
 
 def test_const_arrays_types_and_nulls():
@@ -70,7 +71,7 @@ def test_delta_partition_injection_end_to_end(spark, tokens_path,
     files = sorted(glob.glob(f"{tokens_path}/*.parquet"))[:2]
     tabs = [pq.read_table(f) for f in files]
     d = str(tmp_path / "tbl")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, tabs, partition_columns=["src", "bucket"],
         partition_types={"bucket": "integer"},
         partition_values={0: {"src": "web", "bucket": "3"},
@@ -107,9 +108,9 @@ def test_delta_partition_injection_end_to_end(spark, tokens_path,
 def test_delta_partition_unsupported_type_refuses(tmp_path):
     t = pa.table({"doc_id": ["a"], "n": pa.array([1], pa.int32())})
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t], partition_columns=["amt"],
-                           partition_types={"amt": "decimal(10,2)"},
-                           partition_values={0: {"amt": "12.50"}})
+    write_delta_fixture(d, [t], partition_columns=["amt"],
+                        partition_types={"amt": "decimal(10,2)"},
+                        partition_values={0: {"amt": "12.50"}})
     with pytest.raises(dm.DeltaMetaError, match="unsupported type"):
         dm.partition_const_columns(dm.snapshot_scan(d))
 
@@ -177,7 +178,7 @@ def test_delta_timestamp_partition_injection(spark, tmp_path):
     t = pa.table({"doc_id": ["a", "b"],
                   "n": pa.array([1, 2], pa.int32())})
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [t], partition_columns=["ts"],
         partition_types={"ts": "timestamp"},
         partition_values={0: {"ts": "2024-03-04 05:06:07.123456"}})

@@ -2,7 +2,7 @@
 the encode integration (``sources/delta_meta.py``).
 
 All fixtures are spec-shaped ``_delta_log`` layouts written by
-``write_delta_fixture`` — JSON commits, classic single-/multi-part
+``write_delta_fixture`` (``tests/fixtures/delta_fixture.py``) — JSON commits, classic single-/multi-part
 parquet checkpoints, and real DV ``.bin`` files — no Delta runtime
 anywhere. Mirrors the Iceberg coverage in ``test_sources.py``."""
 
@@ -21,6 +21,7 @@ import pytest
 
 from embulk_input_parquet_hadoop_spark.sources import delta_meta as dm
 from embulk_input_parquet_hadoop_spark.sources import puffin
+from fixtures.delta_fixture import write_delta_fixture, z85_encode
 
 
 def _tabs():
@@ -37,7 +38,7 @@ def _tabs():
 
 def test_z85_spec_vector():
     # ZeroMQ RFC 32's reference vector.
-    assert dm.z85_encode(bytes.fromhex("864FD26FB559F75B")) == \
+    assert z85_encode(bytes.fromhex("864FD26FB559F75B")) == \
         "HelloWorld"
     assert dm.z85_decode("HelloWorld") == bytes.fromhex(
         "864FD26FB559F75B")
@@ -46,7 +47,7 @@ def test_z85_spec_vector():
 def test_z85_padding_roundtrip():
     for n in range(0, 23):
         data = bytes((i * 37 + 11) % 256 for i in range(n))
-        enc = dm.z85_encode(data)
+        enc = z85_encode(data)
         assert len(enc) % 5 == 0
         assert dm.z85_decode(enc, out_len=n) == data
 
@@ -71,7 +72,7 @@ def test_version_at_timestamp(tmp_path):
     timestamp refuses."""
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1, t2], commits=[
+    write_delta_fixture(d, [t1, t2], commits=[
         {"add": [0]}, {"add": [1]}, {"remove": [1]}])
     log = f"{d}/_delta_log"
     paths = [f"{log}/{v:020d}.json" for v in range(3)]
@@ -108,7 +109,7 @@ def test_version_at_timestamp(tmp_path):
 def test_scan_add_dv_remove_and_time_travel(tmp_path):
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1, t2], commits=[
+    write_delta_fixture(d, [t1, t2], commits=[
         {"add": [0, 1]}, {"dv": {0: [1, 3]}}, {"remove": [1]}])
     s = dm.snapshot_scan(d)
     assert s["version"] == 2
@@ -121,8 +122,9 @@ def test_scan_add_dv_remove_and_time_travel(tmp_path):
     assert len(s0["data_files"]) == 2 and not s0["row_deletes"]
     s1 = dm.snapshot_scan(d, version=1)
     assert len(s1["data_files"]) == 2 and len(s1["row_deletes"]) == 1
-    assert dm.snapshot_versions(d) == [0, 1, 2]
-    assert dm.latest_version(d) == 2
+    # no version past the log's newest
+    with pytest.raises(dm.DeltaMetaError):
+        dm.snapshot_scan(d, version=3)
 
 
 def test_dv_replacement_uses_unique_id_keys(tmp_path):
@@ -130,14 +132,14 @@ def test_dv_replacement_uses_unique_id_keys(tmp_path):
     keyed by (path, dvId) must keep exactly the newest identity."""
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], commits=[
+    write_delta_fixture(d, [t1], commits=[
         {"add": [0]}, {"dv": {0: [1]}}, {"dv": {0: [1, 2]}}])
     s = dm.snapshot_scan(d)
     assert len(s["data_files"]) == 1
     (desc,) = s["row_deletes"][s["data_files"][0]]
     assert list(dm.read_dv_positions(desc)) == [1, 2]
     # ...and clearing the DV (empty positions) leaves a plain file
-    dm.write_delta_fixture(str(tmp_path / "t2"), [t1], commits=[
+    write_delta_fixture(str(tmp_path / "t2"), [t1], commits=[
         {"add": [0]}, {"dv": {0: [1]}}, {"dv": {0: []}}])
     s2 = dm.snapshot_scan(str(tmp_path / "t2"))
     assert not s2["row_deletes"]
@@ -148,7 +150,7 @@ def test_two_live_dv_identities_refuse(tmp_path):
     forgot the remove) is corrupt — refuse, never pick silently."""
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], commits=[
+    write_delta_fixture(d, [t1], commits=[
         {"add": [0]}, {"dv": {0: [1]}}])
     # hand-append a commit that re-adds with a DIFFERENT dv id and no
     # remove of the previous identity
@@ -169,8 +171,8 @@ def test_two_live_dv_identities_refuse(tmp_path):
 def test_url_encoded_paths(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1],
-                           file_names=["part 00 %x=1.parquet"])
+    write_delta_fixture(d, [t1],
+                        file_names=["part 00 %x=1.parquet"])
     raw = open(os.path.join(d, "_delta_log", f"{0:020d}.json")
                ).read()
     assert "part%2000%20%25x%3D1.parquet" in raw  # stored URL-encoded
@@ -183,7 +185,7 @@ def test_url_encoded_paths(tmp_path):
 def test_partition_pruning_and_values(tmp_path):
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [t1, t2], partition_columns=["src", "flag"],
         partition_values={0: {"src": "web", "flag": "true"},
                           1: {"src": "book", "flag": None}})
@@ -208,7 +210,7 @@ def test_partition_pruning_and_values(tmp_path):
 def test_checkpoint_replay(tmp_path, parts):
     t1, t2 = _tabs()
     d = str(tmp_path / f"t{parts}")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [t1, t2],
         commits=[{"add": [0]}, {"dv": {0: [2]}}, {"add": [1]}],
         checkpoint_at=1, checkpoint_parts=parts, drop_json_upto=1)
@@ -220,7 +222,7 @@ def test_checkpoint_replay(tmp_path, parts):
     # versions below the checkpoint are no longer reconstructible
     with pytest.raises(dm.DeltaMetaError, match="cannot reconstruct"):
         dm.snapshot_scan(d, version=0)
-    assert dm.snapshot_versions(d) == [1, 2]
+    assert dm.snapshot_scan(d, version=1)["version"] == 1
 
 
 def test_checkpoint_state_equals_json_replay(tmp_path):
@@ -230,9 +232,9 @@ def test_checkpoint_state_equals_json_replay(tmp_path):
     commits = [{"add": [0, 1]}, {"dv": {1: [0]}}, {"remove": [0]}]
     d1 = str(tmp_path / "json_only")
     d2 = str(tmp_path / "ckpt")
-    dm.write_delta_fixture(d1, [t1, t2], commits=commits)
-    dm.write_delta_fixture(d2, [t1, t2], commits=commits,
-                           checkpoint_at=2, drop_json_upto=2)
+    write_delta_fixture(d1, [t1, t2], commits=commits)
+    write_delta_fixture(d2, [t1, t2], commits=commits,
+                        checkpoint_at=2, drop_json_upto=2)
     s1, s2 = dm.snapshot_scan(d1), dm.snapshot_scan(d2)
     assert [os.path.basename(f) for f in s1["data_files"]] == \
         [os.path.basename(f) for f in s2["data_files"]]
@@ -259,12 +261,12 @@ def test_v2_checkpoint_replay(tmp_path, sidecars, fmt):
     JSON top file) replay to the same state as the pure JSON chain."""
     t1, t2 = _tabs()
     d1 = str(tmp_path / "json_only")
-    dm.write_delta_fixture(d1, [t1, t2], commits=_V2_COMMITS)
+    write_delta_fixture(d1, [t1, t2], commits=_V2_COMMITS)
     d2 = str(tmp_path / "v2")
-    dm.write_delta_fixture(d2, [t1, t2], commits=_V2_COMMITS,
-                           checkpoint_at=2, checkpoint_v2=True,
-                           v2_sidecars=sidecars, v2_format=fmt,
-                           drop_json_upto=2)
+    write_delta_fixture(d2, [t1, t2], commits=_V2_COMMITS,
+                        checkpoint_at=2, checkpoint_v2=True,
+                        v2_sidecars=sidecars, v2_format=fmt,
+                        drop_json_upto=2)
     # the dropped JSON chain proves the v2 checkpoint is really read
     assert glob.glob(os.path.join(
         d2, "_delta_log", "[0-9]" * 20 + ".json")) == []
@@ -278,7 +280,7 @@ def test_v2_checkpoint_plus_json_tail(tmp_path):
     """Commits after the v2 checkpoint still apply on top of it."""
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [t1, t2],
         commits=[{"add": [0, 1]}, {"dv": {0: [2]}}, {"remove": [1]}],
         checkpoint_at=1, checkpoint_v2=True, v2_sidecars=1,
@@ -292,9 +294,9 @@ def test_v2_checkpoint_plus_json_tail(tmp_path):
 def test_v2_checkpoint_version_mismatch_refuses(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], commits=[{"add": [0]}],
-                           checkpoint_at=0, checkpoint_v2=True,
-                           v2_format="json", drop_json_upto=0)
+    write_delta_fixture(d, [t1], commits=[{"add": [0]}],
+                        checkpoint_at=0, checkpoint_v2=True,
+                        v2_format="json", drop_json_upto=0)
     ck = glob.glob(os.path.join(d, "_delta_log",
                                 "*.checkpoint.*.json"))[0]
     # rename the file to claim a different version than its
@@ -311,8 +313,8 @@ def test_v2_checkpoint_classic_wins_same_version(tmp_path):
     sidecar fetches); prove it by corrupting the v2 file."""
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1, t2], commits=_V2_COMMITS,
-                           checkpoint_at=2, drop_json_upto=2)
+    write_delta_fixture(d, [t1, t2], commits=_V2_COMMITS,
+                        checkpoint_at=2, drop_json_upto=2)
     v2 = os.path.join(d, "_delta_log",
                       f"{2:020d}.checkpoint."
                       "0f0f0f0f-0000-0000-0000-000000000000.parquet")
@@ -328,9 +330,9 @@ def test_v2_checkpoint_classic_wins_same_version(tmp_path):
 def test_unknown_reader_feature_refuses(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], min_reader=3,
-                           reader_features=["deletionVectors",
-                                            "catalogOwned-preview"])
+    write_delta_fixture(d, [t1], min_reader=3,
+                        reader_features=["deletionVectors",
+                                         "catalogOwned-preview"])
     with pytest.raises(dm.DeltaMetaError, match="catalogOwned"):
         dm.snapshot_scan(d)
 
@@ -338,8 +340,8 @@ def test_unknown_reader_feature_refuses(tmp_path):
 def test_reader_version_above_3_refuses(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], min_reader=3,
-                           reader_features=["deletionVectors"])
+    write_delta_fixture(d, [t1], min_reader=3,
+                        reader_features=["deletionVectors"])
     log = os.path.join(d, "_delta_log", f"{0:020d}.json")
     lines = [json.loads(ln) for ln in open(log)]
     for a in lines:
@@ -353,7 +355,7 @@ def test_reader_version_above_3_refuses(tmp_path):
 def test_column_mapping_unknown_mode_refuses(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [t1], min_reader=3,
         reader_features=["columnMapping"],
         configuration={"delta.columnMapping.mode": "weird"})
@@ -362,10 +364,10 @@ def test_column_mapping_unknown_mode_refuses(tmp_path):
         dm.snapshot_scan(d)
     # feature present but mode none -> fine, no rename plan
     d2 = str(tmp_path / "t2")
-    dm.write_delta_fixture(d2, [t1], min_reader=3,
-                           reader_features=["columnMapping"],
-                           configuration={"delta.columnMapping.mode":
-                                          "none"})
+    write_delta_fixture(d2, [t1], min_reader=3,
+                        reader_features=["columnMapping"],
+                        configuration={"delta.columnMapping.mode":
+                                       "none"})
     s = dm.snapshot_scan(d2)
     assert len(s["data_files"]) == 1 and s["column_renames"] is None
 
@@ -378,9 +380,9 @@ def test_column_mapping_unknown_mode_refuses(tmp_path):
 def test_dv_storage_modes(tmp_path, storage):
     t1, _ = _tabs()
     d = str(tmp_path / storage)
-    dm.write_delta_fixture(d, [t1],
-                           commits=[{"add": [0]}, {"dv": {0: [0, 3]}}],
-                           dv_storage=storage)
+    write_delta_fixture(d, [t1],
+                        commits=[{"add": [0]}, {"dv": {0: [0, 3]}}],
+                        dv_storage=storage)
     s = dm.snapshot_scan(d)
     (desc,) = s["row_deletes"][s["data_files"][0]]
     body = dm.parse_dv_desc(desc)
@@ -393,10 +395,10 @@ def test_dv_accepts_both_spec_magics(tmp_path):
     for tag, magic in (("delta", dm.DELTA_DV_MAGIC),
                        ("iceberg", puffin.DV_MAGIC)):
         d = str(tmp_path / tag)
-        dm.write_delta_fixture(d, [t1],
-                               commits=[{"add": [0]},
-                                        {"dv": {0: [1]}}],
-                               dv_magic=magic)
+        write_delta_fixture(d, [t1],
+                            commits=[{"add": [0]},
+                                     {"dv": {0: [1]}}],
+                            dv_magic=magic)
         s = dm.snapshot_scan(d)
         (desc,) = s["row_deletes"][s["data_files"][0]]
         assert list(dm.read_dv_positions(desc)) == [1]
@@ -405,9 +407,9 @@ def test_dv_accepts_both_spec_magics(tmp_path):
 def test_dv_crc_and_cardinality_gates(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1],
-                           commits=[{"add": [0]}, {"dv": {0: [1, 2]}}],
-                           dv_storage="p")
+    write_delta_fixture(d, [t1],
+                        commits=[{"add": [0]}, {"dv": {0: [1, 2]}}],
+                        dv_storage="p")
     s = dm.snapshot_scan(d)
     (desc,) = s["row_deletes"][s["data_files"][0]]
     body = dm.parse_dv_desc(desc)
@@ -439,9 +441,9 @@ def test_dv_crc_and_cardinality_gates(tmp_path):
 def test_dv_size_prefix_disagreement_refuses(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1],
-                           commits=[{"add": [0]}, {"dv": {0: [1]}}],
-                           dv_storage="p")
+    write_delta_fixture(d, [t1],
+                        commits=[{"add": [0]}, {"dv": {0: [1]}}],
+                        dv_storage="p")
     s = dm.snapshot_scan(d)
     (desc,) = s["row_deletes"][s["data_files"][0]]
     body = dm.parse_dv_desc(desc)
@@ -457,7 +459,7 @@ def test_dv_size_prefix_disagreement_refuses(tmp_path):
 def test_diff_append_only_and_refusals(tmp_path):
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1, t2], commits=[
+    write_delta_fixture(d, [t1, t2], commits=[
         {"add": [0]}, {"add": [1]}, {"dv": {0: [1]}}])
     diff = dm.snapshot_scan_diff(d, 0, 1)
     assert [os.path.basename(p) for p in diff["data_files"]] == \
@@ -468,8 +470,8 @@ def test_diff_append_only_and_refusals(tmp_path):
         dm.snapshot_scan_diff(d, 1, 2)
     # file removal refuses
     d2 = str(tmp_path / "t2")
-    dm.write_delta_fixture(d2, [t1, t2],
-                           commits=[{"add": [0, 1]}, {"remove": [1]}])
+    write_delta_fixture(d2, [t1, t2],
+                        commits=[{"add": [0, 1]}, {"remove": [1]}])
     with pytest.raises(dm.DeltaMetaError, match="gone"):
         dm.snapshot_scan_diff(d2, 0, 1)
 
@@ -481,8 +483,8 @@ def test_diff_append_only_and_refusals(tmp_path):
 def test_delta_on_object_store(tmp_path):
     t1, _ = _tabs()
     d = f"mock-s3://bucket{tmp_path}/t"
-    dm.write_delta_fixture(d, [t1],
-                           commits=[{"add": [0]}, {"dv": {0: [2]}}])
+    write_delta_fixture(d, [t1],
+                        commits=[{"add": [0]}, {"dv": {0: [2]}}])
     s = dm.snapshot_scan(d)
     assert s["data_files"][0].startswith("mock-s3://")
     (desc,) = s["row_deletes"][s["data_files"][0]]
@@ -504,7 +506,7 @@ def test_delta_dv_encode_end_to_end(spark, tokens_path, tmp_path):
     tabs = [pq.read_table(f) for f in files]
     n0 = tabs[0].num_rows
     d = str(tmp_path / "delta_tbl")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, tabs,
         commits=[{"add": [0, 1]},
                  {"dv": {0: [0, 3, 7, 8, n0 - 1], 1: [5]}}])
@@ -535,7 +537,7 @@ def test_delta_dv_encode_end_to_end(spark, tokens_path, tmp_path):
 def test_column_mapping_scan_returns_renames(tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], column_mapping="name")
+    write_delta_fixture(d, [t1], column_mapping="name")
     s = dm.snapshot_scan(d)
     assert s["column_renames"] == [
         {"logical": "doc_id", "physical": "col-1", "id": 1},
@@ -545,16 +547,16 @@ def test_column_mapping_scan_returns_renames(tmp_path):
                                                         "col-2"]
     # unmapped table returns None
     d2 = str(tmp_path / "plain")
-    dm.write_delta_fixture(d2, [t1])
+    write_delta_fixture(d2, [t1])
     assert dm.snapshot_scan(d2)["column_renames"] is None
 
 
 def test_column_mapping_encode_end_to_end(spark, tmp_path):
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1, t2], column_mapping="name",
-                           commits=[{"add": [0, 1]},
-                                    {"dv": {0: [1]}}])
+    write_delta_fixture(d, [t1, t2], column_mapping="name",
+                        commits=[{"add": [0, 1]},
+                                 {"dv": {0: [1]}}])
     s = dm.snapshot_scan(d)
     from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
     out = str(tmp_path / "enc")
@@ -575,7 +577,7 @@ def test_column_mapping_encode_end_to_end(spark, tmp_path):
 def test_column_mapping_logical_projection(spark, tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], column_mapping="id")
+    write_delta_fixture(d, [t1], column_mapping="id")
     s = dm.snapshot_scan(d)
     from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
     out = str(tmp_path / "enc")
@@ -595,7 +597,7 @@ def test_column_mapping_id_beats_physical_name(spark, tmp_path):
     maps correctly."""
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], column_mapping="id")
+    write_delta_fixture(d, [t1], column_mapping="id")
     # make the schemaString's physicalName stale/wrong; ids stay right
     log = os.path.join(d, "_delta_log", f"{0:020d}.json")
     lines = [json.loads(ln) for ln in open(log)]
@@ -624,7 +626,7 @@ def test_column_mapping_unmapped_physical_column_fails(spark,
                                                        tmp_path):
     t1, _ = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t1], column_mapping="name")
+    write_delta_fixture(d, [t1], column_mapping="name")
     # drop one field from the logical schema: its physical column in
     # the data file is now unmapped -> the encode task must refuse
     log = os.path.join(d, "_delta_log", f"{0:020d}.json")
@@ -666,8 +668,8 @@ def test_column_mapping_nested_encode_end_to_end(spark, tmp_path):
     encoded tree must serve the logical ones, DV masking included."""
     t = _nested_tab()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(d, [t], column_mapping="name",
-                           commits=[{"add": [0]}, {"dv": {0: [1]}}])
+    write_delta_fixture(d, [t], column_mapping="name",
+                        commits=[{"add": [0]}, {"dv": {0: [1]}}])
     s = dm.snapshot_scan(d)
     plans = {r["logical"]: r for r in s["column_renames"]}
     assert "children" not in plans["doc_id"]
@@ -740,7 +742,7 @@ def test_column_mapping_partition_values_physical_keys(tmp_path):
     for pruning and const injection."""
     t1, t2 = _tabs()
     d = str(tmp_path / "t")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [t1, t2], column_mapping="name",
         partition_columns=["src"],
         partition_values={0: {"src": "web"}, 1: {"src": "book"}})
@@ -796,15 +798,15 @@ def test_replay_fuzz_vs_model(tmp_path):
         if not commits:
             continue
         d = str(tmp_path / f"fz{trial}")
-        dm.write_delta_fixture(d, tabs, commits=commits,
-                               dv_storage="p")
+        write_delta_fixture(d, tabs, commits=commits,
+                            dv_storage="p")
         ck = rng.randint(0, len(commits) - 1)
         d2 = str(tmp_path / f"fzc{trial}")
-        dm.write_delta_fixture(d2, tabs, commits=commits,
-                               dv_storage="p", checkpoint_at=ck,
-                               drop_json_upto=ck)
+        write_delta_fixture(d2, tabs, commits=commits,
+                            dv_storage="p", checkpoint_at=ck,
+                            drop_json_upto=ck)
         d3 = str(tmp_path / f"fzv{trial}")
-        dm.write_delta_fixture(
+        write_delta_fixture(
             d3, tabs, commits=commits, dv_storage="p",
             checkpoint_at=ck, drop_json_upto=ck, checkpoint_v2=True,
             v2_sidecars=rng.randint(0, 2),

@@ -14,6 +14,8 @@ from embulk_input_parquet_hadoop_spark.plans import manifest as mf
 from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
 from embulk_input_parquet_hadoop_spark.sources import iceberg_meta
 from embulk_input_parquet_hadoop_spark.sources.datagen import generate
+from fixtures.avro_ref import read_avro
+from fixtures.delta_fixture import write_delta_fixture
 
 
 def _grow_dir(tmp_path: Path) -> tuple[str, list[str], list[str]]:
@@ -91,9 +93,9 @@ def test_iceberg_snapshot_diff_incremental(spark, tmp_path):
     iceberg_meta.write_table_fixture(table, files, snapshot_id=2,
                                      older_snapshots={1: old})
 
-    diff = iceberg_meta.added_data_files(table, 1)
+    diff = iceberg_meta.snapshot_scan_diff(table, 1)["data_files"]
     assert diff == [str(Path(f).resolve()) for f in added]
-    assert iceberg_meta.added_data_files(table, 2) == []
+    assert iceberg_meta.snapshot_scan_diff(table, 2)["data_files"] == []
 
     out = str(tmp_path / "enc")
     t1 = pipeline.encode_path(
@@ -213,8 +215,7 @@ def test_decode_job_exports_avro(spark, tmp_path, monkeypatch):
 
     from jobs import decode_job
 
-    from embulk_input_parquet_hadoop_spark.sources import (avro_io,
-                                                           jsonl_io)
+    from embulk_input_parquet_hadoop_spark.sources import jsonl_io
 
     d = tmp_path / "data"
     generate(str(d), n_docs=120, seed=23, n_files=2)
@@ -230,7 +231,7 @@ def test_decode_job_exports_avro(spark, tmp_path, monkeypatch):
     assert parts
     rows = []
     for f in parts:
-        _, recs = avro_io.read_avro(f)
+        _, recs = read_avro(f)
         rows += recs
     src = {r.doc_id: r for r in spark.read.parquet(str(d)).collect()}
     assert len(rows) == len(src)
@@ -253,22 +254,29 @@ def test_decode_job_exports_avro(spark, tmp_path, monkeypatch):
 
 
 def test_snapshot_diff_composes_with_partition_filter(spark, tmp_path):
-    """added_data_files prunes the diff at the metadata level too: only
-    new files whose partition record matches are returned."""
+    """snapshot_scan_diff prunes the diff at the metadata level too:
+    only new files whose partition record matches are returned.
+
+    The fixture writes an older snapshot's entries without partition
+    records, so no filter prunes them; each case keeps its old file
+    inside the filter, or the strict diff would read it as removed."""
     d = tmp_path / "data"
     generate(str(d), n_docs=400, seed=31, n_files=4)
     files = [str(Path(f).resolve()) for f in
              sorted(d.glob("*.parquet"))]
-    table = str(tmp_path / "ptable")
-    iceberg_meta.write_table_fixture(
-        table, files, snapshot_id=2, older_snapshots={1: files[:2]},
-        partitions=[{"source": "web"}, {"source": "books"},
-                    {"source": "web"}, {"source": "books"}])
-    assert iceberg_meta.added_data_files(table, 1) == files[2:]
-    assert iceberg_meta.added_data_files(
-        table, 1, partition_filter={"source": "web"}) == [files[2]]
-    assert iceberg_meta.added_data_files(
-        table, 1, partition_filter={"source": "books"}) == [files[3]]
+    for source, old, want in (("web", files[0], [files[2]]),
+                              ("books", files[1], [files[3]])):
+        table = str(tmp_path / f"ptable_{source}")
+        iceberg_meta.write_table_fixture(
+            table, files, snapshot_id=2, older_snapshots={1: [old]},
+            partitions=[{"source": "web"}, {"source": "books"},
+                        {"source": "web"}, {"source": "books"}])
+
+        def diff(**kw):
+            return iceberg_meta.snapshot_scan_diff(
+                table, 1, **kw)["data_files"]
+        assert diff() == [f for f in files if f != old]
+        assert diff(partition_filter={"source": source}) == want
 
 
 def test_lineage_key_uri_forms():
@@ -401,8 +409,9 @@ def test_snapshot_scan_diff_refuses_eq_deletes_reaching_old_files(
 
 
 def test_snapshot_scan_diff_cow_matches_added_data_files(tmp_path):
-    """On a delete-free table the MOR-aware diff degenerates to
-    added_data_files with empty mappings."""
+    """On a delete-free table the MOR-aware diff degenerates to the
+    added data files (the live-file set difference of the two
+    snapshots) with empty mappings."""
     d = tmp_path / "cowd"
     generate(str(d), n_docs=300, seed=19, n_files=3)
     files = sorted(str(Path(p).resolve()) for p in d.glob("*.parquet"))
@@ -410,7 +419,9 @@ def test_snapshot_scan_diff_cow_matches_added_data_files(tmp_path):
     iceberg_meta.write_table_fixture(table, files, snapshot_id=2,
                                      older_snapshots={1: files[:2]})
     diff = iceberg_meta.snapshot_scan_diff(table, 1)
-    assert diff["data_files"] == iceberg_meta.added_data_files(table, 1)
+    old = set(iceberg_meta.snapshot_data_files(table, 1))
+    assert diff["data_files"] == sorted(
+        f for f in iceberg_meta.snapshot_data_files(table) if f not in old)
     assert diff["position_deletes"] == {} == diff["equality_deletes"]
 
 
@@ -491,17 +502,16 @@ def test_encode_job_delta_since_version_verify_files(spark, tmp_path,
     DV, constants and renames."""
     import pyarrow as pa
 
-    from embulk_input_parquet_hadoop_spark.sources import delta_meta as dm
     t1 = pa.table({"doc_id": ["a", "b", "c", "d"],
                    "n": pa.array([1, 2, 3, 4], pa.int32())})
     t2 = pa.table({"doc_id": ["e", "f"],
                    "n": pa.array([5, 6], pa.int32())})
     d = str(tmp_path / "delta_tbl")
-    dm.write_delta_fixture(d, [t1, t2], column_mapping="name",
-                           commits=[{"dv": {0: [1]}}, {"add": [1]}],
-                           partition_columns=["src"],
-                           partition_values={0: {"src": "web"},
-                                             1: {"src": "app"}})
+    write_delta_fixture(d, [t1, t2], column_mapping="name",
+                        commits=[{"dv": {0: [1]}}, {"add": [1]}],
+                        partition_columns=["src"],
+                        partition_values={0: {"src": "web"},
+                                          1: {"src": "app"}})
     out = str(tmp_path / "enc")
     rc, t0 = _run_encode_job(monkeypatch, capsys, [
         "--delta", "--at-version", "0", "--inject-partitions",
@@ -565,8 +575,8 @@ def test_encode_job_table_with_an_added_column(spark, tmp_path,
     old = pa.table({"doc_id": ["a", "b"], "n": pa.array([1, 2], pa.int32())})
     d = str(tmp_path / "delta_tbl")
     # the table's schema is the wide one; version 0 adds the old file
-    dm.write_delta_fixture(d, [wide, old],
-                           commits=[{"add": [1]}, {"add": [0]}])
+    write_delta_fixture(d, [wide, old],
+                        commits=[{"add": [1]}, {"add": [0]}])
     scan = dm.snapshot_scan(d)
     with pytest.raises(ValueError, match="schema_mode='mixed'"):
         pipeline.encode_path(spark, d, str(tmp_path / "single"),

@@ -107,94 +107,6 @@ def test_load_reopens_index(spark, tmp_path):
         [(r.vec_id, r.cos_sim) for r in b]
 
 
-def test_search_many_matches_per_query_search(spark, tmp_path):
-    """Batched search == per-query search, query by query, at full probe
-    AND at partial probe (same index, same kernel semantics)."""
-    emb = _emb(spark)
-    index = ivf.ivf_build(emb, n_centroids=8,
-                          out_path=str(tmp_path / "ivf_many"))
-    qids = [0, 5, 11]
-    qrows = {r.vec_id: list(r.embedding) for r in
-             emb.filter(F.col("vec_id").isin(qids)).collect()}
-    queries = spark.createDataFrame(
-        [(qid, qrows[qid]) for qid in qids],
-        "query_id bigint, qvec array<float>")
-    for nprobe in (8, 3):
-        many = ivf.ivf_search_many(index, queries, k=10, nprobe=nprobe)
-        got = {}
-        for r in many.collect():
-            got.setdefault(r.query_id, []).append((r.vec_id, r.cos_sim))
-        for qid in got:
-            got[qid].sort(key=lambda t: (-t[1], t[0]))
-        for qid in qids:
-            single = [(r.vec_id, r.cos_sim) for r in
-                      ivf.ivf_search(index, np.array(qrows[qid]), k=10,
-                                     nprobe=nprobe).collect()]
-            assert got[qid] == single, (nprobe, qid)
-
-
-def test_sq8_rescore_all_equals_float_search(spark):
-    """With a rescore pool covering every candidate, SQ8 search must be
-    bit-identical to the float search at the same probes — quantization
-    then only reorders candidate generation, which full rescoring
-    neutralizes."""
-    emb = _emb(spark)
-    n = emb.count()
-    index = ivf.ivf_build(emb, n_centroids=8, sq8=True)
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    for nprobe in (8, 3):
-        want = [(r.vec_id, r.cos_sim) for r in
-                ivf.ivf_search(index, np.array(q), k=10, nprobe=nprobe,
-                               exclude_id=0).collect()]
-        got = [(r.vec_id, r.cos_sim) for r in
-               ivf.ivf_search_sq(index, np.array(q), k=10, nprobe=nprobe,
-                                 rescore=n, exclude_id=0).collect()]
-        assert got == want, nprobe
-
-
-def test_sq8_default_rescore_recall_and_exact_scores(spark):
-    """Default rescore=4: high recall vs the float search, and every
-    returned score must equal the exact cosine for that id (scores come
-    from the float vectors, never the quantized ones)."""
-    emb = _emb(spark)
-    index = ivf.ivf_build(emb, n_centroids=8, sq8=True)
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    want = {r.vec_id: r.cos_sim for r in
-            ivf.ivf_search(index, np.array(q), k=20, nprobe=8,
-                           exclude_id=0).collect()}
-    got = {r.vec_id: r.cos_sim for r in
-           ivf.ivf_search_sq(index, np.array(q), k=20, nprobe=8,
-                             rescore=4, exclude_id=0).collect()}
-    recall = len(set(got) & set(want)) / len(want)
-    assert recall >= 0.8, recall
-    for vid, cs in got.items():
-        if vid in want:
-            assert cs == want[vid], vid
-
-
-def test_sq8_disk_posting_lists_smaller(spark, tmp_path):
-    """The point of SQ8: the quantized posting lists a probe scans are a
-    fraction of the float lists' bytes, and a loaded index searches them
-    partition-pruned."""
-    import pathlib
-    emb = _emb(spark)
-    path = str(tmp_path / "ivf_sq8")
-    ivf.ivf_build(emb, n_centroids=8, out_path=path, sq8=True)
-    loaded = ivf.ivf_load(spark, path)
-    assert loaded.qvectors is not None
-
-    def tree_bytes(p):
-        return sum(f.stat().st_size
-                   for f in pathlib.Path(p).rglob("*.parquet"))
-    qb, vb = tree_bytes(f"{path}/qvectors"), tree_bytes(f"{path}/vectors")
-    assert qb < 0.6 * vb, (qb, vb)
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    res = ivf.ivf_search_sq(loaded, np.array(q), k=5, nprobe=2)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [centroid" in plan
-    assert res.count() == 5
-
-
 def test_assignment_balance(spark):
     """IVF's selling point over fixed hyperplanes: adapted buckets stay
     populated — no centroid owns the whole corpus."""

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from embulk_input_parquet_hadoop_spark.sources import jsonl_io as jl
+from fixtures.avro_ref import avro_record_count, read_avro
 
 
 def _write_jsonl(path, rows, gz=False):
@@ -385,10 +386,10 @@ def test_avro_stream_writer_and_ranged_count(tmp_path):
     with open(p, "rb+" if os.path.exists(p) else "wb") as fh:
         n = avro_io.write_avro_stream(fh, AVRO_SCHEMA, iter(chunks))
     assert n == 6
-    schema, recs = avro_io.read_avro(p)
+    schema, recs = read_avro(p)
     assert [r["doc_id"] for r in recs] == [1, 2, 3, 4, 5, 6]
     data = open(p, "rb").read()
-    assert avro_io.avro_record_count(data) == 6
+    assert avro_record_count(data) == 6
     assert avro_io.avro_record_count_ranged(p) == 6
     # ranged count over a remote scheme (put the same bytes)
     remote = f"mock-s3://bucket{tmp_path}/multi.avro"
@@ -404,5 +405,5 @@ def test_avro_stream_writer_and_ranged_count(tmp_path):
                                   (big[i:i + 64]
                                    for i in range(0, 500, 64)))
     assert avro_io.avro_record_count_ranged(p2) == 500
-    _, recs2 = avro_io.read_avro(p2)
+    _, recs2 = read_avro(p2)
     assert len(recs2) == 500

@@ -105,7 +105,6 @@ def test_one_call_listing_keeps_every_name(spark, tmp_path):
     (the names carry runs of them, so some boundary falls inside one)."""
     from pyspark.sql.types import StructType
 
-    from embulk_input_parquet_hadoop_spark.sources import table
     tree = str(tmp_path / "odd")
     astral = "\U0001F600"
     names = ["a\nb.parquet", "c d%e.parquet", "part-0.parquet"] + [
@@ -117,7 +116,6 @@ def test_one_call_listing_keeps_every_name(spark, tmp_path):
     assert listed == df.inputFiles() and len(listed) == len(names)
     units = len("\n".join(listed).encode("utf-16-le")) // 2
     assert units > 3 * pipeline._LISTING_CHUNK
-    assert table.table_files(df) == sorted(df.inputFiles())
     assert pipeline.spark_input_files(spark.range(3)) == []
 
     out = str(tmp_path / "out")

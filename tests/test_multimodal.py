@@ -1,8 +1,7 @@
-"""Multimodal binary-column pipeline: synthesis, features, frame sampling.
+"""Multimodal binary-column pipeline: synthesis and byte features.
 
-The decode of real codecs is stubbed (no image/audio libs in the sandbox);
-these tests pin down the Spark-side plumbing — schema, batch shape, and the
-vectorized byte kernels — on deterministic synthetic payloads.
+These tests pin down the Spark-side plumbing — schema, batch shape, and
+the vectorized byte kernels — on deterministic synthetic payloads.
 """
 
 import hashlib
@@ -46,36 +45,6 @@ def test_extract_features_matches_numpy(media):
             (buf.astype(np.int64)
              * (np.arange(len(buf), dtype=np.int64) + 1)).sum() % (2**31))
         assert f.checksum == expect_csum
-
-
-def test_frame_sample_halves_video_payload(spark, media):
-    videos = media.filter(F.col("kind") == "video")
-    sampled = multimodal.frame_sample(videos, stride=2)
-    joined = (videos.select("doc_id",
-                            F.length("payload").alias("full_len"))
-              .join(sampled.select("doc_id",
-                                   F.length("payload").alias("kept_len")),
-                    "doc_id"))
-    for r in joined.collect():
-        # 4 frames, stride 2 -> frames {0, 2} kept -> half the bytes
-        assert r.kept_len * 2 == r.full_len
-    # sampled frames are byte-identical to the original frame slices
-    v = videos.head()
-    s = {r.doc_id: bytes(r.payload)
-         for r in sampled.filter(F.col("doc_id") == v.doc_id).collect()}
-    full = bytes(v.payload)
-    flen = len(full) // 4
-    assert s[v.doc_id] == full[0:flen] + full[2 * flen:3 * flen]
-
-
-def test_decode_real_media_is_stubbed(media):
-    try:
-        import PIL  # noqa: F401
-        pytest.skip("PIL present; stub not applicable")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_real_media(media)
 
 
 def test_extract_features_with_empty_payloads(spark):

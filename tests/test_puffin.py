@@ -208,7 +208,9 @@ def test_puffin_roundtrip_and_ranged_reads(tmp_path):
            "/d/b.parquet": np.arange(0, 200000, 3)}
     locs = puffin.write_dv_puffin(p, dvs, snapshot_id=7,
                                   sequence_number=2)
-    whole = puffin.read_footer(open(p, "rb").read())
+    data = open(p, "rb").read()
+    (size,) = struct.unpack_from("<i", data, len(data) - 12)
+    whole = json.loads(data[len(data) - 12 - size:len(data) - 12])
     ranged = puffin.read_footer_path(p)
     assert whole == ranged
     blobs = puffin.dv_blobs_from_footer(ranged)
@@ -236,31 +238,43 @@ def test_puffin_on_object_store(tmp_path):
     assert got.tolist() == [2, 4]
 
 
-def test_puffin_footer_errors():
+def test_puffin_footer_errors(tmp_path):
     good = bytearray()
     payload = json.dumps({"blobs": []}).encode()
     good += puffin.MAGIC + puffin.MAGIC + payload
     good += struct.pack("<i", len(payload)) + b"\x00\x00\x00\x00"
     good += puffin.MAGIC
-    assert puffin.read_footer(bytes(good)) == {"blobs": []}
-    with pytest.raises(puffin.PuffinError, match="magic"):
-        puffin.read_footer(b"XXXX" + bytes(good[4:]))
+
+    def footer(data: bytearray) -> dict:
+        p = tmp_path / "footer.puffin"
+        p.write_bytes(bytes(data))
+        return puffin.read_footer_path(str(p))
+
+    assert footer(good) == {"blobs": []}
+    bad_tail = bytearray(good)
+    bad_tail[-4:] = b"XXXX"
+    with pytest.raises(puffin.PuffinError, match="footer magic"):
+        footer(bad_tail)
+    bad_start = bytearray(good)
+    bad_start[4:8] = b"XXXX"  # the footer's own start magic
+    with pytest.raises(puffin.PuffinError, match="start magic"):
+        footer(bad_start)
     compressed = bytearray(good)
     compressed[-8] = 0x01  # flag bit 0: lz4 footer payload
     with pytest.raises(puffin.PuffinError, match="lz4"):
-        puffin.read_footer(bytes(compressed))
+        footer(compressed)
     unknown = bytearray(good)
     unknown[-7] = 0x80
     with pytest.raises(puffin.PuffinError, match="flags"):
-        puffin.read_footer(bytes(unknown))
+        footer(unknown)
     short = good[:10]
     with pytest.raises(puffin.PuffinError, match="short"):
-        puffin.read_footer(bytes(short))
+        footer(short)
     missized = bytearray(good)
     struct.pack_into("<i", missized, len(missized) - 12,
                      len(payload) + 2)
     with pytest.raises(puffin.PuffinError, match="footer"):
-        puffin.read_footer(bytes(missized))
+        footer(missized)
 
 
 def test_compressed_dv_blob_refused():

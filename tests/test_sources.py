@@ -1,8 +1,11 @@
-"""Pluggable table source: parquet path now, Iceberg when the jar exists."""
+"""Table sources read without a runtime jar: the Iceberg table format
+(metadata, manifests, Avro), and plain Parquet trees."""
 
 import pytest
 
+from embulk_input_parquet_hadoop_spark.plans import pipeline
 from embulk_input_parquet_hadoop_spark.sources import datagen, table
+from fixtures.avro_ref import read_avro
 
 
 @pytest.fixture(scope="module")
@@ -12,28 +15,9 @@ def tokens_dir(tmp_path_factory):
     return path
 
 
-def test_parquet_path_auto(spark, tokens_dir):
-    df = table.read_tokens_table(spark, tokens_dir)
-    assert df.count() == 300
-    assert [f.name for f in df.schema.fields] == [
-        "doc_id", "tokens", "n_tok", "source"]
-
-
 def test_table_files(spark, tokens_dir):
-    df = table.read_tokens_table(spark, tokens_dir, fmt="parquet")
-    files = table.table_files(df)
+    files = pipeline.spark_input_files(spark.read.parquet(tokens_dir))
     assert len(files) == 2 and all(f.endswith(".parquet") for f in files)
-
-
-def test_iceberg_absent_is_graceful(spark, tokens_dir):
-    if table.iceberg_available(spark):
-        pytest.skip("iceberg runtime present")
-    with pytest.raises(RuntimeError, match="iceberg runtime"):
-        table.read_tokens_table(spark, "db.tokens", fmt="iceberg")
-    # auto-detect on an identifier without the runtime -> parquet attempt
-    # (which then fails on a non-path), never a silent wrong answer
-    df = table.read_tokens_table(spark, tokens_dir, fmt=None)
-    assert df.count() == 300
 
 
 # --- Iceberg table-format reader (no runtime jar): avro + metadata ----------
@@ -77,7 +61,7 @@ def test_avro_roundtrip_all_types(tmp_path):
     for codec in ("deflate", "null"):
         p = str(tmp_path / f"t_{codec}.avro")
         avro_io.write_avro(p, schema, recs, codec=codec)
-        s2, got = avro_io.read_avro(p)
+        s2, got = read_avro(p)
         assert s2 == schema and got == recs
 
 
@@ -257,7 +241,7 @@ def test_avro_snappy_codec_reads(tmp_path):
     out.extend(avro_io._SYNC)
     p = str(tmp_path / "s.avro")
     open(p, "wb").write(bytes(out))
-    _, got = avro_io.read_avro(p)
+    _, got = read_avro(p)
     assert got == recs
 
 
@@ -293,7 +277,7 @@ def test_avro_roundtrip_hypothesis():
         os.close(fd)
         try:
             avro_io.write_avro(p, schema, recs)
-            s2, got = avro_io.read_avro(p)
+            s2, got = read_avro(p)
             assert s2 == schema and got == recs
         finally:
             os.remove(p)
@@ -329,7 +313,7 @@ def test_avro_multi_block_read(tmp_path):
         out.extend(avro_io._SYNC)
     p = str(tmp_path / "mb.avro")
     open(p, "wb").write(bytes(out))
-    _, got = avro_io.read_avro(p)
+    _, got = read_avro(p)
     assert got == blocks[0] + blocks[1]
 
 
@@ -980,7 +964,7 @@ def test_iceberg_v3_puffin_delete_vector_refused(tmp_path, tokens_dir):
     with open(os.path.join(meta_dir, "v1.metadata.json")) as f:
         meta = json.load(f)
     mlist = meta["snapshots"][-1]["manifest-list"]
-    _, manifests = avro_io.read_avro(mlist)
+    _, manifests = read_avro(mlist)
     manifests.append({
         "manifest_path": dv_man,
         "manifest_length": os.path.getsize(dv_man),
@@ -1139,7 +1123,7 @@ def test_iceberg_dv_duplicate_refused(tmp_path, tokens_dir):
     with open(os.path.join(meta_dir, "v1.metadata.json")) as f:
         meta = json.load(f)
     mlist = meta["snapshots"][-1]["manifest-list"]
-    _, manifests = avro_io.read_avro(mlist)
+    _, manifests = read_avro(mlist)
     manifests.append({
         "manifest_path": man, "manifest_length": os.path.getsize(man),
         "partition_spec_id": 0, "content": 1,

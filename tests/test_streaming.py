@@ -1,15 +1,9 @@
-"""Structured-Streaming encode: micro-batch waves, resume via checkpoint,
-watermarked throughput monitor."""
-
-import shutil
+"""Streaming reuse of a batch operator: ``pack.chunk_with_overlap`` runs
+unchanged inside ``foreachBatch``."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from embulk_input_parquet_hadoop_spark.plans import manifest as mf
-from embulk_input_parquet_hadoop_spark.plans import verify
 from embulk_input_parquet_hadoop_spark.sources import datagen
-from embulk_input_parquet_hadoop_spark.streaming import encode_stream
 
 
 @pytest.fixture(scope="module")
@@ -17,123 +11,6 @@ def stream_tokens(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("stream") / "tokens")
     datagen.generate(path, n_docs=800, seed=11, n_files=4)
     return path
-
-
-def test_encode_stream_drains_and_commits(spark, stream_tokens, tmp_path):
-    out = str(tmp_path / "enc")
-    ckpt = str(tmp_path / "ckpt")
-    q = encode_stream.encode_stream(spark, stream_tokens, out, ckpt,
-                                    max_files_per_trigger=2)
-    q.awaitTermination(120)
-    waves = mf.completed_waves(spark, out)
-    assert len(waves) >= 2  # 4 files / 2 per trigger
-    res = verify.verify_path(spark, stream_tokens, out)
-    assert res["ok"], res
-
-    # restart on the same checkpoint: nothing new -> no new waves
-    q2 = encode_stream.encode_stream(spark, stream_tokens, out, ckpt)
-    q2.awaitTermination(120)
-    assert mf.completed_waves(spark, out) == waves
-
-    # new file arrives -> exactly the new data is encoded as a new wave
-    datagen.generate(stream_tokens + "_more", n_docs=100, seed=12, n_files=1,
-                     start_doc=10_000)  # distinct doc_id range
-    import os
-    shutil.copy(f"{stream_tokens}_more/part-00000.parquet",
-                f"{stream_tokens}/part-late.parquet")
-    q3 = encode_stream.encode_stream(spark, stream_tokens, out, ckpt)
-    q3.awaitTermination(120)
-    new_waves = mf.completed_waves(spark, out)
-    assert len(new_waves) == len(waves) + 1
-    assert verify.verify_path(spark, stream_tokens, out)["ok"]
-    os.remove(f"{stream_tokens}/part-late.parquet")
-
-
-def test_token_rate_monitor_windows(spark, tmp_path):
-    src = str(tmp_path / "events")
-    rows = [("2026-01-01 00:00:10", "web", 100),
-            ("2026-01-01 00:00:50", "web", 50),
-            ("2026-01-01 00:01:10", "web", 30),
-            ("2026-01-01 00:00:30", "books", 70)]
-    df = spark.createDataFrame(rows, "ts_s string, source string, n_tok int")
-    (df.select(F.to_timestamp("ts_s").alias("ts"), "source", "n_tok")
-     .write.parquet(src))
-    out = (encode_stream.token_rate_monitor(spark, src)
-           .writeStream.format("memory").queryName("rates")
-           .outputMode("complete").trigger(availableNow=True).start())
-    out.awaitTermination(120)
-    got = {(r.source, r.window_start.minute): r.tokens
-           for r in spark.sql("select * from rates").collect()}
-    assert got[("web", 0)] == 150
-    assert got[("web", 1)] == 30
-    assert got[("books", 0)] == 70
-
-
-def test_stateful_dedup_across_microbatches(spark, tmp_path):
-    """Same fingerprint in batch 1 and batch 2 -> emitted once."""
-    from embulk_input_parquet_hadoop_spark.streaming import stateful
-    src = str(tmp_path / "dd_src")
-    rows1 = [("a", [1, 2, 3], 3, "web"), ("b", [4, 5], 2, "web")]
-    rows2 = [("c", [1, 2, 3], 3, "web"),   # dup of a (same tokens)
-             ("d", [9], 1, "books")]
-    ddl = "doc_id string, tokens array<int>, n_tok int, source string"
-    spark.createDataFrame(rows1, ddl).coalesce(1).write.parquet(src)
-    spark.createDataFrame(rows2, ddl).coalesce(1).write.mode("append") \
-        .parquet(src)
-    stream = (spark.readStream.schema(ddl)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    deduped = stateful.dedup_stream(stateful.with_fingerprint(stream))
-    q = (deduped.writeStream.format("memory").queryName("dd")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select doc_id from dd").collect()
-    ids = sorted(r.doc_id for r in got)
-    # a/c collapse to one (either file can arrive first), b and d pass
-    assert len(ids) == 3
-    assert ("a" in ids) != ("c" in ids)
-    assert "b" in ids and "d" in ids
-
-
-def test_stateful_running_totals(spark, tmp_path):
-    from embulk_input_parquet_hadoop_spark.streaming import stateful
-    src = str(tmp_path / "rt_src")
-    ddl = "doc_id string, tokens array<int>, n_tok int, source string"
-    spark.createDataFrame([("a", [1], 10, "web"), ("b", [2], 5, "web")],
-                          ddl).coalesce(1).write.parquet(src)
-    spark.createDataFrame([("c", [3], 7, "web"), ("d", [4], 2, "books")],
-                          ddl).coalesce(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.schema(ddl)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    totals = stateful.running_totals_stream(stream)
-    q = (totals.writeStream.format("memory").queryName("rt")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "select source, max(total_tokens) t, max(total_docs) d "
-        "from rt group by source").collect()
-    got = {r.source: (r.t, r.d) for r in rows}
-    assert got["web"] == (22, 3)
-    assert got["books"] == (2, 1)
-
-
-def test_stateful_dedup_with_ttl_still_dedups(spark, tmp_path):
-    """TTL path: timeouts are registered per group, dedup still holds
-    within the TTL window across micro-batches."""
-    from embulk_input_parquet_hadoop_spark.streaming import stateful
-    src = str(tmp_path / "ttl_src")
-    ddl = "doc_id string, tokens array<int>, n_tok int, source string"
-    spark.createDataFrame([("a", [7, 7], 2, "web")], ddl) \
-        .coalesce(1).write.parquet(src)
-    spark.createDataFrame([("b", [7, 7], 2, "web")], ddl) \
-        .coalesce(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.schema(ddl)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    deduped = stateful.dedup_stream(stateful.with_fingerprint(stream),
-                                    ttl_ms=3_600_000)
-    q = (deduped.writeStream.format("memory").queryName("ddttl")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    assert spark.sql("select count(*) c from ddttl").collect()[0].c == 1
 
 
 def test_streaming_chunk_with_overlap_reuses_batch_operator(

@@ -17,6 +17,7 @@ from embulk_input_parquet_hadoop_spark.plans import pipeline, verify
 from embulk_input_parquet_hadoop_spark.sources import delta_meta as dm
 from embulk_input_parquet_hadoop_spark.sources import iceberg_meta
 from embulk_input_parquet_hadoop_spark.sources import table as tbl
+from fixtures.delta_fixture import write_delta_fixture
 from embulk_input_parquet_hadoop_spark.sources.datagen import generate
 
 # the keys of a wave record with no side inputs: a plain encode's
@@ -84,8 +85,8 @@ def _delta_dv_renames(tmp_path, files):
     t2 = pa.table({"doc_id": ["e", "f"],
                    "n": pa.array([5, 6], pa.int32())})
     d = str(tmp_path / "cm_tbl")
-    dm.write_delta_fixture(d, [t1, t2], column_mapping="name",
-                           commits=[{"add": [0, 1]}, {"dv": {0: [1]}}])
+    write_delta_fixture(d, [t1, t2], column_mapping="name",
+                        commits=[{"add": [0, 1]}, {"dv": {0: [1]}}])
     s = dm.snapshot_scan(d)
     return (d, {"input_files": s["data_files"],
                 "row_deletes": s["row_deletes"],
@@ -95,7 +96,7 @@ def _delta_dv_renames(tmp_path, files):
 
 def _delta_constants(tmp_path, files):
     d = str(tmp_path / "part_tbl")
-    dm.write_delta_fixture(
+    write_delta_fixture(
         d, [pq.read_table(f) for f in files],
         partition_columns=["src", "bucket"],
         partition_types={"bucket": "integer"},

@@ -1,7 +1,5 @@
 """Vocabulary truncation: rare-token remap with exact order preservation."""
 
-from pyspark.sql import functions as F
-
 from embulk_input_parquet_hadoop_spark.operators import vocab
 
 import pytest
@@ -72,18 +70,6 @@ def test_null_token_elements_preserved(spark):
 # BPE primitives
 # ---------------------------------------------------------------------
 
-def _ref_bpe_merge(t, a, b, nid):
-    out, i = [], 0
-    while i < len(t):
-        if i + 1 < len(t) and t[i] == a and t[i + 1] == b:
-            out.append(nid)
-            i += 2
-        else:
-            out.append(t[i])
-            i += 1
-    return out
-
-
 def test_pair_counts(spark):
     df = spark.createDataFrame(
         [(1, [1, 2, 1, 2, 3]), (2, [2, 1, 2]), (3, [7]), (4, [])],
@@ -94,111 +80,3 @@ def test_pair_counts(spark):
     top = [(r.a, r.b) for r in
            vocab.pair_counts(df, top_k=2).collect()]
     assert top == [(1, 2), (2, 1)]
-
-
-def test_apply_bpe_merge_greedy_semantics(spark):
-    cases = [
-        ([1, 1, 1], (1, 1), [9, 1]),        # greedy left-to-right
-        ([1, 1, 1, 1], (1, 1), [9, 9]),
-        ([1, 2, 1, 2], (1, 2), [9, 9]),
-        ([2, 1, 1, 2], (1, 1), [2, 9, 2]),
-        ([1, 2], (2, 1), [1, 2]),           # no match
-        ([], (1, 2), []),
-        ([1], (1, 1), [1]),
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, (t, _, _) in enumerate(cases)],
-        "doc_id bigint, tokens array<int>")
-    for i, (t, pair, want) in enumerate(cases):
-        out = vocab.apply_bpe_merge(
-            df.filter(F.col("doc_id") == i), pair, 9).collect()
-        assert out[0].tokens == want, (t, pair)
-
-
-def test_apply_bpe_merge_vs_reference_random(spark):
-    import random
-    rng = random.Random(20260820)
-    rows = [(i, [rng.randint(0, 3) for _ in range(rng.randint(0, 40))])
-            for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id bigint, tokens array<int>")
-    for pair in [(0, 0), (0, 1), (2, 2), (3, 1)]:
-        got = {r.doc_id: r.tokens for r in
-               vocab.apply_bpe_merge(df, pair, 99).collect()}
-        for i, t in rows:
-            assert got[i] == _ref_bpe_merge(t, *pair, 99), (i, t, pair)
-
-
-def test_bpe_round_shrinks_top_pair(spark):
-    # one full BPE round: count -> merge the top pair -> the pair is
-    # gone, and token mass drops by exactly the number of APPLIED
-    # merges (≤ the raw count: greedy skips overlapping occurrences,
-    # e.g. (0,0) in [0,0,0] counts twice but merges once)
-    df = spark.createDataFrame(
-        [(i, [i % 2, (i + 1) % 3, i % 2, i % 2]) for i in range(50)],
-        "doc_id bigint, tokens array<int>")
-    top = vocab.pair_counts(df, top_k=1).collect()[0]
-    merged = vocab.apply_bpe_merge(df, (top.a, top.b), 100)
-    before = df.select(F.sum(F.size("tokens"))).collect()[0][0]
-    after = merged.select(F.sum(F.size("tokens"))).collect()[0][0]
-    n_applied = merged.select(F.sum(F.size(F.filter(
-        "tokens", lambda x: x == F.lit(100))))).collect()[0][0]
-    assert 0 < n_applied <= top.cnt
-    assert before - after == n_applied
-    left = {(r.a, r.b) for r in vocab.pair_counts(merged).collect()}
-    assert (top.a, top.b) not in left
-
-
-def test_bpe_learn_matches_reference_trainer(spark):
-    import random
-    rng = random.Random(7)
-    rows = [(i, [rng.randint(0, 3) for _ in range(rng.randint(2, 30))])
-            for i in range(60)]
-
-    def ref_learn(docs, n_merges, first_id, min_count=2):
-        docs = [list(t) for t in docs]
-        merges = []
-        for k in range(n_merges):
-            cnt = {}
-            for t in docs:
-                for j in range(len(t) - 1):
-                    cnt[(t[j], t[j + 1])] = cnt.get((t[j], t[j + 1]), 0) + 1
-            if not cnt:
-                break
-            (a, b), c = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-            if c < min_count:
-                break
-            nid = first_id + k
-            merges.append((a, b, nid))
-            docs = [_ref_bpe_merge(t, a, b, nid) for t in docs]
-        return merges, docs
-
-    df = spark.createDataFrame(rows, "doc_id bigint, tokens array<int>")
-    merges, out = vocab.bpe_learn(df, n_merges=4, first_id=100)
-    want_merges, want_docs = ref_learn([t for _, t in rows], 4, 100)
-    assert merges == want_merges
-    got = {r.doc_id: r.tokens for r in out.collect()}
-    for (i, _), want in zip(rows, want_docs):
-        assert got[i] == want, i
-
-
-def test_bpe_learn_stops_below_min_count(spark):
-    df = spark.createDataFrame([(1, [1, 2, 3, 4])],
-                               "doc_id bigint, tokens array<int>")
-    merges, out = vocab.bpe_learn(df, n_merges=5, first_id=100,
-                                  min_count=2)
-    assert merges == []  # every pair occurs once
-    assert out.collect()[0].tokens == [1, 2, 3, 4]
-
-
-def test_apply_bpe_merge_preserves_element_type(spark):
-    big = 3_000_000_000  # > 2^31: silently narrowed by array<int>
-    df = spark.createDataFrame([(1, [big, big, 7])],
-                               "doc_id bigint, tokens array<bigint>")
-    out = vocab.apply_bpe_merge(df, (big, big), big + 1)
-    assert out.schema["tokens"].dataType.simpleString() == \
-        "array<bigint>"
-    assert out.collect()[0].tokens == [big + 1, 7]
-    with pytest.raises(TypeError, match="expected an array"):
-        vocab.apply_bpe_merge(
-            spark.createDataFrame([(1, "x")], "id int, tokens string"),
-            (1, 2), 3)
