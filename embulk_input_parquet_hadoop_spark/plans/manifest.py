@@ -176,8 +176,9 @@ def commit_wave(spark: SparkSession, out_dir: str, wave_id: int,
     chunks. Without it (the ``encode_df`` path) the stats are aggregated
     from the wave's chunk files with the payload column pruned.
 
-    ``plan``: the wave's scan plan from ``pipeline.encode_path`` (the
-    files' side inputs, ``const_schema``, ``column_renames``), recorded
+    ``plan``: the part of ``pipeline.encode_path``'s scan plan that
+    the wave applied (``"files"``: each file's side inputs, then
+    ``const_schema`` and ``column_renames``), recorded
     under ``"plan"`` so ``verify.verify_files`` replays exactly what the
     wave was encoded with; a wave without one keeps the plain record.
 

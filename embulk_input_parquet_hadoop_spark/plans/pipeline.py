@@ -43,13 +43,13 @@ files LPT-packed into at most one Spark task per core:
   them as the wave's ``chunks_meta/wave-K.parquet``. What the driver holds
   is one wave's rows, so ``waves`` bounds it at any tree size.
 
-Table sources with row-level deletes take the file path too: each task
-masks its own file's position and equality deletes (``encode_path``'s
-``row_deletes`` / ``eq_deletes``). An alternative DataFrame-source path
-(``encode_df``) keeps the ``mapInArrow``-on-a-scan route for inputs that
-are DataFrames rather than files (pre-filtered DataFrames, and the
-``cluster_partitions`` clustering): there Catalyst pushdown and the salted
-clustering repartition apply first.
+Table sources with row-level deletes, partition constants or column
+renames take the file path too: each task applies its own file's part
+of ``encode_path``'s scan ``plan`` at the read. An alternative
+DataFrame-source path (``encode_df``) keeps the ``mapInArrow``-on-a-scan
+route for inputs that are DataFrames rather than files (pre-filtered
+DataFrames, and the ``cluster_partitions`` clustering): there Catalyst
+pushdown and the salted clustering repartition apply first.
 """
 
 from __future__ import annotations
@@ -135,15 +135,21 @@ CHUNK_META_ARROW_SCHEMA = pa.schema([
 
 DEFAULT_BATCH_ROWS = 16384
 
-# one encode task input row per source file: the path, its Iceberg
-# position-delete files, its equality-delete descriptors (JSON) and its
-# constant columns (JSON); the side inputs are null when absent
-FILE_ROWS_ARROW_SCHEMA = pa.schema([
-    pa.field("path", pa.string()),
+# a source file's side inputs as its wave's scan plan records them
+# (``task_sides``), shared by the encode and verify task rows: its
+# position-delete files, its equality-delete descriptors (JSON), its
+# constant columns (JSON) and the wave's constant types and renames
+# (JSON); null when absent
+SIDE_FIELDS = [
     pa.field("deletes", pa.list_(pa.string())),
     pa.field("eq", pa.string()),
     pa.field("consts", pa.string()),
-])
+    pa.field("wave_plan", pa.string()),
+]
+
+# one encode task input row per source file: its path and side inputs
+FILE_ROWS_ARROW_SCHEMA = pa.schema([pa.field("path", pa.string()),
+                                    *SIDE_FIELDS])
 
 
 def meta_files(out_dir: str, wave_id: int) -> list[str]:
@@ -601,20 +607,19 @@ def _join_parts(parts: list[pa.RecordBatch]) -> pa.RecordBatch:
 
 
 def _source_batches(path: str, batch_rows: int, columns: list[str] | None,
-                    dfiles: list[str] | None, eqjson: str | None,
-                    cjson: str | None, const_schema: dict[str, str] | None,
-                    column_renames: list[dict] | None,
+                    side: tuple | None, wave_plan: str | None,
                     bad_record_threshold: float, skipped: list[int]):
     """One source file's batches, exactly as encoded: the single read
     that the encode task encodes and ``verify_files`` compares against,
     so both see the same rows at the same batch boundaries.
 
-    ``dfiles``/``eqjson``/``cjson`` are the file's RAW side inputs from
-    its task input row (position-delete files, equality-delete
-    descriptors JSON, constant columns JSON). They are resolved at the
-    first ``next()``, inside the caller's per-file error capture, so a
-    missing or corrupt source, delete file or descriptor fails that file
-    alone.
+    ``side`` is the file's RAW side inputs from its task input row
+    (position-delete files, equality-delete descriptors JSON, constant
+    columns JSON; None for none) and ``wave_plan`` the wave's
+    ``const_schema``/``column_renames`` as JSON (``task_sides``). They
+    are resolved at the first ``next()``, inside the caller's per-file
+    error capture, so a missing or corrupt source, delete file or
+    descriptor fails that file alone.
 
     Row groups are read one at a time (``ParquetRowReader.java:105-118``),
     single-threaded: one task <-> one executor core; pyarrow would
@@ -646,6 +651,9 @@ def _source_batches(path: str, batch_rows: int, columns: list[str] | None,
     injected constants in it are not read from the file. A constant
     whose name is also a column of the file fails the file."""
     from . import fsutil
+    dfiles, eqjson, cjson = side or (None, None, None)
+    wave_plan = json.loads(wave_plan) if wave_plan else {}
+    column_renames = wave_plan.get("column_renames")
     pf = fsutil.parquet_file(path)
     schema = pf.schema_arrow
     del_pos = _read_delete_positions(path, dfiles) if dfiles else None
@@ -709,8 +717,9 @@ def _source_batches(path: str, batch_rows: int, columns: list[str] | None,
             if column_renames:
                 batch = rename_batch(batch, column_renames)
             if consts:
-                for nm, arr in _const_arrays(consts, batch.num_rows,
-                                             const_schema or {}):
+                for nm, arr in _const_arrays(
+                        consts, batch.num_rows,
+                        wave_plan.get("const_schema", {})):
                     batch = batch.append_column(nm, arr)
             yield batch
         rg_start += rg_rows
@@ -750,34 +759,26 @@ def _schema_key(schema: pa.Schema) -> str:
 def make_encode_files_fn(wave_id: int, wave_dir: str,
                          batch_rows: int = DEFAULT_BATCH_ROWS,
                          columns: list[str] | None = None,
-                         bad_record_threshold: float = 0.0,
-                         const_schema: dict[str, str] | None = None,
-                         column_renames: list[dict] | None = None):
+                         bad_record_threshold: float = 0.0):
     """Task fn for the file-source path (run by
     ``filetasks.run_file_tasks``): paths in, chunk *stats* out. ``pid``,
     the index of the task's bin, names its chunk ids and chunk files.
 
     Each input row is one source file in ``FILE_ROWS_ARROW_SCHEMA``:
-    its path and its raw per-file side inputs (position deletes,
-    equality-delete descriptors, constant columns). The task reads each
-    file through ``_source_batches`` — the same read ``verify_files``
-    replays — encodes each batch, and streams chunk rows into one
-    uncompressed Parquet chunk file *per source file*, atomically renamed
-    only when that source file finishes cleanly. A mid-file failure
-    discards the partial chunk file (and its pending stat rows), so no
-    partially-processed input is ever visible — reprocessing a failed
-    file in a later wave cannot duplicate rows, and an aborted wave
-    leaves nothing a manifest-gated reader can see.
+    its path and its side inputs as the wave's scan plan records them
+    (position deletes, equality-delete descriptors, constant columns,
+    and the wave's constant types and column renames). The task reads
+    each file through ``_source_batches`` — the same read
+    ``verify_files`` replays — encodes each batch, and streams chunk
+    rows into one uncompressed Parquet chunk file *per source file*,
+    atomically renamed only when that source file finishes cleanly. A
+    mid-file failure discards the partial chunk file (and its pending
+    stat rows), so no partially-processed input is ever visible —
+    reprocessing a failed file in a later wave cannot duplicate rows,
+    and an aborted wave leaves nothing a manifest-gated reader can see.
 
-    ``const_schema`` ({column: _CONST_TYPES key}) declares the types of
-    the per-file CONSTANT columns (partition values for Delta / Hive
-    sources — see ``encode_path(const_columns=)``).
-
-    ``column_renames`` ([{"logical", "physical", "id"}], table-uniform)
-    maps column-mapped physical parquet names to the table's logical
-    schema (Delta columnMapping modes name/id,
-    ``delta_meta.column_renames``); a ``columns=`` projection is
-    LOGICAL.
+    Under a wave plan with ``column_renames`` a ``columns=`` projection
+    is LOGICAL.
 
     ``bad_record_threshold``: tolerated fraction of rows per file lost to
     corrupt row groups — the reference's per-record tolerance
@@ -827,10 +828,9 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
         fsutil.makedirs_any(wave_dir)
         bidx = 0
         fseq = 0
-        # the per-file side inputs ride the input rows themselves — no
-        # closure state, the task gets them with the file
-        for path, dfiles, eqjson, cjson in zip(
-                *files.to_pydict().values()):
+        # the side inputs ride the input rows themselves — no closure
+        # state, the task gets them with the file
+        for path, *side, wave_plan in zip(*files.to_pydict().values()):
             if local:
                 final = os.path.join(
                     wave_dir, f"part-{pid:05d}-f{fseq:04d}.parquet")
@@ -860,8 +860,7 @@ def make_encode_files_fn(wave_id: int, wave_dir: str,
             schema = None
             try:
                 for batch in _source_batches(
-                        path, batch_rows, columns, dfiles, eqjson,
-                        cjson, const_schema, column_renames,
+                        path, batch_rows, columns, side, wave_plan,
                         bad_record_threshold, skipped):
                     if schema is None:
                         schema = _schema_key(batch.schema)
@@ -1244,26 +1243,75 @@ def _lineage_key(path: str) -> str:
     return path
 
 
-def _side_inputs(files: list[str],
-                 row_deletes: dict[str, list[str]] | None,
-                 eq_deletes: dict[str, list[dict]] | None,
-                 const_columns: dict[str, dict] | None) -> list[tuple]:
-    """Per-file task side inputs ``(position-delete files, equality-delete
-    descriptors JSON, constant columns JSON)``, None where absent. Keys
-    match on the scheme-normalized identity (``_lineage_key``): the
-    listing is Spark's (file:/ URIs) while scan plans carry plain
-    paths. Descriptors and constants go as JSON (a struct
-    column would pin one fixed shape)."""
-    rd = {_lineage_key(k): v for k, v in (row_deletes or {}).items()}
-    eq = {_lineage_key(k): v for k, v in (eq_deletes or {}).items()}
-    cc = {_lineage_key(k): v for k, v in (const_columns or {}).items()}
-    out = []
-    for f in files:
-        k = _lineage_key(f)
-        e, c = eq.get(k), cc.get(k)
-        out.append((rd.get(k), json.dumps(e) if e else None,
-                    json.dumps(c) if c else None))
-    return out
+# the entries of ``encode_path``'s scan plan: the per-file mappings
+# (position deletes, equality deletes, constant values) in the order of
+# a side input's first three fields, then the wave-wide ones
+_FILE_KEYS = ("row_deletes", "eq_deletes", "const_columns")
+_PLAN_KEYS = (*_FILE_KEYS, "const_schema", "column_renames")
+
+
+def _check_plan(plan: dict | None, cluster_partitions: int | None) -> dict:
+    """``plan`` without its empty entries, or the ``ValueError`` that
+    ``encode_path``'s docstring lists for it."""
+    unknown = sorted(set(plan or {}) - set(_PLAN_KEYS))
+    if unknown:
+        raise ValueError(f"unknown plan key(s) {unknown} (known: "
+                         f"{list(_PLAN_KEYS)})")
+    plan = {k: v for k, v in (plan or {}).items() if v}
+    if plan and cluster_partitions:
+        raise ValueError(
+            f"a scan plan ({sorted(plan)}) needs the file-source path: "
+            "deletes, constants and renames apply per file at the "
+            "pyarrow read, and cluster_partitions reads through Spark — "
+            "apply them to a DataFrame and use encode_df instead")
+    types = plan.get("const_schema", {})
+    names = {c for v in plan.get("const_columns", {}).values() for c in v}
+    bad = sorted(c for c in names | set(types)
+                 if types.get(c) not in _CONST_TYPES)
+    if bad:
+        raise ValueError(
+            f"constant column(s) {bad} lack a supported const_schema "
+            f"type (declared: {types}; supported: {sorted(_CONST_TYPES)})")
+    return plan
+
+
+def _side_inputs(files: list[str], plan: dict) -> dict[str, tuple]:
+    """{listed file: (position-delete files, equality-delete descriptors
+    JSON, constant columns JSON)} for the files ``plan`` gives a side
+    input, None where absent. Keys match on the scheme-normalized
+    identity (``_lineage_key``): the listing is Spark's (file:/ URIs)
+    while scan plans carry plain paths. A key that names no listed file
+    raises ``ValueError``: its deletes or constants would silently not
+    apply. Descriptors and constants go as JSON (a struct column would
+    pin one fixed shape)."""
+    if not any(k in plan for k in _FILE_KEYS):
+        return {}
+    keys = [_lineage_key(f) for f in files]
+    sides = {k: [None, None, None] for k in keys}
+    for slot, name in enumerate(_FILE_KEYS):
+        for k, v in plan.get(name, {}).items():
+            side = sides.get(_lineage_key(k))
+            if side is None:
+                raise ValueError(
+                    f"plan {name} names {k!r}, which is not a listed "
+                    "input file — its entry would not apply")
+            side[slot] = v if slot == 0 else (json.dumps(v) if v else None)
+    keyed = ((f, tuple(sides[k])) for f, k in zip(files, keys))
+    return {f: side for f, side in keyed if any(side)}
+
+
+def task_sides(plan: dict | None, files: list[str]) -> list[tuple]:
+    """Each of ``files``' side-input columns (``SIDE_FIELDS``) under a
+    wave's recorded scan plan (its manifest ``"plan"``): the file's
+    entry under ``"files"`` and the wave's ``const_schema`` and
+    ``column_renames`` as JSON. The encode tasks and ``verify_files``
+    build their rows with it from the same record."""
+    plan = plan or {}
+    wave = {k: plan[k] for k in ("const_schema", "column_renames")
+            if k in plan}
+    wave = json.dumps(wave) if wave else None
+    sides = plan.get("files", {})
+    return [(*sides.get(f, (None, None, None)), wave) for f in files]
 
 
 def encode_path(spark: SparkSession, input_path: str, out_dir: str,
@@ -1277,62 +1325,43 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                 schema_mode: str = "single",
                 input_files: list[str] | None = None,
                 append: bool = False,
-                row_deletes: dict[str, list[str]] | None = None,
-                eq_deletes: dict[str, list[dict]] | None = None,
-                const_columns: dict[str, dict] | None = None,
-                const_schema: dict[str, str] | None = None,
-                column_renames: list[dict] | None = None) -> dict:
+                plan: dict | None = None) -> dict:
     """Run the full encode job; returns aggregate metrics.
 
-    ``row_deletes`` ({data_file_path: [position-delete parquet paths]})
-    applies Iceberg merge-on-read POSITION deletes during encode: each
-    task reads its own file's deleted row positions (filter-pushed into
-    the delete files) and masks them out batch-by-batch before encoding,
-    so the tree holds exactly the snapshot's live rows. Feed it
-    ``iceberg_meta.snapshot_scan(...)["position_deletes"]`` together
-    with ``input_files=scan["data_files"]``. File-source path only
-    (``cluster_partitions`` reads through Spark, which has no
-    row-position access).
+    ``plan`` is a table's scan plan, which each task applies to its own
+    file at the pyarrow read in this order (every key optional):
 
-    ``eq_deletes`` ({data_file_path: [{"path": delete_parquet,
-    "columns": [key cols]}]}) applies Iceberg EQUALITY deletes the same
-    way: each task reads the delete files' key columns, builds a key
-    set (hash prefilter + exact tuple confirmation,
-    ``_EqualityDeleteFilter``), and drops matching rows batch-by-batch.
-    Feed it ``snapshot_scan(...)["equality_deletes"]`` — the scan
-    already scoped deletes by sequence number, so the mapping IS the
-    application plan. Key columns a ``columns=`` projection leaves out
-    are still read for the masking, then dropped. Per-task key
-    materialization is capped at
-    ``_EQ_MAX_KEYS`` (equality deletes are not file-keyed, so every
-    task reads the full set — compact delete files past that). Same
-    file-source-only restriction as ``row_deletes``.
+    - ``row_deletes`` ({data file: [position-delete parquet paths or
+      deletion-vector descriptors]}): POSITION deletes, masked batch by
+      batch (``iceberg_meta.snapshot_scan(...)["position_deletes"]``,
+      ``delta_meta.snapshot_scan(...)["row_deletes"]``);
+    - ``eq_deletes`` ({data file: [{"path", "columns", "ids"}]}):
+      Iceberg EQUALITY deletes, already scoped by the scan
+      (``["equality_deletes"]``), matched on a key set of at most
+      ``_EQ_MAX_KEYS`` per task (``_EqualityDeleteFilter``); key
+      columns a ``columns=`` projection leaves out are read, then
+      dropped;
+    - ``column_renames`` ([{"logical", "physical", "id"}]): the Delta
+      column-mapping plan (``snapshot_scan(...)["column_renames"]``);
+      batches take the LOGICAL names, field ids winning, and
+      ``columns=`` is logical (``expected_schema`` sees physical names);
+    - ``const_columns`` ({data file: {column: value}}) with
+      ``const_schema`` ({column: ``_CONST_TYPES`` name}, one per
+      constant): per-file CONSTANT columns, how partition values kept
+      outside the data files reach the tree
+      (``delta_meta.partition_const_columns`` and
+      ``table.hive_partitioned_files`` return these two keys). Values
+      cast to the declared type in-task (dates as ISO strings, None a
+      typed null); a name that is also a physical column fails the file.
 
-    ``const_columns`` ({data_file_path: {column: value}}) +
-    ``const_schema`` ({column: type name from ``_CONST_TYPES``}) inject
-    per-file CONSTANT columns into every batch after delete masking —
-    how partition values reach the encoded tree for sources that store
-    them outside the data files (Delta:
-    ``delta_meta.partition_const_columns``; Hive trees:
-    ``table.hive_partitioned_files``). Values ride the path DataFrame
-    as JSON and cast to the declared type in-task (dates as ISO
-    strings; None = typed null). A constant chunk takes FOR at width 0
-    (an empty payload), so the storage cost is nil; a name colliding with
-    a physical column fails that file loudly. File-source path only, like
-    the delete mappings.
-
-    ``column_renames`` ([{"logical", "physical", "id"}]) maps
-    column-mapped physical parquet names to the table's LOGICAL schema
-    (Delta columnMapping name/id modes —
-    ``delta_meta.snapshot_scan(...)["column_renames"]``): batches
-    rename after the delete masking, ``columns=`` becomes a logical
-    projection, and field-id resolution wins over physical names.
-    ``expected_schema`` (a pre-read Spark probe) still sees physical
-    names. File-source path only.
-
-    Each wave's manifest record carries the part of these five mappings
-    that its files were encoded with (``"plan"``: the per-file side
-    inputs, ``const_schema``, ``column_renames``; absent when none), so
+    ``ValueError`` refuses an unknown key, a constant without a
+    supported type, any plan with ``cluster_partitions`` (which reads
+    through Spark), and a data-file key that names no listed input file
+    (checked before ``append`` subtracts committed files, so a
+    full-snapshot plan works with ``append=True``). Each wave's manifest
+    record keeps the part of the plan its files were encoded with
+    (``"plan"``: each file's side inputs under ``"files"``,
+    ``const_schema``, ``column_renames``; absent when none), so
     ``verify.verify_files(spark, out_dir)`` replays every wave's own
     masking, constants and renames without being handed them again.
 
@@ -1441,38 +1470,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
         raise ValueError("append and resume are mutually exclusive: "
                          "resume re-runs a fixed input's missing waves, "
                          "append extends the tree with new input")
-    if (row_deletes or eq_deletes) and cluster_partitions:
-        raise ValueError(
-            "row_deletes/eq_deletes need the file-source path (deletes "
-            "apply per-file); cluster_partitions reads through Spark — "
-            "pre-apply deletes and use encode_df instead")
-    if const_columns:
-        # per-file constant columns (partition values for Delta / Hive
-        # sources, delta_meta.partition_const_columns /
-        # table.hive_partitioned_files). File-source path only: the
-        # injection is keyed by source file.
-        if cluster_partitions:
-            raise ValueError(
-                "const_columns need the file-source path (constants "
-                "apply per-file); pre-join them and use encode_df "
-                "instead")
-        need = {c for v in const_columns.values() for c in v}
-        missing = sorted(need - set(const_schema or {}))
-        if missing:
-            raise ValueError(
-                f"const_schema missing type declarations for {missing} "
-                f"(supported: {sorted(_CONST_TYPES)})")
-        bad_t = sorted(t for t in (const_schema or {}).values()
-                       if t not in _CONST_TYPES)
-        if bad_t:
-            raise ValueError(
-                f"unsupported const_schema type(s) {bad_t} "
-                f"(supported: {sorted(_CONST_TYPES)})")
-    if column_renames and cluster_partitions:
-        raise ValueError(
-            "column_renames need the file-source path (renames apply "
-            "at the pyarrow read); cluster_partitions reads through "
-            "Spark — rename via the DataFrame and use encode_df")
+    plan = _check_plan(plan, cluster_partitions)
     if input_files is not None and not input_files:
         # an explicit empty list must NEVER fall back to listing
         # input_path (`if input_files` is falsy for []) — under append it
@@ -1547,6 +1545,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
         # parity with the reference's empty-glob failure
         # (ParquetHadoopInputPlugin.java:92-94 -> PathNotFoundException)
         raise FileNotFoundError(f"no parquet files under {input_path}")
+    sides = _side_inputs(files, plan)
     totals = {"waves_run": 0, "waves_skipped": 0, "n_rows": 0, "n_tokens": 0,
               "raw_bytes": 0, "enc_bytes": 0, "wall_s": 0.0}
     # one manifest read (none for a fresh encode): append's lineage and
@@ -1588,27 +1587,25 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
         # leave stale parts behind and duplicate data on decode
         # (prefix delete on object stores, rmtree locally)
         fsutil.rmtree_any(wave_dir)
-        plan = wave_schemas = None
+        wave_plan = wave_schemas = None
         if cluster_partitions:
             df = spark.read.parquet(*wfiles)
             encode_df(spark, df, out_dir, wave_id, cluster_partitions)
             meta = None
         else:
-            # per-file delete/constant inputs ride each file's input row;
-            # a file's lineage identity is unchanged (deletes alter row
-            # content, constants add columns — neither changes which
-            # source files were consumed)
-            sides = _side_inputs(wfiles, row_deletes, eq_deletes,
-                                 const_columns)
-            rows = [(f, *side) for f, side in zip(wfiles, sides)]
             # the wave's scan plan, committed with its manifest record so
             # verify_files replays what this wave applied: the side inputs
-            # of the files that have any, the constant types and renames
-            plan = {k: v for k, v in (
-                ("files", {f: side for f, side in zip(wfiles, sides)
-                           if any(side)}),
-                ("const_schema", const_schema),
-                ("column_renames", column_renames)) if v}
+            # of the files that have any, the constant types and renames.
+            # The task rows are built from it as verify_files builds
+            # them; a file's lineage identity is unchanged (deletes alter
+            # row content, constants add columns — neither changes which
+            # source files were consumed)
+            wave_plan = {k: v for k, v in (
+                ("files", {f: sides[f] for f in wfiles if f in sides}),
+                ("const_schema", plan.get("const_schema")),
+                ("column_renames", plan.get("column_renames"))) if v}
+            rows = [(f, *side) for f, side in
+                    zip(wfiles, task_sides(wave_plan, wfiles))]
             # files LPT-packed on source bytes into at most one task per
             # core; the commit and error unit is still the file. What
             # comes back to the driver is the wave's stat rows, never
@@ -1616,11 +1613,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
             meta = run_file_tasks(
                 spark, rows, FILE_ROWS_ARROW_SCHEMA,
                 make_encode_files_fn(wave_id, wave_dir, batch_rows,
-                                     columns=columns,
-                                     bad_record_threshold=(
-                                         bad_record_threshold),
-                                     const_schema=const_schema,
-                                     column_renames=column_renames),
+                                     columns, bad_record_threshold),
                 CHUNK_META_ARROW_SCHEMA,
                 weights=fsutil.file_sizes(wfiles))
             bad = meta.filter(pa.compute.is_valid(meta.column("error")))
@@ -1641,7 +1634,7 @@ def encode_path(spark: SparkSession, input_path: str, out_dir: str,
                              buf.getvalue().to_pybytes())
         wall_s = time.perf_counter() - t0
         stats = mf.commit_wave(spark, out_dir, wave_id, wfiles, wall_s,
-                               meta_table=meta, plan=plan,
+                               meta_table=meta, plan=wave_plan,
                                schemas=wave_schemas)
         totals["waves_run"] += 1
         totals["n_rows"] += stats["n_rows"]

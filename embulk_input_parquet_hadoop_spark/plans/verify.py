@@ -11,8 +11,6 @@ equality of every other column. The comparison itself is pure DataFrame API
 
 from __future__ import annotations
 
-import json
-
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,15 +92,12 @@ def verify_path(spark: SparkSession, input_path: str, out_dir: str) -> dict:
 # tests that compute their expected rows independently.
 
 # one verify task input row per source file: the source and its chunk
-# file, the file's side inputs as its wave recorded them (those of its
-# encode input row), and the wave's constant types and renames (JSON)
+# file, then the side inputs of its encode input row, built from the
+# same recorded wave plan (``pipeline.task_sides``)
 VERIFY_ROWS_ARROW_SCHEMA = pa.schema([
     pa.field("source_file", pa.string()),
     pa.field("chunk_file", pa.string()),
-    pa.field("deletes", pa.list_(pa.string())),
-    pa.field("eq", pa.string()),
-    pa.field("consts", pa.string()),
-    pa.field("wave_plan", pa.string()),
+    *pipeline.SIDE_FIELDS,
 ])
 
 VERIFY_FILES_ARROW_SCHEMA = pa.schema([
@@ -115,26 +110,23 @@ VERIFY_FILES_ARROW_SCHEMA = pa.schema([
 ])
 
 
-def _verify_one(src: str, chk: str, batch_rows: int, del_files=None,
-                eq_json=None, consts_json=None, plan_json=None) -> tuple:
+def _verify_one(src: str, chk: str, batch_rows: int, side=None,
+                wave_plan=None) -> tuple:
     """Decode chunk file ``chk`` and compare it positionally, batch by
     batch, with source file ``src`` read through the encoder's own
-    ``pipeline._source_batches``. ``del_files``/``eq_json``/
-    ``consts_json`` are the RAW per-file side inputs and ``plan_json``
-    the wave's ``const_schema``/``column_renames``, all as the wave
-    recorded them; the reader resolves them inside this function's error
-    capture, so a missing or corrupt source, delete file, or descriptor
-    yields a per-file ``err`` row instead of aborting the whole Spark
-    job."""
+    ``pipeline._source_batches``. ``side`` (the RAW per-file side
+    inputs) and ``wave_plan`` (the wave's ``const_schema``/
+    ``column_renames`` JSON) are those of the file's encode input row;
+    the reader resolves them inside this function's error capture, so a
+    missing or corrupt source, delete file, or descriptor yields a
+    per-file ``err`` row instead of aborting the whole Spark job."""
     from . import fsutil
-    plan = json.loads(plan_json) if plan_json else {}
 
     def replay(columns):
         # the encode committed this file, so its corrupt-group skips
         # were within its threshold
         return pipeline._source_batches(
-            src, batch_rows, columns, del_files, eq_json, consts_json,
-            plan.get("const_schema"), plan.get("column_renames"), 1.0, [])
+            src, batch_rows, columns, side, wave_plan, 1.0, [])
 
     rows = toks = mism = 0
     err = None
@@ -199,8 +191,9 @@ def _same_values(decoded: pa.Array, source: pa.Array) -> bool:
 
 def make_verify_files_fn(batch_rows: int = pipeline.DEFAULT_BATCH_ROWS):
     def fn(_pid, files):
-        for src, chk, *side in zip(*files.to_pydict().values()):
-            s, c, r, t, m, e = _verify_one(src, chk, batch_rows, *side)
+        for src, chk, *side, wave_plan in zip(*files.to_pydict().values()):
+            s, c, r, t, m, e = _verify_one(src, chk, batch_rows, side,
+                                           wave_plan)
             yield pa.RecordBatch.from_arrays(
                 [pa.array([s], type=pa.string()),
                  pa.array([c], type=pa.string()),
@@ -244,25 +237,22 @@ def verify_files(spark: SparkSession, out_dir: str,
     rows = {}
     unverified = []
     for rec in mf.wave_records(out_dir):
-        plan = rec.get("plan", {})
-        sides = plan.get("files", {})
-        wave_plan = {k: plan[k] for k in ("const_schema", "column_renames")
-                     if k in plan}
-        wave_plan = json.dumps(wave_plan) if wave_plan else None
         metas = pipeline.meta_files(out_dir, rec["wave_id"])
         if not metas:
             unverified.append(
                 f"wave {rec['wave_id']}: no chunks_meta lineage to "
                 "replay; check it with verify_path")
+        pairs = []
         for p in metas:
             t = fsutil.read_parquet(
                 p, columns=["source_file", "chunk_file", "error"])
-            for s, c, e in zip(t.column("source_file").to_pylist(),
-                               t.column("chunk_file").to_pylist(),
-                               t.column("error").to_pylist()):
-                if e is None and c:
-                    rows[s, c] = (s, c, *sides.get(s, (None,) * 3),
-                                  wave_plan)
+            pairs += [(s, c) for s, c, e in zip(
+                t.column("source_file").to_pylist(),
+                t.column("chunk_file").to_pylist(),
+                t.column("error").to_pylist()) if e is None and c]
+        sides = pipeline.task_sides(rec.get("plan"), [s for s, _c in pairs])
+        for (s, c), side in zip(pairs, sides):
+            rows[s, c] = (s, c, *side)
     if not rows:
         raise FileNotFoundError(
             f"no chunks_meta lineage under {out_dir} (verify_files needs "

@@ -5,8 +5,8 @@ for Iceberg: read the table's own metadata (here ``_delta_log`` JSON
 commits + parquet checkpoints — both public formats from the Delta
 PROTOCOL.md), produce the live data-file list for a snapshot, and map
 each file's DELETION VECTOR (merge-on-read row deletes) into the
-``encode_path(row_deletes=)`` mapping so the encode task that owns a
-file filters its deleted rows out. Everything is metadata-level: no
+``row_deletes`` mapping of an ``encode_path`` plan so the encode task
+that owns a file filters its deleted rows out. Everything is metadata-level: no
 Spark jobs, no Delta runtime, any ``fsutil`` scheme (local, hdfs, s3,
 mock-s3).
 
@@ -87,8 +87,8 @@ DELTA_DV_MAGIC = struct.pack("<I", 1681511377)  # D1 D3 39 64
 # Iceberg v3 prints the on-disk bytes directly; accepted too (header).
 _ACCEPTED_MAGICS = (DELTA_DV_MAGIC, puffin.DV_MAGIC)
 
-# How a Delta DV rides the {data_file: [delete inputs]} mapping of
-# encode_path(row_deletes=): prefix + json with either
+# How a Delta DV rides the {data_file: [delete inputs]} mapping of an
+# encode_path plan's row_deletes: prefix + json with either
 # {"path", "offset", "size", "cardinality"} (file-stored) or
 # {"inline", "size", "cardinality"} (z85 payload carried whole).
 DV_DESC_PREFIX = "deltadv:"
@@ -638,10 +638,11 @@ def snapshot_scan(table_dir: str, version: int | None = None,
     """Scan plan for one snapshot: ``{"version", "data_files",
     "row_deletes" ({abs data path: ["deltadv:{json}"]}),
     "partition_values" ({abs data path: {col: str|None}}),
-    "partition_columns", "schema_string"}``.
+    "partition_columns", "schema_string", "column_renames"}``.
 
-    Feed ``data_files``/``row_deletes`` to ``encode_path(input_files=,
-    row_deletes=)``; deletion vectors apply exactly like Iceberg
+    Feed ``data_files`` to ``encode_path(input_files=)`` and
+    ``row_deletes`` and ``column_renames`` as entries of its ``plan``;
+    deletion vectors apply exactly like Iceberg
     position deletes (the shared per-task filtered read).
     ``partition_filter`` ({col: value}) prunes at planning against the
     log's string-serialized partition values (bools serialize
@@ -723,7 +724,7 @@ def snapshot_scan_diff(table_dir: str, from_version: int,
             "column_renames": b["column_renames"]}
 
 
-# Delta logical type -> encode_path const_schema type for partition
+# Delta logical type -> encode_path plan const_schema type for partition
 # columns. Partition values serialize as strings in the log; the
 # encode task casts them back through these declared types.
 _PART_TYPE_MAP = {
@@ -736,8 +737,9 @@ _PART_TYPE_MAP = {
 }
 
 
-def partition_const_columns(scan: dict) -> tuple[dict, dict]:
-    """(const_columns, const_schema) for ``encode_path`` from a
+def partition_const_columns(scan: dict) -> dict:
+    """The ``const_columns`` and ``const_schema`` entries of an
+    ``encode_path`` plan (empty for an unpartitioned table) from a
     :func:`snapshot_scan` result — injects the table's partition
     columns (which Delta stores ONLY in the log, not in the data
     files) as typed per-file constants so the encoded tree
@@ -750,7 +752,7 @@ def partition_const_columns(scan: dict) -> tuple[dict, dict]:
     """
     pcols = scan["partition_columns"]
     if not pcols:
-        return {}, {}
+        return {}
     fields = json.loads(scan["schema_string"])["fields"]
     ftype = {f["name"]: f["type"] for f in fields}
     const_schema = {}
@@ -777,7 +779,7 @@ def partition_const_columns(scan: dict) -> tuple[dict, dict]:
     const_columns = {
         f: {c: _parse(pv.get(c), ftype[c]) for c in pcols}
         for f, pv in scan["partition_values"].items()}
-    return const_columns, const_schema
+    return {"const_columns": const_columns, "const_schema": const_schema}
 
 
 _EXPORT_PRIMS = {"string", "long", "integer", "short", "byte", "double",
@@ -820,7 +822,7 @@ def export_table(df, table_dir: str,
     from its directory path (hive-unescaped; ``__HIVE_DEFAULT_PARTITION__``
     -> null), and ``metaData.partitionColumns`` lists the columns — so
     a reader reconstructs them exactly, including ours
-    (``snapshot_scan`` + ``encode_path(const_columns=)``). At 100 TB
+    (``snapshot_scan`` + ``partition_const_columns``). At 100 TB
     an unpartitioned export is an antipattern; this is the
     partition-pruning handle.
 

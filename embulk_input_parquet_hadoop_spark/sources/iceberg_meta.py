@@ -20,16 +20,16 @@ a frozen list).
 Merge-on-read: a snapshot whose manifests carry POSITION deletes (spec
 v2 ``content`` 1) is handled by ``snapshot_scan``, which returns the
 data files plus a {data_file: [position-delete files]} mapping that
-``encode_path(row_deletes=...)`` applies row-positionally inside each
-encode task — reading the data files without it would resurrect deleted
-rows, so the strict ``snapshot_data_files`` still refuses any MOR
-snapshot. EQUALITY deletes (``content`` 2) identify rows by column
+``encode_path``, given it as its plan's ``row_deletes``, applies
+row-positionally inside each encode task — reading the data files
+without it would resurrect deleted rows, so the strict
+``snapshot_data_files`` still refuses any MOR snapshot. EQUALITY deletes (``content`` 2) identify rows by column
 value; ``snapshot_scan`` resolves their ``equality_ids`` to column
 names through the table schema, scopes them by sequence number (a
 delete applies to data files whose data sequence number is strictly
 lower, per spec), and returns an ``equality_deletes`` mapping that
-``encode_path(eq_deletes=...)`` applies value-wise inside each encode
-task. Equality deletes written with an unpartitioned spec (empty or
+``encode_path`` (plan entry ``eq_deletes``) applies value-wise inside
+each encode task. Equality deletes written with an unpartitioned spec (empty or
 absent ``partition`` record) apply globally; PARTITION-SCOPED ones
 (a non-empty ``partition`` record) apply only to data files of the
 same partition spec with an equal partition tuple, per spec — a data
@@ -42,7 +42,8 @@ bitmap per data file inside PUFFIN containers (delete entries with
 maps each DV blob to its data file (from the manifest's
 ``referenced_data_file``/``content_offset``/``content_size_in_bytes``
 fields, falling back to the puffin footer) and hands it down the SAME
-``row_deletes`` mapping as a ``puffin:{json}`` descriptor; the encode
+position-delete mapping (plan entry ``row_deletes``) as a
+``puffin:{json}`` descriptor; the encode
 task ranged-reads just its own blob. Per spec a data file has at most
 one DV, and when one exists it supersedes any parquet position-delete
 files targeting that file.
@@ -378,8 +379,8 @@ def snapshot_data_files(table_dir: str,
             f"{len(scan['eq_deletes'])} equality-DELETE file(s) and "
             f"{len(scan['dvs'])} deletion vector(s) (merge-on-read) — "
             "use snapshot_scan(), which returns the per-data-file "
-            "delete mappings for encode_path(row_deletes=/eq_deletes"
-            "=...)")
+            "delete mappings for the row_deletes/eq_deletes entries of "
+            "encode_path's plan")
     return [t[0] for t in scan["data"]]
 
 
@@ -422,7 +423,7 @@ def snapshot_scan(table_dir: str,
     (unscopable), or a sequence-in-scope same-spec data file carrying NO
     partition record (membership undecidable — skipping could resurrect
     deleted rows, applying could delete live ones). Feed the mapping to
-    ``encode_path(eq_deletes=...)``.
+    ``encode_path`` as its plan's ``eq_deletes``.
 
     Data files never referenced by any delete get no mapping entry; a
     partition-pruned data file's deletes are dropped with it.
@@ -572,8 +573,8 @@ def snapshot_scan_diff(table_dir: str, from_snapshot_id: int,
     (default: current) but not in ``from``, with the ``to`` snapshot's
     position-/equality-delete mappings restricted to those files — the
     CDC-style ingest unit for merge-on-read tables. Feed to
-    ``encode_path(input_files=..., row_deletes=..., eq_deletes=...,
-    append=True)``.
+    ``encode_path(input_files=..., plan={"row_deletes": ...,
+    "eq_deletes": ...}, append=True)``.
 
     Refuses (``IcebergMetaError``) when the ``to`` snapshot changes the
     effective rows of a file already encoded from ``from``: an
@@ -692,40 +693,48 @@ def _pos_delete_manifest(metadata_dir: str, snapshot_id: int,
     }
 
 
-def _write_snapshot(metadata_dir: str, snapshot_id: int,
-                    parquet_files: list[str],
+def _data_manifests(metadata_dir: str, snapshot_id: int,
+                    sequence_number: int, parquet_files: list[str],
                     record_counts: list[int],
-                    delete_files: list[tuple[str, int]] | None = None
-                    ) -> str:
-    """Manifest + manifest list for one snapshot; returns the list path.
-    ``delete_files`` ([(pos-delete parquet path, n_rows)]) adds a delete
-    manifest so historical snapshots can be MOR too."""
-    entries = [{
-        "status": 1, "snapshot_id": snapshot_id,
-        "sequence_number": None,  # inherited from the manifest list
-        "data_file": {
+                    part_fields: list[tuple[str, str]],
+                    partitions: dict[str, dict]) -> list[dict]:
+    """Data manifest(s) for ``parquet_files``; returns their
+    manifest-list records. A file that ``partitions`` ({absolute data
+    file path: partition dict}) describes carries a ``part_fields``
+    partition record, in a manifest of that schema; the others carry
+    none, in a manifest without the field."""
+    groups: dict[bool, list[dict]] = {}
+    for p, n in zip(parquet_files, record_counts):
+        rec = {
             "content": 0,
             "file_path": _fixture_abs(p),
             "file_format": "PARQUET",
             "record_count": int(n),
             "file_size_in_bytes": _fixture_size(p),
-        }} for p, n in zip(parquet_files, record_counts)]
-    man_path = os.path.join(metadata_dir, f"man-{uuid.uuid4().hex}.avro")
-    avro_io.write_avro(man_path, _MANIFEST_SCHEMA, entries)
-    manifests = [{
-        "manifest_path": man_path,
-        "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": snapshot_id,
-        "added_snapshot_id": snapshot_id,
-    }]
-    if delete_files:
-        manifests.append(_pos_delete_manifest(
-            metadata_dir, snapshot_id, snapshot_id + 1, delete_files))
-    mlist = os.path.join(metadata_dir, f"snap-{snapshot_id}.avro")
-    avro_io.write_avro(mlist, _MANIFEST_LIST_SCHEMA, manifests)
-    return mlist
+        }
+        part = partitions.get(rec["file_path"])
+        if part is not None:
+            rec["partition"] = {k: part.get(k) for k, _t in part_fields}
+        groups.setdefault(part is not None, []).append({
+            "status": 1, "snapshot_id": snapshot_id,
+            "sequence_number": None,  # inherited from the manifest list
+            "data_file": rec})
+    manifests = []
+    for parted, entries in sorted(groups.items()) or [(False, [])]:
+        man_path = os.path.join(metadata_dir,
+                                f"man-{uuid.uuid4().hex}.avro")
+        avro_io.write_avro(
+            man_path, _manifest_schema(part_fields if parted else None),
+            entries)
+        manifests.append({
+            "manifest_path": man_path,
+            "manifest_length": os.path.getsize(man_path),
+            "partition_spec_id": 0,
+            "content": 0,
+            "sequence_number": sequence_number,
+            "added_snapshot_id": snapshot_id,
+        })
+    return manifests
 
 
 def write_table_fixture(table_dir: str, parquet_files: list[str],
@@ -752,7 +761,7 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
     ``position_deletes`` ({data_file_path: [row positions]}) writes a
     REAL spec-shaped position-delete Parquet (columns ``file_path``,
     ``pos``, sorted) plus its delete manifest — the ``snapshot_scan`` /
-    ``encode_path(row_deletes=)`` MOR path end to end.
+    ``encode_path`` ``row_deletes`` MOR path end to end.
     ``equality_deletes`` adds an equality-delete manifest entry (content
     2) with NO equality_ids for the refused case. ``older_snapshots``
     ({snapshot_id: files, or {"files": [...], "position_deletes":
@@ -762,6 +771,9 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
     manifest list live until expiry; an older snapshot's position
     deletes are carried into the CURRENT snapshot's manifest list too
     (the same delete parquet), as real tables do until compaction.
+    ``partitions`` (one {field: value} dict per data file) writes each
+    file's partition record, in the current snapshot and in every older
+    one that lists the file.
 
     ``schema_fields`` ([column names, or (name, type) pairs — type a
     primitive string or a struct/list/map dict]) writes a table schema
@@ -789,31 +801,6 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
     os.makedirs(metadata_dir, exist_ok=True)
     if record_counts is None:
         record_counts = [0] * len(parquet_files)
-    snap_records = []
-    carried_deletes: list[tuple[str, int]] = []
-    for sid, spec in sorted((older_snapshots or {}).items()):
-        if isinstance(spec, dict):
-            sfiles = spec["files"]
-            dels = None
-            if spec.get("position_deletes"):
-                dp, n = _write_pos_delete_parquet(
-                    os.path.join(table_dir, "data"),
-                    spec["position_deletes"])
-                dels = [(dp, n)]
-                # real tables keep delete files live until compaction:
-                # the CURRENT snapshot's manifest list references the
-                # SAME delete parquet, so snapshot diffs see an
-                # unchanged mapping on still-live files
-                carried_deletes.append((dp, n))
-        else:
-            sfiles, dels = spec, None
-        ml = _write_snapshot(metadata_dir, sid, sfiles, [0] * len(sfiles),
-                             delete_files=dels)
-        snap_records.append({"snapshot-id": sid, "manifest-list": ml,
-                             # deterministic spec-shaped commit time:
-                             # 2024-01-01T00:00:00Z + id seconds
-                             "timestamp-ms": 1704067200000 + sid * 1000,
-                             "summary": {"operation": "append"}})
     part_fields: list[tuple[str, str]] = []
     if partitions:
         if len(partitions) != len(parquet_files):
@@ -822,32 +809,38 @@ def write_table_fixture(table_dir: str, parquet_files: list[str],
         part_fields = [
             (k, "long" if isinstance(first[k], int) else "string")
             for k in sorted(first)]
-    schema = _manifest_schema(part_fields or None)
-    entries = []
-    for i, (p, n) in enumerate(zip(parquet_files, record_counts)):
-        df_rec = {
-            "content": 0,
-            "file_path": _fixture_abs(p),
-            "file_format": "PARQUET",
-            "record_count": int(n),
-            "file_size_in_bytes": _fixture_size(p),
-        }
-        if partitions:
-            df_rec["partition"] = {k: partitions[i].get(k)
-                                   for k, _t in part_fields}
-        entries.append({"status": 1, "snapshot_id": snapshot_id,
-                        "sequence_number": None,  # inherit from list
-                        "data_file": df_rec})
-    man_path = os.path.join(metadata_dir, f"man-{uuid.uuid4().hex}.avro")
-    avro_io.write_avro(man_path, schema, entries)
-    manifests = [{
-        "manifest_path": man_path,
-        "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": data_sequence_number,
-        "added_snapshot_id": snapshot_id,
-    }]
+    # older snapshots' files that are also current files carry the same
+    # partition record, so partition_filter prunes them too
+    part_of = {_fixture_abs(p): part
+               for p, part in zip(parquet_files, partitions or ())}
+    snap_records = []
+    carried_deletes: list[tuple[str, int]] = []
+    for sid, spec in sorted((older_snapshots or {}).items()):
+        sfiles = spec["files"] if isinstance(spec, dict) else spec
+        smanifests = _data_manifests(metadata_dir, sid, sid, sfiles,
+                                     [0] * len(sfiles), part_fields,
+                                     part_of)
+        if isinstance(spec, dict) and spec.get("position_deletes"):
+            dp, n = _write_pos_delete_parquet(
+                os.path.join(table_dir, "data"), spec["position_deletes"])
+            # historical snapshots can be MOR too; real tables keep
+            # delete files live until compaction: the CURRENT
+            # snapshot's manifest list references the SAME delete
+            # parquet, so snapshot diffs see an unchanged mapping on
+            # still-live files
+            smanifests.append(_pos_delete_manifest(
+                metadata_dir, sid, sid + 1, [(dp, n)]))
+            carried_deletes.append((dp, n))
+        ml = os.path.join(metadata_dir, f"snap-{sid}.avro")
+        avro_io.write_avro(ml, _MANIFEST_LIST_SCHEMA, smanifests)
+        snap_records.append({"snapshot-id": sid, "manifest-list": ml,
+                             # deterministic spec-shaped commit time:
+                             # 2024-01-01T00:00:00Z + id seconds
+                             "timestamp-ms": 1704067200000 + sid * 1000,
+                             "summary": {"operation": "append"}})
+    manifests = _data_manifests(metadata_dir, snapshot_id,
+                                data_sequence_number, parquet_files,
+                                record_counts, part_fields, part_of)
     if with_deletes:
         del_man = os.path.join(metadata_dir, f"del-{uuid.uuid4().hex}.avro")
         avro_io.write_avro(del_man, _MANIFEST_SCHEMA, [{

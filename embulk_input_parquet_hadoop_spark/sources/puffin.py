@@ -44,8 +44,8 @@ MAGIC = b"PFA1"
 DV_MAGIC = b"\xd1\xd3\x3d\xed"
 DV_BLOB_TYPE = "deletion-vector-v1"
 
-# How a DV rides the {data_file: [delete inputs]} mapping that
-# encode_path(row_deletes=) consumes: plain entries are v2
+# How a DV rides the {data_file: [delete inputs]} mapping that an
+# encode_path plan's row_deletes holds: plain entries are v2
 # position-delete PARQUET paths; a DV entry is this prefix + json
 # {"path", "offset", "length"} pointing at one blob.
 DV_DESC_PREFIX = "puffin:"

@@ -17,11 +17,11 @@ from __future__ import annotations
 
 def hive_partitioned_files(root: str,
                            partition_types: dict[str, str] | None = None
-                           ) -> tuple[list[str], dict, dict]:
+                           ) -> tuple[list[str], dict]:
     """Scan a Hive-partitioned Parquet tree (``key=value`` directory
-    segments) into the encode inputs: ``(files, const_columns,
-    const_schema)`` for ``encode_path(input_files=, const_columns=,
-    const_schema=)``.
+    segments) into the encode inputs: ``(files, consts)`` for
+    ``encode_path(input_files=files, plan=consts)``, ``consts`` holding
+    a plan's ``const_columns`` and ``const_schema`` entries.
 
     Partition values live only in the directory names — a direct
     per-file read drops them — so they are re-injected as typed
@@ -90,7 +90,8 @@ def hive_partitioned_files(root: str,
         return v  # date32: ISO string, cast lands in-task
     const_columns = {f: {k: _conv(pv[k], const_schema[k]) for k in pv}
                      for f, pv in const_columns.items()}
-    return files, const_columns, const_schema
+    return files, {"const_columns": const_columns,
+                   "const_schema": const_schema}
 
 
 def table_files_from_metadata(table_dir: str,

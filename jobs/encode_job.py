@@ -202,11 +202,9 @@ def main() -> int:
         spark = SparkSession.builder.appName("encode-job").getOrCreate()
 
     input_files = None
-    row_deletes = None
-    eq_deletes = None
-    const_columns = None
-    const_schema = None
-    column_renames = None
+    # the table's scan plan (deletes, constants, renames): see
+    # encode_path's plan
+    plan = {}
     if args.iceberg:
         from embulk_input_parquet_hadoop_spark.sources import iceberg_meta
         pf = None
@@ -239,8 +237,8 @@ def main() -> int:
                                               snapshot_id=sid,
                                               partition_filter=pf)
         input_files = scan["data_files"]
-        row_deletes = scan["position_deletes"] or None
-        eq_deletes = scan.get("equality_deletes") or None
+        plan = {"row_deletes": scan["position_deletes"],
+                "eq_deletes": scan["equality_deletes"]}
     elif args.delta:
         from embulk_input_parquet_hadoop_spark.sources import delta_meta
         pf = None
@@ -265,11 +263,10 @@ def main() -> int:
                 args.input, version=args.at_version,
                 partition_filter=pf)
         input_files = scan["data_files"]
-        row_deletes = scan["row_deletes"] or None
-        column_renames = scan["column_renames"]
+        plan = {"row_deletes": scan["row_deletes"],
+                "column_renames": scan["column_renames"]}
         if args.inject_partitions:
-            const_columns, const_schema = \
-                delta_meta.partition_const_columns(scan)
+            plan.update(delta_meta.partition_const_columns(scan))
     elif args.hudi:
         from embulk_input_parquet_hadoop_spark.sources import hudi_meta
         if args.since_instant is not None:
@@ -309,9 +306,9 @@ def main() -> int:
         input_files = staged["files"]
     elif args.hive:
         from embulk_input_parquet_hadoop_spark.sources import table
-        input_files, cc, cs = table.hive_partitioned_files(args.input)
+        input_files, consts = table.hive_partitioned_files(args.input)
         if args.inject_partitions:
-            const_columns, const_schema = cc, cs
+            plan = consts
     elif args.partition:
         raise SystemExit("--partition requires --iceberg, --delta or "
                          "--hudi")
@@ -365,10 +362,7 @@ def main() -> int:
         columns=args.columns.split(",") if args.columns else None,
         schema_mode=args.schema_mode,
         bad_file_threshold=args.bad_file_threshold,
-        bad_record_threshold=args.bad_record_threshold,
-        row_deletes=row_deletes, eq_deletes=eq_deletes,
-        const_columns=const_columns, const_schema=const_schema,
-        column_renames=column_renames)
+        bad_record_threshold=args.bad_record_threshold, plan=plan)
     totals["total_wall_s"] = time.perf_counter() - t0
     if vacuum_result is not None:
         totals["vacuum"] = vacuum_result

@@ -497,7 +497,7 @@ def test_delta_on_object_store(tmp_path):
 
 def test_delta_dv_encode_end_to_end(spark, tokens_path, tmp_path):
     """Delta table with deletion vectors: snapshot_scan feeds
-    encode_path(row_deletes=), the decoded tree holds exactly the live
+    encode_path's plan, the decoded tree holds exactly the live
     rows, and verify_files replays the same masking — the Iceberg MOR
     contract (test_iceberg_position_deletes_encode) on the Delta
     source."""
@@ -515,7 +515,7 @@ def test_delta_dv_encode_end_to_end(spark, tokens_path, tmp_path):
     out = str(tmp_path / "enc")
     totals = pipeline.encode_path(
         spark, d, out, input_files=scan["data_files"],
-        row_deletes=scan["row_deletes"])
+        plan={"row_deletes": scan["row_deletes"]})
     n_rows = sum(t.num_rows for t in tabs)
     assert totals["n_rows"] == n_rows - 6
     expected = []
@@ -562,8 +562,8 @@ def test_column_mapping_encode_end_to_end(spark, tmp_path):
     out = str(tmp_path / "enc")
     totals = pipeline.encode_path(
         spark, d, out, input_files=s["data_files"],
-        row_deletes=s["row_deletes"],
-        column_renames=s["column_renames"])
+        plan={"row_deletes": s["row_deletes"],
+              "column_renames": s["column_renames"]})
     assert totals["n_rows"] == 5  # 6 rows - 1 DV-deleted
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["doc_id", "n"],
@@ -583,7 +583,7 @@ def test_column_mapping_logical_projection(spark, tmp_path):
     out = str(tmp_path / "enc")
     pipeline.encode_path(spark, d, out, input_files=s["data_files"],
                          columns=["n"],
-                         column_renames=s["column_renames"])
+                         plan={"column_renames": s["column_renames"]})
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["n"], "n int")
     assert sorted(r.n for r in dec.collect()) == [1, 2, 3, 4]
@@ -614,7 +614,7 @@ def test_column_mapping_id_beats_physical_name(spark, tmp_path):
     from embulk_input_parquet_hadoop_spark.plans import pipeline
     out = str(tmp_path / "enc")
     pipeline.encode_path(spark, d, out, input_files=s["data_files"],
-                         column_renames=s["column_renames"])
+                         plan={"column_renames": s["column_renames"]})
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out), ["doc_id", "n"],
         "doc_id string, n int")
@@ -642,7 +642,7 @@ def test_column_mapping_unmapped_physical_column_fails(spark,
     with pytest.raises(RuntimeError, match="no entry|failed"):
         pipeline.encode_path(spark, d, str(tmp_path / "enc"),
                              input_files=s["data_files"],
-                             column_renames=s["column_renames"])
+                             plan={"column_renames": s["column_renames"]})
 
 
 def _nested_tab():
@@ -686,8 +686,8 @@ def test_column_mapping_nested_encode_end_to_end(spark, tmp_path):
     out = str(tmp_path / "enc")
     totals = pipeline.encode_path(
         spark, d, out, input_files=s["data_files"],
-        row_deletes=s["row_deletes"],
-        column_renames=s["column_renames"])
+        plan={"row_deletes": s["row_deletes"],
+              "column_renames": s["column_renames"]})
     assert totals["n_rows"] == 2  # 3 rows - 1 DV-deleted
     dec = pipeline.decode_chunks(
         pipeline.read_chunks(spark, out),
@@ -751,9 +751,10 @@ def test_column_mapping_partition_values_physical_keys(tmp_path):
     s = dm.snapshot_scan(d, partition_filter={"src": "web"})
     assert len(s["data_files"]) == 1
     assert s["partition_values"][s["data_files"][0]] == {"src": "web"}
-    cc, cs = dm.partition_const_columns(dm.snapshot_scan(d))
-    assert cs == {"src": "string"}
-    assert sorted(v["src"] for v in cc.values()) == ["book", "web"]
+    consts = dm.partition_const_columns(dm.snapshot_scan(d))
+    assert consts["const_schema"] == {"src": "string"}
+    assert sorted(v["src"] for v in consts["const_columns"].values()) \
+        == ["book", "web"]
 
 
 # ---------------------------------------------------------------------

@@ -105,11 +105,10 @@ def test_partitioned_export_roundtrip_with_injection(spark, tmp_path):
 
     # encode with injected partition constants -> decoded table equals
     # the original, INCLUDING the dropped-from-data partition column
-    cc, cs = dm.partition_const_columns(scan)
     enc = str(tmp_path / "enc")
     pipeline.encode_path(spark, out, enc,
                          input_files=scan["data_files"],
-                         const_columns=cc, const_schema=cs)
+                         plan=dm.partition_const_columns(scan))
     dec = pipeline.read_decoded(
         spark, enc, ["doc_id", "source", "n"],
         "doc_id bigint, source string, n bigint")

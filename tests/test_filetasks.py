@@ -152,8 +152,9 @@ def test_routes_apply_the_same_side_inputs(spark, small_files, tmp_path,
         return pipeline.encode_path(
             spark, str(tmp_path / "tbl"), out,
             input_files=scan["data_files"],
-            row_deletes=scan["position_deletes"],
-            const_columns=consts, const_schema={"src": "string"})
+            plan={"row_deletes": scan["position_deletes"],
+                  "const_columns": consts,
+                  "const_schema": {"src": "string"}})
 
     drv, spk = str(tmp_path / "driver"), str(tmp_path / "spark")
     (td, vd), jobs = _jobs_of(spark, "side-driver", lambda: (

@@ -255,28 +255,24 @@ def test_decode_job_exports_avro(spark, tmp_path, monkeypatch):
 
 def test_snapshot_diff_composes_with_partition_filter(spark, tmp_path):
     """snapshot_scan_diff prunes the diff at the metadata level too:
-    only new files whose partition record matches are returned.
-
-    The fixture writes an older snapshot's entries without partition
-    records, so no filter prunes them; each case keeps its old file
-    inside the filter, or the strict diff would read it as removed."""
+    only new files whose partition record matches are returned, and an
+    old file outside the filter is pruned from both snapshots (not read
+    as removed)."""
     d = tmp_path / "data"
     generate(str(d), n_docs=400, seed=31, n_files=4)
     files = [str(Path(f).resolve()) for f in
              sorted(d.glob("*.parquet"))]
-    for source, old, want in (("web", files[0], [files[2]]),
-                              ("books", files[1], [files[3]])):
-        table = str(tmp_path / f"ptable_{source}")
-        iceberg_meta.write_table_fixture(
-            table, files, snapshot_id=2, older_snapshots={1: [old]},
-            partitions=[{"source": "web"}, {"source": "books"},
-                        {"source": "web"}, {"source": "books"}])
+    table = str(tmp_path / "ptable")
+    iceberg_meta.write_table_fixture(
+        table, files, snapshot_id=2, older_snapshots={1: files[:2]},
+        partitions=[{"source": "web"}, {"source": "books"},
+                    {"source": "web"}, {"source": "books"}])
 
-        def diff(**kw):
-            return iceberg_meta.snapshot_scan_diff(
-                table, 1, **kw)["data_files"]
-        assert diff() == [f for f in files if f != old]
-        assert diff(partition_filter={"source": source}) == want
+    def diff(**kw):
+        return iceberg_meta.snapshot_scan_diff(table, 1, **kw)["data_files"]
+    assert diff() == files[2:]
+    assert diff(partition_filter={"source": "web"}) == [files[2]]
+    assert diff(partition_filter={"source": "books"}) == [files[3]]
 
 
 def test_lineage_key_uri_forms():
@@ -354,7 +350,7 @@ def test_snapshot_scan_diff_mor_incremental(spark, tmp_path):
         input_files=iceberg_meta.snapshot_data_files(table, 1))
     t2 = pipeline.encode_path(
         spark, table, out, input_files=diff["data_files"],
-        row_deletes=diff["position_deletes"], append=True)
+        plan={"row_deletes": diff["position_deletes"]}, append=True)
     assert t2["waves_run"] == 1 and t2["n_rows"] == 300 - len(dead)
     ids = pq.read_table(files[2], columns=["doc_id"]).column(
         "doc_id").to_pylist()
@@ -461,14 +457,14 @@ def test_tree_across_snapshots_verifies_with_no_mappings(spark, tmp_path):
     out = str(tmp_path / "enc_hist")
     t1 = pipeline.encode_path(
         spark, table, out, input_files=scan1["data_files"],
-        row_deletes=scan1["position_deletes"])
+        plan={"row_deletes": scan1["position_deletes"]})
     assert t1["n_rows"] == 600 - len(dead)
     diff = iceberg_meta.snapshot_scan_diff(table, 1)
     assert diff["data_files"] == [files[2]]
     assert diff["position_deletes"] == {}  # nothing on the NEW file
     pipeline.encode_path(
         spark, table, out, input_files=diff["data_files"],
-        row_deletes=diff["position_deletes"] or None, append=True)
+        plan={"row_deletes": diff["position_deletes"]}, append=True)
     recs = mf.wave_records(out)
     assert [sorted(r.get("plan", {}).get("files", {})) for r in recs] \
         == [[files[0]], []]
@@ -494,6 +490,16 @@ def _run_encode_job(monkeypatch, capsys, argv: list[str]) -> tuple[int, dict]:
         capsys.readouterr().out.strip().splitlines()[-1])
 
 
+_DELTA_WAVE0_PLAN = (
+    '{"files": {"<TBL>/part-00000.parquet": [["deltadv:{\\"cardinality'
+    '\\": 1, \\"offset\\": 1, \\"path\\": \\"<TBL>/ab/deletion_ve'
+    'ctor_5347cacd-44ac-5637-bd9f-4da05f093ead.bin\\", \\"size\\": 34}'
+    '"], null, "{\\"src\\": \\"web\\"}"]}, "const_schema": {"src": '
+    '"string"}, "column_renames": [{"logical": "doc_id", "physical": "co'
+    'l-1", "id": 1}, {"logical": "n", "physical": "col-2", "id": 2}, {"l'
+    'ogical": "src", "physical": "p-1", "id": 3}]}')
+
+
 def test_encode_job_delta_since_version_verify_files(spark, tmp_path,
                                                      monkeypatch, capsys):
     """``--delta --since-version 0 --inject-partitions --verify-files``
@@ -517,6 +523,11 @@ def test_encode_job_delta_since_version_verify_files(spark, tmp_path,
         "--delta", "--at-version", "0", "--inject-partitions",
         "--input", d, "--output", out])
     assert rc == 0 and t0["n_rows"] == 3
+    # wave 0's recorded plan, byte for byte as earlier builds wrote it:
+    # trees they encoded must keep verifying
+    with open(f"{out}/manifest/wave-0.json") as f:
+        raw = f.read()
+    assert ('"plan": ' + _DELTA_WAVE0_PLAN.replace("<TBL>", d)) in raw
     rc, t = _run_encode_job(monkeypatch, capsys, [
         "--delta", "--since-version", "0", "--inject-partitions",
         "--verify-files", "--input", d, "--output", out])
@@ -549,7 +560,7 @@ def test_encode_job_iceberg_since_snapshot_verify_files(
     out = str(tmp_path / "enc")
     pipeline.encode_path(spark, table, out,
                          input_files=scan1["data_files"],
-                         row_deletes=scan1["position_deletes"])
+                         plan={"row_deletes": scan1["position_deletes"]})
     rc, t = _run_encode_job(monkeypatch, capsys, [
         "--iceberg", "--since-snapshot", "1", "--verify-files",
         "--input", table, "--output", out])

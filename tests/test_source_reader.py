@@ -24,8 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _read(path, batch_rows, skipped, threshold=0.0):
     return list(pipeline._source_batches(
-        path, batch_rows, None, None, None, None, None, None, threshold,
-        skipped))
+        path, batch_rows, None, None, None, threshold, skipped))
 
 
 _ALLOC_PROBE = """
@@ -36,7 +35,7 @@ from embulk_input_parquet_hadoop_spark.plans import pipeline
 path = sys.argv[1]
 pa.log_memory_allocations(True)
 got = list(pipeline._source_batches(path, pipeline.DEFAULT_BATCH_ROWS, None,
-                                    None, None, None, None, None, 0.0, []))
+                                    None, None, 0.0, []))
 pa.log_memory_allocations(False)
 print("EQUAL", pa.Table.from_batches(got).equals(pq.read_table(path)))
 """
@@ -168,7 +167,7 @@ def test_unknown_projected_column_fails_the_file(spark, tmp_path):
     with pytest.raises(ValueError, match="nope"):
         next(pipeline._source_batches(
             glob.glob(f"{src}/*.parquet")[0], 16, ["doc_id", "nope"],
-            None, None, None, None, None, 0.0, []))
+            None, None, 0.0, []))
     with pytest.raises(RuntimeError, match="bad_file_threshold"):
         pipeline.encode_path(spark, src, str(tmp_path / "strict"),
                              columns=["nope"])

@@ -50,7 +50,8 @@ def _position_deletes(tmp_path, files):
     iceberg_meta.write_table_fixture(tdir, files, position_deletes=dels)
     scan = iceberg_meta.snapshot_scan(tdir)
     return (tdir, {"input_files": scan["data_files"],
-                   "row_deletes": scan["position_deletes"]}, 64, 300 - 6)
+                   "plan": {"row_deletes": scan["position_deletes"]}},
+            64, 300 - 6)
 
 
 def _iceberg_dv(tmp_path, files):
@@ -61,7 +62,8 @@ def _iceberg_dv(tmp_path, files):
     iceberg_meta.write_table_fixture(tdir, files, deletion_vectors=dels)
     scan = iceberg_meta.snapshot_scan(tdir)
     return (tdir, {"input_files": scan["data_files"],
-                   "row_deletes": scan["position_deletes"]}, 32, 300 - 35)
+                   "plan": {"row_deletes": scan["position_deletes"]}},
+            32, 300 - 35)
 
 
 def _equality_deletes(tmp_path, files):
@@ -76,7 +78,8 @@ def _equality_deletes(tmp_path, files):
     scan = iceberg_meta.snapshot_scan(tdir)
     live = sum(1 for i in ids if i not in set(dead))
     return (tdir, {"input_files": scan["data_files"],
-                   "eq_deletes": scan["equality_deletes"]}, 64, live)
+                   "plan": {"eq_deletes": scan["equality_deletes"]}},
+            64, live)
 
 
 def _delta_dv_renames(tmp_path, files):
@@ -89,8 +92,8 @@ def _delta_dv_renames(tmp_path, files):
                         commits=[{"add": [0, 1]}, {"dv": {0: [1]}}])
     s = dm.snapshot_scan(d)
     return (d, {"input_files": s["data_files"],
-                "row_deletes": s["row_deletes"],
-                "column_renames": s["column_renames"]},
+                "plan": {"row_deletes": s["row_deletes"],
+                         "column_renames": s["column_renames"]}},
             pipeline.DEFAULT_BATCH_ROWS, 5)
 
 
@@ -103,9 +106,9 @@ def _delta_constants(tmp_path, files):
         partition_values={0: {"src": "web", "bucket": "3"},
                           1: {"src": None, "bucket": "4"}})
     scan = dm.snapshot_scan(d)
-    cc, cs = dm.partition_const_columns(scan)
-    return (d, {"input_files": scan["data_files"], "const_columns": cc,
-                "const_schema": cs}, pipeline.DEFAULT_BATCH_ROWS, 300)
+    return (d, {"input_files": scan["data_files"],
+                "plan": dm.partition_const_columns(scan)},
+            pipeline.DEFAULT_BATCH_ROWS, 300)
 
 
 def _hive_constants(tmp_path, files):
@@ -114,11 +117,10 @@ def _hive_constants(tmp_path, files):
                    ("src=a%20b/date=__HIVE_DEFAULT_PARTITION__", files[1])):
         (root / sub).mkdir(parents=True)
         pq.write_table(pq.read_table(f), str(root / sub / "part.parquet"))
-    got, cc, cs = tbl.hive_partitioned_files(
+    got, consts = tbl.hive_partitioned_files(
         str(root), partition_types={"date": "date32"})
-    return (str(root), {"input_files": got, "const_columns": cc,
-                        "const_schema": cs}, pipeline.DEFAULT_BATCH_ROWS,
-            300)
+    return (str(root), {"input_files": got, "plan": consts},
+            pipeline.DEFAULT_BATCH_ROWS, 300)
 
 
 @pytest.mark.parametrize("case", [
@@ -167,7 +169,7 @@ def test_recorded_plan_survives_checkpoint_and_resume(spark, tmp_path,
                                      position_deletes=dels)
     scan = iceberg_meta.snapshot_scan(tdir)
     kw = dict(input_files=scan["data_files"],
-              row_deletes=scan["position_deletes"], waves=2)
+              plan={"row_deletes": scan["position_deletes"]}, waves=2)
     out = str(tmp_path / "enc")
     assert pipeline.encode_path(spark, tdir, out, **kw)["waves_run"] == 2
     live = 300 - 4
